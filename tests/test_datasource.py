@@ -4,6 +4,7 @@ with the composed-reader read_zeek on the reference fixtures."""
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from zeek_duckdb_spark import read_zeek
 from zeek_duckdb_spark.sources.datasource import register_zeek_datasource
@@ -134,6 +135,36 @@ def test_header_swap_skipped_under_ignore_file_errors(spark, tmp_path):
     swapped.write_text(HDR_B + "s\t2.5\n")
     rows = df.collect()
     assert [r.id for r in rows] == ["g"]
+
+
+def test_user_schema_renames_by_position_and_casts(spark, tmp_path):
+    # a .schema(...) read decodes like the derived one; the requested
+    # schema names the columns by position and casts a differing type
+    p = tmp_path / "user.log"
+    p.write_text(HDR_A + "a\t1\nb\t2\nc\t-\n")
+    user = T.StructType([T.StructField("ID", T.StringType()),
+                         T.StructField("N", T.DoubleType())])
+    df = spark.read.format("zeek").schema(user).load(str(p))
+    assert df.schema == user
+    assert sorted(map(tuple, df.collect()), key=str) == [
+        ("a", 1.0), ("b", 2.0), ("c", None)]
+    # ID keeps its type (pushable); N was cast (left to Spark)
+    assert [r.N for r in df.filter(F.col("ID") == "b").collect()] == [2.0]
+    assert [r.ID for r in df.filter(F.col("N") > 1.5).collect()] == ["b"]
+
+
+def test_user_schema_mismatch_raises_typed_error(spark, tmp_path):
+    # the requested schema is checked once, on the driver, when the scan
+    # is planned — before any task runs, naming the column
+    p = tmp_path / "bad.log"
+    p.write_text(HDR_A + "a\t1\n")
+    short = T.StructType([T.StructField("id", T.StringType())])
+    with pytest.raises(Exception, match=r"ZeekSchemaError: .* column 'n' has no"):
+        spark.read.format("zeek").schema(short).load(str(p)).collect()
+    uncastable = T.StructType([T.StructField("id", T.StringType()),
+                               T.StructField("n", T.ArrayType(T.LongType()))])
+    with pytest.raises(Exception, match=r"ZeekSchemaError: requested column 'n'"):
+        spark.read.format("zeek").schema(uncastable).load(str(p)).collect()
 
 
 def test_sql_only_usage_create_view_using_zeek(spark):

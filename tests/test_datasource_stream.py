@@ -228,3 +228,45 @@ def test_ds_stream_union_ignore_file_errors_skips_conflict(spark, tmp_path):
     _drain(stream, "ds_union3")
     got = spark.sql("SELECT id FROM ds_union3").collect()
     assert sorted(r.id for r in got) == ["A1", "A2"]
+
+
+def test_ds_stream_union_rotations_checked_by_name(spark, tmp_path):
+    # the union stream on generated files: a rotated reordered subset
+    # maps by name, and a rotated shared-field type change fails the
+    # microbatch naming the file the field was bound from
+    d = tmp_path / "logs"
+    d.mkdir()
+    _write_log(str(d / "a.log"), ["ts", "id", "value"],
+               ["time", "string", "count"], [["1768540000.000000", "A1", "10"]])
+    _write_log(str(d / "b.log"), ["ts", "id", "value", "extra"],
+               ["time", "string", "count", "string"],
+               [["1768540100.000000", "A2", "20", "x"]])
+    stream = (
+        spark.readStream.format("zeek")
+        .option("union_by_name", "true")
+        .option("inet", "false")
+        .load(f"{d}/*.log")
+    )
+    _drain(stream, "ds_union_gen")
+    assert spark.sql("SELECT count(*) FROM ds_union_gen").first()[0] == 2
+    _write_log(str(d / "c.log"), ["value", "id"], ["count", "string"],
+               [["70", "C1"]])
+    _drain(stream, "ds_union_gen")
+    row = spark.sql(
+        "SELECT value, extra FROM ds_union_gen WHERE id = 'C1'"
+    ).first()
+    assert row.value == 70 and row.extra is None
+    _write_log(str(d / "d.log"), ["ts", "id", "value"],
+               ["time", "string", "string"],
+               [["1768540999.000000", "X1", "oops"]])
+    with pytest.raises(Exception, match=r"type conflict: field 'value' has "
+                                        r"type 'count' in '\S*a\.log'"):
+        q = (
+            stream.writeStream.format("memory")
+            .queryName("ds_union_gen2")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        raise RuntimeError("microbatch unexpectedly succeeded")

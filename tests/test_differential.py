@@ -2,13 +2,17 @@
 the Python DataSource (sources/datasource.py) are two independent
 implementations of the same Zeek semantics — on randomized generated
 files they must produce identical results.  Catches semantics drift
-that example-based tests miss."""
+that example-based tests miss.  The DataSource is read three ways —
+with its derived schema, with a user ``.schema(...)`` that renames
+every column, and as a ``readStream`` drain — and each must give the
+composed reader's rows."""
 
 import random
 
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from zeek_duckdb_spark import read_zeek
 from zeek_duckdb_spark.sources.datasource import register_zeek_datasource
@@ -83,12 +87,42 @@ def norm_rows(df):
     return sorted(out)
 
 
+def fuzz_case(spark, tmp_path, seed):
+    """The composed read of one seeded fuzz file, and the file's path."""
+    register_zeek_datasource(spark)
+    p = gen_file(random.Random(seed), tmp_path / f"fuzz_{seed}.log")
+    return read_zeek(spark, p, inet=False), p
+
+
 @pytest.mark.parametrize("seed", range(8))
 def test_composed_vs_datasource_agree(spark, tmp_path, seed):
-    register_zeek_datasource(spark)
-    rng = random.Random(seed)
-    p = gen_file(rng, tmp_path / f"fuzz_{seed}.log")
-    a = read_zeek(spark, p, inet=False)
+    a, p = fuzz_case(spark, tmp_path, seed)
     b = spark.read.format("zeek").option("inet", "false").load(p)
+    assert a.schema == b.schema, f"schema mismatch seed={seed}"
+    assert norm_rows(a) == norm_rows(b), f"row mismatch seed={seed}"
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_composed_vs_datasource_user_schema_agree(spark, tmp_path, seed):
+    a, p = fuzz_case(spark, tmp_path, seed)
+    user = T.StructType([T.StructField(f.name.upper(), f.dataType)
+                         for f in a.schema.fields])
+    b = spark.read.format("zeek").option("inet", "false").schema(user).load(p)
+    assert b.schema == user, f"schema mismatch seed={seed}"
+    assert norm_rows(a) == norm_rows(b), f"row mismatch seed={seed}"
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_composed_vs_datasource_stream_agree(spark, tmp_path, seed):
+    a, p = fuzz_case(spark, tmp_path, seed)
+    name = f"fuzz_stream_{seed}"
+    q = (
+        spark.readStream.format("zeek").option("inet", "false").load(p)
+        .writeStream.format("memory").queryName(name)
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    q.stop()
+    b = spark.table(name)
     assert a.schema == b.schema, f"schema mismatch seed={seed}"
     assert norm_rows(a) == norm_rows(b), f"row mismatch seed={seed}"

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import types as T
 
 from zeek_duckdb_spark.header import (
+    ZeekHeader,
     ZeekHeaderError,
     glob_zeek_files,
     parse_header,
@@ -118,3 +119,20 @@ def test_union_separator_conflict_raises(tmp_path):
     hs = [parse_header(str(a)), parse_header(str(b))]
     with pytest.raises(ZeekHeaderError, match="identical separators"):
         resolve_union_schema(hs)
+
+
+def test_union_schema_order_and_conflict_origin():
+    # fields union in first-encountered order; a shared field's type
+    # conflict names the file the field was first seen in
+    a = ZeekHeader(fields=["ts", "id"], types=["time", "string"],
+                   source_file="a.log")
+    b = ZeekHeader(fields=["id", "value"], types=["string", "count"],
+                   source_file="b.log")
+    c = ZeekHeader(fields=["value", "ts"], types=["double", "time"],
+                   source_file="c.log")
+    assert resolve_union_schema([a, b]) == (
+        ["ts", "id", "value"], ["time", "string", "count"])
+    with pytest.raises(ZeekHeaderError, match="union_by_name type conflict: "
+                       "field 'value' has type 'count' in 'b.log' but "
+                       "'double' in 'c.log'"):
+        resolve_union_schema([a, b, c])
