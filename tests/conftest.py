@@ -20,6 +20,17 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(params=["false", "true"], ids=["escaped_false", "escaped_true"])
+def escaped_literals(spark, request):
+    """Run a test once per string-literal parser mode
+    (``spark.sql.parser.escapedStringLiterals``), restoring the conf."""
+    key = "spark.sql.parser.escapedStringLiterals"
+    old = spark.conf.get(key)
+    spark.conf.set(key, request.param)
+    yield request.param
+    spark.conf.set(key, old)
+
+
 REF_DATA = "/root/reference/data"
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
 

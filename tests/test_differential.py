@@ -126,3 +126,95 @@ def test_composed_vs_datasource_stream_agree(spark, tmp_path, seed):
     b = spark.table(name)
     assert a.schema == b.schema, f"schema mismatch seed={seed}"
     assert norm_rows(a) == norm_rows(b), f"row mismatch seed={seed}"
+
+
+# --- hostile headers under both string-literal parser modes -------------
+#
+# Markers, separators and paths reach the cast and wire projections as
+# SQL literals; these files put regex metacharacters, quotes and
+# backslashes in every header slot that does, and the reads must agree
+# whether or not the session parses string literals with escapes.
+
+HOSTILE_UNSET = "\\N"
+HOSTILE_EMPTY = "o'e"
+HOSTILE_TYPES = ["count", "string", "int", "port", "double", "bool", "time",
+                 "interval", "addr", "vector[string]", "vector[count]",
+                 "set[string]", "vector[bool]", "vector[interval]"]
+
+
+def hostile_value(rng, zt):
+    """A cell that also survives write_zeek's default markers: no '-',
+    '(empty)' or '' strings, no ',' inside collection elements."""
+    if zt in ("string", "addr"):
+        return rng.choice(["it's", "back\\slash", "x|y", "q'\\'q", "plain",
+                           "10.0.0.1", "2001:DB8::1", "\\N!", "o'e'"])
+    if zt.startswith(("vector[", "set[")):
+        inner = zt[zt.index("[") + 1 : -1]
+        # two or more elements: a lone NULL element would share its wire
+        # form with the cell-level unset marker
+        return "|".join(
+            rng.choice([HOSTILE_UNSET, HOSTILE_EMPTY, hostile_value(rng, inner)])
+            .replace("|", "/")
+            for _ in range(rng.randint(2, 4))
+        )
+    return gen_cell(rng, zt) if rng.random() > 0.25 else "garbage"
+
+
+def gen_hostile_file(rng, path, n_rows=30):
+    lines = [
+        "#separator \\x09",
+        "#set_separator\t|",
+        f"#empty_field\t{HOSTILE_EMPTY}",
+        f"#unset_field\t{HOSTILE_UNSET}",
+        "#path\thostile",
+        "#fields\t" + "\t".join(f"c{i}" for i in range(len(HOSTILE_TYPES))),
+        "#types\t" + "\t".join(HOSTILE_TYPES),
+    ]
+    for _ in range(n_rows):
+        cells = []
+        for zt in HOSTILE_TYPES:
+            r = rng.random()
+            cells.append(HOSTILE_UNSET if r < 0.1 else HOSTILE_EMPTY
+                         if r < 0.18 else hostile_value(rng, zt))
+        lines.append("\t".join(cells))
+    path.write_text("\n".join(lines) + "\n")
+    return str(path)
+
+
+@pytest.mark.parametrize("seed", range(2))
+def test_hostile_markers_agree_under_literal_modes(spark, tmp_path, seed,
+                                                   escaped_literals):
+    from zeek_duckdb_spark import write_zeek
+    from zeek_duckdb_spark.streaming.zeek_stream import read_zeek_stream
+
+    register_zeek_datasource(spark)
+    (tmp_path / "in").mkdir()
+    p = gen_hostile_file(random.Random(100 + seed), tmp_path / "in" / "hostile.log")
+    a = read_zeek(spark, p, inet=False)
+    b = spark.read.format("zeek").option("inet", "false").load(p)
+    assert a.schema == b.schema
+    rows = norm_rows(a)
+    assert rows == norm_rows(b)
+
+    # the composed stream reader shares the batch reader's cast pipeline
+    name = f"hostile_stream_{seed}_{escaped_literals}"
+    q = (
+        read_zeek_stream(spark, str(tmp_path / "in"), inet=False)
+        .writeStream.format("memory").queryName(name)
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination(120)
+    q.stop()
+    assert spark.table(name).schema == a.schema
+    assert norm_rows(spark.table(name)) == rows
+    # markers really were applied, not read back as text
+    cells = [v for r in a.collect() for v in r]
+    values = cells + [e for v in cells if isinstance(v, list) for e in v]
+    assert None in values
+    assert HOSTILE_UNSET not in values and HOSTILE_EMPTY not in values
+
+    out = str(tmp_path / "out")
+    write_zeek(a, out)
+    back = read_zeek(spark, f"{out}/*.log", inet=False)
+    assert back.schema == a.schema
+    assert norm_rows(back) == rows

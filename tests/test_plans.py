@@ -85,6 +85,37 @@ def test_zeek_filter_reaches_scan_stage(spark):
     assert audit.num_shuffles(df) == 0
 
 
+@pytest.fixture
+def generated_dns(tmp_path):
+    """A small plain dns-shaped log, for plan checks that must run
+    without the reference fixtures."""
+    p = tmp_path / "dns.log"
+    p.write_text(
+        "#separator \\x09\n#set_separator\t,\n#empty_field\t(empty)\n"
+        "#unset_field\t-\n#path\tdns\n"
+        "#fields\tts\tuid\tid.orig_h\tproto\tquery\tanswers\tTTLs\n"
+        "#types\ttime\tstring\taddr\tenum\tstring\tvector[string]"
+        "\tvector[interval]\n"
+        + "".join(
+            f"1768540789.{i:06d}\tC{i}\t10.0.0.{i}\t{'udp' if i % 2 else 'tcp'}"
+            f"\tq{i}.example\t1.2.3.4,5.6.7.8\t60.000000,30.000000\n"
+            for i in range(20)
+        )
+    )
+    return str(p)
+
+
+def test_zeek_scan_prunes_columns_generated(spark, generated_dns):
+    df = read_zeek(spark, generated_dns, inet=False).select("proto")
+    assert audit.read_schemas(df) == ["proto:string"]
+
+
+def test_zeek_filter_reaches_scan_stage_generated(spark, generated_dns):
+    df = read_zeek(spark, generated_dns).filter(F.col("proto") == "udp")
+    assert audit.num_shuffles(df) == 0
+    assert df.count() == 10
+
+
 def test_minhash_signature_plan_shape(spark):
     from zeek_duckdb_spark.operators import dedup as dd
 

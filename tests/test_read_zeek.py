@@ -100,6 +100,26 @@ def test_filename_relative_path_echoed(spark, monkeypatch):
     assert all(v.startswith(os.path.basename(REF) + "/") for v in vals)
 
 
+def test_filename_relative_path_with_quote_echoed(spark, tmp_path, monkeypatch,
+                                                  escaped_literals):
+    # the as-given path map carries each path as a SQL literal; a quote
+    # in the directory name must neither break the bind nor the echo
+    d = tmp_path / "it's_logs"
+    d.mkdir()
+    for i in range(2):
+        (d / f"conn_{i}.log").write_text(
+            "#separator \\x09\n#fields\tuid\tn\n#types\tstring\tcount\n"
+            f"C{i}\t{i}\n"
+        )
+    monkeypatch.chdir(tmp_path)
+    got = {
+        (r.uid, r.filename)
+        for r in read_zeek(spark, "it's_logs/conn_*.log", filename=True)
+        .select("uid", "filename").collect()
+    }
+    assert got == {("C0", "it's_logs/conn_0.log"), ("C1", "it's_logs/conn_1.log")}
+
+
 # --- list types (zeek.test:49-71) --------------------------------------
 
 def test_vector_string(spark):

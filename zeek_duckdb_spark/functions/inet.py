@@ -7,9 +7,12 @@ README.md:91-93).  Spark has no INET type, so this engine represents
 addresses as **canonical text** plus a registered function family
 (SURVEY.md §2.9):
 
-- scan path (``inet=true``): :func:`inet_canon_col`, a pure-JVM
-  normalization (lowercase IPv6) — Zeek itself emits canonical form, so
-  this is a near-no-op that keeps the 100 TB hot path out of Python;
+- scan path (``inet=true``): a pure-JVM normalization (lowercase
+  IPv6) — Zeek itself emits canonical form, so this is a near-no-op
+  that keeps the 100 TB hot path out of Python.  ``read_zeek`` and
+  ``read_zeek_stream`` emit it as SQL text inside their cast projection
+  (sources/zeek.py ``_cast_scalar``); :func:`inet_canon_col` is the same
+  rule as a Column, kept public for users' own frames;
 - literal / user-input path: ``inet_canon`` (full RFC canonicalization
   via :mod:`ipaddress`), ``ip_in_subnet``, ``ip_to_bytes``,
   ``ip_version`` as Arrow-vectorized pandas UDFs (batch transfer, not
@@ -40,10 +43,11 @@ __all__ = [
 
 
 def inet_canon_col(col: Column) -> Column:
-    """Cheap scan-path canonicalization: IPv6 lowercased; IPv4 and CIDR
-    text pass through.  Zeek writes addresses in canonical form already
-    (no leading zeros, compressed v6), so full re-parsing per row would
-    buy nothing and cost a Python roundtrip at 100 TB."""
+    """Cheap canonicalization: IPv6 lowercased; IPv4 and CIDR text pass
+    through.  Zeek writes addresses in canonical form already (no
+    leading zeros, compressed v6), so full re-parsing per row would buy
+    nothing and cost a Python roundtrip at 100 TB.  The scan path
+    applies the same rule as SQL text and no longer calls this."""
     return F.when(col.contains(":"), F.lower(col)).otherwise(col)
 
 

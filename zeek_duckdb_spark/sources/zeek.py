@@ -8,7 +8,17 @@ by a declarative cast pipeline.  Everything after header parse is
 DataFrame expressions, so Catalyst keeps column pruning (the CSV parser
 only tokenizes projected fields), predicate pushdown on passthrough
 string columns, and whole-stage codegen for the casts — no Python
-executes per row.  Scale notes:
+executes per row.
+
+The cast pipeline is built as Spark SQL text and handed over in one
+``selectExpr`` per projection, so the JVM parses it once.  Built one
+``pyspark.sql.functions`` call at a time it cost a py4j round trip per
+expression node — thousands per bind, a fixed driver latency that
+dwarfed the scan on small logs.  Two rules keep the text equivalent to
+those expressions: every string literal goes through :func:`_lit`,
+which does not depend on session confs, and a value the cast reads more
+than once is a column of the projection before (or a lambda variable),
+never repeated text.  Scale notes:
 
 - one Spark task per (non-splittable) gzip file == the reference's
   per-file parallelism unit (src/zeek_scanner.cpp:245-330); plain-text
@@ -26,8 +36,9 @@ from __future__ import annotations
 
 import functools
 import os
+from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -44,30 +55,68 @@ from zeek_duckdb_spark.header import (
 __all__ = ["read_zeek"]
 
 
-def _qcol(name: str) -> Column:
-    """Column ref tolerant of dots in the name (replace_periods=False)."""
-    return F.col("`" + name.replace("`", "``") + "`")
+def _ident(name: str) -> str:
+    """SQL identifier for a column name (dots and backticks included)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _lit(s: str) -> str:
+    """SQL string literal that parses to ``s`` under every session conf.
+
+    ``'...'`` is only safe when the text holds no quote or backslash
+    (their meaning depends on ``spark.sql.parser.escapedStringLiterals``,
+    and raw ``r'...'`` literals misparse when it is on) and no ``$``
+    (``${...}`` is substituted under ``spark.sql.variable.substitute``);
+    anything else goes in as its UTF-8 bytes in hex, which constant
+    folding turns back into the same literal."""
+    if "'" in s or "\\" in s or "$" in s:
+        return f"cast(unhex('{s.encode('utf-8').hex()}') as string)"
+    return f"'{s}'"
+
+
+def _sql_type(dt: T.DataType) -> str:
+    """Type name for a SQL cast.  ``timestamp_ltz`` because a bare
+    ``timestamp`` follows ``spark.sql.timestampType``."""
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, T.TimestampType):
+        return "timestamp_ltz"
+    return dt.simpleString()
+
+
+def select_stages(df: DataFrame, stages: list[list[str]]) -> DataFrame:
+    """Apply successive SQL select lists, one ``selectExpr`` each."""
+    return functools.reduce(lambda d, sel: d.selectExpr(*sel), stages, df)
 
 
 def _java_rx_quote(s: str) -> str:
-    """Quote a literal for Java regex (F.split takes a regex pattern)."""
+    """Quote a literal for Java regex (split takes a regex pattern)."""
     return "\\Q" + s.replace("\\E", "\\E\\\\E\\Q") + "\\E"
 
 
-def _marker_to_null(col: Column, hdr: ZeekHeader) -> Column:
+def _marker_to_null(x: str, hdr: ZeekHeader) -> str:
     """unset_field or empty_field marker -> SQL NULL, for every type
     including lists (ref src/zeek_scanner.cpp:798-801; NULL not
     empty-array for '(empty)' on a vector column,
     test/sql/zeek.test:191-206)."""
-    return F.when(
-        (col == F.lit(hdr.unset_field)) | (col == F.lit(hdr.empty_field)),
-        F.lit(None),
-    ).otherwise(col)
+    return (f"CASE WHEN {x} = {_lit(hdr.unset_field)} OR "
+            f"{x} = {_lit(hdr.empty_field)} THEN NULL ELSE {x} END")
 
 
-def _cast_scalar(col: Column, zeek_type: str, count_decimal: bool = False) -> Column:
+def _pre_cast(x: str, zeek_type: str, count_decimal: bool) -> str:
+    """The part of the cast that :func:`_cast_scalar` reads more than
+    once (port/count range checks), computed one projection earlier."""
+    if zeek_type == "port":
+        return f"try_cast({x} as int)"
+    if zeek_type == "count":
+        return f"try_cast({x} as {'decimal(20,0)' if count_decimal else 'long'})"
+    return x
+
+
+def _cast_scalar(p: str, zeek_type: str, inet: bool) -> str:
     """Text -> typed value with the reference's parse semantics
-    (ref src/zeek_scanner.cpp:806-884 and :23-31):
+    (ref src/zeek_scanner.cpp:806-884 and :23-31), over ``p``: the
+    marker-nulled cell after :func:`_pre_cast`.
 
     - time/interval: epoch-seconds double * 1e6 truncated to int64 µs
     - port: uint16 range check, out-of-range -> NULL (TryCast failure)
@@ -75,79 +124,71 @@ def _cast_scalar(col: Column, zeek_type: str, count_decimal: bool = False) -> Co
       in [2^63, 2^64) overflow LongType -> NULL (documented caveat,
       SURVEY.md §1.4 — unrealistic for Zeek counters)
     - bool: 'T'/'true' -> true, anything else -> false, never NULL on
-      bad input (ref src/zeek_scanner.cpp:838-841)
+      bad input (ref src/zeek_scanner.cpp:838-841); markers stay NULL
     - parse failure on numerics/time/interval -> NULL
+    - addr/subnet with ``inet``: IPv6 lowercased, the SQL form of
+      ``functions.inet.inet_canon_col``
     """
     # try_cast throughout: Spark 4 runs in ANSI mode where a plain cast
     # THROWS on malformed text; the reference uses TryCast semantics
     # (bad input -> NULL, src/zeek_scanner.cpp:811-818)
+    micros = f"try_cast(try_cast({p} as double) * 1000000.0D as long)"
     if zeek_type == "time":
-        return F.timestamp_micros(
-            (col.try_cast("double") * F.lit(1e6)).try_cast("long")
-        )
+        return f"timestamp_micros({micros})"
     if zeek_type == "interval":
-        micros = (col.try_cast("double") * F.lit(1e6)).try_cast("long")
-        secs = micros.cast("decimal(20,0)") / F.lit(1000000)
-        return F.make_dt_interval(F.lit(0), F.lit(0), F.lit(0), secs)
+        return (f"make_dt_interval(0, 0, 0, "
+                f"cast({micros} as decimal(20,0)) / 1000000)")
     if zeek_type == "port":
-        p = col.try_cast("int")
-        return F.when(p.between(0, 65535), p)
+        return f"CASE WHEN {p} >= 0 AND {p} <= 65535 THEN {p} END"
     if zeek_type == "count":
-        if count_decimal:
-            # full-uint64 fidelity: DECIMAL(20,0) holds [0, 2^64)
-            p = col.try_cast("decimal(20,0)")
-            return F.when(p >= 0, p)
-        p = col.try_cast("long")
-        return F.when(p >= 0, p)
+        return f"CASE WHEN {p} >= 0 THEN {p} END"
     if zeek_type == "int":
-        return col.try_cast("long")
+        return f"try_cast({p} as long)"
     if zeek_type == "bool":
-        return col.isin("T", "true")
+        return f"CASE WHEN {p} IS NULL THEN NULL ELSE {p} IN ('T', 'true') END"
     if zeek_type == "double":
-        return col.try_cast("double")
+        return f"try_cast({p} as double)"
+    if inet and zeek_type in ("addr", "subnet"):
+        return f"CASE WHEN contains({p}, ':') THEN lower({p}) ELSE {p} END"
     # string / enum / addr / subnet / unknown -> passthrough text
-    return col
+    return p
 
 
-def _cast_field(raw: Column, zeek_type: str, hdr: ZeekHeader, inet_canon,
-                count_decimal: bool = False) -> Column:
-    """Full field pipeline: marker->NULL, then list split + element casts
-    for vector[...]/set[...] (ref src/zeek_scanner.cpp:332-437 — sets are
-    read as lists, order preserved, no dedup), else scalar cast."""
+def _cast_field(src: str, zeek_type: str, hdr: ZeekHeader, inet: bool,
+                count_decimal: bool = False) -> tuple[str, Callable[[str], str]]:
+    """Full field pipeline over raw column ``src``: marker->NULL, then
+    list split + element casts for vector[...]/set[...] (ref
+    src/zeek_scanner.cpp:332-437 — sets are read as lists, order
+    preserved, no dedup), else scalar cast.  Returned as two stages:
+    the first projection's text, and a function building the second
+    projection's text from the first one's column name."""
     zt = zeek_type.strip()
-    cell = _marker_to_null(raw, hdr)
+    cell = _marker_to_null(_ident(src), hdr)
     if zt.startswith("vector[") or zt.startswith("set["):
         if zt.endswith("]"):
             inner = zt[zt.index("[") + 1 : -1]
         else:
             inner = "string"  # malformed bracket -> string elements
-        elems = F.split(cell, _java_rx_quote(hdr.set_separator))
-
-        def elem(e: Column) -> Column:
-            e2 = _marker_to_null(e, hdr)  # NULL elements inside arrays
-            if inner == "bool":
-                # element markers NULL first, then no-NULL bool rule
-                return F.when(e2.isNull(), F.lit(None)).otherwise(
-                    _cast_scalar(e2, "bool")
-                )
-            c = _cast_scalar(e2, inner, count_decimal)
-            return _canon_maybe(c, inner, inet_canon)
-
-        return F.transform(elems, elem)
-    if zt == "bool":
-        return F.when(cell.isNull(), F.lit(None)).otherwise(_cast_scalar(cell, "bool"))
-    return _canon_maybe(_cast_scalar(cell, zt, count_decimal), zt, inet_canon)
+        elems = f"split({cell}, {_lit(_java_rx_quote(hdr.set_separator))})"
+        # NULL elements inside arrays
+        pre = _pre_cast(_marker_to_null("e", hdr), inner, count_decimal)
+        body = _cast_scalar("e", inner, inet)
+        return (f"transform({elems}, e -> {pre})",
+                lambda p: p if body == "e" else f"transform({p}, e -> {body})")
+    return (_pre_cast(cell, zt, count_decimal),
+            lambda p: _cast_scalar(p, zt, inet))
 
 
-def _canon_maybe(col: Column, zeek_type: str, inet_canon) -> Column:
-    if inet_canon is not None and zeek_type in ("addr", "subnet"):
-        return inet_canon(col)
-    return col
-
-
-def _clean_file_path(col: Column) -> Column:
-    """input_file_name() yields a file: URI; normalize to a plain path."""
-    return F.regexp_replace(col, r"^file:(//)?", "")
+def _two_stages(fields: list[tuple[str, Callable[[str], str]]],
+                out_names: list[str]) -> list[list[str]]:
+    """Select lists for :func:`select_stages` from ``_cast_field``
+    pairs.  A value the cast reads more than once is a column of the
+    first projection, never repeated text."""
+    return [
+        [f"{first} AS p{i}" for i, (first, _) in enumerate(fields)],
+        [f"{second(f'p{i}')} AS {_ident(n)}"
+         for i, ((_, second), n) in enumerate(zip(fields, out_names))],
+    ]
 
 
 # Past this many files the abs->as-given map would bloat the plan with a
@@ -157,18 +198,21 @@ def _clean_file_path(col: Column) -> Column:
 _FILENAME_MAP_MAX_FILES = 10_000
 
 
-def _as_given_file_path(col: Column, files: list[str]) -> Column:
-    """Echo the path in the form the USER supplied (relative stays
-    relative), matching the reference (src/zeek_scanner.cpp:778-781):
-    a driver-built literal map from canonical absolute path back to the
-    glob's as-given form, applied to input_file_name().  Identity-skip
+def _with_filename(df: DataFrame, files: list[str]) -> DataFrame:
+    """Add the ``filename`` column, echoing the path in the form the
+    USER supplied (relative stays relative), matching the reference
+    (src/zeek_scanner.cpp:778-781): input_file_name() without its
+    file: URI prefix, then a driver-built literal map from canonical
+    absolute path back to the glob's as-given form.  Identity-skip
     when every glob match is already absolute."""
-    cleaned = _clean_file_path(col)
+    df = df.withColumn(
+        "filename", F.expr("regexp_replace(input_file_name(), '^file:(//)?', '')")
+    )
     pairs = [(os.path.abspath(f), f) for f in files]
     if len(files) > _FILENAME_MAP_MAX_FILES or all(a == g for a, g in pairs):
-        return cleaned
-    m = F.create_map(*[F.lit(x) for pair in pairs for x in pair])
-    return F.coalesce(m.getItem(cleaned), cleaned)
+        return df
+    m = ", ".join(_lit(x) for pair in pairs for x in pair)
+    return df.withColumn("filename", F.expr(f"coalesce(map({m})[filename], filename)"))
 
 
 def _raw_schema(names: list[str]) -> T.StructType:
@@ -259,22 +303,14 @@ def read_zeek(
             f"No valid Zeek log files found in pattern '{path}'"
         )
 
-    inet_canon = None
-    if inet:
-        from zeek_duckdb_spark.functions.inet import inet_canon_col
-
-        inet_canon = inet_canon_col
-
     if union_by_name:
-        df = _read_union(spark, headers, replace_periods, inet_canon, count_decimal)
+        df = _read_union(spark, headers, replace_periods, inet, count_decimal)
     else:
-        df = _read_strict(spark, headers, replace_periods, inet_canon,
+        df = _read_strict(spark, headers, replace_periods, inet,
                           ignore_file_errors, count_decimal)
 
     if filename:
-        df = df.withColumn(
-            "filename", _as_given_file_path(F.input_file_name(), files)
-        )
+        df = _with_filename(df, files)
     return df
 
 
@@ -282,7 +318,7 @@ def _read_strict(
     spark: SparkSession,
     headers: list[ZeekHeader],
     replace_periods: bool,
-    inet_canon,
+    inet: bool,
     ignore_file_errors: bool,
     count_decimal: bool = False,
 ) -> DataFrame:
@@ -307,26 +343,28 @@ def _read_strict(
             )
     names = first.column_names(replace_periods)
     raw = _read_group(spark, [h.source_file for h in kept], first, names)
-    return raw.select(*typed_columns(first, replace_periods, inet_canon, count_decimal))
+    return select_stages(raw, typed_columns(first, replace_periods, inet, count_decimal))
 
 
-def typed_columns(hdr: ZeekHeader, replace_periods: bool, inet_canon=None,
-                  count_decimal: bool = False) -> list[Column]:
-    """The typed cast pipeline for one header, as a select list over the
-    all-string raw columns.  Shared by the batch reader and the
-    Structured Streaming reader (streaming/zeek_stream.py)."""
+def typed_columns(hdr: ZeekHeader, replace_periods: bool, inet: bool = False,
+                  count_decimal: bool = False) -> list[list[str]]:
+    """The typed cast pipeline for one header, as SQL select lists (for
+    :func:`select_stages`) over the all-string raw columns.  Shared by
+    the batch reader and the Structured Streaming reader
+    (streaming/zeek_stream.py)."""
     names = hdr.column_names(replace_periods)
-    return [
-        _cast_field(_qcol(n), zt, hdr, inet_canon, count_decimal).alias(n)
-        for n, zt in zip(names, hdr.types)
-    ]
+    return _two_stages(
+        [_cast_field(n, zt, hdr, inet, count_decimal)
+         for n, zt in zip(names, hdr.types)],
+        names,
+    )
 
 
 def _read_union(
     spark: SparkSession,
     headers: list[ZeekHeader],
     replace_periods: bool,
-    inet_canon,
+    inet: bool,
     count_decimal: bool = False,
 ) -> DataFrame:
     """union_by_name mode: fields unioned by name in first-encountered
@@ -340,14 +378,14 @@ def _read_union(
         if replace_periods
         else list(union_fields)
     )
-    from pyspark.sql import types as _T
 
     def _sp_type(t):
         if count_decimal and t.strip() == "count":
-            return _T.DecimalType(20, 0)
+            return T.DecimalType(20, 0)
         return zeek_type_to_spark(t)
 
-    spark_types = {f: _sp_type(t) for f, t in zip(union_fields, union_types)}
+    null_of = {f: f"cast(NULL as {_sql_type(_sp_type(t))})"
+               for f, t in zip(union_fields, union_types)}
 
     groups: dict[tuple, list[ZeekHeader]] = {}
     for h in headers:
@@ -359,15 +397,10 @@ def _read_union(
         g_names = g.column_names(replace_periods)
         raw = _read_group(spark, [h.source_file for h in hdrs], g, g_names)
         have = dict(zip(g.fields, zip(g_names, g.types)))
-        cols = []
-        for f, zt, out in zip(union_fields, union_types, out_names):
-            if f in have:
-                src_name, src_zt = have[f]
-                cols.append(
-                    _cast_field(_qcol(src_name), src_zt, g, inet_canon,
-                                count_decimal).alias(out)
-                )
-            else:
-                cols.append(F.lit(None).cast(spark_types[f]).alias(out))
-        parts.append(raw.select(*cols))
+        fields = [
+            _cast_field(*have[f], g, inet, count_decimal) if f in have
+            else (null_of[f], lambda p: p)
+            for f in union_fields
+        ]
+        parts.append(select_stages(raw, _two_stages(fields, out_names)))
     return functools.reduce(lambda a, b: a.unionByName(b), parts)

@@ -16,9 +16,16 @@ read paths) parse back to the same values:
   string/collection as the empty marker, vector/set joined on the set
   separator with per-element markers.
 
-Scale shape: all row formatting is JVM expressions (one generated
-``concat_ws`` projection — zero Python in the data path until the
-final byte-copy); the sink itself is a Python DataSource writer that
+Scale shape: all row formatting is JVM expressions (a short chain of
+projections ending in one ``concat_ws`` — zero Python in the data path
+until the final byte-copy).  The projections are Spark SQL text, one
+``selectExpr`` each, built with the reader's conf-independent literal
+and identifier helpers: building them one Column call at a time cost a
+py4j round trip per expression node on the driver.  The µs of time
+and interval values, their 6-digit form and each unguarded cell are
+columns of their own projection because the next step reads them more
+than once (repeating them in the text multiplied the JVM's analysis
+work).  The sink itself is a Python DataSource writer that
 streams each partition's already-formatted lines into its own
 ``part-NNNNN.log[.gz]`` file with the full header block — one file per
 partition, the rotation-shaped layout the reference's multi-file scan
@@ -38,9 +45,10 @@ from __future__ import annotations
 import gzip
 import os
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from zeek_duckdb_spark.sources.zeek import _ident, _lit, select_stages
 
 __all__ = [
     "write_zeek",
@@ -52,6 +60,9 @@ __all__ = [
 _UNSET = "-"
 _EMPTY = "(empty)"
 _SET_SEP = ","
+# values the wire cannot carry: in a cell, and in a collection element
+_CELL_BAD = "[\\t\\n\\r]"
+_ELEMENT_BAD = "[\\t\\n\\r" + _SET_SEP + "]"
 
 
 def zeek_types_for_schema(
@@ -102,11 +113,36 @@ def _default_ztype(dt: T.DataType, name: str) -> str:
     )
 
 
-def _us_to_decimal_string(us: Column) -> Column:
+def _micros(c: str, dt: T.DataType) -> str:
+    """Integer µs of a time or interval value."""
+    if isinstance(dt, T.TimestampType):
+        return f"unix_micros({c})"
+    return _interval_us(c)
+
+
+def _interval_us(c: str) -> str:
+    """Total µs of a day-time interval, exact via component extracts
+    (CAST(interval AS BIGINT) truncates to whole end-unit seconds)."""
+    d, h, m = (f"cast(extract({u} FROM {c}) as long)"
+               for u in ("DAY", "HOUR", "MINUTE"))
+    # SECOND is decimal(8,6): µs-exact, signed
+    return (f"({d} * 86400 + {h} * 3600 + {m} * 60) * cast(1000000 as long)"
+            f" + cast(extract(SECOND FROM {c}) * 1000000 as long)")
+
+
+def _six_digits(us: str) -> str:
+    """Integer µs -> decimal seconds with exactly 6 fractional digits."""
+    return (f"concat(CASE WHEN {us} < 0 THEN '-' ELSE '' END, "
+            f"cast(cast(abs({us}) / 1000000 as long) as string), '.', "
+            f"lpad(cast(abs({us}) % 1000000 as string), 6, '0'))")
+
+
+def _us_to_decimal_string(s6: str, us: str) -> str:
     """Integer µs -> decimal-seconds string that parses BACK to the
     same µs under the read side's ``trunc(double(v) * 1e6)`` contract
     (A9 — the reference's own float-then-truncate parse,
-    src/zeek_scanner.cpp:23-31).
+    src/zeek_scanner.cpp:23-31), from ``us`` and its
+    :func:`_six_digits` form ``s6``.
 
     Plain 6-digit formatting is NOT enough: ~1.2 % of µs values sit
     where the nearest double to ``n/1e6`` lands just below ``n`` after
@@ -117,96 +153,86 @@ def _us_to_decimal_string(us: Column) -> Column:
     ``(n, n+1)``; every other row keeps the canonical 6-digit Zeek
     form.  Result: write->read is µs-exact for ALL values (fuzzed in
     tests/test_zeek_writer.py)."""
-    sign = F.when(us < 0, F.lit("-")).otherwise(F.lit(""))
-    a = F.abs(us)
-    s6 = F.concat(
-        sign,
-        (a / F.lit(1_000_000)).cast("long").cast("string"),
-        F.lit("."),
-        F.lpad((a % F.lit(1_000_000)).cast("string"), 6, "0"),
-    )
-    parsed6 = (s6.cast("double") * F.lit(1_000_000.0)).cast("long")
-    return F.when(parsed6 == us, s6).otherwise(F.concat(s6, F.lit("5")))
+    return (f"CASE WHEN cast(cast({s6} as double) * 1000000.0D as long) = {us}"
+            f" THEN {s6} ELSE concat({s6}, '5') END")
 
 
-def _interval_us(col: Column) -> Column:
-    """Total µs of a day-time interval, exact via component extracts
-    (CAST(interval AS BIGINT) truncates to whole end-unit seconds)."""
-    d = F.extract(F.lit("DAY"), col).cast("long")
-    h = F.extract(F.lit("HOUR"), col).cast("long")
-    m = F.extract(F.lit("MINUTE"), col).cast("long")
-    s = F.extract(F.lit("SECOND"), col)  # decimal(8,6), µs-exact, signed
-    return (
-        (d * 86_400 + h * 3_600 + m * 60) * F.lit(1_000_000).cast("long")
-        + (s * F.lit(1_000_000)).cast("long")
-    )
-
-
-def _scalar_wire(col: Column, dt: T.DataType, ztype: str) -> Column:
-    base = ztype.split("[", 1)[0]
-    if isinstance(dt, T.TimestampType):
-        return _us_to_decimal_string(F.unix_micros(col))
-    if isinstance(dt, T.DayTimeIntervalType):
-        return _us_to_decimal_string(_interval_us(col))
+def _scalar_wire(c: str, dt: T.DataType) -> str:
+    """Wire text of a non-time scalar; NULL stays NULL."""
     if isinstance(dt, T.BooleanType):
-        # two guarded arms so NULL stays NULL (otherwise() would fold
-        # NULL into 'F'); the unset marker lands via the outer coalesce
-        return F.when(col, F.lit("T")).when(~col, F.lit("F"))
+        # two guarded arms so NULL stays NULL (an ELSE would fold NULL
+        # into 'F'); the unset marker lands via the outer coalesce
+        return f"CASE WHEN {c} THEN 'T' WHEN NOT {c} THEN 'F' END"
     if isinstance(dt, T.StringType):
-        return F.when(col == "", F.lit(_EMPTY)).otherwise(col)
-    if isinstance(dt, T.DateType):
-        return col.cast("string")  # ISO-8601
-    _ = base  # numeric/decimal: engine string form round-trips via cast
-    return col.cast("string")
+        return f"CASE WHEN {c} = '' THEN {_lit(_EMPTY)} ELSE {c} END"
+    # date: ISO-8601; numeric/decimal: engine string form round-trips
+    return f"cast({c} as string)"
 
 
-def _guard(cell: Column, bad_re: str, colname: str, on_unwritable: str) -> Column:
+def _guard(cell: str, bad_re: str, colname: str, on_unwritable: str) -> str:
     """The format has no escaping: a value containing the row separator
     (or, inside a collection, the SET separator) would corrupt the row
     — fail loudly (default) or strip to a space BEFORE bytes land."""
     if on_unwritable == "strip":
-        return F.regexp_replace(cell, F.lit(bad_re), F.lit(" "))
-    return F.when(
-        cell.rlike(bad_re),
-        F.raise_error(
-            F.lit(
-                f"write_zeek: value in column '{colname}' contains the "
-                "separator, set separator, or a newline (Zeek TSV has no "
-                "escaping); pass on_unwritable='strip' to replace"
-            )
-        ),
-    ).otherwise(cell)
+        return f"regexp_replace({cell}, {_lit(bad_re)}, ' ')"
+    msg = (f"write_zeek: value in column '{colname}' contains the "
+           "separator, set separator, or a newline (Zeek TSV has no "
+           "escaping); pass on_unwritable='strip' to replace")
+    return (f"CASE WHEN {cell} RLIKE {_lit(bad_re)} "
+            f"THEN raise_error({_lit(msg)}) ELSE {cell} END")
 
 
 def _field_wire(
-    col: Column, dt: T.DataType, ztype: str, colname: str, on_unwritable: str
-) -> Column:
-    """One field's wire text, NULL -> unset marker (and per-element
-    markers inside collections — the read side's A10 semantics).
-    Separator guards run at ELEMENT level for collections, so a set
-    separator hiding inside an element is caught before the join."""
-    if isinstance(dt, T.ArrayType):
-        ezt = ztype.split("[", 1)[-1].rstrip("]")
-        joined = F.array_join(
-            F.transform(
-                col,
-                lambda e: _guard(
-                    F.coalesce(
-                        _scalar_wire(e, dt.elementType, ezt), F.lit(_UNSET)
-                    ),
-                    "[\\t\\n\\r" + _SET_SEP + "]",
-                    colname,
-                    on_unwritable,
-                ),
-            ),
-            _SET_SEP,
-        )
-        body = F.when(F.size(col) == 0, F.lit(_EMPTY)).otherwise(joined)
-        return F.coalesce(body, F.lit(_UNSET))
-    body = _scalar_wire(col, dt, ztype)
-    return _guard(
-        F.coalesce(body, F.lit(_UNSET)), "[\\t\\n\\r]", colname, on_unwritable
-    )
+    src: str, c: str, dt: T.DataType, colname: str, on_unwritable: str
+) -> list[list[str]]:
+    """One field's wire text, as four successive projections from the
+    column ``src`` to a column named ``c``: the value (µs for time and
+    interval); its 6-digit form; the cell (NULL -> unset marker, and
+    per-element markers inside collections — the read side's A10
+    semantics); the separator guard.  A value read more than once is a
+    column of the projection before, or a lambda variable.  Separator
+    guards run at ELEMENT level for collections, so a set separator
+    hiding inside an element is caught before the join."""
+    v, s6, w = f"{c}_v", f"{c}_s6", f"{c}_w"
+    unset = _lit(_UNSET)
+    arr = isinstance(dt, T.ArrayType)
+    et = dt.elementType if arr else dt
+    if isinstance(et, (T.TimestampType, T.DayTimeIntervalType)):
+        if arr:
+            value = f"transform({src}, e -> {_micros('e', et)})"
+            digits = f"transform({v}, e -> {_six_digits('e')})"
+            cell = (f"zip_with({s6}, {v}, (s, u) -> "
+                    f"coalesce({_us_to_decimal_string('s', 'u')}, {unset}))")
+        else:
+            value = _micros(src, et)
+            digits = _six_digits(v)
+            cell = f"coalesce({_us_to_decimal_string(s6, v)}, {unset})"
+        stages = [[f"{value} AS {v}"], [v, f"{digits} AS {s6}"], [f"{cell} AS {w}"]]
+    else:
+        if arr:
+            cell = f"transform({v}, e -> coalesce({_scalar_wire('e', et)}, {unset}))"
+        else:
+            cell = f"coalesce({_scalar_wire(v, et)}, {unset})"
+        stages = [[f"{src} AS {v}"], [v], [f"{cell} AS {w}"]]
+    if arr:
+        guarded = _guard("e", _ELEMENT_BAD, colname, on_unwritable)
+        joined = f"array_join(transform({w}, e -> {guarded}), {_lit(_SET_SEP)})"
+        wire = (f"coalesce(CASE WHEN size({w}) = 0 THEN {_lit(_EMPTY)} "
+                f"ELSE {joined} END, {unset})")
+    else:
+        wire = _guard(w, _CELL_BAD, colname, on_unwritable)
+    return stages + [[f"{wire} AS {c}"]]
+
+
+def _first_cell(c: str, colname: str, on_unwritable: str) -> str:
+    """A '#' at LINE start reads back as a comment/directive and the
+    whole row silently vanishes — guard the first cell."""
+    if on_unwritable == "strip":
+        return f"regexp_replace({c}, '^#', ' ')"
+    msg = (f"write_zeek: value in first column '{colname}' "
+           "starts with '#' (reads back as a comment line); "
+           "pass on_unwritable='strip' to replace")
+    return f"CASE WHEN startswith({c}, '#') THEN raise_error({_lit(msg)}) ELSE {c} END"
 
 
 def write_zeek(
@@ -279,27 +305,18 @@ def format_zeek_lines(
             "#types\t" + "\t".join(ztypes),
         ]
     )
-    cells = []
-    for i, (f, zt) in enumerate(zip(schema.fields, ztypes)):
-        cell = _field_wire(F.col(f.name), f.dataType, zt, f.name, on_unwritable)
-        if i == 0:
-            # a '#' at LINE start reads back as a comment/directive and
-            # the whole row silently vanishes — guard the first cell
-            if on_unwritable == "strip":
-                cell = F.regexp_replace(cell, F.lit("^#"), F.lit(" "))
-            else:
-                cell = F.when(
-                    cell.startswith("#"),
-                    F.raise_error(
-                        F.lit(
-                            f"write_zeek: value in first column '{f.name}' "
-                            "starts with '#' (reads back as a comment line); "
-                            "pass on_unwritable='strip' to replace"
-                        )
-                    ),
-                ).otherwise(cell)
-        cells.append(cell)
-    return df.select(F.concat_ws("\t", *cells).alias("line")), header
+    # the user's names only appear in the first projection; after it
+    # every column is c<i>[_suffix], so no name needs quoting
+    fields = [
+        _field_wire(_ident(f.name), f"c{i}", f.dataType, f.name, on_unwritable)
+        for i, f in enumerate(schema.fields)
+    ]
+    stages = [[e for fld in fields for e in fld[k]] for k in range(4)]
+    cells = [f"c{i}" for i in range(len(fields))]
+    if cells:
+        cells[0] = _first_cell("c0", schema.fields[0].name, on_unwritable)
+    line = "concat_ws(" + ", ".join(["'\t'"] + cells) + ") AS line"
+    return select_stages(df, stages + [[line]]), header
 
 
 def write_zeek_stream(

@@ -10,8 +10,10 @@ Design: schema is resolved ONCE, driver-side, from existing files (or an
 explicit sample file) with the same header module as the batch path —
 streams can't re-infer schema per file, and Zeek streams keep a stable
 schema per log type.  Then ``spark.readStream.csv`` over the directory
-with the shared typed-cast pipeline.  Everything downstream (watermarks,
-windowed rollups, stateful ops) is stock Structured Streaming.
+with the shared typed-cast pipeline (``sources.zeek.typed_columns``:
+SQL select lists parsed once by the JVM, rather than a py4j round trip
+per expression node).  Everything downstream (watermarks, windowed
+rollups, stateful ops) is stock Structured Streaming.
 
 Scale notes: the file source scales by listing + per-file tasks (same
 unit as batch); ``maxFilesPerTrigger`` bounds micro-batch size;
@@ -30,7 +32,7 @@ from zeek_duckdb_spark.header import (
     parse_header,
     same_schema,
 )
-from zeek_duckdb_spark.sources.zeek import _raw_schema, typed_columns
+from zeek_duckdb_spark.sources.zeek import _raw_schema, select_stages, typed_columns
 
 __all__ = ["read_zeek_stream", "read_zeek_json_stream", "validate_stream_schemas", "windowed_rollup"]
 
@@ -78,12 +80,6 @@ def read_zeek_stream(
         validate_stream_schemas(directory, pattern=pattern, schema_from=schema_from)
     hdr: ZeekHeader = parse_header(schema_from)
 
-    inet_canon = None
-    if inet:
-        from zeek_duckdb_spark.functions.inet import inet_canon_col
-
-        inet_canon = inet_canon_col
-
     names = hdr.column_names(replace_periods)
     reader = (
         spark.readStream.schema(_raw_schema(names))
@@ -102,7 +98,7 @@ def read_zeek_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     raw = reader.csv(f"{directory.rstrip('/')}/{pattern}")
-    return raw.select(*typed_columns(hdr, replace_periods, inet_canon))
+    return select_stages(raw, typed_columns(hdr, replace_periods, inet))
 
 
 def validate_stream_schemas(
