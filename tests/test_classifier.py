@@ -381,3 +381,24 @@ def test_token_fit_composes_with_clean_corpus_gate(spark):
         clean_corpus(corpus, classifier={
             "weights": m["weights"], "threshold": 0.5, "keep": "maybe",
         }).collect()
+
+
+def test_module_imports_without_pandas():
+    """The classifier module imports pandas only inside the functions
+    that run pandas UDFs, so loading it needs no pandas."""
+    import subprocess
+    import sys
+
+    import zeek_duckdb_spark.operators.classifier as mod
+
+    code = (
+        "import sys, importlib.util as u\n"
+        "sys.modules['pandas'] = None\n"
+        f"spec = u.spec_from_file_location('classifier', {mod.__file__!r})\n"
+        "m = u.module_from_spec(spec)\n"
+        "spec.loader.exec_module(m)\n"
+        "assert callable(m.logreg_score) and 'pandas' not in vars(m)\n"
+    )
+    res = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                         text=True, timeout=120)
+    assert res.returncode == 0, res.stderr

@@ -120,6 +120,38 @@ def test_filename_relative_path_with_quote_echoed(spark, tmp_path, monkeypatch,
     assert got == {("C0", "it's_logs/conn_0.log"), ("C1", "it's_logs/conn_1.log")}
 
 
+def test_filename_uri_escaped_chars_echoed(spark, tmp_path, monkeypatch):
+    # input_file_name() percent-encodes a space, '%' and '#'; the echo
+    # decodes them and keeps a '+' literal, matching the DataSource
+    from zeek_duckdb_spark.sources.datasource import register_zeek_datasource
+
+    register_zeek_datasource(spark)
+    d = tmp_path / "zeek logs 100%+#1"
+    d.mkdir()
+    for uid, name in (("a", "conn a.log"), ("b", "conn%41+b#.log")):
+        (d / name).write_text(
+            "#separator \\x09\n#fields\tuid\n#types\tstring\n" f"{uid}\n"
+        )
+
+    def echoed(df):
+        return {(r.uid, r.filename) for r in df.select("uid", "filename").collect()}
+
+    def expected(prefix):
+        return {("a", f"{prefix}/conn a.log"), ("b", f"{prefix}/conn%41+b#.log")}
+
+    absolute = f"{d}/conn*.log"
+    assert echoed(read_zeek(spark, absolute, filename=True)) == expected(str(d))
+    assert echoed(
+        spark.read.format("zeek").option("filename", "true").load(absolute)
+    ) == expected(str(d))
+    # relative globs echo relative (the DataSource resolves paths in a
+    # worker process with its own cwd, so only the composed reader here)
+    monkeypatch.chdir(tmp_path)
+    assert echoed(
+        read_zeek(spark, f"{d.name}/conn*.log", filename=True)
+    ) == expected(d.name)
+
+
 # --- list types (zeek.test:49-71) --------------------------------------
 
 def test_vector_string(spark):

@@ -211,7 +211,7 @@ def test_content_encoding_decode_and_quarantine():
     )
     assert b == body and e is None
     # brotli GARBAGE: quarantined, raw bytes preserved (a valid br
-    # stream decodes through the ladder — test_brotli_zstd_entity_recovery)
+    # stream decodes — test_brotli_zstd_entity_recovery)
     s, c, b, e = _parse_http_response(resp("br", b"\x00\x01"), "t")
     assert (b, e) == (b"\x00\x01", "br")
     # truncated gzip: quarantined, not a crash
@@ -220,18 +220,14 @@ def test_content_encoding_decode_and_quarantine():
     assert (b, e) == (trunc, "gzip")
 
 
-def test_brotli_zstd_entity_recovery(spark, tmp_path, monkeypatch):
+def test_brotli_zstd_entity_recovery(spark, tmp_path):
     """Round-13: ``Content-Encoding: br`` and ``zstd`` entities decode
-    through the optional-decoder ladder (brotli/brotlicffi/zstandard
-    module if installed, else pyarrow's bundled codecs — present in
-    this container), so those pages' text is RECOVERED instead of
-    silently absent from the corpus; truncated streams and
-    decoder-absent environments still quarantine cleanly.  A mixed
-    fixture measures the recovered-page fraction: everything but the
-    truncated entity."""
+    through pyarrow's bundled codecs, so those pages' text is RECOVERED
+    instead of silently absent from the corpus; truncated streams still
+    quarantine cleanly.  A mixed fixture measures the recovered-page
+    fraction: everything but the truncated entity."""
     import pyarrow as pa
 
-    from zeek_duckdb_spark.sources import warc as W
     from zeek_duckdb_spark.sources.warc import _parse_http_response
 
     body = b"<p>the encoded page body</p>" * 10
@@ -249,19 +245,12 @@ def test_brotli_zstd_entity_recovery(spark, tmp_path, monkeypatch):
     # truncated br: quarantined
     s, c, b, e = _parse_http_response(resp("br", br[: len(br) // 2]), "t")
     assert (b, e) == (br[: len(br) // 2], "br")
-    if pa.Codec.is_available("zstd"):
-        zs = pa.Codec("zstd").compress(body, asbytes=True)
-        s, c, b, e = _parse_http_response(resp("zstd", zs), "t")
-        assert (b, e) == (body, None)
-
-    # decoder-absent environment: the ladder's ImportError quarantines
-    def _no_decoder(_b):
-        raise ImportError("no brotli decoder")
-
-    monkeypatch.setattr(W, "_brotli_decompress", _no_decoder)
-    s, c, b, e = _parse_http_response(resp("br", br), "t")
-    assert (b, e) == (br, "br")
-    monkeypatch.undo()
+    zs = pa.Codec("zstd").compress(body, asbytes=True)
+    s, c, b, e = _parse_http_response(resp("zstd", zs), "t")
+    assert (b, e) == (body, None)
+    # truncated zstd: quarantined
+    s, c, b, e = _parse_http_response(resp("zstd", zs[:-3]), "t")
+    assert (b, e) == (zs[:-3], "zstd")
 
     # mixed-fixture recovered-page fraction through read_warc
     def rec(uri, payload):
@@ -891,26 +880,35 @@ def test_write_wet_roundtrip(spark, tmp_path):
 
 
 def test_warc_zst_container(tmp_path):
-    """.warc.zst decodes through the module-free zstd ladder: the
-    vendored store-mode codec (always available) and pyarrow's bundled
-    entropy codec — same records as the plain form."""
-    recs = [_response_rec("http://z.org/a", b"<p>zstd page</p>")]
-    plain = encode_warc(recs, compress=False)
-
-    from zeek_duckdb_spark.sources.zstd_raw import compress_store
-
-    got = list(parse_warc(compress_store(plain)))
-    assert got[0]["headers"]["warc-target-uri"] == "http://z.org/a"
-
+    """.warc.zst decodes through pyarrow's bundled codec — raw-block
+    frames, one entropy-coded stream, concatenated frames and a leading
+    skippable frame all give the records of the plain form; a corrupt
+    stream is the documented ValueError."""
     import pyarrow as pa
 
-    if pa.Codec.is_available("zstd"):
-        buf = pa.BufferOutputStream()
-        with pa.CompressedOutputStream(buf, "zstd") as out:
-            out.write(plain)
-        got = list(parse_warc(bytes(buf.getvalue())))
-        assert got[0]["headers"]["warc-target-uri"] == "http://z.org/a"
+    recs = [_response_rec(f"http://z.org/{i}", b"<p>zstd page</p>" * 20)
+            for i in range(3)]
+    plain = encode_warc(recs, compress=False)
+
+    def frame(b):
+        return bytes(pa.Codec("zstd").compress(b))
+
+    buf = pa.BufferOutputStream()
+    with pa.CompressedOutputStream(buf, "zstd") as out:
+        out.write(plain)
+    skip = (0x184D2A5F).to_bytes(4, "little") + (4).to_bytes(4, "little") + b"dict"
+    for blob in (
+        b"".join(frame(plain[i:i + 16]) for i in range(0, len(plain), 16)),
+        bytes(buf.getvalue()),
+        b"".join(frame(plain[i:i + 500]) for i in range(0, len(plain), 500)),
+        skip + frame(plain),
+    ):
+        got = list(parse_warc(blob))
+        assert [g["headers"]["warc-target-uri"] for g in got] == [
+            f"http://z.org/{i}" for i in range(3)]
         assert got[0]["payload"].endswith(b"<p>zstd page</p>")
+    with pytest.raises(ValueError, match="zstd decode failed"):
+        list(parse_warc(frame(plain)[:-5]))
 
 
 def test_body_text_col_jvm_fast_path_differential(spark):

@@ -2,13 +2,15 @@
 frame-per-record layout — a structural frame walker (no entropy
 decode) turns frames into CDX-addressable COMPRESSED spans, selected
 reads ranged-read + decode one frame per hit through the capped
-ladder, and the single-whole-file-frame layout keeps its loud
-refusal.  Runs module-free: this container has no ``zstandard``, so
-the positive path exercises the pyarrow rung (entropy-coded frames
-with stated content sizes) and the vendored store-mode rung."""
+frame decoder, and the single-whole-file-frame layout keeps its loud
+refusal.  Every frame here comes from pyarrow's bundled codec: one-shot
+frames state their content size (entropy-coded, or raw blocks for
+incompressible bytes), streaming frames do not."""
 
 import io
+import random
 
+import pyarrow as pa
 import pytest
 
 from zeek_duckdb_spark.sources.warc import (
@@ -20,7 +22,21 @@ from zeek_duckdb_spark.sources.warc import (
     read_warc,
     read_warc_selected,
 )
-from zeek_duckdb_spark.sources.zstd_raw import compress_store
+
+
+def _raw_frame(n: int, seed: int = 0) -> tuple[bytes, bytes]:
+    """(payload, frame): ``n`` random bytes, which pyarrow stores as a
+    raw block."""
+    data = random.Random(seed).randbytes(n)
+    return data, _zstd_compress_frame(data)
+
+
+def _unsized_frame(data: bytes) -> bytes:
+    """A streaming-written frame: no content size in its header."""
+    buf = pa.BufferOutputStream()
+    with pa.CompressedOutputStream(buf, "zstd") as out:
+        out.write(data)
+    return bytes(buf.getvalue())
 
 
 def _http(body: bytes, ctype="text/html", status=200) -> bytes:
@@ -48,11 +64,10 @@ def _skippable(payload: bytes, nibble=0) -> bytes:
 
 def test_frame_walker_structural():
     """The walker resolves frame boundaries from headers alone:
-    entropy frames (pyarrow), store frames (vendored), RLE blocks and
-    skippable frames all span correctly; truncation and reserved bits
-    are loud."""
+    entropy frames, raw-block frames, RLE blocks and skippable frames
+    all span correctly; truncation and reserved bits are loud."""
     f1 = _zstd_compress_frame(b"alpha " * 100)
-    f2 = compress_store(b"beta " * 40)
+    _, f2 = _raw_frame(200)
     skip = _skippable(b"dictionary-bytes", nibble=3)
     blob = skip + f1 + f2
     got = list(_zstd_frame_spans(io.BytesIO(blob), "t"))
@@ -61,7 +76,7 @@ def test_frame_walker_structural():
         (len(skip), len(f1), "data"),
         (len(skip) + len(f1), len(f2), "data"),
     ]
-    # stated content sizes ride along (both rungs state them)
+    # stated content sizes ride along
     assert got[1][4] == 600 and got[2][4] == 200
 
     # RLE-block frame: spec says the block stores ONE byte while the
@@ -86,17 +101,23 @@ def test_frame_walker_structural():
 
 def test_frame_decoder_capped_ladder():
     data = b"payload " * 64
-    for frame in (_zstd_compress_frame(data), compress_store(data)):
-        assert _zstd_decompress_frame(frame, "t") == data
-    # a frame whose header states a past-cap size dies BEFORE decode
+    raw, raw_frame = _raw_frame(512)
+    for frame, want in ((_zstd_compress_frame(data), data),
+                        (_unsized_frame(data), data), (raw_frame, raw)):
+        assert _zstd_decompress_frame(frame, "t") == want
+    # a frame whose header states a past-cap size dies BEFORE decode;
+    # an unsized one is read for at most cap + 1 bytes, then refused
     from zeek_duckdb_spark.sources import warc as W
 
     big = _zstd_compress_frame(b"x" * 4096)
     saved = W._MAX_RECORD_BYTES
     try:
         W._MAX_RECORD_BYTES = 100
-        with pytest.raises(ValueError, match="cap"):
+        with pytest.raises(ValueError, match="states 4096 content bytes"):
             _zstd_decompress_frame(big, "t")
+        with pytest.raises(ValueError, match="unsized zstd frame .* cap"):
+            _zstd_decompress_frame(_unsized_frame(b"x" * 4096), "t")
+        assert _zstd_decompress_frame(_unsized_frame(b"x" * 100), "t") == b"x" * 100
     finally:
         W._MAX_RECORD_BYTES = saved
 
@@ -104,10 +125,10 @@ def test_frame_decoder_capped_ladder():
 def test_frame_decoder_lying_fcs_is_loud():
     """A frame whose header UNDER-states its content size (the bomb
     shape the stated-size gate alone cannot catch) errors instead of
-    inflating past the statement: every ladder rung reads at most
-    stated+1 bytes before the mismatch check."""
+    inflating past the statement: the decoder reads at most stated+1
+    bytes before the mismatch check."""
     data = b"A" * 1000
-    frame = bytearray(compress_store(data))
+    frame = bytearray(_zstd_compress_frame(data))
     assert frame[4] == 0x60  # single-segment, 2-byte FCS
     frame[5:7] = (0).to_bytes(2, "little")  # now states 256, not 1000
     with pytest.raises(ValueError, match="zstd frame"):
@@ -264,8 +285,8 @@ def test_read_warc_stream_engine_reads_multiframe_zst(spark, tmp_path):
 
 
 def test_frame_walker_differential_property():
-    """Property (hypothesis): for ANY concatenation of pyarrow- and
-    store-encoded frames plus skippable frames, the structural walk
+    """Property (hypothesis): for ANY concatenation of sized and
+    unsized pyarrow frames plus skippable frames, the structural walk
     tiles the blob exactly and each data frame's span decodes alone to
     its source payload — the walker can never mis-frame a legal
     stream."""
@@ -275,7 +296,7 @@ def test_frame_walker_differential_property():
     payload = st.binary(min_size=0, max_size=4096)
     frame = st.one_of(
         payload.map(lambda b: (b, _zstd_compress_frame(b))),
-        payload.map(lambda b: (b, compress_store(b))),
+        payload.map(lambda b: (b, _unsized_frame(b))),
         st.binary(min_size=0, max_size=64).map(
             lambda b: (None, _skippable(b, nibble=len(b) % 16))),
     )

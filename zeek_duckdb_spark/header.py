@@ -30,6 +30,16 @@ DEFAULT_EMPTY_FIELD = "(empty)"
 DEFAULT_UNSET_FIELD = "-"
 
 
+def is_zstd(buf: bytes) -> bool:
+    """Standard zstd frame magic OR a leading SKIPPABLE frame (magic
+    0x184D2A50-5F, RFC 8878 §3.1.2) — the IIPC ``.warc.zst`` convention
+    leads with its shared dictionary in one, so keying on the standard
+    magic alone would misroute those files to the plain-text path."""
+    if buf[:4] == ZSTD_MAGIC:
+        return True
+    return len(buf) >= 4 and 0x50 <= buf[0] <= 0x5F and buf[1:4] == b"\x2a\x4d\x18"
+
+
 class ZeekHeaderError(ValueError):
     """Malformed or missing Zeek header."""
 
@@ -107,20 +117,17 @@ def unescape_separator(value: str) -> str:
 def open_zeek_text(path: str) -> io.TextIOBase:
     """Open a Zeek log as text, auto-detecting gzip/zstd by magic bytes
     (the reference uses FileCompressionType::AUTO_DETECT,
-    src/zeek_scanner.cpp:262).  Raises on corrupt streams lazily — the
-    first read of a fake-gzip file raises, matching the reference's
-    scan-time error surface."""
+    src/zeek_scanner.cpp:262).  Both codecs decode as a stream and raise
+    on corrupt input lazily — the first read of a fake-gzip file raises,
+    matching the reference's scan-time error surface."""
     with open(path, "rb") as probe:
         magic = probe.read(4)
     if magic[:2] == GZIP_MAGIC:
         return io.TextIOWrapper(gzip.open(path, "rb"), encoding="utf-8", newline="")
-    if magic == ZSTD_MAGIC:
-        try:
-            import zstandard  # type: ignore
-        except ImportError:
-            return _open_zstd_fallback(path)
-        fh = zstandard.ZstdDecompressor().stream_reader(open(path, "rb"))
-        return io.TextIOWrapper(fh, encoding="utf-8", newline="")
+    if is_zstd(magic):
+        return io.TextIOWrapper(
+            io.BufferedReader(_ZstdReader(path)), encoding="utf-8", newline=""
+        )
     if path.endswith(".gz"):
         # A .gz name without a gzip stream is an error, like the
         # reference's fake_gzip fixture (test/sql/zeek_ignore_file_errors.test).
@@ -128,134 +135,34 @@ def open_zeek_text(path: str) -> io.TextIOBase:
     return open(path, "r", encoding="utf-8", newline="")
 
 
-def _open_zstd_fallback(path: str) -> io.TextIOBase:
-    """zstd decode without the ``zstandard`` module, tried in order:
+class _ZstdReader(io.RawIOBase):
+    """A ``.zst`` file decoded as a stream by pyarrow's bundled zstd codec
+    (raw, RLE and entropy blocks; concatenated and skippable frames).  A
+    decode failure raises ZeekHeaderError when the bad bytes are reached:
+    from the header parse when they sit in the header, at scan time when
+    they sit in the tail.  gzip errors keep their own wording — the
+    reference's corrupted-gzip fixtures pin it."""
 
-    1. the vendored store-mode codec (sources/zstd_raw.py — raw/RLE
-       blocks, pure Python);
-    2. for entropy-coded frames, pyarrow's bundled zstd codec
-       (``pa.CompressedInputStream``) — importable in Python executor
-       workers too, so BOTH scan paths (composed CSV and the Python
-       DataSource) read genuine compressed logs with zero extra
-       dependencies;
-    3. on the driver only, the Spark JVM's bundled zstd-jni via py4j
-       (the codec the JVM scan itself uses for the data rows).
-
-    All fallbacks buffer the decoded file in memory (one log file at a
-    time, the same unit the reference decodes); install ``zstandard``
-    for incremental streaming decode."""
-    from zeek_duckdb_spark.sources.zstd_raw import (
-        ZstdCompressedBlockError,
-        ZstdRawError,
-        decompress,
-    )
-
-    with open(path, "rb") as fh_in:
-        raw = fh_in.read()
-    try:
-        data = decompress(raw)
-    except ZstdCompressedBlockError as exc:
-        # a structurally-valid frame the pure-Python codec can't decode
-        # (entropy-coded blocks): pyarrow first (works on executors),
-        # then the driver JVM; only blame the missing module when
-        # neither codec was importable/reachable
-        data = _pyarrow_zstd_decompress(raw, path)
-        if data is None:
-            data = _jvm_zstd_decompress(raw, path)
-        if data is None:
-            raise ZeekHeaderError(
-                f"'{path}' is zstd-compressed and the zstandard "
-                f"module is unavailable ({exc})"
-            ) from exc
-    except ZstdRawError as exc:
-        # malformed frame structure — installing zstandard would NOT fix
-        # this file; say what is actually wrong
-        raise ZeekHeaderError(
-            f"corrupt or truncated zstd stream in '{path}': {exc}"
-        ) from exc
-    return io.TextIOWrapper(io.BytesIO(data), encoding="utf-8", newline="")
-
-
-def _pyarrow_zstd_decompress(raw: bytes, path: str) -> bytes | None:
-    """Entropy zstd decode through pyarrow's bundled codec.  Returns
-    None when pyarrow lacks zstd support (so the caller can try the
-    JVM); a genuine DECODE failure is a corrupt stream and raises
-    ZeekHeaderError saying so — installing zstandard would not fix it."""
-    try:
+    def __init__(self, path: str):
         import pyarrow as pa
 
-        if not pa.Codec.is_available("zstd"):
-            return None
-        stream = pa.CompressedInputStream(pa.BufferReader(raw), "zstd")
-    except Exception:
-        # import, codec, or stream construction unavailable — not a
-        # data error; the caller falls through to the JVM codec
-        return None
-    try:
-        return bytes(stream.read())
-    except Exception as exc:
-        raise ZeekHeaderError(
-            f"corrupt or truncated zstd stream in '{path}': pyarrow zstd "
-            f"decode failed ({exc})"
-        ) from exc
+        self._path = path
+        self._src = pa.CompressedInputStream(pa.OSFile(path), "zstd")
 
+    def readable(self) -> bool:
+        return True
 
-def _jvm_zstd_decompress(raw: bytes, path: str) -> bytes | None:
-    """Driver-side entropy zstd decode through the active SparkSession's
-    JVM (zstd-jni ships with Spark).  Returns None when no JVM gateway
-    is reachable (no active session, or running inside a Python
-    executor worker); a genuine DECODE failure from the JVM codec is a
-    corrupt stream and raises ZeekHeaderError saying so rather than
-    being misreported as a missing module."""
-    try:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            return None
-        jvm = spark._jvm
-        bis = jvm.java.io.ByteArrayInputStream(raw)
-        zis = jvm.com.github.luben.zstd.ZstdInputStream(bis)
-    except Exception:
-        return None  # gateway/classpath unavailable, not a data error
-    try:
-        bos = jvm.java.io.ByteArrayOutputStream()
-        zis.transferTo(bos)
-        zis.close()
-        return bytes(bos.toByteArray())
-    except Exception as exc:
-        raise ZeekHeaderError(
-            f"corrupt or truncated zstd stream in '{path}': JVM zstd "
-            f"decode failed ({exc.__class__.__name__})"
-        ) from exc
-
-
-def _translate_stream_errors(fh, path: str):
-    """Surface zstd stream-decode failures as ZeekHeaderError.  The
-    ``zstandard`` stream reader decodes lazily, so a garbage-after-magic
-    file errors on the first READ, not at open — without this the error
-    surface depends on whether the module is installed (the module-less
-    fallback decodes eagerly at open and already raises ZeekHeaderError).
-    gzip errors are deliberately left alone: the reference's
-    corrupted-gzip fixtures pin their existing wording."""
-    it = iter(fh)
-    while True:
+    def readinto(self, b) -> int:
         try:
-            line = next(it)
-        except StopIteration:
-            return
-        except Exception as exc:  # noqa: BLE001 — filtered just below
-            try:
-                import zstandard  # type: ignore
+            return self._src.readinto(b)
+        except OSError as exc:
+            raise ZeekHeaderError(
+                f"corrupt or truncated zstd stream in '{self._path}': {exc}"
+            ) from exc
 
-                if isinstance(exc, zstandard.ZstdError):
-                    raise ZeekHeaderError(
-                        f"corrupt or truncated zstd stream in '{path}': {exc}"
-                    ) from exc
-            except ImportError:
-                pass
-            raise
-        yield line
+    def close(self) -> None:
+        self._src.close()
+        super().close()
 
 
 def parse_header(path: str) -> ZeekHeader:
@@ -271,7 +178,7 @@ def parse_header(path: str) -> ZeekHeader:
     hdr = ZeekHeader(source_file=path)
     saw_fields = saw_types = False
     with open_zeek_text(path) as fh:
-        for raw in _translate_stream_errors(fh, path):
+        for raw in fh:
             line = raw.rstrip("\r\n")
             if not line.startswith("#"):
                 break

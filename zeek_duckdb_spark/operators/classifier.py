@@ -42,11 +42,7 @@ families (embedding and token) now run the full train-then-gate loop
 without leaving the engine.
 """
 
-from __future__ import annotations
-
 import math
-
-import pandas as pd  # noqa: F401  (pandas_udf type hints resolve at module scope)
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F

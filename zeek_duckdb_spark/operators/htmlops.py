@@ -328,8 +328,7 @@ def extract_text_html(
 def native_extractor(prefer: tuple = ("selectolax", "lxml")):
     """Build an ``extract_text_html(extractor=...)`` callback from an
     installed native HTML parser — the documented 100 TB throughput
-    seam, resolved through an import ladder like the optional
-    ``zstandard`` container path.  Tries ``prefer`` in order
+    seam, resolved through an import ladder.  Tries ``prefer`` in order
     (``selectolax``'s lexbor engine first — the faster of the two —
     then ``lxml``) and raises ImportError naming both when neither is
     installed, so callers/benches can print an honest "skipped:

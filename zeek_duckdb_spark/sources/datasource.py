@@ -14,9 +14,8 @@ engine — JVM-speed parsing, codegen, pushdown.  This DataSource is the
 structural mirror of the reference: one InputPartition per file
 (= the reference's per-thread file claiming, src/zeek_scanner.cpp:245-330),
 schema resolved at "bind" time on the driver, per-file validation
-surfaced at scan time, and Python-side decompression — including
-entropy-coded zstd on executors via pyarrow's bundled codec (or the
-``zstandard`` module when installed).
+surfaced at scan time, and Python-side streaming decompression —
+gzip through the stdlib, zstd through pyarrow's bundled codec.
 
 Every read decodes one way, with or without a user ``.schema(...)``
 and for ``readStream`` too: the columnar Arrow parser

@@ -8,9 +8,8 @@ specification: a record is a ``WARC/1.x`` version line, named header
 fields, a blank line, ``Content-Length`` payload octets, and a
 ``\\r\\n\\r\\n`` separator; a ``.warc.gz`` file is a sequence of gzip
 MEMBERS (typically one per record — stdlib ``gzip`` reads concatenated
-members transparently), and ``.warc.zst`` decodes through the repo's
-module-free zstd ladder (zstandard module / vendored store-mode codec
-/ pyarrow).  For ``response`` records the payload is a raw
+members transparently), and ``.warc.zst`` decodes through pyarrow's
+bundled zstd codec.  For ``response`` records the payload is a raw
 HTTP/1.x response; the HTTP head is parsed off (status, headers,
 chunked transfer-encoding decoded) so ``body`` is the actual entity
 bytes.  No third-party code.
@@ -44,6 +43,8 @@ import pandas as pd  # noqa: F401
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from zeek_duckdb_spark.header import ZSTD_MAGIC as _ZSTD_MAGIC, is_zstd as _is_zstd
+
 __all__ = [
     "parse_warc",
     "encode_warc",
@@ -73,17 +74,6 @@ __all__ = [
 ]
 
 _GZIP_MAGIC = b"\x1f\x8b"
-_ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
-
-
-def _is_zstd(buf: bytes) -> bool:
-    """Standard frame magic OR a leading SKIPPABLE frame (magic
-    0x184D2A50-5F) — the IIPC ``.warc.zst`` convention leads with the
-    shared dictionary in a skippable frame, so keying on the standard
-    magic alone would misroute those files to the plain-WARC path."""
-    if buf[:4] == _ZSTD_MAGIC:
-        return True
-    return len(buf) >= 4 and 0x50 <= buf[0] <= 0x5F and buf[1:4] == b"\x2a\x4d\x18"
 
 
 _ZSTD_DICT_NOTE = (
@@ -95,12 +85,10 @@ _ZSTD_DICT_NOTE = (
 
 def _decompress_container(buf: bytes, who: str) -> bytes:
     """Container decompression by magic: gzip (concatenated members —
-    the crawl-standard .warc.gz layout), zstd (.warc.zst via the
-    repo's module-free chain: the ``zstandard`` module when installed,
-    else the vendored store-mode codec, else pyarrow's bundled codec —
-    the same ladder ``header.open_zeek_text`` uses; skippable frames
-    are tolerated, dictionary-COMPRESSED frames error naming the IIPC
-    convention), else passthrough (plain .warc)."""
+    the crawl-standard .warc.gz layout), zstd (.warc.zst through
+    pyarrow's bundled codec, the one ``header.open_zeek_text`` uses;
+    skippable frames are tolerated, dictionary-COMPRESSED frames error
+    naming the IIPC convention), else passthrough (plain .warc)."""
     if buf[:2] == _GZIP_MAGIC:
         import zlib
 
@@ -116,152 +104,21 @@ def _decompress_container(buf: bytes, who: str) -> bytes:
             ) from None
     if _is_zstd(buf):
         try:
-            import zstandard  # type: ignore
-        except ImportError:
-            zstandard = None
-        if zstandard is not None:
-            try:
-                return zstandard.ZstdDecompressor().stream_reader(
-                    io.BytesIO(buf), read_across_frames=True
-                ).read()
-            except Exception as exc:
-                raise ValueError(
-                    f"{who}: zstd decode failed ({exc}); {_ZSTD_DICT_NOTE}"
-                ) from None
-        from zeek_duckdb_spark.sources.zstd_raw import (
-            ZstdCompressedBlockError,
-            ZstdRawError,
-            decompress,
-        )
-
-        try:
-            return decompress(buf)
-        except ZstdCompressedBlockError:
-            try:
-                import pyarrow as pa
-
-                has_zstd = pa.Codec.is_available("zstd")
-            except Exception:
-                has_zstd = False
-            if not has_zstd:
-                raise ValueError(
-                    f"{who}: entropy-coded zstd WARC needs the zstandard "
-                    "module or a pyarrow build with zstd"
-                ) from None
-            try:
-                return bytes(
-                    pa.CompressedInputStream(
-                        pa.BufferReader(buf), "zstd"
-                    ).read()
-                )
-            except Exception as exc:
-                raise ValueError(
-                    f"{who}: zstd decode failed ({exc}); {_ZSTD_DICT_NOTE}"
-                ) from None
-        except ZstdRawError as exc:
+            return _pa_decompress(buf, "zstd")
+        except OSError as exc:
             raise ValueError(
-                f"{who}: corrupt or truncated zstd stream ({exc})"
+                f"{who}: zstd decode failed ({exc}); {_ZSTD_DICT_NOTE}"
             ) from None
     return buf
 
 
-# memoized entity-decoder resolvers: the ladder walks failed imports
-# only ONCE per process — failed imports are not cached in sys.modules,
-# so resolving per record would re-scan sys.path inside the hottest
-# parse loop for every br/zstd entity.  The cache value is either the
-# decoder callable or the ImportError to re-raise (decoder genuinely
-# absent stays a cheap, consistent signal).
-_ENTITY_DECODERS: dict = {}
-
-
-def _resolve_brotli():
-    try:
-        import brotli  # type: ignore
-    except ImportError:
-        try:
-            import brotlicffi as brotli  # type: ignore
-        except ImportError:
-            brotli = None
-    if brotli is not None:
-        return brotli.decompress
+def _pa_decompress(body: bytes, codec: str) -> bytes:
+    """Whole-buffer decode through pyarrow's bundled ``codec`` ('zstd'
+    or 'brotli'), streamed so an unstated decoded size is not a
+    problem.  Raises on a corrupt or truncated stream."""
     import pyarrow as pa
 
-    if not pa.Codec.is_available("brotli"):
-        raise ImportError(
-            "no brotli decoder: install brotli/brotlicffi or a pyarrow "
-            "build with brotli"
-        )
-
-    def _dec(body: bytes) -> bytes:
-        return bytes(
-            pa.CompressedInputStream(pa.BufferReader(body), "brotli").read()
-        )
-
-    return _dec
-
-
-def _resolve_zstd_entity():
-    try:
-        import zstandard  # type: ignore
-    except ImportError:
-        zstandard = None
-    if zstandard is not None:
-        def _dec(body: bytes) -> bytes:
-            return zstandard.ZstdDecompressor().stream_reader(
-                io.BytesIO(body), read_across_frames=True
-            ).read()
-
-        return _dec
-    import pyarrow as pa
-
-    if not pa.Codec.is_available("zstd"):
-        raise ImportError(
-            "no zstd decoder: install zstandard or a pyarrow build "
-            "with zstd"
-        )
-
-    def _dec(body: bytes) -> bytes:
-        return bytes(
-            pa.CompressedInputStream(pa.BufferReader(body), "zstd").read()
-        )
-
-    return _dec
-
-
-def _entity_decoder(kind: str):
-    """Memoized ladder lookup; raises the cached ImportError when the
-    decoder is genuinely absent (the caller quarantines)."""
-    got = _ENTITY_DECODERS.get(kind)
-    if got is None:
-        try:
-            got = _resolve_brotli() if kind == "br" else _resolve_zstd_entity()
-        except ImportError as exc:
-            got = exc
-        _ENTITY_DECODERS[kind] = got
-    if isinstance(got, ImportError):
-        raise got
-    return got
-
-
-def _brotli_decompress(body: bytes) -> bytes:
-    """Brotli entity decode through the optional-decoder ladder (the
-    ``zstandard`` pattern): the ``brotli`` / ``brotlicffi`` module
-    when installed, else pyarrow's bundled brotli codec (present in
-    every pyarrow build this repo supports — parquet ships it), which
-    decodes STREAMING so the unknown entity size is not a problem.
-    Raises ImportError when no decoder exists anywhere (the caller
-    quarantines under 'br'), any other exception on a corrupt or
-    truncated stream (same quarantine).  Resolution is memoized per
-    process (see ``_entity_decoder``)."""
-    return _entity_decoder("br")(body)
-
-
-def _zstd_entity_decompress(body: bytes) -> bytes:
-    """RFC 8878 ``Content-Encoding: zstd`` entity decode through the
-    same memoized ladder: zstandard module, else pyarrow's bundled
-    codec.  Raises ImportError with no decoder, else propagates
-    decode errors — the caller quarantines either way."""
-    return _entity_decoder("zstd")(body)
+    return bytes(pa.CompressedInputStream(pa.BufferReader(body), codec).read())
 
 
 def _decode_chunked(body: bytes, who: str) -> bytes:
@@ -364,18 +221,14 @@ def _parse_http_response(payload: bytes, who: str):
                 return status, ctype, zlib.decompress(body, -15), None
             except zlib.error:
                 return status, ctype, body, cenc
-    if cenc == "br":
+    if cenc in ("br", "zstd"):
         # real crawls carry br (any fetcher sending Accept-Encoding:
-        # br); without this the pages' text is simply absent from the
-        # corpus.  Decoder absent (ImportError) or stream corrupt ->
+        # br) and RFC 8878 zstd; without this the pages' text is simply
+        # absent from the corpus.  A corrupt or truncated stream ->
         # quarantine, same as every other residual.
         try:
-            return status, ctype, _brotli_decompress(body), None
-        except Exception:
-            return status, ctype, body, cenc
-    if cenc == "zstd":
-        try:
-            return status, ctype, _zstd_entity_decompress(body), None
+            codec = "brotli" if cenc == "br" else "zstd"
+            return status, ctype, _pa_decompress(body, codec), None
         except Exception:
             return status, ctype, body, cenc
     return status, ctype, body, cenc  # unknown encoding: quarantine
@@ -1096,68 +949,22 @@ def _gunzip_members_from_chunks(chunks, who: str):
 
 
 def _zstd_stream_chunks(fh, who: str):
-    """Streaming ``.warc.zst`` decode: the ``zstandard`` module when
-    installed (true streaming, skippable IIPC dictionary frames
-    tolerated), else pyarrow's bundled codec streamed through
-    ``CompressedInputStream``, else the vendored store-mode codec as a
-    FULL-BUFFER fallback (environments with no native zstd anywhere —
-    test scale only, stated).  Dictionary-compressed frames error
-    naming the IIPC convention, same as :func:`_decompress_container`."""
-    try:
-        import zstandard  # type: ignore
-    except ImportError:
-        zstandard = None
-    if zstandard is not None:
-        try:
-            r = zstandard.ZstdDecompressor().stream_reader(
-                fh, read_across_frames=True
-            )
-            while True:
-                c = r.read(_READ_CHUNK)
-                if not c:
-                    return
-                yield c
-        except Exception as exc:
-            raise ValueError(
-                f"{who}: zstd decode failed ({exc}); {_ZSTD_DICT_NOTE}"
-            ) from None
-    try:
-        import pyarrow as pa
+    """Streaming ``.warc.zst`` decode through pyarrow's bundled codec
+    (skippable IIPC dictionary frames tolerated).  Dictionary-compressed
+    frames error naming the IIPC convention, same as
+    :func:`_decompress_container`."""
+    import pyarrow as pa
 
-        has_zstd = pa.Codec.is_available("zstd")
-    except Exception:
-        has_zstd = False
-    if has_zstd:
-        try:
-            stream = pa.CompressedInputStream(
-                pa.PythonFile(fh, mode="r"), "zstd"
-            )
-            while True:
-                c = stream.read(_READ_CHUNK)
-                if not c:
-                    return
-                yield bytes(c)
-        except Exception as exc:
-            raise ValueError(
-                f"{who}: zstd decode failed ({exc}); {_ZSTD_DICT_NOTE}"
-            ) from None
-    from zeek_duckdb_spark.sources.zstd_raw import (
-        ZstdCompressedBlockError,
-        ZstdRawError,
-        decompress,
-    )
-
-    buf = fh.read()
     try:
-        yield decompress(buf)
-    except ZstdCompressedBlockError:
+        stream = pa.CompressedInputStream(pa.PythonFile(fh, mode="r"), "zstd")
+        while True:
+            c = stream.read(_READ_CHUNK)
+            if not c:
+                return
+            yield bytes(c)
+    except Exception as exc:
         raise ValueError(
-            f"{who}: entropy-coded zstd WARC needs the zstandard "
-            "module or a pyarrow build with zstd"
-        ) from None
-    except ZstdRawError as exc:
-        raise ValueError(
-            f"{who}: corrupt or truncated zstd stream ({exc})"
+            f"{who}: zstd decode failed ({exc}); {_ZSTD_DICT_NOTE}"
         ) from None
 
 
@@ -1187,7 +994,7 @@ def _zstd_frame_spans(fh, who: str):
     ``read_warc_selected`` ranged-reads + decodes one frame per hit.
     ``content_size`` is the frame-header FCS when stated else None;
     ``dict_id`` nonzero means the frame needs the shared dictionary
-    (out of the pyarrow ladder's scope — loud downstream)."""
+    (out of this reader's scope — loud downstream)."""
     fh.seek(0, 2)
     file_end = fh.tell()
     fh.seek(0)
@@ -1262,26 +1069,14 @@ def _zstd_frame_spans(fh, who: str):
 
 def _zstd_decompress_frame(data: bytes, who: str) -> bytes:
     """ONE zstd frame -> bytes, capped at ``_MAX_RECORD_BYTES`` — the
-    per-span decoder of the seekable path.  Ladder: the ``zstandard``
-    module (true output cap), else pyarrow's codec gated on the
-    frame's stated content size (an unsized frame cannot be capped
-    one-shot, so it errors naming the module), else the vendored
-    store-mode codec.  Dictionary frames error with the IIPC note on
-    every rung."""
-    try:
-        import zstandard  # type: ignore
-    except ImportError:
-        zstandard = None
-    if zstandard is not None:
-        try:
-            return zstandard.ZstdDecompressor().decompress(
-                data, max_output_size=_MAX_RECORD_BYTES
-            )
-        except Exception as exc:
-            raise ValueError(
-                f"{who}: zstd frame decode failed ({exc}); "
-                f"{_ZSTD_DICT_NOTE}"
-            ) from None
+    per-span decoder of the seekable path, through pyarrow's bundled
+    codec.  A frame stating a past-cap content size dies before any
+    decode; otherwise the stream is read for at most (stated size, or
+    the cap for an unsized frame) + 1 bytes, so neither a lying header
+    nor an unsized bomb inflates unbounded.  Dictionary frames error
+    with the IIPC note."""
+    import pyarrow as pa
+
     _off, _ln, _kind, dict_id, fcs = next(
         _zstd_frame_spans(io.BytesIO(data), who)
     )
@@ -1292,92 +1087,49 @@ def _zstd_decompress_frame(data: bytes, who: str) -> bytes:
             f"{who}: zstd frame states {fcs} content bytes — past the "
             f"{_MAX_RECORD_BYTES}-byte record cap"
         )
+    limit = _MAX_RECORD_BYTES if fcs is None else fcs
     try:
-        import pyarrow as pa
-
-        has_zstd = pa.Codec.is_available("zstd")
-    except Exception:
-        has_zstd = False
-    if has_zstd:
-        if fcs is None:
-            raise ValueError(
-                f"{who}: zstd frame states no content size — capping "
-                "an unsized frame needs the zstandard module"
-            )
-        try:
-            # read AT MOST fcs+1 bytes: a lying header (small stated
-            # size, huge actual output) must hit the mismatch error
-            # below, not inflate unbounded before the length check
-            stream = pa.CompressedInputStream(
-                pa.BufferReader(data), "zstd"
-            )
-            parts, total = [], 0
-            while total <= fcs:
-                c = stream.read(min(_READ_CHUNK, fcs + 1 - total))
-                if not c:
-                    break
-                parts.append(bytes(c))
-                total += len(c)
-            out = b"".join(parts)
-        except Exception as exc:
-            raise ValueError(
-                f"{who}: zstd frame decode failed ({exc}); "
-                f"{_ZSTD_DICT_NOTE}"
-            ) from None
-        if len(out) != fcs:
-            raise ValueError(
-                f"{who}: zstd frame decoded to {len(out)} bytes, "
-                f"header stated {fcs}"
-            )
-        return out
-    from zeek_duckdb_spark.sources.zstd_raw import (
-        ZstdCompressedBlockError,
-        ZstdRawError,
-        decompress,
-    )
-
-    try:
-        return decompress(data)
-    except ZstdCompressedBlockError:
+        stream = pa.CompressedInputStream(pa.BufferReader(data), "zstd")
+        parts, total = [], 0
+        while total <= limit:
+            c = stream.read(min(_READ_CHUNK, limit + 1 - total))
+            if not c:
+                break
+            parts.append(bytes(c))
+            total += len(c)
+        out = b"".join(parts)
+    except OSError as exc:
         raise ValueError(
-            f"{who}: entropy-coded zstd WARC needs the zstandard "
-            "module or a pyarrow build with zstd"
+            f"{who}: zstd frame decode failed ({exc}); "
+            f"{_ZSTD_DICT_NOTE}"
         ) from None
-    except ZstdRawError as exc:
+    if fcs is not None and len(out) != fcs:
         raise ValueError(
-            f"{who}: corrupt zstd frame ({exc})"
-        ) from None
+            f"{who}: zstd frame decoded to {len(out)} bytes, "
+            f"header stated {fcs}"
+        )
+    if len(out) > _MAX_RECORD_BYTES:
+        raise ValueError(
+            f"{who}: unsized zstd frame decodes past the "
+            f"{_MAX_RECORD_BYTES}-byte record cap"
+        )
+    return out
 
 
 def _zstd_compress_frame(data: bytes) -> bytes:
-    """bytes -> ONE standalone zstd frame (the seekable layout's
-    unit).  Ladder: zstandard module, pyarrow codec, vendored
-    store-mode encoder — every rung emits a spec-legal frame with its
-    content size stated, so :func:`_zstd_decompress_frame` can cap
-    it."""
-    try:
-        import zstandard  # type: ignore
+    """bytes -> ONE standalone zstd frame (the seekable layout's unit)
+    through pyarrow's bundled codec, which states the content size so
+    :func:`_zstd_decompress_frame` can cap it."""
+    import pyarrow as pa
 
-        return zstandard.ZstdCompressor().compress(data)
-    except ImportError:
-        pass
-    try:
-        import pyarrow as pa
-
-        if pa.Codec.is_available("zstd"):
-            return bytes(pa.Codec("zstd").compress(data))
-    except Exception:
-        pass
-    from zeek_duckdb_spark.sources.zstd_raw import compress_store
-
-    return compress_store(data)
+    return bytes(pa.Codec("zstd").compress(data))
 
 
 def _decompressed_chunks(path: str, who: str, opener=None):
     """Open ``path`` and yield DECOMPRESSED byte chunks — container
     routed by magic exactly like :func:`_decompress_container`, but
-    streamed: gzip members incrementally, zstd through the streaming
-    ladder, plain files in ``_READ_CHUNK`` reads.
+    streamed: gzip members incrementally, zstd through pyarrow's
+    streaming codec, plain files in ``_READ_CHUNK`` reads.
 
     ``opener`` (round-15): ``opener(path) -> file-like`` with
     ``seek``/``read``/``close`` — the object-store seam (default
@@ -2578,7 +2330,7 @@ def read_warc_selected(
     independently: gzip-member spans gunzip in isolation (the CDX
     contract), plain-file spans re-parse directly, and seekable
     ``.warc.zst`` frame spans (round-15) decode through the capped
-    zstd ladder — single-frame zst indexes (decompressed-stream
+    zstd frame decoder — single-frame zst indexes (decompressed-stream
     spans, see cdx_records) still error loudly.
 
     ``opener`` (round-14): ``opener(path) -> file-like`` with
@@ -2678,7 +2430,7 @@ def read_warc_selected(
                     elif _is_zstd(span):
                         # seekable .warc.zst span (round-15): one or
                         # more whole zstd frames — decode each through
-                        # the capped ladder; skippable frames (the
+                        # the capped frame decoder; skippable frames (the
                         # IIPC dictionary carrier) contribute no bytes.
                         # A decompressed-stream span that happens to
                         # start at offset 0 of a single-frame container
@@ -2892,7 +2644,7 @@ def extract_warc(
                         out_bytes = span
                     elif _is_zstd(span):
                         # seekable-zst frame span: decode through the
-                        # capped ladder, re-land as one gz member per
+                        # capped frame decoder, re-land as one gz member per
                         # record so mixed sources share one container.
                         # Same decompressed-stream-span error
                         # conversion as read_warc_selected (r16; r17

@@ -202,11 +202,17 @@ def _with_filename(df: DataFrame, files: list[str]) -> DataFrame:
     """Add the ``filename`` column, echoing the path in the form the
     USER supplied (relative stays relative), matching the reference
     (src/zeek_scanner.cpp:778-781): input_file_name() without its
-    file: URI prefix, then a driver-built literal map from canonical
-    absolute path back to the glob's as-given form.  Identity-skip
-    when every glob match is already absolute."""
+    file: URI prefix and percent-decoded (a space, '%' or '#' in a path
+    reaches it escaped; a literal '+' is protected as %2B first, since
+    url_decode would read it as a space), then a driver-built literal
+    map from canonical absolute path back to the glob's as-given form.
+    Identity-skip when every glob match is already absolute."""
     df = df.withColumn(
-        "filename", F.expr("regexp_replace(input_file_name(), '^file:(//)?', '')")
+        "filename",
+        F.expr(
+            "url_decode(replace(regexp_replace(input_file_name(), "
+            "'^file:(//)?', ''), '+', '%2B'))"
+        ),
     )
     pairs = [(os.path.abspath(f), f) for f in files]
     if len(files) > _FILENAME_MAP_MAX_FILES or all(a == g for a, g in pairs):

@@ -367,9 +367,9 @@ from pyspark.sql.datasource import (
 
 
 class _ZstdTextFile:
-    """Text sink through pyarrow's bundled zstd codec (the same codec
-    the scan path's entropy fallback decodes with — no ``zstandard``
-    module needed on executors)."""
+    """Text sink through pyarrow's bundled zstd codec — the one codec
+    the package reads and writes zstd with, on the driver and on
+    executors alike."""
 
     def __init__(self, path: str):
         import pyarrow as pa
