@@ -340,3 +340,41 @@ def test_canonicalize_url_plan_pure_jvm_map(spark):
     out = d.select(canonicalize_url(F.col("text")).alias("u"))
     assert audit.num_shuffles(out) == 0
     assert "Python" not in audit.physical_plan(out)
+
+
+def test_byte_confs_parse_like_spark(spark, tmp_path):
+    """Byte-valued confs go through Spark's own parser, so unit-suffixed
+    values steer the size-adaptive decisions instead of falling back;
+    -1 (broadcast disabled) is handled before the parser."""
+    from zeek_duckdb_spark.operators.dedup import _verify_shape_auto
+    from zeek_duckdb_spark.plans.scanstats import estimated_scan_partitions
+    from zeek_duckdb_spark.session import conf_bytes
+
+    bcast = "spark.sql.autoBroadcastJoinThreshold"
+    mpb = "spark.sql.files.maxPartitionBytes"
+    saved = {k: spark.conf.get(k) for k in (bcast, mpb)}
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        [(i, f"document {i} " + "text " * 40) for i in range(200)],
+        "doc_id long, text string",
+    ).coalesce(1).write.parquet(path)
+    docs = spark.read.parquet(path)
+    try:
+        for raw, want in [("10m", 10 << 20), ("32MB", 32 << 20),
+                          ("1g", 1 << 30), ("-1", -1),
+                          ("134217728b", 134217728), ("16777216", 16777216)]:
+            spark.conf.set(bcast, raw)
+            assert conf_bytes(spark, bcast) == want, raw
+        # a 1 KiB threshold is far below the corpus text: semi-join shape
+        spark.conf.set(bcast, "1k")
+        assert _verify_shape_auto(docs, "doc_id", "text") == "semi"
+        spark.conf.set(bcast, "1g")
+        assert _verify_shape_auto(docs, "doc_id", "text") == "broadcast"
+        spark.conf.set(bcast, "-1")
+        assert _verify_shape_auto(docs, "doc_id", "text") == "semi"
+        # a 1 KiB split size cuts the one file into many splits
+        spark.conf.set(mpb, "1k")
+        assert estimated_scan_partitions(docs) > 1
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)

@@ -3,6 +3,7 @@ read_zeek equality), wire-form exactness, and the no-escaping guard."""
 
 import glob
 import gzip
+import os
 
 import pytest
 
@@ -160,6 +161,33 @@ def test_batch_writers_two_phase_commit(tmp_path):
     assert os.path.exists(fresh)
 
 
+def test_dollar_brace_column_names_round_trip(spark, tmp_path):
+    """A column named ``${...}`` is a name, not a variable reference:
+    write_zeek lands it, read_zeek (strict and union) reads it back,
+    and both agree with format("zeek"), whose path has no SQL text."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("${spark.app.name}", T.LongType()),
+        T.StructField("${nosuch.var}", T.StringType()),
+    ])
+    df = spark.createDataFrame([(1, "a"), (2, None), (3, "$x")], schema)
+    out = str(tmp_path / "dollar")
+    write_zeek(df, out)
+    with open(glob.glob(f"{out}/part-*.log")[0]) as fh:
+        assert "#fields\t${spark.app.name}\t${nosuch.var}\n" in fh.read()
+    want = sorted(map(tuple, df.collect()))
+    ds = spark.read.format("zeek").load(f"{out}/*.log")
+    assert ds.columns == ["${spark_app_name}", "${nosuch_var}"]
+    assert sorted(map(tuple, ds.collect())) == want
+    for kw in ({}, {"union_by_name": True}):
+        back = read_zeek(spark, f"{out}/*.log", **kw)
+        assert back.schema == ds.schema
+        assert sorted(map(tuple, back.collect())) == want
+    raw = read_zeek(spark, f"{out}/*.log", replace_periods=False)
+    assert raw.columns == ["${spark.app.name}", "${nosuch.var}"]
+
+
 def test_typed_api_required(spark, tmp_path):
     # raw format("zeek") writes need the pre-formatted single column
     df = spark.createDataFrame([(1, "x")], "id long, text string")
@@ -295,6 +323,62 @@ def test_stream_round_trip_and_exactly_once_restart(spark, tmp_path):
         map(tuple, batch_in2.collect())
     )
     assert glob.glob(f"{out}/.staging/*") == []
+
+
+def _rotated_log(path, hour: int, rows: int = 5) -> None:
+    """One generated hourly Zeek log (gzip), ``rows`` rows, distinct per
+    hour so a duplicated file would show as duplicated rows."""
+    header = "\n".join([
+        "#separator \\x09", "#set_separator\t,", "#empty_field\t(empty)",
+        "#unset_field\t-", "#path\tknown_hosts",
+        "#fields\tts\thost_ip\tconns_opened\ttags",
+        "#types\ttime\taddr\tcount\tset[string]",
+    ])
+    lines = [
+        f"{1768500000 + hour * 3600 + i}.250000\t10.0.{hour}.{i}\t{hour * 10 + i}"
+        f"\t{'-' if i % 2 else f'h{hour},n{i}'}"
+        for i in range(rows)
+    ]
+    with gzip.open(path, "wt") as fh:
+        fh.write(header + "\n" + "\n".join(lines) + "\n")
+
+
+def test_stream_restart_exactly_once_generated_logs(spark, tmp_path):
+    """The restart test on generated rotated logs: land four hours,
+    stream them out, rotate two more in and restart from the same
+    checkpoint — the output holds every input row once and the staging
+    directory is drained."""
+    from zeek_duckdb_spark import write_zeek_stream
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for h in range(4):
+        _rotated_log(src / f"known_hosts_{h:02d}.log.gz", h)
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+
+    def run():
+        stream = spark.readStream.format("zeek").load(f"{src}/*.log.gz")
+        q = write_zeek_stream(stream, out, ckpt, zeek_types={"host_ip": "addr"},
+                              trigger_available_now=True)
+        q.awaitTermination(120)
+        q.stop()
+
+    def rows(pattern):
+        return sorted(map(tuple, read_zeek(spark, pattern).collect()))
+
+    run()
+    assert rows(f"{out}/batch-*.log") == rows(f"{src}/*.log.gz")
+    first = sorted(os.listdir(out))
+    for h in (4, 5):
+        _rotated_log(src / f"known_hosts_{h:02d}.log.gz", h)
+    run()
+    back = rows(f"{out}/batch-*.log")
+    assert len(back) == 30 and len({r[:3] for r in back}) == 30
+    assert back == rows(f"{src}/*.log.gz")
+    # the first run's files are untouched; the restart added new ones
+    assert set(first) < set(os.listdir(out))
+    assert os.listdir(os.path.join(out, ".staging")) == []
 
 
 def test_leading_hash_first_column_guarded(spark, tmp_path):

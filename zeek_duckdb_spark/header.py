@@ -18,6 +18,7 @@ import gzip
 import io
 import os
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import types as T
 
@@ -338,3 +339,60 @@ def glob_zeek_files(pattern: str) -> list[str]:
     if not matches:
         raise FileNotFoundError(f"No files found matching pattern '{pattern}'")
     return matches
+
+
+class ZeekBind(NamedTuple):
+    """The bind phase's result: every glob match, the headers of the
+    files the scan reads, and the resolved schema's Zeek field names and
+    types."""
+
+    files: list[str]
+    headers: list[ZeekHeader]
+    fields: list[str]
+    types: list[str]
+
+
+def bind_zeek(
+    pattern: str,
+    *,
+    union_by_name: bool = False,
+    ignore_file_errors: bool = False,
+    glob=glob_zeek_files,
+    parse=parse_header,
+) -> ZeekBind:
+    """Reference 'bind' phase shared by ``read_zeek`` and
+    ``format("zeek")`` (ref src/zeek_scanner.cpp:439-609): glob, parse
+    every header (a file that fails is skipped under
+    ``ignore_file_errors``; none left raises), then resolve the schema.
+    ``union_by_name`` unions every header by name; otherwise the first
+    header is the schema and every other file must match it exactly —
+    a mismatch names both files and the first difference
+    (ref src/zeek_scanner.cpp:296-303), or drops the file under
+    ``ignore_file_errors``.  ``glob`` and ``parse`` default to this
+    module's functions; ``read_zeek`` passes the names it imported, the
+    ones the benchmark ledger wraps."""
+    files = glob(pattern)
+    headers: list[ZeekHeader] = []
+    for f in files:
+        try:
+            headers.append(parse(f))
+        except Exception:
+            if ignore_file_errors:
+                continue
+            raise
+    if not headers:
+        raise ZeekHeaderError(f"No valid Zeek log files found in pattern '{pattern}'")
+    if union_by_name:
+        return ZeekBind(files, headers, *resolve_union_schema(headers))
+    first = headers[0]
+    kept = [first]
+    for h in headers[1:]:
+        reason = same_schema(first, h)
+        if reason is None:
+            kept.append(h)
+        elif not ignore_file_errors:
+            raise ZeekHeaderError(
+                f"Schema mismatch between '{first.source_file}' and "
+                f"'{h.source_file}': {reason}"
+            )
+    return ZeekBind(files, kept, list(first.fields), list(first.types))

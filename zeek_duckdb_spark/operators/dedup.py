@@ -388,18 +388,15 @@ def _verify_shape_auto(
     the measured gap.  No estimate (non-file source) -> 'broadcast'
     (such frames are driver-built and small)."""
     from zeek_duckdb_spark.plans.scanstats import estimated_uncompressed_bytes
+    from zeek_duckdb_spark.session import conf_bytes
 
     est = estimated_uncompressed_bytes(verify_with, [id_col, text_col])
     if est is None:
         return "broadcast"
-    spark = verify_with.sparkSession
     try:
-        thr = int(
-            str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
-            .lower()
-            .rstrip("b")
-        )
-    except (TypeError, ValueError):
+        thr = conf_bytes(verify_with.sparkSession,
+                         "spark.sql.autoBroadcastJoinThreshold")
+    except ValueError:
         thr = 64 << 20
     if thr <= 0:  # broadcast disabled -> never plan around one
         return "semi"

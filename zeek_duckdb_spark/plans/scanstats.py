@@ -29,6 +29,8 @@ import re
 
 from pyspark.sql import DataFrame
 
+from zeek_duckdb_spark.session import conf_bytes
+
 __all__ = [
     "estimated_scan_bytes",
     "estimated_uncompressed_bytes",
@@ -162,14 +164,8 @@ def estimated_scan_partitions(df: DataFrame) -> int:
     if not files:
         return spark.sparkContext.defaultParallelism
     try:
-        raw = str(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        )
-        mpb = int(raw.lower().rstrip("b")) or 1
-        raw_oc = str(
-            spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
-        )
-        open_cost = int(raw_oc.lower().rstrip("b"))
+        mpb = conf_bytes(spark, "spark.sql.files.maxPartitionBytes", "134217728") or 1
+        open_cost = conf_bytes(spark, "spark.sql.files.openCostInBytes", "4194304")
         sizes = []
         for f in files:
             p = re.sub(r"^[a-z0-9.+-]+:(//)?", "", f)

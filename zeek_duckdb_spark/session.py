@@ -66,3 +66,20 @@ def get_spark(app_name: str = "zeek-spark", shuffle_partitions: int | None = Non
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def conf_bytes(spark: SparkSession, key: str, default: str | None = None) -> int:
+    """A byte-size conf read the way Spark reads it: the JVM's
+    ``JavaUtils.byteStringAsBytes`` (``'16777216'``, ``'134217728b'``,
+    ``'10m'``, ``'32MB'``, ``'1g'``), with a leading ``-`` negating the
+    rest as Spark's ``bytesConf`` does (``-1`` is
+    ``autoBroadcastJoinThreshold``'s 'disabled'; the JVM parser itself
+    rejects negatives).  A value that does not parse raises
+    ValueError."""
+    raw = str(spark.conf.get(key, default)).strip()
+    sign, digits = (-1, raw[1:]) if raw.startswith("-") else (1, raw)
+    try:
+        jutils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+        return sign * int(jutils.byteStringAsBytes(digits))
+    except Exception as exc:
+        raise ValueError(f"{key}={raw!r} is not a byte size") from exc

@@ -47,16 +47,13 @@ from __future__ import annotations
 
 import gzip
 import json
-import os
 import posixpath
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceWriter,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceWriter
+
+from zeek_duckdb_spark.sources.staged import StagedDir
 
 __all__ = ["write_cdxj", "read_cdxj"]
 
@@ -155,16 +152,6 @@ def _parse_cdxj_line(line: str, who: str):
     )
 
 
-class _CdxjShardMessage(WriterCommitMessage):
-    """Staged-shard handoff: (tmp, final shard basename, block index
-    entries [(urlkey, ts, offset, length), ...])."""
-
-    def __init__(self, tmp, final, entries):
-        self.tmp = tmp
-        self.final = final
-        self.entries = entries
-
-
 class CdxjDataSource(DataSource):
     """Write half of the CDXJ export (:func:`write_cdxj` is the typed
     API — it owns the range partition + sort this raw writer
@@ -185,82 +172,50 @@ class CdxjDataSource(DataSource):
         return CdxjShardWriter(self.options, overwrite)
 
 
+def _is_cdxj_file(name: str) -> bool:
+    return (name.startswith("cdx-") and name.endswith(".gz")) or name == "cluster.idx"
+
+
 class CdxjShardWriter(DataSourceWriter):
-    """Per-partition zipnum shard sink.  All-or-nothing: tasks stage
-    dot-prefixed tmps, the driver renames them at commit() and writes
-    cluster.idx LAST — a job that dies mid-write leaves no visible
-    shard and no index naming one."""
+    """Per-partition zipnum shard sink.  All-or-nothing through the
+    staged-file protocol (sources/staged.py): the driver renames the
+    staged shards at commit() and writes cluster.idx LAST — a job that
+    dies mid-write leaves no visible shard and no index naming one.
+    Each task's commit message carries its block index entries
+    ``[(urlkey, ts, offset, length), ...]``."""
 
     def __init__(self, options: dict, overwrite: bool):
-        import time
-
-        from zeek_duckdb_spark.sources.datasource import _STALE_TMP_SECONDS
-
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("write_cdxj: no output path")
+        self._dir = StagedDir(options.get("path"), "write_cdxj")
         lpb = options.get("lines_per_block", str(_DEFAULT_LINES_PER_BLOCK))
         self._lines_per_block = int(lpb)
         if self._lines_per_block < 1:
             raise ValueError("write_cdxj: lines_per_block must be >= 1")
-        os.makedirs(self._path, exist_ok=True)
-        # reap THIS sink's stale dot-tmps (same age gate as the zeek/
-        # WET reaper, which only matches its own .part-* prefix)
-        cutoff = time.time() - _STALE_TMP_SECONDS
-        for f in os.listdir(self._path):
-            if (f.startswith(".cdx-") and ".tmp-" in f) or (
-                f == ".cluster.idx.tmp"
-            ):
-                full = os.path.join(self._path, f)
-                try:
-                    if os.path.getmtime(full) < cutoff:
-                        os.remove(full)
-                except OSError:
-                    pass  # raced with another cleanup: already gone
-        existing = [
-            f for f in os.listdir(self._path)
-            if (f.startswith("cdx-") and f.endswith(".gz"))
-            or f == "cluster.idx"
-        ]
-        if overwrite:
-            for f in existing:
-                os.remove(os.path.join(self._path, f))
-        elif existing:
-            raise ValueError(
-                f"write_cdxj: '{self._path}' already contains a CDXJ "
-                "export (mode='error'); use mode='overwrite'"
-            )
+        self._dir.claim(
+            _is_cdxj_file, overwrite,
+            f"write_cdxj: '{self._dir.path}' already contains a CDXJ "
+            "export (mode='error'); use mode='overwrite'",
+        )
 
     def write(self, iterator):
-        from pyspark import TaskContext
+        def fill(open_tmp, _final):
+            entries = []  # (first urlkey, first ts, offset, length)
+            offset = 0
+            block: list = []
+            block_key = None
+            prev = None
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        attempt = ctx.taskAttemptId() if ctx is not None else 0
-        final = f"cdx-{pid:05d}.gz"
-        tmp = os.path.join(self._path, f".{final}.tmp-{attempt}")
-        fh = None
-        entries = []  # (first urlkey, first ts, offset, length)
-        offset = 0
-        block: list = []
-        block_key = None
-        prev = None
+            def flush():
+                nonlocal offset, block, block_key
+                if not block:
+                    return
+                # mtime=0: byte-stable re-exports (the WET writer's
+                # determinism contract applied here)
+                member = gzip.compress("".join(block).encode("utf-8"), mtime=0)
+                open_tmp().write(member)
+                entries.append((block_key[0], block_key[1], offset, len(member)))
+                offset += len(member)
+                block, block_key = [], None
 
-        def flush():
-            nonlocal fh, offset, block, block_key
-            if not block:
-                return
-            # mtime=0: byte-stable re-exports (the WET writer's
-            # determinism contract applied here)
-            member = gzip.compress("".join(block).encode("utf-8"), mtime=0)
-            if fh is None:
-                fh = open(tmp, "wb")
-            fh.write(member)
-            entries.append((block_key[0], block_key[1], offset, len(member)))
-            offset += len(member)
-            block, block_key = [], None
-
-        try:
             for row in iterator:
                 line = _cdxj_line(row)
                 key = (row[0], row[1])
@@ -278,31 +233,17 @@ class CdxjShardWriter(DataSourceWriter):
                 if len(block) >= self._lines_per_block:
                     flush()
             flush()
-        except BaseException:
-            if fh is not None:
-                fh.close()
-                fh = None
-                try:
-                    os.remove(tmp)
-                except OSError:
-                    pass
-            raise
-        finally:
-            if fh is not None:
-                fh.close()
-        if not entries:
-            return _CdxjShardMessage(None, None, [])
-        return _CdxjShardMessage(tmp, final, entries)
+            return {"entries": entries}
+
+        return self._dir.stage(lambda pid: f"cdx-{pid:05d}.gz",
+                               lambda p: open(p, "wb"), fill)
 
     def commit(self, messages):
         # publish shards first, cluster.idx LAST: the index is the
         # reader's entry point, so its existence implies every shard
         # it names is final
-        staged = [
-            m for m in messages if m is not None and m.tmp is not None
-        ]
-        for m in staged:
-            os.replace(m.tmp, os.path.join(self._path, m.final))
+        staged = [m for m in messages if m is not None and m.tmp is not None]
+        self._dir.publish(staged)
         # shards are range-ordered by partition id; entries within a
         # shard are in written order — sorting messages by shard name
         # yields the global (urlkey, ts) order cluster.idx requires
@@ -312,18 +253,10 @@ class CdxjShardWriter(DataSourceWriter):
             for key, ts, off, ln in m.entries:
                 lines.append(f"{key} {ts}\t{m.final}\t{off}\t{ln}\t{seq}\n")
                 seq += 1
-        idx_tmp = os.path.join(self._path, ".cluster.idx.tmp")
-        with open(idx_tmp, "w", encoding="utf-8") as fh:
-            fh.writelines(lines)
-        os.replace(idx_tmp, os.path.join(self._path, "cluster.idx"))
+        self._dir.publish_file("cluster.idx", "".join(lines))
 
     def abort(self, messages):
-        for m in messages:
-            if m is not None and m.tmp is not None:
-                try:
-                    os.remove(m.tmp)
-                except OSError:
-                    pass
+        self._dir.discard(messages)
 
 
 def write_cdxj(

@@ -46,21 +46,20 @@ from pyspark.sql.datasource import (
     IsNull,
     LessThan,
     LessThanOrEqual,
-    WriterCommitMessage,
 )
 from pyspark.sql import types as T
 
 from zeek_duckdb_spark.header import (
     ZeekHeader,
     ZeekHeaderError,
+    bind_zeek,
     check_union_member,
-    glob_zeek_files,
     open_zeek_text,
     parse_header,
-    resolve_union_schema,
     same_schema,
     zeek_type_to_spark,
 )
+from zeek_duckdb_spark.sources.staged import StagedDir
 
 __all__ = ["ZeekDataSource", "register_zeek_datasource"]
 
@@ -98,36 +97,12 @@ class ZeekDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ZeekHeaderError("zeek datasource requires a path (load(path))")
-        ignore = _opt_bool(self.options, "ignore_file_errors", False)
         union = _opt_bool(self.options, "union_by_name", False)
-        files = glob_zeek_files(path)
-        headers: list[ZeekHeader] = []
-        for f in files:
-            try:
-                headers.append(parse_header(f))
-            except Exception:
-                if ignore:
-                    continue
-                raise
-        if not headers:
-            raise ZeekHeaderError(f"No valid Zeek log files found in pattern '{path}'")
-        if union:
-            names, types = resolve_union_schema(headers)
-        else:
-            first = headers[0]
-            kept = [first]
-            for h in headers[1:]:
-                reason = same_schema(first, h)
-                if reason is None:
-                    kept.append(h)
-                elif not ignore:
-                    raise ZeekHeaderError(
-                        f"Schema mismatch between '{first.source_file}' and "
-                        f"'{h.source_file}': {reason}"
-                    )
-            headers = kept
-            names, types = list(first.fields), list(first.types)
-        self._bound = (headers, names, types, union)
+        b = bind_zeek(
+            path, union_by_name=union,
+            ignore_file_errors=_opt_bool(self.options, "ignore_file_errors", False),
+        )
+        self._bound = (b.headers, b.fields, b.types, union)
         return self._bound
 
     def streamReader(self, schema: T.StructType) -> "ZeekStreamReader":
@@ -469,7 +444,7 @@ def _vec_scalar(arr, zt: str, hdr: ZeekHeader, pa_type=None,
     elements (where '' is data: empty string / parse-failure NULL).  A
     bare '' cell reads NULL for every type: the composed reader's
     univocity parser nulls zero-length unquoted tokens unconditionally
-    (see the _read_group note in sources/zeek.py).  The reference reads
+    (see the csv_options note in sources/zeek.py).  The reference reads
     '' as empty string / empty list (src/zeek_scanner.cpp:338-342), but
     real Zeek output writes the markers, never bare empties."""
     import pyarrow as pa
@@ -623,8 +598,8 @@ def register_zeek_datasource(spark) -> None:
 class WetDataSource(DataSource):
     """Write half of the WET export (``warc.write_wet`` is the typed
     API): (url, warc_date, text) string rows -> one member-per-record
-    ``part-NNNNN.warc.gz`` WET shard per partition, same atomic
-    tmp+rename discipline as the zeek writer."""
+    ``part-NNNNN.warc.gz`` WET shard per partition, staged and renamed
+    like the zeek writer's (sources/staged.py)."""
 
     @classmethod
     def name(cls) -> str:
@@ -644,76 +619,14 @@ class WetDataSource(DataSource):
         return WetShardWriter(self.options, overwrite)
 
 
-class StagedShardMessage(WriterCommitMessage):
-    """Staged-file handoff from a batch write task to the driver
-    commit: (tmp path or None for an empty partition, final path)."""
-
-    def __init__(self, tmp: "str | None", final: "str | None"):
-        self.tmp = tmp
-        self.final = final
-
-
-def _publish_staged(messages) -> None:
-    """Driver-side batch commit: rename every staged tmp to its final
-    name.  Until this runs, NO final ``part-*`` file exists — a job
-    that dies after some tasks succeeded leaves only dot-tmps (reaped
-    by the next writer), so readers never see a partial export.  Same
-    shared-filesystem scope as ``ZeekStreamLogWriter.commit`` (the
-    driver renames what executors staged: local mode, NFS/Lustre —
-    the sinks' stated scope)."""
-    import os
-
-    for m in messages:
-        if m is not None and m.tmp is not None:
-            os.replace(m.tmp, m.final)
-
-
-def _discard_staged(messages) -> None:
-    import os
-
-    for m in messages:
-        if m is not None and m.tmp is not None:
-            try:
-                os.remove(m.tmp)
-            except OSError:
-                pass  # task already cleaned up / never created it
-
-
-# a dot-tmp untouched this long is garbage from a SIGKILLed run whose
-# abort never ran (r14 review: an unconditional reap failed a
-# concurrent append job at its driver commit).  The window must cover
-# the FULL finished-staging-to-driver-commit gap of a concurrent job —
-# a completed task's tmp mtime goes stale while stragglers run — so it
-# is a day, not an hour; jobs with >24h task skew on one sink
-# directory are out of this heuristic's scope (stated).
-_STALE_TMP_SECONDS = 24 * 3600
-
-
-def _reap_stale_tmps(path: str) -> None:
-    """Remove ``.part-*...tmp-*`` files older than
-    ``_STALE_TMP_SECONDS`` — shared by the zeek and WET batch sinks'
-    constructors."""
-    import os
-    import time
-
-    cutoff = time.time() - _STALE_TMP_SECONDS
-    for f in os.listdir(path):
-        if f.startswith(".part-") and ".tmp-" in f:
-            full = os.path.join(path, f)
-            try:
-                if os.path.getmtime(full) < cutoff:
-                    os.remove(full)
-            except OSError:
-                pass  # raced with another cleanup: already gone
-
-
 class _RecordShardWriter(DataSourceWriter):
-    """Shared per-partition member-per-record ``.warc.gz`` shard sink
-    (WET conversion records, WAT metadata records).  All-or-nothing:
-    tasks stage dot-prefixed tmps and the driver publishes them at
-    commit() — a job that fails mid-write leaves no visible shard.
-    Subclasses state ``_WHO`` (error prefix), ``_KIND`` (shard noun)
-    and ``_record_bytes(row) -> bytes | None``."""
+    """Shared per-partition record shard sink (WET conversion records,
+    WAT metadata records, general WARC records): each row becomes one
+    member or frame, appended as it is produced, so a multi-GiB
+    partition never materializes in memory.  All-or-nothing through the
+    staged-file protocol (sources/staged.py); an empty partition writes
+    no shard.  Subclasses state ``_WHO`` (error prefix), ``_KIND``
+    (shard noun) and ``_record_bytes(row) -> bytes | None``."""
 
     _WHO = "write"
     _KIND = "shards"
@@ -722,85 +635,34 @@ class _RecordShardWriter(DataSourceWriter):
         return ".warc.gz"
 
     def __init__(self, options: dict, overwrite: bool):
-        import os
-
         self._options = options
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError(f"{self._WHO}: no output path")
-        os.makedirs(self._path, exist_ok=True)
-        # reap STALE dot-tmps (a SIGKILLed task's except handler never
-        # ran; without this they accumulate forever since the part-*
-        # scans don't see them) — age-gated so a concurrent in-flight
-        # job's staged files survive
-        _reap_stale_tmps(self._path)
-        if overwrite:
-            for f in os.listdir(self._path):
-                if f.startswith("part-"):
-                    os.remove(os.path.join(self._path, f))
-        elif any(f.startswith("part-") for f in os.listdir(self._path)):
-            raise ValueError(
-                f"{self._WHO}: '{self._path}' already contains "
-                f"{self._KIND} (mode='error'); use mode='overwrite'"
-            )
+        self._dir = StagedDir(options.get("path"), self._WHO)
+        self._dir.claim(
+            lambda f: f.startswith("part-"), overwrite,
+            f"{self._WHO}: '{self._dir.path}' already contains "
+            f"{self._KIND} (mode='error'); use mode='overwrite'",
+        )
 
     @staticmethod
     def _record_bytes(row):
         raise NotImplementedError
 
     def write(self, iterator):
-        import os
-
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        attempt = ctx.taskAttemptId() if ctx is not None else 0
-        final = os.path.join(
-            self._path, f"part-{pid:05d}{self._suffix()}"
-        )
-        # dot-prefixed tmp: invisible to Spark directory listings and
-        # to the writer's own part-* overwrite/error scans, so a
-        # mid-write task kill can never poison a later read_warc over
-        # the directory or block mode='error'; it stays a tmp through
-        # write() and only commit() renames it (all-or-nothing)
-        tmp = os.path.join(
-            self._path, f".part-{pid:05d}{self._suffix()}.tmp-{attempt}"
-        )
-        # STREAM record-by-record (each row -> one gzip member appended
-        # immediately): a multi-GiB text partition never materializes
-        # in memory, matching ZeekLogWriter's per-row discipline; the
-        # file opens lazily so an empty partition leaves no shard
-        fh = None
-        try:
+        def fill(open_tmp, _final):
             for row in iterator:
                 member = self._record_bytes(row)
-                if member is None:
-                    continue
-                if fh is None:
-                    fh = open(tmp, "wb")
-                fh.write(member)
-        except BaseException:
-            if fh is not None:
-                fh.close()
-                fh = None
-                try:
-                    os.remove(tmp)
-                except OSError:
-                    pass
-            raise
-        finally:
-            if fh is not None:
-                fh.close()
-        if fh is None:
-            return StagedShardMessage(None, None)
-        return StagedShardMessage(tmp, final)
+                if member is not None:
+                    open_tmp().write(member)
+
+        suffix = self._suffix()
+        return self._dir.stage(lambda pid: f"part-{pid:05d}{suffix}",
+                               lambda p: open(p, "wb"), fill)
 
     def commit(self, messages):
-        _publish_staged(messages)
+        self._dir.publish(messages)
 
     def abort(self, messages):
-        _discard_staged(messages)
+        self._dir.discard(messages)
 
 
 class WetShardWriter(_RecordShardWriter):

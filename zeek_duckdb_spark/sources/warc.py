@@ -2564,14 +2564,15 @@ def extract_warc(
     ``warcinfo`` record member naming this engine (the Common Crawl /
     warcio shard convention — some consumers expect it first); default
     False keeps shards to exactly the copied spans."""
-    import os
     import uuid as _uuid
 
     from pyspark.sql import functions as F
 
+    from zeek_duckdb_spark.sources.staged import StagedDir
+
     if task_bytes < 1:
         raise ValueError("extract_warc: task_bytes must be >= 1")
-    os.makedirs(out_dir, exist_ok=True)
+    shards = StagedDir(out_dir, "extract_warc")
     sel = (
         cdx_df.select("warc_file", "offset", "length")
         .distinct()
@@ -2584,18 +2585,10 @@ def extract_warc(
     open_fn = opener or _posix_opener
     run_tag = _uuid.uuid4().hex[:8]
 
-    def stage(it):
+    def fill(it, open_tmp, final):
         import gzip as _gzip
-        import os
 
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        attempt = ctx.taskAttemptId() if ctx is not None else 0
-        final = f"part-{pid:05d}.warc.gz"
-        tmp = os.path.join(out_dir, f".{final}.tmp-{run_tag}-{attempt}")
-        fh = out = None
+        fh = None
         cur_path = None
         spans = wrote = 0
         try:
@@ -2698,60 +2691,54 @@ def extract_warc(
                         for _ in _record_spans(span, who):
                             pass
                         out_bytes = _gzip.compress(span, mtime=0)
-                    if out is None:
-                        out = open(tmp, "wb")
-                        if warcinfo:
-                            import hashlib
+                    out = open_tmp()
+                    if spans == 0 and warcinfo:
+                        import hashlib
 
-                            body = (
-                                b"software: zeek-duckdb-spark "
-                                b"extract_warc\r\nformat: WARC File "
-                                b"Format 1.0\r\n"
-                            )
-                            rid = hashlib.sha1(
-                                final.encode() + body
-                            ).hexdigest()
-                            info = _gzip.compress(encode_warc([(
-                                {"WARC-Type": "warcinfo",
-                                 "WARC-Record-ID": f"<urn:sha1:{rid}>",
-                                 "WARC-Filename": final,
-                                 "Content-Type":
-                                     "application/warc-fields"},
-                                body,
-                            )], compress=False), mtime=0)
-                            out.write(info)
-                            wrote += len(info)
+                        body = (
+                            b"software: zeek-duckdb-spark "
+                            b"extract_warc\r\nformat: WARC File "
+                            b"Format 1.0\r\n"
+                        )
+                        rid = hashlib.sha1(
+                            final.encode() + body
+                        ).hexdigest()
+                        info = _gzip.compress(encode_warc([(
+                            {"WARC-Type": "warcinfo",
+                             "WARC-Record-ID": f"<urn:sha1:{rid}>",
+                             "WARC-Filename": final,
+                             "Content-Type":
+                                 "application/warc-fields"},
+                            body,
+                        )], compress=False), mtime=0)
+                        out.write(info)
+                        wrote += len(info)
                     out.write(out_bytes)
                     spans += 1
                     wrote += len(out_bytes)
-        except BaseException:
-            if out is not None:
-                out.close()
-                out = None
-                try:
-                    os.remove(tmp)
-                except OSError:
-                    pass
-            raise
         finally:
             if fh is not None:
                 fh.close()
-            if out is not None:
-                out.close()
+        return {"spans": spans, "bytes": wrote}
+
+    def stage(it):
         import pandas as pd
 
-        if spans == 0:
+        m = shards.stage(lambda pid: f"part-{pid:05d}.warc.gz",
+                         lambda p: open(p, "wb"),
+                         lambda open_tmp, final: fill(it, open_tmp, final),
+                         tag=f"{run_tag}-")
+        if m.tmp is None:
             return iter(())
         return iter([pd.DataFrame(
-            {"tmp": [tmp], "final": [final],
-             "spans": [spans], "bytes": [wrote]}
+            {"tmp": [m.tmp], "final": [m.final],
+             "spans": [m.spans], "bytes": [m.bytes]}
         )])
 
     manifest = sel.mapInPandas(
         stage, "tmp string, final string, spans long, bytes long"
     ).collect()  # one row per non-empty task — bounded, the sink commit
-    for m in manifest:
-        os.replace(m.tmp, os.path.join(out_dir, m.final))
+    shards.publish(manifest)
     return {
         "files": len(manifest),
         "record_spans": int(sum(m.spans for m in manifest)),
@@ -3265,8 +3252,8 @@ def write_wet(
     WARC-consuming tool (including :func:`read_warc` itself — the
     round-trip is pinned) can read the corpus.
 
-    Scale shape: the same per-partition atomic sink as ``write_zeek``
-    (tmp + os.replace, retried attempts can't interleave) — control
+    Scale shape: the same per-partition staged sink as ``write_zeek``
+    (sources/staged.py; retried attempts can't interleave) — control
     ``files via df.repartition(n)``; rows with NULL url or text are
     skipped (nothing to index a record by).  ``mode``: 'overwrite'
     clears prior ``part-*`` shards, 'error' refuses a non-empty dir."""

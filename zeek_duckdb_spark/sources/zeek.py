@@ -43,21 +43,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from zeek_duckdb_spark.header import (
+    ZeekBind,
     ZeekHeader,
-    ZeekHeaderError,
+    ZeekHeaderError,  # noqa: F401  (re-exported; tests import it here)
+    bind_zeek,
     glob_zeek_files,
     parse_header,
-    resolve_union_schema,
-    same_schema,
     zeek_type_to_spark,
 )
 
 __all__ = ["read_zeek"]
-
-
-def _ident(name: str) -> str:
-    """SQL identifier for a column name (dots and backticks included)."""
-    return "`" + name.replace("`", "``") + "`"
 
 
 def _lit(s: str) -> str:
@@ -85,7 +80,10 @@ def _sql_type(dt: T.DataType) -> str:
 
 
 def select_stages(df: DataFrame, stages: list[list[str]]) -> DataFrame:
-    """Apply successive SQL select lists, one ``selectExpr`` each."""
+    """Apply successive SQL select lists, one ``selectExpr`` each.  The
+    text names columns by position only: a user's or a header's column
+    name never enters it (``${...}`` in a name would be substituted as
+    a variable); callers apply real names with ``toDF``."""
     return functools.reduce(lambda d, sel: d.selectExpr(*sel), stages, df)
 
 
@@ -163,7 +161,7 @@ def _cast_field(src: str, zeek_type: str, hdr: ZeekHeader, inet: bool,
     the first projection's text, and a function building the second
     projection's text from the first one's column name."""
     zt = zeek_type.strip()
-    cell = _marker_to_null(_ident(src), hdr)
+    cell = _marker_to_null(src, hdr)
     if zt.startswith("vector[") or zt.startswith("set["):
         if zt.endswith("]"):
             inner = zt[zt.index("[") + 1 : -1]
@@ -179,15 +177,14 @@ def _cast_field(src: str, zeek_type: str, hdr: ZeekHeader, inet: bool,
             lambda p: _cast_scalar(p, zt, inet))
 
 
-def _two_stages(fields: list[tuple[str, Callable[[str], str]]],
-                out_names: list[str]) -> list[list[str]]:
+def _two_stages(fields: list[tuple[str, Callable[[str], str]]]) -> list[list[str]]:
     """Select lists for :func:`select_stages` from ``_cast_field``
-    pairs.  A value the cast reads more than once is a column of the
-    first projection, never repeated text."""
+    pairs, producing one column ``c<i>`` per field.  A value the cast
+    reads more than once is a column of the first projection, never
+    repeated text."""
     return [
         [f"{first} AS p{i}" for i, (first, _) in enumerate(fields)],
-        [f"{second(f'p{i}')} AS {_ident(n)}"
-         for i, ((_, second), n) in enumerate(zip(fields, out_names))],
+        [f"{second(f'p{i}')} AS c{i}" for i, (_, second) in enumerate(fields)],
     ]
 
 
@@ -221,38 +218,42 @@ def _with_filename(df: DataFrame, files: list[str]) -> DataFrame:
     return df.withColumn("filename", F.expr(f"coalesce(map({m})[filename], filename)"))
 
 
-def _raw_schema(names: list[str]) -> T.StructType:
-    return T.StructType([T.StructField(n, T.StringType(), True) for n in names])
+def raw_schema(hdr: ZeekHeader, replace_periods: bool) -> T.StructType:
+    """All-string schema of a header's raw columns."""
+    return T.StructType([T.StructField(n, T.StringType(), True)
+                         for n in hdr.column_names(replace_periods)])
 
 
-def _read_group(
-    spark: SparkSession,
-    files: list[str],
-    hdr: ZeekHeader,
-    col_names: list[str],
-) -> DataFrame:
-    """One CSV scan over files sharing a schema.  quote/escape are
-    disabled (\\u0000) because Zeek never quotes or escapes fields —
-    a '"' in data is a literal (ref tokenizer src/zeek_scanner.cpp:79-89);
-    '#' comment handling matches the reference's line-start-only skip
-    (src/zeek_scanner.cpp:703-705)."""
+def _positional(raw: DataFrame, hdr: ZeekHeader) -> DataFrame:
+    """``raw``'s columns renamed ``r<i>`` for :func:`select_stages`;
+    the scan keeps reading them under the header's names."""
+    return raw.toDF(*[f"r{i}" for i in range(len(hdr.fields))])
+
+
+def csv_options(hdr: ZeekHeader) -> dict:
+    """CSV reader options for the data lines of files with header
+    ``hdr``, shared by the batch scan and ``read_zeek_stream``.
+    quote/escape are disabled (\\u0000) because Zeek never quotes or
+    escapes fields — a '"' in data is a literal (ref tokenizer
+    src/zeek_scanner.cpp:79-89); '#' comment handling matches the
+    reference's line-start-only skip (src/zeek_scanner.cpp:703-705).
+
+    univocity returns null for any zero-length unquoted token before
+    nullValue comparison, so a bare '' cell is NULL for every type — an
+    engine-defined unification shared by all three scan paths (DS,
+    streaming).  The reference reads '' as empty string / empty list
+    (src/zeek_scanner.cpp:338-342), but real Zeek output always writes
+    the (empty)/unset markers, never bare empties."""
+    return {"sep": hdr.separator, "comment": "#", "quote": "\u0000",
+            "escape": "\u0000", "mode": "PERMISSIVE", "header": False}
+
+
+def _read_group(spark: SparkSession, files: list[str], hdr: ZeekHeader,
+                replace_periods: bool) -> DataFrame:
+    """One CSV scan over files sharing a schema."""
     return (
-        spark.read.schema(_raw_schema(col_names))
-        .options(
-            sep=hdr.separator,
-            comment="#",
-            quote="\u0000",
-            escape="\u0000",
-            mode="PERMISSIVE",
-            header=False,
-            # NOTE: univocity returns null for any zero-length unquoted
-            # token before nullValue comparison, so a bare '' cell is NULL
-            # here for every type -- an engine-defined unification shared
-            # by all three scan paths (DS, streaming).  The reference
-            # reads '' as empty string / empty list
-            # (src/zeek_scanner.cpp:338-342), but real Zeek output always
-            # writes the (empty)/unset markers, never bare empties.
-        )
+        spark.read.schema(raw_schema(hdr, replace_periods))
+        .options(**csv_options(hdr))
         # absolutize for the JVM: Spark resolves relative paths against
         # the JVM's CWD, which need not match the Python driver's (the
         # as-given form is still echoed by the filename column)
@@ -294,81 +295,39 @@ def read_zeek(
       LongType to NULL; the reference's UBIGINT keeps them —
       SURVEY.md §1.4 caveat).
     """
-    files = glob_zeek_files(path)
-
-    headers: list[ZeekHeader] = []
-    for f in files:
-        try:
-            headers.append(parse_header(f))
-        except Exception:
-            if ignore_file_errors:
-                continue
-            raise
-    if not headers:
-        raise ZeekHeaderError(
-            f"No valid Zeek log files found in pattern '{path}'"
-        )
-
+    b = bind_zeek(path, union_by_name=union_by_name,
+                  ignore_file_errors=ignore_file_errors,
+                  glob=glob_zeek_files, parse=parse_header)
     if union_by_name:
-        df = _read_union(spark, headers, replace_periods, inet, count_decimal)
+        df = _read_union(spark, b, replace_periods, inet, count_decimal)
     else:
-        df = _read_strict(spark, headers, replace_periods, inet,
-                          ignore_file_errors, count_decimal)
-
+        # strict mode: the first header is the schema (field names and
+        # order, types, separators, markers; #path and #open ignored —
+        # ref src/zeek_reader.cpp:165-205); bind kept the files matching it
+        first = b.headers[0]
+        raw = _read_group(spark, [h.source_file for h in b.headers], first,
+                          replace_periods)
+        df = typed_frame(raw, first, replace_periods, inet, count_decimal)
     if filename:
-        df = _with_filename(df, files)
+        df = _with_filename(df, b.files)
     return df
 
 
-def _read_strict(
-    spark: SparkSession,
-    headers: list[ZeekHeader],
-    replace_periods: bool,
-    inet: bool,
-    ignore_file_errors: bool,
-    count_decimal: bool = False,
-) -> DataFrame:
-    """Strict mode: schema = first file's header; every other file must
-    match exactly (field names+order, types, separators, markers; #path
-    and #open ignored — ref src/zeek_reader.cpp:165-205).  Mismatch
-    raises an error naming both files and the first difference
-    (ref src/zeek_scanner.cpp:296-303), or skips the file under
-    ignore_file_errors."""
-    first = headers[0]
-    kept = [first]
-    for h in headers[1:]:
-        reason = same_schema(first, h)
-        if reason is None:
-            kept.append(h)
-        elif ignore_file_errors:
-            continue
-        else:
-            raise ZeekHeaderError(
-                f"Schema mismatch between '{first.source_file}' and "
-                f"'{h.source_file}': {reason}"
-            )
-    names = first.column_names(replace_periods)
-    raw = _read_group(spark, [h.source_file for h in kept], first, names)
-    return select_stages(raw, typed_columns(first, replace_periods, inet, count_decimal))
-
-
-def typed_columns(hdr: ZeekHeader, replace_periods: bool, inet: bool = False,
-                  count_decimal: bool = False) -> list[list[str]]:
-    """The typed cast pipeline for one header, as SQL select lists (for
-    :func:`select_stages`) over the all-string raw columns.  Shared by
-    the batch reader and the Structured Streaming reader
+def typed_frame(raw: DataFrame, hdr: ZeekHeader, replace_periods: bool,
+                inet: bool = False, count_decimal: bool = False) -> DataFrame:
+    """The typed cast pipeline for one header over its raw columns
+    (:func:`raw_schema`), with the header's column names applied last.
+    Shared by the batch reader and the Structured Streaming reader
     (streaming/zeek_stream.py)."""
-    names = hdr.column_names(replace_periods)
-    return _two_stages(
-        [_cast_field(n, zt, hdr, inet, count_decimal)
-         for n, zt in zip(names, hdr.types)],
-        names,
-    )
+    fields = [_cast_field(f"r{i}", zt, hdr, inet, count_decimal)
+              for i, zt in enumerate(hdr.types)]
+    return select_stages(_positional(raw, hdr), _two_stages(fields)).toDF(
+        *hdr.column_names(replace_periods))
 
 
 def _read_union(
     spark: SparkSession,
-    headers: list[ZeekHeader],
+    b: ZeekBind,
     replace_periods: bool,
     inet: bool,
     count_decimal: bool = False,
@@ -378,7 +337,7 @@ def _read_union(
     (ref src/zeek_scanner.cpp:506-589,789-794).  Files are grouped by
     identical schema so the plan is one CSV scan per distinct schema,
     narrow-unioned — no shuffle, no per-file DataFrames."""
-    union_fields, union_types = resolve_union_schema(headers)
+    union_fields, union_types = b.fields, b.types
     out_names = (
         [f.replace(".", "_") for f in union_fields]
         if replace_periods
@@ -394,19 +353,19 @@ def _read_union(
                for f, t in zip(union_fields, union_types)}
 
     groups: dict[tuple, list[ZeekHeader]] = {}
-    for h in headers:
+    for h in b.headers:
         groups.setdefault(h.schema_key(), []).append(h)
 
     parts: list[DataFrame] = []
     for hdrs in groups.values():
         g = hdrs[0]
-        g_names = g.column_names(replace_periods)
-        raw = _read_group(spark, [h.source_file for h in hdrs], g, g_names)
-        have = dict(zip(g.fields, zip(g_names, g.types)))
+        raw = _read_group(spark, [h.source_file for h in hdrs], g, replace_periods)
+        have = {f: (f"r{i}", t) for i, (f, t) in enumerate(zip(g.fields, g.types))}
         fields = [
             _cast_field(*have[f], g, inet, count_decimal) if f in have
             else (null_of[f], lambda p: p)
             for f in union_fields
         ]
-        parts.append(select_stages(raw, _two_stages(fields, out_names)))
-    return functools.reduce(lambda a, b: a.unionByName(b), parts)
+        parts.append(select_stages(_positional(raw, g), _two_stages(fields)))
+    # every part has the union's columns in the same positional order
+    return functools.reduce(lambda x, y: x.unionByName(y), parts).toDF(*out_names)

@@ -30,8 +30,8 @@ streams each partition's already-formatted lines into its own
 ``part-NNNNN.log[.gz]`` file with the full header block — one file per
 partition, the rotation-shaped layout the reference's multi-file scan
 expects.  Task retries are safe: output is staged per attempt and
-``os.replace``d over the deterministic final name (atomic on POSIX;
-last successful attempt wins).
+renamed over the deterministic final name at commit
+(sources/staged.py; last successful attempt wins).
 
 Caveat (inherent to the format): Zeek TSV has NO quoting or escaping
 (SURVEY §1.4 tokenizer) — a value containing the separator or a
@@ -48,7 +48,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from zeek_duckdb_spark.sources.zeek import _ident, _lit, select_stages
+from zeek_duckdb_spark.sources.zeek import _lit, select_stages
 
 __all__ = [
     "write_zeek",
@@ -305,10 +305,11 @@ def format_zeek_lines(
             "#types\t" + "\t".join(ztypes),
         ]
     )
-    # the user's names only appear in the first projection; after it
-    # every column is c<i>[_suffix], so no name needs quoting
+    # the user's names never enter the SQL text (``${...}`` in one
+    # would be substituted): the input columns are renamed to f<i>, and
+    # every later column is c<i>[_suffix]
     fields = [
-        _field_wire(_ident(f.name), f"c{i}", f.dataType, f.name, on_unwritable)
+        _field_wire(f"f{i}", f"c{i}", f.dataType, f.name, on_unwritable)
         for i, f in enumerate(schema.fields)
     ]
     stages = [[e for fld in fields for e in fld[k]] for k in range(4)]
@@ -316,7 +317,8 @@ def format_zeek_lines(
     if cells:
         cells[0] = _first_cell("c0", schema.fields[0].name, on_unwritable)
     line = "concat_ws(" + ", ".join(["'\t'"] + cells) + ") AS line"
-    return select_stages(df, stages + [[line]]), header
+    positional = df.toDF(*[f"f{i}" for i in range(len(fields))])
+    return select_stages(positional, stages + [[line]]), header
 
 
 def write_zeek_stream(
@@ -359,11 +361,9 @@ def write_zeek_stream(
 # --- the DataSource writer half (registered on ZeekDataSource) ---------
 
 
-from pyspark.sql.datasource import (
-    DataSourceStreamWriter,
-    DataSourceWriter,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSourceStreamWriter, DataSourceWriter
+
+from zeek_duckdb_spark.sources.staged import StagedDir
 
 
 class _ZstdTextFile:
@@ -379,10 +379,7 @@ class _ZstdTextFile:
     def write(self, s: str) -> None:
         self._f.write(s.encode("utf-8"))
 
-    def __enter__(self):
-        return self
-
-    def __exit__(self, *exc):
+    def close(self) -> None:
         self._f.close()
 
 
@@ -403,134 +400,77 @@ def _codec(option_val) -> tuple[str, "object"]:
     )
 
 
-class ZeekLogWriter(DataSourceWriter):
+class _ZeekLines:
+    """What both Zeek sinks write: per task, one file of the header
+    block plus the pre-formatted lines, through the ``compress`` codec,
+    staged in ``self._dir``."""
+
+    def __init__(self, options: dict, who: str, staging: str = ""):
+        self._header = options.get("zeek_header", "")
+        self._ext, self._codec_open = _codec(options.get("compress", "false"))
+        self._dir = StagedDir(options.get("path"), who, staging)
+
+    def _open(self, path: str):
+        fh = self._codec_open(path)
+        fh.write(self._header + "\n")
+        return fh
+
+    def _stage(self, iterator, header_only_part: bool):
+        def fill(open_tmp, _final):
+            fh = open_tmp() if header_only_part else None
+            for row in iterator:
+                if fh is None:
+                    fh = open_tmp()
+                fh.write(row[0])
+                fh.write("\n")
+
+        return self._dir.stage(lambda pid: f"part-{pid:05d}{self._ext}",
+                               self._open, fill)
+
+
+class ZeekLogWriter(_ZeekLines, DataSourceWriter):
     """Per-partition sink: header block + pre-formatted lines into
-    ``part-NNNNN.log[.gz|.zst]``.  Constructed by
-    ZeekDataSource.writer().  All-or-nothing: tasks stage dot-prefixed
-    tmps and the driver publishes them at commit() (same shared-
-    filesystem scope as ZeekStreamLogWriter.commit) — a job that dies
-    after some tasks succeeded leaves no visible ``part-*`` file."""
+    ``part-NNNNN.log[.gz|.zst]``, a header-only file for an empty
+    partition.  Constructed by ZeekDataSource.writer().  All-or-nothing
+    through the staged-file protocol (sources/staged.py)."""
 
     def __init__(self, options: dict, overwrite: bool):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("write_zeek: no output path")
-        self._header = options.get("zeek_header", "")
-        self._ext, self._open = _codec(options.get("compress", "false"))
-        os.makedirs(self._path, exist_ok=True)
-        # reap STALE dot-tmps from SIGKILLed prior runs (their abort
-        # never ran; glob scans don't see dotfiles, so they'd pile
-        # up) — age-gated so a concurrent job's staged files survive
-        from zeek_duckdb_spark.sources.datasource import _reap_stale_tmps
-
-        _reap_stale_tmps(self._path)
-        if overwrite:
-            for f in os.listdir(self._path):
-                if f.startswith("part-"):
-                    os.remove(os.path.join(self._path, f))
-        elif any(f.startswith("part-") for f in os.listdir(self._path)):
-            raise ValueError(
-                f"write_zeek: '{self._path}' already contains log files "
-                "(mode='error'); use mode='overwrite'"
-            )
+        super().__init__(options, "write_zeek")
+        self._dir.claim(
+            lambda f: f.startswith("part-"), overwrite,
+            f"write_zeek: '{self._dir.path}' already contains log files "
+            "(mode='error'); use mode='overwrite'",
+        )
 
     def write(self, iterator):
-        from pyspark import TaskContext
-
-        from zeek_duckdb_spark.sources.datasource import StagedShardMessage
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        attempt = ctx.taskAttemptId() if ctx is not None else 0
-        final = os.path.join(self._path, f"part-{pid:05d}{self._ext}")
-        # dot-prefixed: invisible to glob scans and to the writer's own
-        # part-* overwrite/error checks until commit() renames it
-        tmp = os.path.join(
-            self._path, f".part-{pid:05d}{self._ext}.tmp-{attempt}"
-        )
-        try:
-            with self._open(tmp) as fh:
-                fh.write(self._header + "\n")
-                for row in iterator:
-                    fh.write(row[0])
-                    fh.write("\n")
-        except BaseException:
-            try:
-                os.remove(tmp)
-            except OSError:
-                pass
-            raise
-        return StagedShardMessage(tmp, final)
+        return self._stage(iterator, header_only_part=True)
 
     def commit(self, messages):
-        from zeek_duckdb_spark.sources.datasource import _publish_staged
-
-        _publish_staged(messages)
+        self._dir.publish(messages)
 
     def abort(self, messages):
-        from zeek_duckdb_spark.sources.datasource import _discard_staged
-
-        _discard_staged(messages)
+        self._dir.discard(messages)
 
 
-class ZeekCommitMessage(WriterCommitMessage):
-    """Staged file handoff from a write task to the driver commit."""
-
-    def __init__(self, staged: str | None, partition_id: int, rows: int):
-        self.staged = staged
-        self.partition_id = partition_id
-        self.rows = rows
-
-
-class ZeekStreamLogWriter(DataSourceStreamWriter):
-    """Streaming sink half: tasks stage a file per non-empty partition;
-    commit() publishes them under deterministic
+class ZeekStreamLogWriter(_ZeekLines, DataSourceStreamWriter):
+    """Streaming sink half: tasks stage a file per non-empty partition
+    under ``.staging/``; commit() publishes them under deterministic
     ``batch-BBBBBB-part-PPPPP`` names (idempotent across microbatch
     replays — a restarted batch overwrites, never duplicates); abort()
     discards the staged bytes."""
 
     def __init__(self, options: dict):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("write_zeek_stream: no output path")
-        self._header = options.get("zeek_header", "")
-        self._ext, self._open = _codec(options.get("compress", "false"))
-        os.makedirs(os.path.join(self._path, ".staging"), exist_ok=True)
+        super().__init__(options, "write_zeek_stream", staging=".staging")
 
     def write(self, iterator):
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        attempt = ctx.taskAttemptId() if ctx is not None else 0
-        staged = os.path.join(
-            self._path, ".staging", f"task-{pid}-{attempt}"
-        )
-        rows = 0
-        with self._open(staged) as fh:
-            fh.write(self._header + "\n")
-            for row in iterator:
-                fh.write(row[0])
-                fh.write("\n")
-                rows += 1
-        if rows == 0:
-            os.remove(staged)
-            return ZeekCommitMessage(None, pid, 0)
-        return ZeekCommitMessage(staged, pid, rows)
+        return self._stage(iterator, header_only_part=False)
 
     def commit(self, messages, batchId):
-        for m in messages:
-            if m is None or m.staged is None:
-                continue
-            final = os.path.join(
-                self._path,
-                f"batch-{batchId:06d}-part-{m.partition_id:05d}{self._ext}",
-            )
-            os.replace(m.staged, final)
+        self._dir.publish(messages, prefix=f"batch-{batchId:06d}-")
         # a retried task's LOSING attempt leaves its staged file behind
         # (abort only runs when the whole batch fails); microbatches are
         # sequential per query, so anything still staged is garbage
-        staging = os.path.join(self._path, ".staging")
+        staging = self._dir.tmp_dir
         for f in os.listdir(staging):
             try:
                 os.remove(os.path.join(staging, f))
@@ -538,6 +478,4 @@ class ZeekStreamLogWriter(DataSourceStreamWriter):
                 pass
 
     def abort(self, messages, batchId):
-        for m in messages:
-            if m is not None and m.staged and os.path.exists(m.staged):
-                os.remove(m.staged)
+        self._dir.discard(messages)

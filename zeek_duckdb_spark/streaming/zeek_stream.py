@@ -10,7 +10,8 @@ Design: schema is resolved ONCE, driver-side, from existing files (or an
 explicit sample file) with the same header module as the batch path —
 streams can't re-infer schema per file, and Zeek streams keep a stable
 schema per log type.  Then ``spark.readStream.csv`` over the directory
-with the shared typed-cast pipeline (``sources.zeek.typed_columns``:
+with the batch scan's CSV options and typed-cast pipeline
+(``sources.zeek.csv_options`` and ``typed_frame``:
 SQL select lists parsed once by the JVM, rather than a py4j round trip
 per expression node).  Everything downstream (watermarks, windowed
 rollups, stateful ops) is stock Structured Streaming.
@@ -32,7 +33,7 @@ from zeek_duckdb_spark.header import (
     parse_header,
     same_schema,
 )
-from zeek_duckdb_spark.sources.zeek import _raw_schema, select_stages, typed_columns
+from zeek_duckdb_spark.sources.zeek import csv_options, raw_schema, typed_frame
 
 __all__ = ["read_zeek_stream", "read_zeek_json_stream", "validate_stream_schemas", "windowed_rollup"]
 
@@ -80,25 +81,12 @@ def read_zeek_stream(
         validate_stream_schemas(directory, pattern=pattern, schema_from=schema_from)
     hdr: ZeekHeader = parse_header(schema_from)
 
-    names = hdr.column_names(replace_periods)
-    reader = (
-        spark.readStream.schema(_raw_schema(names))
-        .options(
-            sep=hdr.separator,
-            comment="#",
-            quote="\u0000",
-            escape="\u0000",
-            mode="PERMISSIVE",
-            header=False,
-            # bare '' cells read NULL here exactly as in the batch scan
-            # (univocity nulls zero-length unquoted tokens; see the
-            # _read_group note in sources/zeek.py)
-        )
-    )
+    reader = (spark.readStream.schema(raw_schema(hdr, replace_periods))
+              .options(**csv_options(hdr)))
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     raw = reader.csv(f"{directory.rstrip('/')}/{pattern}")
-    return select_stages(raw, typed_columns(hdr, replace_periods, inet))
+    return typed_frame(raw, hdr, replace_periods, inet)
 
 
 def validate_stream_schemas(
