@@ -983,9 +983,9 @@ def sim_kmeans_ivf(spark, sf):
 
 
 def nf_dns_tunneling(spark, sf):
-    """DNS-tunneling heuristic (operators/netflow.dns_tunneling_scores,
-    kernel='arrow' — the scale path; its bit-parity with the expr fold
-    the oracle restates is pinned by
+    """DNS-tunneling heuristic (operators/netflow.dns_tunneling_scores;
+    its numpy entropy kernel's agreement with the sequential fold the
+    oracle restates is pinned by
     tests/test_netflow.py::test_char_entropy_kernels_agree).  The
     testdata ships no DNS log, so qnames derive deterministically from
     events via md5 hex — identical arithmetic in both engines: every
@@ -1004,7 +1004,7 @@ def nf_dns_tunneling(spark, sf):
             "'.dom', CAST(user_id % 20 AS STRING), '.com')"
         ).alias("qname"),
     )
-    return dns_tunneling_scores(q, min_queries=5, kernel="arrow")
+    return dns_tunneling_scores(q, min_queries=5)
 
 
 def pq_ann_topk(spark, sf):
@@ -1012,11 +1012,12 @@ def pq_ann_topk(spark, sf):
     m=4 x k=8 codebooks (1 Lloyd iteration over the corpus-global int8
     grid — exact int64 sums make the distributed means reproducible;
     the Arrow partial-sum kernel, whose codebooks are pinned identical
-    to the expr fold by tests/test_pq.py), encode with the Arrow
-    matmul kernel (code parity likewise pinned), then ADC top-10 for
-    vec 0 via the driver-side m x k LUT literal.  The oracle restates
-    the full train -> encode -> LUT -> fold chain in SQL with the expr
-    kernels' arithmetic (see _pq_topk_oracle)."""
+    to a sequential Lloyd by tests/test_pq.py), encode with the Arrow
+    matmul kernel (code parity with the sequential fold likewise
+    pinned), then ADC top-10 for vec 0 via the driver-side m x k LUT
+    literal.  The oracle restates the full train -> encode -> LUT ->
+    fold chain in SQL with the sequential folds' arithmetic (see
+    _pq_topk_oracle)."""
     from zeek_duckdb_spark.operators.pq import pq_encode, pq_topk, pq_train
 
     # plain scan: the Arrow train/encode kernels are matmul-cheap per
@@ -1025,9 +1026,9 @@ def pq_ann_topk(spark, sf):
     # natural splits and this handle is identical
     e = _t(spark, sf, "embeddings")
     corpus = e.filter(F.col("vec_id") != 0)
-    cbs = pq_train(corpus, dim=64, m=4, k=8, iters=1, kernel="arrow")
+    cbs = pq_train(corpus, dim=64, m=4, k=8, iters=1)
     qvec = e.filter(F.col("vec_id") == 0).select("embedding").first()["embedding"]
-    codes = pq_encode(corpus, cbs, kernel="arrow")
+    codes = pq_encode(corpus, cbs)
     return pq_topk(codes, [float(v) for v in qvec], cbs, k_top=10)
 
 

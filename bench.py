@@ -222,6 +222,8 @@ def main() -> None:
     iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "5"))
     want_paired = os.environ.get("SPARK_GRAFT_BENCH_PAIRED", "1") != "0"
 
+    from zeek_duckdb_spark.session import DEFAULT_CPUS
+
     base_dir = ensure_baseline_worktree() if want_paired else None
     head = Arm("head", REPO, sf_dir)
     base = Arm("baseline", base_dir, sf_dir) if base_dir else None
@@ -252,14 +254,16 @@ def main() -> None:
                 t = arm.cmd(f"RUN {name}")
                 (h_samples if arm is head else b_samples)[name].append(t)
                 if arm is head and getattr(arm, "last_stats", None):
-                    # keep the max-over-iterations census (AQE can
-                    # vary stage counts run to run; max is the honest
-                    # "how parallel does this query ever get" answer)
-                    prev = h_stats.get(name, {})
-                    h_stats[name] = {
-                        k: max(int(prev.get(k, 0)), int(v))
-                        for k, v in arm.last_stats.items()
-                    }
+                    # keep the census of the run with the most tasks
+                    # (AQE can vary stage counts run to run): one
+                    # real run's jobs/stages/tasks, not a per-key max
+                    # stitched together from different runs
+                    prev = h_stats.get(name)
+                    tasks = int(arm.last_stats.get("tasks", 0))
+                    if prev is None or tasks > prev.get("tasks", 0):
+                        h_stats[name] = {
+                            k: int(v) for k, v in arm.last_stats.items()
+                        }
 
     timings = {n: round(statistics.median(s), 4) for n, s in h_samples.items()}
     spread = {n: [round(min(s), 4), round(max(s), 4)] for n, s in h_samples.items()}
@@ -310,7 +314,9 @@ def main() -> None:
                     # sf (max_stage_tasks at the low-core count means
                     # the ratio is a scheduling-floor read, not an
                     # ignored env var)
-                    "cpus_env": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+                    "cpus_env": int(
+                        os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
+                    ),
                     **sess_info,
                     "per_query": h_stats,
                 },

@@ -145,13 +145,13 @@ def bench_pair(
     import duckdb
 
     import __spark_entry__ as em
-    from zeek_duckdb_spark.session import get_spark
+    from zeek_duckdb_spark.session import DEFAULT_CPUS, get_spark
 
     names = names or HEADLINE
     spark = get_spark("bench-scaling")
     queries = em.queries()
     con = duckdb.connect()
-    con.execute("SET threads TO " + os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    con.execute("SET threads TO " + os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS))
     for t in tables or TABLES:
         path = (
             f"{sf_dir}/{t}.parquet/*.parquet" if glob_tables else f"{sf_dir}/{t}.parquet"
@@ -879,7 +879,7 @@ def bench_bucketed(sf_label: str, sf_dir: str, iters: int) -> dict:
 
     import __spark_entry__ as em
     from zeek_duckdb_spark.plans import audit
-    from zeek_duckdb_spark.session import get_spark
+    from zeek_duckdb_spark.session import DEFAULT_CPUS, get_spark
     from zeek_duckdb_spark.sources.sink import write_bucketed
 
     spark = get_spark("bench-bucketed")
@@ -903,7 +903,7 @@ def bench_bucketed(sf_label: str, sf_dir: str, iters: int) -> dict:
     qs = _bucketed_queries(spark, sf_dir, li_t, ord_t)
     names = list(qs)
     con = duckdb.connect()
-    con.execute("SET threads TO " + os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    con.execute("SET threads TO " + os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS))
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "

@@ -8,6 +8,7 @@ sent to the JVM so that shape cannot come back unnoticed."""
 
 import contextlib
 import re
+import threading
 
 from py4j.clientserver import ClientServerConnection
 
@@ -26,11 +27,17 @@ TYPES = ["time", "string", "addr", "port", "addr", "port", "enum", "string",
 
 @contextlib.contextmanager
 def count_commands():
+    """Count the commands the calling thread sends.  py4j's garbage
+    collection thread also sends deletes, asynchronously, for JavaObjects
+    that earlier work dropped; they land in the window at random and are
+    not round trips of the bind, so they are not counted."""
     counter = {"n": 0}
     send = ClientServerConnection.send_command
+    caller = threading.current_thread()
 
     def counting(self, command):
-        counter["n"] += 1
+        if threading.current_thread() is caller:
+            counter["n"] += 1
         return send(self, command)
 
     ClientServerConnection.send_command = counting

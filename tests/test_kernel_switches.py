@@ -1,0 +1,24 @@
+"""One kernel per operator: a ``kernel=`` switch survives only where a
+measured crossover or a pending A/B keeps two implementations (see
+SCALING.md "One kernel per operator")."""
+
+import ast
+import pathlib
+
+import zeek_duckdb_spark
+
+KEPT = {"logreg_score", "filter_by_classifier", "minhash_signatures", "topk_neighbors"}
+
+
+def test_only_the_kept_operators_take_a_kernel_parameter():
+    root = pathlib.Path(zeek_duckdb_spark.__file__).parent
+    hits = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                names = [x.arg for x in a.posonlyargs + a.args + a.kwonlyargs]
+                if "kernel" in names:
+                    hits.add((rel, node.name))
+    assert {name for _, name in hits} == KEPT, sorted(hits)

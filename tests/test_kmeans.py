@@ -1,6 +1,8 @@
 """Trained-k-means IVF semantics: deterministic fit, exactness vs the
 quantized brute force when every cell is probed, iteration invariants."""
 
+import math
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -24,19 +26,57 @@ def test_fit_is_deterministic_across_partitionings(spark, emb):
     assert a == b
 
 
+def _seq_cell(x, cents):
+    """Reference argmax-cosine cell: the sequential dot/norm folds of
+    kmeans._argmax_cell, a zero-norm (NULL) cosine losing to every real
+    one, ties to the higher cell."""
+    def cos(c):
+        dot = nx = nc = 0.0
+        for a, b in zip(x, c):
+            dot += float(a) * float(b)
+        for a in x:
+            nx += float(a) * float(a)
+        for b in c:
+            nc += b * b
+        d = math.sqrt(nx) * math.sqrt(nc)
+        return dot / d if d != 0.0 else -math.inf
+
+    return max((cos(v), c) for c, v in cents)[1]
+
+
+def _seq_lloyd(spark_df, k, iters):
+    """Reference Lloyd fit in plain Python over the quantized corpus:
+    init = the k lowest ids, exact int sums, one division per mean,
+    an empty cell keeps its centroid."""
+    from zeek_duckdb_spark.operators.similarity import quantize_embeddings
+
+    rows = sorted(
+        (r.vec_id, list(r.qvec))
+        for r in quantize_embeddings(spark_df)
+        .filter(F.exists(F.col("qvec"), lambda v: v != F.lit(0)))
+        .collect()
+    )
+    cents = [(i, [float(v) for v in q]) for i, (_, q) in enumerate(rows[:k])]
+    for _ in range(iters):
+        n, sums = {}, {}
+        for _, q in rows:
+            c = _seq_cell(q, cents)
+            n[c] = n.get(c, 0) + 1
+            sums[c] = [a + b for a, b in zip(sums.get(c, [0] * len(q)), q)]
+        cents = [
+            (c, [t / n[c] for t in sums[c]] if c in n else v) for c, v in cents
+        ]
+    return cents
+
+
 @pytest.mark.slow
 def test_arrow_fit_kernel_identical_centroids(spark, emb):
-    # the Arrow Lloyd pass accumulates the cosine folds in the expr
-    # kernel's sequential order — centroids must be IDENTICAL (not
+    # the Arrow Lloyd pass accumulates the cosine folds in the
+    # sequential reference order — centroids must be IDENTICAL (not
     # close), under any partitioning
-    a = kmeans_fit_quantized(emb, k=4, iters=2, kernel="arrow")
-    x = kmeans_fit_quantized(emb, k=4, iters=2, kernel="expr")
-    assert a == x
-    assert kmeans_fit_quantized(
-        emb.repartition(13), k=4, iters=2, kernel="arrow"
-    ) == x
-    with pytest.raises(ValueError, match="kernel"):
-        kmeans_fit_quantized(emb, k=4, kernel="gpu")
+    x = _seq_lloyd(emb, k=4, iters=2)
+    assert kmeans_fit_quantized(emb, k=4, iters=2) == x
+    assert kmeans_fit_quantized(emb.repartition(13), k=4, iters=2) == x
 
 
 @pytest.mark.slow
@@ -50,38 +90,44 @@ def test_arrow_fit_kernel_survives_empty_partitions(spark):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<double>"
     ).repartition(32)
-    assert kmeans_fit_quantized(
-        df, k=2, iters=2, kernel="arrow"
-    ) == kmeans_fit_quantized(df, k=2, iters=2, kernel="expr")
+    assert kmeans_fit_quantized(df, k=2, iters=2) == _seq_lloyd(df, k=2, iters=2)
 
 
 def test_arrow_assign_kernel_identical_cells(spark, emb):
-    from zeek_duckdb_spark.operators.kmeans import _assign_cells
+    from zeek_duckdb_spark.operators.kmeans import _argmax_cell, _assign_cells
     from zeek_duckdb_spark.operators.similarity import quantize_embeddings
 
     cents = kmeans_fit_quantized(emb, k=4, iters=1)
     base = quantize_embeddings(emb).filter(
         F.exists(F.col("qvec"), lambda v: v != F.lit(0))
     ).select("vec_id", "qvec")
-    a = {r.vec_id: r.cell for r in _assign_cells(base, cents, kernel="arrow").collect()}
-    x = {r.vec_id: r.cell for r in _assign_cells(base, cents, kernel="expr").collect()}
-    assert a == x
+
+    def cells(df):
+        return {r.vec_id: r.cell for r in df.collect()}
+
+    a = cells(_assign_cells(base, cents))
+    assert a == cells(base.withColumn("cell", _argmax_cell("qvec", cents)))
     # zero-norm centroid: NULL cosine loses to every real one in both
-    # kernels; on an all-zero centroid LIST ties break to the higher cell
+    # forms; on an all-zero centroid LIST ties break to the higher cell
     zc = [(0, [0.0] * len(cents[0][1])), (1, list(cents[0][1]))]
-    az = {r.vec_id: r.cell for r in _assign_cells(base, zc, kernel="arrow").collect()}
-    xz = {r.vec_id: r.cell for r in _assign_cells(base, zc, kernel="expr").collect()}
-    assert az == xz
+    az = cells(_assign_cells(base, zc))
+    assert az == cells(base.withColumn("cell", _argmax_cell("qvec", zc)))
+    assert set(az.values()) == {1}
 
 
 @pytest.mark.slow
-def test_kmeans_ivf_topk_arrow_kernel_identical_rows(spark, emb):
+def test_kmeans_ivf_topk_arrow_kernel_identical_rows(spark, emb, tmp_path):
+    # the one-shot probe (numpy assignment) returns the same rows as
+    # the landed index, whose cells come from the _argmax_cell literal
+    from zeek_duckdb_spark.operators.kmeans import ivf_probe_topk, ivf_write
+
     q = emb.filter(F.col("vec_id") == 0)
     corpus = emb.filter(F.col("vec_id") != 0)
-    a = kmeans_ivf_topk(corpus, q, k=5, n_centroids=4, nprobe=2, iters=2,
-                        kernel="arrow").collect()
-    x = kmeans_ivf_topk(corpus, q, k=5, n_centroids=4, nprobe=2, iters=2,
-                        kernel="expr").collect()
+    a = kmeans_ivf_topk(corpus, q, k=5, n_centroids=4, nprobe=2,
+                        iters=2).collect()
+    path = str(tmp_path / "ivf")
+    cents = ivf_write(corpus, path, n_centroids=4, iters=2)
+    x = ivf_probe_topk(spark, path, cents, q, k=5, nprobe=2).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in x]
 
 

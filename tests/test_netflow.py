@@ -1,8 +1,13 @@
 """netflow analytics: DuckDB differentials on the events table plus
 handcrafted beaconing/scanning scenarios."""
 
+import itertools
+import math
+import sys
+
 import duckdb
 import pytest
+from pyspark.sql import functions as F
 
 from zeek_duckdb_spark.operators.netflow import (
     beacon_scores,
@@ -357,9 +362,20 @@ def test_entropy_batch_np_known_values():
     assert got[5] == pytest.approx(2 / 3 * np.log2(1.5) + 1 / 3 * np.log2(3))
 
 
+def _seq_entropy(s):
+    """Reference entropy: one run-length pass over the sorted chars,
+    accumulating p*log2(1/p) per run in order."""
+    cs = sorted(s or "")
+    acc = 0.0
+    for _, run in itertools.groupby(cs):
+        r = len(list(run))
+        acc += (r / len(cs)) * (math.log2(len(cs)) - math.log2(r))
+    return acc
+
+
 def test_char_entropy_kernels_agree(spark):
-    """expr fold and Arrow kernel accumulate in the same sorted-char
-    order -> identical doubles on BMP text (incl. unicode + repeats)."""
+    """The Arrow kernel accumulates in the same sorted-char order as
+    the sequential reference fold (incl. unicode + repeats)."""
     from zeek_duckdb_spark.operators.netflow import char_entropy
 
     vals = [
@@ -368,22 +384,21 @@ def test_char_entropy_kernels_agree(spark):
         "0123456789" * 5, "the quick brown fox jumps over the lazy dog",
     ]
     d = spark.createDataFrame([(v,) for v in vals], "s string")
-    rows = d.select(
-        "s",
-        char_entropy("s", kernel="expr").alias("e_expr"),
-        char_entropy("s", kernel="arrow").alias("e_arrow"),
-    ).collect()
+    rows = d.select("s", char_entropy("s").alias("e_arrow")).collect()
     assert len(rows) == len(vals)
     for r in rows:
-        assert r.e_arrow == pytest.approx(r.e_expr, abs=1e-12), r.s
-    with pytest.raises(ValueError, match="kernel"):
-        char_entropy("s", kernel="bogus")
+        assert r.e_arrow == pytest.approx(_seq_entropy(r.s), abs=1e-12), r.s
 
 
 def test_dns_tunneling_kernels_agree(spark):
+    """The operator equals its projection + aggregate with the entropy
+    taken from the sequential reference fold (a plain Python UDF)."""
     import random
 
-    from zeek_duckdb_spark.operators.netflow import dns_tunneling_scores
+    from zeek_duckdb_spark.operators.netflow import (
+        _dns_prepare,
+        dns_tunneling_scores,
+    )
 
     rng = random.Random(7)
     rows = []
@@ -392,11 +407,31 @@ def test_dns_tunneling_kernels_agree(spark):
         dom = rng.choice(["evil.example.com", "ok.net", "plain.org"])
         rows.append((f"h{i % 9}", f"{sub}.{dom}" if sub else dom))
     d = spark.createDataFrame(rows, "src string, qname string")
-    a = sorted(tuple(r) for r in dns_tunneling_scores(d, min_queries=1, kernel="arrow").collect())
-    e = sorted(tuple(r) for r in dns_tunneling_scores(d, min_queries=1, kernel="expr").collect())
-    assert a == e
-    with pytest.raises(ValueError, match="kernel"):
-        dns_tunneling_scores(d, kernel="nope")
+    a = sorted(tuple(r) for r in dns_tunneling_scores(d, min_queries=1).collect())
+    # the reference UDF lives in this test module, which the Python
+    # workers cannot import: ship it by value
+    from pyspark import cloudpickle
+
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    ent = F.udf(_seq_entropy, "double")
+    ref = (
+        _dns_prepare(d, "src", "qname", None)
+        .groupBy("src", "domain")
+        .agg(
+            F.count("*").alias("n_queries"),
+            F.count_distinct("__sub").alias("n_subdomains"),
+            F.round(F.avg(F.length("__sub")), 6).alias("avg_sub_len"),
+            F.round(F.avg(ent("__sub")), 6).alias("avg_entropy"),
+        )
+        .withColumn(
+            "tunnel_score",
+            F.round(F.col("avg_entropy") * F.col("avg_sub_len"), 6),
+        )
+    )
+    try:
+        assert a == sorted(tuple(r) for r in ref.collect())
+    finally:
+        cloudpickle.unregister_pickle_by_value(sys.modules[__name__])
 
 
 def test_dns_tunneling_psl_grouping(spark):

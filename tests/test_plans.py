@@ -151,9 +151,8 @@ def test_ivf_assign_is_zero_shuffle(spark):
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     cent = emb.orderBy(F.asc("vec_id")).limit(8)
-    # centroids inline as an array literal; per-row argmax is a pure
-    # column expression — the assignment subplan must not exchange
-    # (the old crossJoin+groupBy argmax shuffled the corpus K× wide)
+    # centroids ride the numpy map's closure; per-row argmax is a
+    # batch map — the assignment subplan must not exchange
     assert audit.num_shuffles(ivf_assign(emb, cent)) == 0
 
 
@@ -298,7 +297,7 @@ def test_plan_report_summary(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cb = [[[0.0] * 8] * 4] * 8
-    assert audit.plan_report(pq_encode(emb, cb, kernel="arrow"))["python_exec"]
+    assert audit.plan_report(pq_encode(emb, cb))["python_exec"]
 
 
 def test_plan_report_counts_all_nonbroadcast_exchanges(spark):
@@ -315,8 +314,8 @@ def test_plan_report_counts_all_nonbroadcast_exchanges(spark):
 
 
 def test_balance_clusters_plan_no_joins_no_python(spark):
-    """Topic rebalancing is a broadcast-attribute assignment + one
-    K-row aggregate + a map-side filter: the corpus never rides a
+    """Topic rebalancing is a centroid-literal assignment + one K-row
+    aggregate + a map-side filter: the corpus never rides a
     non-broadcast join, a window, or Python."""
     from zeek_duckdb_spark.operators.kmeans import kmeans_fit_quantized
     from zeek_duckdb_spark.operators.pipeline import balance_clusters
@@ -329,6 +328,30 @@ def test_balance_clusters_plan_no_joins_no_python(spark):
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
     assert "Python" not in plan
     assert "Window" not in plan
+
+
+def test_verify_shape_sizes_file_corpora_without_a_footer(spark, tmp_path):
+    """A file-backed corpus with no parquet footer estimate (CSV here)
+    is sized by its on-disk bytes instead of defaulting to the
+    broadcast shape."""
+    from zeek_duckdb_spark.operators.dedup import _verify_shape_auto
+
+    bcast = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(bcast)
+    path = str(tmp_path / "docs.csv")
+    spark.createDataFrame(
+        [(i, f"document {i} " + "text " * 40) for i in range(200)],
+        "doc_id long, text string",
+    ).coalesce(1).write.csv(path)
+    docs = spark.read.schema("doc_id long, text string").csv(path)
+    try:
+        # ~43 KB on disk: above 64k // 4, far below 1g // 4
+        spark.conf.set(bcast, "64k")
+        assert _verify_shape_auto(docs, "doc_id", "text") == "semi"
+        spark.conf.set(bcast, "1g")
+        assert _verify_shape_auto(docs, "doc_id", "text") == "broadcast"
+    finally:
+        spark.conf.set(bcast, saved)
 
 
 def test_canonicalize_url_plan_pure_jvm_map(spark):

@@ -1,6 +1,8 @@
 """Product quantization: train determinism, encode/ADC parity vs
 numpy, the refine serving shape, and the zero-shuffle plan contract."""
 
+import math
+
 import numpy as np
 import pytest
 
@@ -23,6 +25,63 @@ def emb(spark):
 @pytest.fixture(scope="module")
 def model(spark, emb):
     return pq_train(emb, dim=DIM, m=M, k=K, iters=2)
+
+
+def _seq_code(sub, cb):
+    """Reference argmin-L2 code: the sequential ``acc + (x - c)^2``
+    fold per centroid, the lowest code winning ties."""
+    def dist(cent):
+        acc = 0.0
+        for x, c in zip(sub, cent):
+            acc += (float(x) - c) * (float(x) - c)
+        return acc
+
+    return min((dist(cent), c) for c, cent in enumerate(cb))[1]
+
+
+def _seq_encode(rows, cbs):
+    dsub = len(cbs[0][0])
+    return {
+        i: [_seq_code(v[j * dsub : (j + 1) * dsub], cb) for j, cb in enumerate(cbs)]
+        for i, v in rows
+    }
+
+
+def _seq_train(rows, dim, m, k, iters):
+    """Reference pq_train in plain Python over (id, vector) rows: the
+    corpus-global int8 grid, the k lowest ids as init, sequential
+    assignment folds, exact int sums, one division per mean, an empty
+    cell keeps its centroid; codebooks scaled back to vector units."""
+    dsub = dim // m
+    rows = sorted((i, v) for i, v in rows if v is not None and len(v) == dim)
+    mx = 0.0
+    for _, v in rows:
+        for x in v:
+            mx = max(mx, abs(float(x)))
+    scale = mx / 127.0
+    q = [[math.floor(float(x) / scale + 0.5) for x in v] for _, v in rows]
+    cbs = [[[float(x) for x in r[j * dsub : (j + 1) * dsub]] for r in q[:k]]
+           for j in range(m)]
+    for _ in range(iters):
+        n, sums = {}, {}
+        for r in q:
+            for j in range(m):
+                sub = r[j * dsub : (j + 1) * dsub]
+                key = (j, _seq_code(sub, cbs[j]))
+                n[key] = n.get(key, 0) + 1
+                sums[key] = [a + b for a, b in zip(sums.get(key, [0] * dsub), sub)]
+        cbs = [
+            [
+                [t / n[(j, c)] for t in sums[(j, c)]] if (j, c) in n else cent
+                for c, cent in enumerate(cb)
+            ]
+            for j, cb in enumerate(cbs)
+        ]
+    return [[[v * scale for v in cent] for cent in cb] for cb in cbs]
+
+
+def _rows(df):
+    return [(r.vec_id, list(r.embedding)) for r in df.collect()]
 
 
 def _np_embs(emb):
@@ -104,11 +163,9 @@ def test_refine_reranks_by_exact_distance(spark, emb, model):
 
 
 def test_encode_and_topk_zero_shuffle_plans(spark, emb, model):
-    # expr kernel: pure JVM map; arrow kernel: still a zero-shuffle map
-    codes = pq_encode(emb, model, kernel="expr")
+    # the Arrow encode kernel is a zero-shuffle map
+    codes = pq_encode(emb, model)
     assert audit.num_shuffles(codes) == 0
-    assert "Python" not in audit.physical_plan(codes)
-    assert audit.num_shuffles(pq_encode(emb, model, kernel="arrow")) == 0
     ids, X = _np_embs(emb)
     top = pq_topk(codes, X[0].tolist(), model, 10)
     plan = audit.physical_plan(top)
@@ -345,16 +402,11 @@ def test_ivfpq_validation(spark, emb, ivfpq):
 
 def test_arrow_train_kernel_identical_codebooks(spark, emb, model):
     # the Arrow partial-sum Lloyd pass accumulates distances in the
-    # expr fold's sequential order — codebooks must be IDENTICAL (not
-    # close) to the explode+groupBy expr path, under any partitioning
-    expr_cbs = pq_train(emb, dim=DIM, m=M, k=K, iters=2, kernel="expr")
-    assert model == expr_cbs
-    assert (
-        pq_train(emb.repartition(7), dim=DIM, m=M, k=K, iters=2, kernel="arrow")
-        == expr_cbs
-    )
-    with pytest.raises(ValueError, match="kernel"):
-        pq_train(emb, dim=DIM, m=M, k=K, kernel="gpu")
+    # sequential reference order — codebooks must be IDENTICAL (not
+    # close) to a plain sequential Lloyd, under any partitioning
+    want = _seq_train(_rows(emb), DIM, M, K, iters=2)
+    assert model == want
+    assert pq_train(emb.repartition(7), dim=DIM, m=M, k=K, iters=2) == want
 
 
 @pytest.mark.slow
@@ -369,32 +421,34 @@ def test_arrow_train_kernel_survives_empty_partitions(spark):
     df = spark.createDataFrame(
         rows, "vec_id long, embedding array<double>"
     ).repartition(32)
-    got = pq_train(df, dim=8, m=2, k=2, iters=2, kernel="arrow")
-    want = pq_train(df, dim=8, m=2, k=2, iters=2, kernel="expr")
-    assert got == want
+    got = pq_train(df, dim=8, m=2, k=2, iters=2)
+    assert got == _seq_train(rows, dim=8, m=2, k=2, iters=2)
 
 
 def test_arrow_encode_kernel_identical_codes(spark, emb, model):
     a = {r.vec_id: list(r.pq_codes) for r in pq_encode(emb, model).collect()}
-    b = {
-        r.vec_id: list(r.pq_codes)
-        for r in pq_encode(emb, model, kernel="arrow").collect()
-    }
-    assert a == b
-    with pytest.raises(ValueError, match="kernel"):
-        pq_encode(emb, model, kernel="gpu")
+    assert a == _seq_encode(_rows(emb), model)
 
 
 def test_ivfpq_build_kernel_identical(spark, emb):
+    # the whole build — coarse train, residuals, residual train,
+    # encode — against the sequential references
     from zeek_duckdb_spark.operators.pq import ivfpq_build
 
-    _, _, c1 = ivfpq_build(emb, dim=DIM, n_cells=4, m=M, k=8, iters=1)
-    _, _, c2 = ivfpq_build(
-        emb, dim=DIM, n_cells=4, m=M, k=8, iters=1, kernel="arrow"
-    )
+    cells, cbs, c1 = ivfpq_build(emb, dim=DIM, n_cells=4, m=M, k=8, iters=1)
+    rows = _rows(emb)
+    want_cells = _seq_train(rows, DIM, 1, 4, iters=1)[0]
+    assert cells == want_cells
+    cell_of = {i: c[0] for i, c in _seq_encode(rows, [want_cells]).items()}
+    res = [
+        (i, [float(x) - c for x, c in zip(v, want_cells[cell_of[i]])])
+        for i, v in rows
+    ]
+    want_cbs = _seq_train(res, DIM, M, 8, iters=1)
+    assert cbs == want_cbs
+    codes = _seq_encode(res, want_cbs)
     a = {(r.vec_id): (r.cell, list(r.pq_codes)) for r in c1.collect()}
-    b = {(r.vec_id): (r.cell, list(r.pq_codes)) for r in c2.collect()}
-    assert a == b
+    assert a == {i: (cell_of[i], codes[i]) for i, _ in rows}
 
 
 def test_train_and_encode_drop_wrong_length_vectors(spark):

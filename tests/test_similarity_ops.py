@@ -48,17 +48,18 @@ def test_ivf_recall_vs_exact(spark, emb):
 
 
 def test_ivf_assign_arrow_kernel_identical_cells(spark, emb):
-    # numpy assignment follows the expr fold's sequential accumulation
-    # — cells must be IDENTICAL, including the zero-norm-centroid
-    # (NULL-cosine) and higher-cell tie-break edges
+    # numpy assignment follows the SQL argmax fold's sequential
+    # accumulation (kmeans._argmax_cell) — cells must be IDENTICAL,
+    # including the zero-norm-centroid (NULL-cosine) and higher-cell
+    # tie-break edges
+    from zeek_duckdb_spark.operators.kmeans import _argmax_cell
+
     cents = emb.orderBy(F.asc("vec_id")).limit(8)
-    a = {r.vec_id: r.cell
-         for r in sim.ivf_assign(emb, cents, kernel="arrow").collect()}
+    a = {r.vec_id: r.cell for r in sim.ivf_assign(emb, cents).collect()}
+    lit = [(r.vec_id, [float(x) for x in r.embedding]) for r in cents.collect()]
     x = {r.vec_id: r.cell
-         for r in sim.ivf_assign(emb, cents, kernel="expr").collect()}
+         for r in emb.withColumn("cell", _argmax_cell("embedding", lit)).collect()}
     assert a == x
-    with pytest.raises(ValueError, match="kernel"):
-        sim.ivf_assign(emb, cents, kernel="gpu")
 
 
 def test_ivf_partial_probe_is_subset_ranked(spark, emb):

@@ -385,14 +385,30 @@ def _verify_shape_auto(
     (interleaved A/B, identical output rows): uncompressed text 1.5 MB
     (sf0.1) -> semi is 1.58x WORSE; 20 MB (sf1) -> semi 0.86x;
     113 MB (sf5) -> semi 0.75x.  64 MB threshold / 4 = 16 MB sits in
-    the measured gap.  No estimate (non-file source) -> 'broadcast'
-    (such frames are driver-built and small)."""
-    from zeek_duckdb_spark.plans.scanstats import estimated_uncompressed_bytes
+    the measured gap.
+
+    Unknown sizes fail safe.  A file-backed corpus with no parquet
+    footer estimate (ORC, CSV, JSON, unreadable footers) is sized by
+    its on-disk bytes, and by nothing at all -> 'semi', the shape that
+    cannot OOM.  Only a non-file frame (driver-built, small) keeps
+    'broadcast' without an estimate."""
+    from zeek_duckdb_spark.plans.scanstats import (
+        estimated_scan_bytes,
+        estimated_uncompressed_bytes,
+    )
     from zeek_duckdb_spark.session import conf_bytes
 
     est = estimated_uncompressed_bytes(verify_with, [id_col, text_col])
     if est is None:
-        return "broadcast"
+        try:
+            files = verify_with.inputFiles()
+        except Exception:
+            return "semi"
+        if not files:
+            return "broadcast"
+        est = estimated_scan_bytes(verify_with)
+        if est is None:
+            return "semi"
     try:
         thr = conf_bytes(verify_with.sparkSession,
                          "spark.sql.autoBroadcastJoinThreshold")

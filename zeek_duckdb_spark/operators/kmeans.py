@@ -15,9 +15,10 @@ assignments, and final top-k:
   correctly-rounded division.  Identical in any engine, any partition
   order, any cluster size;
 - init = the ``k`` lowest-id vectors (deterministic, no RNG);
-- assignment = argmax cosine over a centroid array LITERAL — a pure
-  column expression, zero shuffle (same plan family as
-  ``similarity.ivf_assign``); cosine ties break to the HIGHER cell
+- assignment = argmax cosine, zero shuffle: a numpy batch map in the
+  Lloyd passes and ``kmeans_ivf_topk``, a centroid array LITERAL
+  (pure column expression) in the landed index; both fold in the same
+  sequential order, and cosine ties break to the HIGHER cell
   (max-struct semantics), mirrored by the oracle's
   ``ORDER BY sim DESC, cell DESC``;
 - the only shuffle per iteration carries K×(dim+1) partial-aggregate
@@ -73,15 +74,14 @@ def _argmax_cell(vec_name: str, cents: list[tuple[int, list[float]]]) -> Column:
     restates ``similarity.cosine`` exactly — same sequential zip_with/
     aggregate folds, same nullif zero-norm guard — so values are
     bit-identical to the Column form (the sim_kmeans_ivf oracle pins
-    this).  Used for one-shot assignment (ivf_write); the Lloyd loop
-    uses :func:`_assign_cells` instead, whose broadcast-attribute form
-    avoids a codegen recompile per iteration."""
-    return F.expr(_argmax_cell_sql(vec_name, _cent_literal_sql(cents)))
-
-
-def _argmax_cell_sql(vec_name: str, cents_expr: str) -> str:
-    """argmax-cosine SQL over ``cents_expr`` (an array<struct<cell,
-    c_vec>> expression — a column name or an inline literal)."""
+    this).  Used for one-shot assignment where the plan must stay
+    Python-free (ivf_write, ivf_append, pipeline.balance_clusters), and
+    as the reference the numpy assignment kernels are tested against."""
+    cents_sql = "array(" + ", ".join(
+        "named_struct('cell', CAST(%d AS BIGINT), 'c_vec', array(%s))"
+        % (int(c), ", ".join(f"{float(x)!r}D" for x in v))
+        for c, v in cents
+    ) + ")"
     cos = (
         f"(aggregate(zip_with({vec_name}, c.c_vec, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
         f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v) / "
@@ -90,72 +90,22 @@ def _argmax_cell_sql(vec_name: str, cents_expr: str) -> str:
         f"sqrt(aggregate(zip_with(c.c_vec, c.c_vec, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
         f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)), CAST(0.0 AS DOUBLE)))"
     )
-    return (
-        f"array_max(transform({cents_expr}, "
+    return F.expr(
+        f"array_max(transform({cents_sql}, "
         f"c -> named_struct('sim', {cos}, 'cell', c.cell)))['cell']"
     )
 
 
-def _cent_literal_sql(cents: list[tuple[int, list[float]]]) -> str:
-    return "array(" + ", ".join(
-        "named_struct('cell', CAST(%d AS BIGINT), 'c_vec', array(%s))"
-        % (int(c), ", ".join(f"{float(x)!r}D" for x in v))
-        for c, v in cents
-    ) + ")"
-
-
-_CENTS_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("cell", T.LongType()),
-            T.StructField("c_vec", T.ArrayType(T.DoubleType())),
-        ]
-    )
-)
-
-
 def _assign_cells(base: DataFrame, cents: list[tuple[int, list[float]]],
-                  vec_name: str = "qvec",
-                  kernel: str = "expr") -> DataFrame:
-    """``base`` + a ``cell`` column (argmax cosine vs ``cents``).
-
-    ``kernel='expr'``: the centroids ride as a BROADCAST 1-row
-    DataFrame, not an inline literal: literals are embedded as
-    constants in the generated Java, so per-iteration centroid changes
-    forced a full whole-stage-codegen recompile of the (large) stage
-    every Lloyd step (~3-5 s per job at K=8, dim=64 — dominating
-    small-corpus fits).  As a joined attribute the generated code is
-    IDENTICAL across iterations and the codegen cache hits; the 1-row
-    broadcast join is map-side, so the zero-corpus-shuffle shape is
-    unchanged.  Values are bit-identical either way (same doubles,
-    same fold).
-
-    ``kernel='arrow'``: numpy batch assignment via mapInPandas — the
-    interpreted cosine-fold HOFs (no codegen for higher-order
-    functions) move to vectorized per-dim adds in the expr fold's
-    sequential order, so cells are IDENTICAL (tests/test_kmeans.py
-    pins it); still a zero-shuffle map."""
-    if kernel == "arrow":
-        return _assign_cells_arrow(base, cents, vec_name)
-    spark = base.sparkSession
-    cents_df = spark.createDataFrame(
-        [([{"cell": int(c), "c_vec": [float(x) for x in v]} for c, v in cents],)],
-        T.StructType([T.StructField("__cents", _CENTS_TYPE)]),
-    )
-    return (
-        base.crossJoin(F.broadcast(cents_df))
-        .withColumn("cell", F.expr(_argmax_cell_sql(vec_name, "__cents")))
-        .drop("__cents")
-    )
-
-
-def _assign_cells_arrow(base: DataFrame, cents: list[tuple[int, list[float]]],
-                        vec_name: str) -> DataFrame:
-    """Arrow kernel for :func:`_assign_cells`: every base column
-    passes through, plus the assigned ``cell`` (bigint, like the expr
-    form's CAST(cell AS BIGINT) literals)."""
+                  vec_name: str = "qvec") -> DataFrame:
+    """``base`` + a ``cell`` column (argmax cosine vs ``cents``), by
+    numpy batch assignment via mapInPandas: the cosine folds run as
+    vectorized per-dim adds in :func:`_argmax_cell`'s sequential order,
+    so cells are IDENTICAL to it (tests/test_kmeans.py pins it); a
+    zero-shuffle map.  Every base column passes through, plus the
+    assigned ``cell`` (bigint, like the literal's CAST(cell AS
+    BIGINT))."""
     import numpy as np
-    import pandas as pd
 
     cell_ids, C, cn = _np_cent_geometry(cents)
     out_schema = T.StructType(
@@ -261,7 +211,6 @@ def kmeans_fit_quantized(
     min_parallelism: int | None = None,
     init_centroids: list[tuple[int, list[float]]] | None = None,
     _base: DataFrame | None = None,
-    kernel: str = "arrow",
 ) -> list[tuple[int, list[float]]]:
     """Fit ``k`` centroids with ``iters`` Lloyd iterations over the
     int8-quantized corpus.  Returns ``[(cell, centroid)]`` with
@@ -269,13 +218,12 @@ def kmeans_fit_quantized(
     doubles), the legitimate "model" side of the computation; the
     corpus itself never leaves the executors.
 
-    ``kernel='arrow'`` (default) runs each Lloyd pass as ONE
-    mapInPandas job of per-partition (cell, n, int64-sum) partials
-    merged driver-side — no crossJoin, no groupBy shuffle, and no
-    interpreted cosine-fold HOFs on the corpus.  Assignment arithmetic
-    follows the expr fold's sequential order exactly, so the fitted
-    centroids are IDENTICAL to ``kernel='expr'`` (the broadcast-
-    attribute argmax + groupBy form a SQL oracle restates; pinned by
+    Each Lloyd pass is ONE mapInPandas job of per-partition (cell, n,
+    int64-sum) partials merged driver-side — no crossJoin, no groupBy
+    shuffle, and no interpreted cosine-fold HOFs on the corpus.
+    Assignment arithmetic follows :func:`_argmax_cell`'s sequential
+    fold exactly, so the fitted centroids are IDENTICAL to a plain
+    sequential Lloyd a SQL oracle restates (pinned by
     tests/test_kmeans.py).
 
     ``init_centroids`` WARM-STARTS Lloyd from a previously fitted
@@ -296,8 +244,6 @@ def kmeans_fit_quantized(
     """
     if k < 1 or iters < 0:
         raise ValueError("kmeans_fit_quantized: need k >= 1, iters >= 0")
-    if kernel not in ("expr", "arrow"):
-        raise ValueError("kmeans_fit_quantized: kernel must be 'expr' or 'arrow'")
     base = _base if _base is not None else _quantized_base(
         df, id_col, vec_col, min_parallelism
     )
@@ -340,26 +286,10 @@ def kmeans_fit_quantized(
         cents = [
             (i, [float(v) for v in r["qvec"]]) for i, r in enumerate(init_rows)
         ]
-    dim = len(cents[0][1])
-    # one generated-SQL agg list (see the F.expr note in
-    # minhash_signatures: N Column-API trees cost py4j round-trips)
-    sum_exprs = [F.expr(f"sum(qvec[{i}]) AS s{i}") for i in range(dim)]
     try:
         for _ in range(iters):
-            if kernel == "arrow":
-                merged = _kmeans_lloyd_partials_arrow(base, cents)
-                means = {
-                    c: [s / n for s in ss] for c, (n, ss) in merged.items()
-                }
-            else:
-                assigned = _assign_cells(base, cents)
-                stats = assigned.groupBy("cell").agg(
-                    F.count("*").alias("n"), *sum_exprs
-                ).collect()
-                means = {
-                    int(r["cell"]): [r[f"s{i}"] / r["n"] for i in range(dim)]
-                    for r in stats
-                }
+            merged = _kmeans_lloyd_partials_arrow(base, cents)
+            means = {c: [s / n for s in ss] for c, (n, ss) in merged.items()}
             cents = [(c, means.get(c, v)) for c, v in cents]
     finally:
         if owns_cache:
@@ -378,7 +308,6 @@ def kmeans_ivf_topk(
     vec_col: str = "embedding",
     query_id_col: str = "vec_id",
     min_parallelism: int | None = None,
-    kernel: str = "arrow",
 ) -> DataFrame:
     """IVF ANN with TRAINED centroids: fit Lloyd centroids, assign the
     corpus (zero-shuffle argmax), probe the query's ``nprobe`` best
@@ -405,9 +334,9 @@ def kmeans_ivf_topk(
     """
     base = _quantized_base(df, id_col, vec_col, min_parallelism)
     cents = kmeans_fit_quantized(
-        df, n_centroids, iters, id_col, vec_col, _base=base, kernel=kernel
+        df, n_centroids, iters, id_col, vec_col, _base=base
     )
-    assigned = _assign_cells(base, cents, kernel=kernel)
+    assigned = _assign_cells(base, cents)
 
     q_rows = (
         quantize_embeddings(query, query_id_col, vec_col)

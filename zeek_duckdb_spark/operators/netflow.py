@@ -284,18 +284,19 @@ def beacon_scores_stream(
 
 def _entropy_batch_np(vals) -> "object":
     """Vectorized Shannon entropy (bits/char) for a batch of strings —
-    the Arrow kernel behind ``char_entropy(kernel='arrow')``.
+    the Arrow kernel behind :func:`char_entropy`.
 
     One pass over the WHOLE batch, no per-row Python: all codepoints
     concatenate into one uint32 array, a single lexsort groups them by
     (row, codepoint), run-length boundaries give per-(row, char) counts,
     and ``np.add.at`` accumulates each row's p·log2(1/p) terms
-    SEQUENTIALLY in sorted-char order — the exact accumulation order of
-    the interpreted expr fold (which folds over ``array_sort(split(s,
-    ''))``), so the two kernels agree to the last bit on BMP text.
-    Non-BMP codepoints are counted once here but split into surrogate
-    pairs by the JVM fold — DNS names and the operators using this are
-    ASCII-domain, documented divergence.  None/'' -> 0.0."""
+    SEQUENTIALLY in sorted-char order — the accumulation order of a
+    run-length fold over ``array_sort(split(s, ''))``, the form a SQL
+    restatement uses (tests/test_netflow.py pins agreement with a
+    sequential reference).  Non-BMP codepoints are counted once here
+    but split into surrogate pairs by a JVM ``split`` — DNS names and
+    the operators using this are ASCII-domain, documented divergence.
+    None/'' -> 0.0."""
     import numpy as np
 
     n_rows = len(vals)
@@ -326,65 +327,22 @@ def _entropy_batch_np(vals) -> "object":
     return ent
 
 
-def _entropy_arrow_col(col: "F.Column") -> "F.Column":
-    """``char_entropy`` as an Arrow-batched pandas UDF column."""
+def char_entropy(col_name: str) -> "F.Column":
+    """Shannon entropy (bits/char) of a string COLUMN (by name).
+    Empty/NULL -> 0.0.
+
+    An Arrow-batched pandas UDF: one numpy codepoint-histogram pass
+    per batch (:func:`_entropy_batch_np` — the pq_encode Arrow-kernel
+    pattern), measured 2-12x the interpreted SQL fold at 100k+ rows
+    (SCALING.md).  Accumulates in sorted-char order, like the DuckDB
+    differential's unnest+group restatement."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def _ent(s: pd.Series) -> pd.Series:
         return pd.Series(_entropy_batch_np(s.tolist()), index=s.index)
 
-    return _ent(col)
-
-
-def _entropy_fold_sql(cs_col: str, n_col: str) -> str:
-    """Entropy fold over a MATERIALIZED sorted-char-array column and
-    its materialized size — every reference inside the interpreted
-    lambda is a cheap column read (the no-CSE lesson): one run-length
-    pass accumulating p·log2(1/p) per run."""
-    return (
-        "coalesce(aggregate({cs}, "
-        "named_struct('p', CAST(NULL AS STRING), 'r', 0L, "
-        "'acc', CAST(0.0 AS DOUBLE)), "
-        "(a, ch) -> if(a.p IS NOT NULL AND ch = a.p, "
-        "named_struct('p', ch, 'r', a.r + 1L, 'acc', a.acc), "
-        "named_struct('p', ch, 'r', 1L, 'acc', a.acc + if(a.r > 0, "
-        "(CAST(a.r AS DOUBLE) / {n}) * (log2({n}) - log2(a.r)), "
-        "CAST(0.0 AS DOUBLE)))), "
-        "a -> a.acc + if(a.r > 0, "
-        "(CAST(a.r AS DOUBLE) / {n}) * (log2({n}) - log2(a.r)), "
-        "CAST(0.0 AS DOUBLE))), CAST(0.0 AS DOUBLE))"
-    ).replace("{cs}", cs_col).replace("{n}", n_col)
-
-
-def char_entropy(col_name: str, kernel: str = "arrow") -> "F.Column":
-    """Shannon entropy (bits/char) of a string COLUMN (by name).
-    Empty/NULL -> 0.0.
-
-    ``kernel='arrow'`` (default) is the scale path: one numpy
-    codepoint-histogram pass per Arrow batch (:func:`_entropy_batch_np`
-    — the pq_encode Arrow-kernel pattern), measured ~20x the expr fold
-    at 100k+ rows (SCALING.md).
-
-    ``kernel='expr'`` is the engine-portable pure-SQL form: sort the
-    characters, then ONE run-length fold accumulates p·log2(1/p) per
-    run — the repetition_features sorted-neighbour trick.  In an expr
-    hot path materialize ``array_sort(split(col, ''))`` and its
-    ``size`` into their own columns and use the internal fold
-    (dns_tunneling_scores does — measured ~4x: every lambda-internal
-    reference re-evaluates under interpreted HOFs).  ANSI-restatable
-    (the DuckDB differential restates it with unnest+group); both
-    kernels accumulate in sorted-char order and agree on BMP text."""
-    if kernel == "arrow":
-        return _entropy_arrow_col(F.col(col_name))
-    if kernel != "expr":
-        raise ValueError("char_entropy: kernel must be 'expr' or 'arrow'")
-    return F.expr(
-        _entropy_fold_sql(
-            f"array_sort(split({col_name}, ''))",
-            f"size(split({col_name}, ''))",
-        )
-    )
+    return _ent(F.col(col_name))
 
 
 def _dns_prepare(df: DataFrame, src_col: str, qname_col: str, psl) -> DataFrame:
@@ -422,7 +380,6 @@ def dns_tunneling_scores(
     src_col: str = "src",
     qname_col: str = "qname",
     min_queries: int = 5,
-    kernel: str = "arrow",
     psl: "object" = None,
 ) -> DataFrame:
     """DNS-tunneling heuristic per (source, registered domain):
@@ -439,11 +396,8 @@ def dns_tunneling_scores(
     entropy) + one hash aggregate with exact count_distinct over
     pre-reduced rows — the port_scan_scores shuffle budget.
 
-    ``kernel='arrow'`` (default) computes the subdomain entropy with
-    the numpy batch kernel (still a zero-shuffle map, ~20x the
-    interpreted fold — SCALING.md); ``kernel='expr'`` keeps the whole
-    projection in pure JVM SQL expressions (oracle-restatable — the
-    driver correctness row uses it).
+    The subdomain entropy is the numpy batch kernel of
+    :func:`char_entropy` (still a zero-shuffle map).
 
     ``psl=`` (a suffix-rule iterable, a local PSL file path, or True
     for the vendored snapshot — see textops.registered_domain_psl)
@@ -452,39 +406,14 @@ def dns_tunneling_scores(
     ``b.other.co.uk`` stop pooling under one bogus 'co.uk' pair."""
     if min_queries < 1:
         raise ValueError("dns_tunneling_scores: min_queries must be >= 1")
-    if kernel not in ("expr", "arrow"):
-        raise ValueError("dns_tunneling_scores: kernel must be 'expr' or 'arrow'")
     subbed = _dns_prepare(df, src_col, qname_col, psl)
-    if kernel == "arrow":
-        base = subbed.select(
-            "src",
-            "domain",
-            F.length("__sub").alias("__len"),
-            _entropy_arrow_col(F.col("__sub")).alias("__ent"),
-            F.col("__sub"),
-        )
-    else:
-        base = (
-            subbed
-            # materialize the sorted char array + size so every
-            # reference inside the interpreted entropy fold is a
-            # column read
-            .select(
-                "src", "domain", "__sub",
-                F.expr("array_sort(split(__sub, ''))").alias("__cs"),
-            )
-            .select(
-                "src", "domain", "__sub", "__cs",
-                F.size("__cs").alias("__n"),
-            )
-            .select(
-                "src",
-                "domain",
-                F.length("__sub").alias("__len"),
-                F.expr(_entropy_fold_sql("__cs", "__n")).alias("__ent"),
-                F.col("__sub"),
-            )
-        )
+    base = subbed.select(
+        "src",
+        "domain",
+        F.length("__sub").alias("__len"),
+        char_entropy("__sub").alias("__ent"),
+        F.col("__sub"),
+    )
     out = (
         base.groupBy("src", "domain")
         .agg(

@@ -946,8 +946,8 @@ def balance_clusters(
     with the deterministic md5-bucket sampler, so the subset is
     re-derivable on any cluster.
 
-    Scale shape: one zero-shuffle assignment map (broadcast centroid
-    attribute — the Lloyd-loop plan), ONE K-row count aggregate to the
+    Scale shape: one zero-shuffle assignment map (the centroid-literal
+    argmax of ``kmeans.ivf_write``), ONE K-row count aggregate to the
     driver (model-sized), then a pure map-side stratified filter.  No
     joins, no windows.  Degenerate all-zero vectors get cell -1 and
     are always kept (they are nobody's over-represented topic).
@@ -962,14 +962,16 @@ def balance_clusters(
         raise ValueError("balance_clusters: max_cell_share must be in (0, 1]")
     if target_rows_per_cell is not None and target_rows_per_cell < 1:
         raise ValueError("balance_clusters: target_rows_per_cell must be >= 1")
-    from zeek_duckdb_spark.operators.kmeans import _assign_cells, _nonzero
+    from zeek_duckdb_spark.operators.kmeans import _argmax_cell, _nonzero
     from zeek_duckdb_spark.operators.similarity import quantize_embeddings
 
     extra = tuple(c for c in df.columns if c not in (id_col, vec_col))
     dq = quantize_embeddings(df, id_col, vec_col, keep=(vec_col,) + extra)
-    assigned = _assign_cells(dq, cents).withColumn(
+    assigned = dq.withColumn(
         "cell",
-        F.when(_nonzero("qvec"), F.col("cell")).otherwise(F.lit(-1)),
+        F.when(_nonzero("qvec"), _argmax_cell("qvec", cents)).otherwise(
+            F.lit(-1)
+        ),
     ).drop("qvec", "scale")
     counts = {
         int(r["cell"]): int(r["n"])

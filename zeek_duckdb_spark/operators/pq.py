@@ -14,10 +14,9 @@ touching the original vectors.
 Spark shapes (the part that must survive 100 TB):
 
 - **Training** (:func:`pq_train`) is Lloyd per subspace, all ``m``
-  subspaces folded into ONE aggregate pass per iteration: the corpus
-  explodes to (subspace, subvector) rows — map-side partial
-  aggregation reduces the shuffle to ``m * k`` rows per partition, so
-  the explode multiplies CPU, not shuffle bytes.  Vectors are
+  subspaces folded into ONE mapInPandas pass per iteration: each
+  partition emits at most ``m * k`` (subspace, cell, count, sum)
+  partials and the driver merges them — no explode, no shuffle.  Vectors are
   quantized to a CORPUS-GLOBAL int8 grid first (one max-abs pass), so
   per-cell sums are exact int64 arithmetic — training is
   bit-deterministic across partitionings and cluster sizes, the same
@@ -26,10 +25,10 @@ Spark shapes (the part that must survive 100 TB):
   sample at real scale (``train_sample``): PQ codebooks converge from
   a tiny fraction of the corpus (standard practice).
 - **Encoding** (:func:`pq_encode`) is a zero-shuffle pure map: the
-  codebook rides the plan as one array literal and each code is an
-  ``array_min`` argmin over ``k`` L2 distances (ties break to the
-  lowest code deterministically).  This is the one pass that reads the
-  fat vectors; everything after reads codes.
+  codebook rides the task closure and each code is a numpy argmin over
+  ``k`` L2 distances (ties break to the lowest code
+  deterministically).  This is the one pass that reads the fat
+  vectors; everything after reads codes.
 - **Search** (:func:`pq_topk`) computes the ``m x k`` distance lookup
   table DRIVER-side from the raw query (a model-sized object), inlines
   it as a 2-D array literal, and scores each row with a fold over its
@@ -45,7 +44,7 @@ round-5 scope), sibling to similarity.ivf_topk and kmeans_ivf_topk.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -69,48 +68,6 @@ def _check_geometry(dim: int, m: int, k: int) -> int:
     return dim // m
 
 
-def _sub_slices(vec: Column, m: int, dsub: int) -> Column:
-    """array of m subvectors (each array<double>) from one vector."""
-    return F.array(
-        *[F.slice(vec, j * dsub + 1, dsub) for j in range(m)]
-    )
-
-
-_CB_TYPE = T.ArrayType(  # per-subspace: array<struct<cell, c_vec>>
-    T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("cell", T.IntegerType()),
-                T.StructField("c_vec", T.ArrayType(T.DoubleType())),
-            ]
-        )
-    )
-)
-
-
-def _codebook_rows(codebooks: list[list[list[float]]]):
-    return [
-        [
-            {"cell": int(c), "c_vec": [float(x) for x in cent]}
-            for c, cent in enumerate(cb)
-        ]
-        for cb in codebooks
-    ]
-
-
-# argmin-L2 over one subspace's centroid list: min (dist, cell) struct —
-# lexicographic array_min makes the tie-break (lowest cell) explicit and
-# engine-portable.  One generated SQL string per call site (the
-# minhash_signatures construction-cost lesson).
-_ARGMIN_SQL = (
-    "array_min(transform({cents}, c -> named_struct("
-    "'d', aggregate(zip_with({sub}, c.c_vec, (x, y) -> "
-    "(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
-    "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v), "
-    "'cell', c.cell)))['cell']"
-)
-
-
 def pq_train(
     df: DataFrame,
     dim: int,
@@ -121,7 +78,6 @@ def pq_train(
     vec_col: str = "embedding",
     train_sample: float | None = None,
     seed: int = 7,
-    kernel: str = "arrow",
 ) -> list[list[list[float]]]:
     """Fit ``m`` codebooks of ``k`` centroids each; returns
     ``codebooks[m][k][dim/m]`` in ORIGINAL vector units (driver-side
@@ -137,24 +93,20 @@ def pq_train(
     (md5(id:seed) bucket) before training — at 100 TB you fit the
     codebook on ~1e6 rows, not the corpus.
 
-    ``kernel='arrow'`` (default) runs each Lloyd pass as ONE
-    mapInPandas job emitting per-partition (sub, cell, n, int64-sum)
-    partials — no explode, no crossJoin, no groupBy shuffle; the
-    driver merges <= partitions * m * k partial rows (exact integer
-    adds) and takes the same sum/count means.  Cell assignment
-    accumulates the L2 fold SEQUENTIALLY over dsub (a Python loop of
-    vectorized (rows, k) adds, not numpy's pairwise ``sum``), so every
-    distance is bit-identical to the expr fold and ``np.argmin``'s
-    first-minimum matches the fold's lexicographic low-cell tie-break
-    — the two kernels return IDENTICAL codebooks
-    (tests/test_pq.py pins it).  ``kernel='expr'`` keeps the
-    engine-portable explode + broadcast-argmin + groupBy form that a
-    SQL oracle can restate."""
+    Each Lloyd pass is ONE mapInPandas job emitting per-partition
+    (sub, cell, n, int64-sum) partials — no explode, no crossJoin, no
+    groupBy shuffle; the driver merges <= partitions * m * k partial
+    rows (exact integer adds) and takes the sum/count means.  Cell
+    assignment accumulates the L2 fold SEQUENTIALLY over dsub (a
+    Python loop of vectorized (rows, k) adds, not numpy's pairwise
+    ``sum``), so every distance is bit-identical to a sequential
+    ``acc + (x - c)^2`` fold and ``np.argmin``'s first-minimum is its
+    low-cell tie-break — the codebooks are IDENTICAL to a plain
+    sequential Lloyd that a SQL oracle can restate (tests/test_pq.py
+    pins it)."""
     dsub = _check_geometry(dim, m, k)
     if iters < 0:
         raise ValueError("pq_train: iters must be >= 0")
-    if kernel not in ("expr", "arrow"):
-        raise ValueError("pq_train: kernel must be 'expr' or 'arrow'")
     from zeek_duckdb_spark.operators.hashutil import md5_long
 
     src = df.select(F.col(id_col), F.col(vec_col))
@@ -195,70 +147,19 @@ def pq_train(
             [[float(r["__q"][j * dsub + t]) for t in range(dsub)] for r in init]
             for j in range(m)
         ]
-        if kernel == "arrow":
-            for _ in range(iters):
-                merged = _lloyd_partials_arrow(base, cbs, m, k, dsub)
-                cbs = [
-                    [
-                        (
-                            [s / merged[(j, c)][0] for s in merged[(j, c)][1]]
-                            if (j, c) in merged
-                            else cent
-                        )
-                        for c, cent in enumerate(cb)
-                    ]
-                    for j, cb in enumerate(cbs)
-                ]
-        else:
-            # one (sub, subq) explode; the groupBy(sub, cell) shuffle
-            # carries m*k rows per partition after map-side combine,
-            # not m*N
-            sub_arr = F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("sub"),
-                        F.slice("__q", j * dsub + 1, dsub).alias("sq"),
+        for _ in range(iters):
+            merged = _lloyd_partials_arrow(base, cbs, m, k, dsub)
+            cbs = [
+                [
+                    (
+                        [s / merged[(j, c)][0] for s in merged[(j, c)][1]]
+                        if (j, c) in merged
+                        else cent
                     )
-                    for j in range(m)
+                    for c, cent in enumerate(cb)
                 ]
-            )
-            exploded = base.select(F.explode(sub_arr).alias("e")).select(
-                "e.sub", "e.sq"
-            )
-            sum_exprs = [F.expr(f"sum(sq[{t}]) AS s{t}") for t in range(dsub)]
-            for _ in range(iters):
-                # broadcast-attribute codebooks (codegen cache hits across
-                # iterations — the kmeans._assign_cells lesson)
-                spark = df.sparkSession
-                cb_df = spark.createDataFrame(
-                    [( _codebook_rows(cbs), )],
-                    T.StructType([T.StructField("__cbs", _CB_TYPE)]),
-                )
-                assigned = (
-                    exploded.crossJoin(F.broadcast(cb_df))
-                    .withColumn(
-                        "cell",
-                        F.expr(
-                            _ARGMIN_SQL.format(
-                                cents="element_at(__cbs, sub + 1)", sub="sq"
-                            )
-                        ),
-                    )
-                    .drop("__cbs")
-                )
-                stats = assigned.groupBy("sub", "cell").agg(
-                    F.count("*").alias("n"), *sum_exprs
-                ).collect()
-                means = {
-                    (int(r["sub"]), int(r["cell"])): [
-                        r[f"s{t}"] / r["n"] for t in range(dsub)
-                    ]
-                    for r in stats
-                }
-                cbs = [
-                    [means.get((j, c), cent) for c, cent in enumerate(cb)]
-                    for j, cb in enumerate(cbs)
-                ]
+                for j, cb in enumerate(cbs)
+            ]
     finally:
         base.unpersist()
     # back to original units
@@ -276,7 +177,7 @@ def _lloyd_partials_arrow(
     partials: {(sub, cell): (n, int64 per-dim sums)} merged driver-side
     with exact integer adds.  Distance accumulation is a sequential
     Python loop over dsub of vectorized (rows, k) adds so every fold
-    is bit-identical to _ARGMIN_SQL's sequential ``acc + v``; argmin's
+    is bit-identical to a sequential ``acc + (x - c)^2`` fold; argmin's
     first-minimum is the fold's lowest-cell tie-break."""
     import numpy as np
     import pandas as pd
@@ -344,80 +245,24 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep: tuple[str, ...] = (),
-    kernel: str = "arrow",
 ) -> DataFrame:
     """(id, pq_codes array<int> [, *keep]): one argmin-L2 code per
     subspace against the fitted codebooks.  Zero-shuffle pure map —
     the ONE pass that reads the fat vectors; downstream search reads
     codes only.  Ties break to the lowest code (deterministic).
 
-    ``kernel='arrow'`` (default) computes each argmin with one numpy
-    ``(batch, dsub) @ (dsub, k)`` matmul per subspace per Arrow batch
-    — measured **92x** over the interpreted fold at 128k rows
-    (42.4 s -> 0.46 s, SCALING.md), since the m*k distance folds are
-    interpreted higher-order functions with no codegen.
-    ``kernel='expr'`` is the engine-portable sequential fold for
-    cross-engine restatement (a DuckDB oracle could reproduce it
-    bit-for-bit); both kernels produce IDENTICAL codes on every tested
-    corpus (np.argmin breaks ties low like the fold's lexicographic
-    min; a code could differ only where two centroids sit within 1 ulp
-    of the same distance).
+    Each argmin is one numpy ``(batch, dsub) @ (dsub, k)`` matmul per
+    subspace per Arrow batch (mapInPandas) — measured **92x** over the
+    interpreted SQL fold at 128k rows (42.4 s -> 0.46 s, SCALING.md).
+    Codes equal a sequential ``acc + (x - c)^2`` fold's on every tested
+    corpus (np.argmin breaks ties low like the fold; a code could
+    differ only where two centroids sit within rounding error of the
+    same distance — tests/test_pq.py pins the equality).
 
     Rows whose vector length differs from the codebook dimension are
     DROPPED (un-encodable; same degenerate-row policy as
     similarity.quantize_embeddings' zero-vector filter) — pre-validate
     upstream if a length mismatch should be an error in your corpus."""
-    m = len(codebooks)
-    k = len(codebooks[0])
-    dsub = len(codebooks[0][0])
-    if kernel not in ("expr", "arrow"):
-        raise ValueError("pq_encode: kernel must be 'expr' or 'arrow'")
-    if kernel == "arrow":
-        return _pq_encode_arrow(df, codebooks, id_col, vec_col, keep)
-    cb_lit = "array(" + ", ".join(
-        "array(" + ", ".join(
-            "named_struct('cell', %d, 'c_vec', array(%s))"
-            % (c, ", ".join(f"{float(v)!r}D" for v in cent))
-            for c, cent in enumerate(cb)
-        ) + ")"
-        for cb in codebooks
-    ) + ")"
-    x = F.transform(F.col(vec_col), lambda v: v.cast("double"))
-    sized = df.select(
-        F.col(id_col), *[F.col(c) for c in keep], x.alias("__x")
-    ).filter(F.size("__x") == m * dsub)
-    # materialized subvector array: the argmin lambda references its
-    # subspace slice k times; slicing inside the transform would re-slice
-    # per centroid (interpreted HOFs have no CSE)
-    subbed = sized.select(
-        F.col(id_col), *[F.col(c) for c in keep],
-        _sub_slices(F.col("__x"), m, dsub).alias("__subs"),
-    )
-    codes = F.expr(
-        "transform(sequence(0, %d), j -> %s)"
-        % (
-            m - 1,
-            _ARGMIN_SQL.format(
-                cents=f"element_at({cb_lit}, j + 1)",
-                sub="element_at(__subs, j + 1)",
-            ),
-        )
-    )
-    return subbed.select(
-        F.col(id_col), codes.alias("pq_codes"), *[F.col(c) for c in keep]
-    )
-
-
-def _pq_encode_arrow(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str,
-    vec_col: str,
-    keep: tuple[str, ...],
-) -> DataFrame:
-    """Arrow kernel for pq_encode: per batch, one ||x-c||^2 argmin via
-    x@c matmul per subspace (BLAS).  Same output schema/values as the
-    expr fold; mapInPandas keeps it a zero-shuffle map."""
     import numpy as np
     import pandas as pd
 
@@ -562,7 +407,6 @@ def ivfpq_build(
     vec_col: str = "embedding",
     train_sample: float | None = None,
     seed: int = 7,
-    kernel: str = "arrow",
 ):
     """IVF-PQ index build (the standard two-level ANN layout: coarse
     inverted cells + product-quantized RESIDUALS): returns
@@ -581,28 +425,26 @@ def ivfpq_build(
     coarse = pq_train(
         df, dim, m=1, k=n_cells, iters=iters, id_col=id_col,
         vec_col=vec_col, train_sample=train_sample, seed=seed,
-        kernel=kernel,
     )
     cells = coarse[0]  # n_cells x dim
-    res = _ivfpq_residuals(df, cells, id_col, vec_col, kernel)
+    res = _ivfpq_residuals(df, cells, id_col, vec_col)
     codebooks = pq_train(
         res, dim, m=m, k=k, iters=iters, id_col=id_col, vec_col="__res",
-        train_sample=train_sample, seed=seed + 1, kernel=kernel,
+        train_sample=train_sample, seed=seed + 1,
     )
     codes = pq_encode(res, codebooks, id_col=id_col, vec_col="__res",
-                      keep=("cell",), kernel=kernel)
+                      keep=("cell",))
     return cells, codebooks, codes.select(id_col, "cell", "pq_codes")
 
 
 def _ivfpq_residuals(
-    df: DataFrame, cells: list[list[float]], id_col: str, vec_col: str,
-    kernel: str,
+    df: DataFrame, cells: list[list[float]], id_col: str, vec_col: str
 ) -> DataFrame:
     """(id, cell, __res): coarse-cell assignment + residual vector —
     the shared zero-shuffle map under ivfpq_build/encode/append."""
     coarse = [cells]  # the m=1 coarse quantizer codebook
     assigned = pq_encode(df, coarse, id_col=id_col, vec_col=vec_col,
-                         keep=(vec_col,), kernel=kernel)
+                         keep=(vec_col,))
     cents_lit = _cent_lit(cells)
     return assigned.select(
         F.col(id_col),
@@ -621,7 +463,6 @@ def ivfpq_encode(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """(id, cell, pq_codes) for a batch at FIXED models — the
     assignment half of :func:`ivfpq_build` without the two training
@@ -629,9 +470,9 @@ def ivfpq_encode(
     per-row function of (vector, models), so encoding a new batch
     equals what a full rebuild at the same models would assign
     (pinned by tests/test_pq.py)."""
-    res = _ivfpq_residuals(df, cells, id_col, vec_col, kernel)
+    res = _ivfpq_residuals(df, cells, id_col, vec_col)
     codes = pq_encode(res, codebooks, id_col=id_col, vec_col="__res",
-                      keep=("cell",), kernel=kernel)
+                      keep=("cell",))
     return codes.select(id_col, "cell", "pq_codes")
 
 
@@ -642,7 +483,6 @@ def ivfpq_append(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "arrow",
 ) -> None:
     """Append a NEW batch into a persisted IVF-PQ layout
     (``codes_df.write.partitionBy("cell")`` from :func:`ivfpq_build`)
@@ -655,7 +495,7 @@ def ivfpq_append(
     layout, so ``kmeans.ivf_compact`` is its small-file maintenance
     job too (each append adds one file per touched cell)."""
     (
-        ivfpq_encode(df_new, cells, codebooks, id_col, vec_col, kernel)
+        ivfpq_encode(df_new, cells, codebooks, id_col, vec_col)
         .repartition("cell")
         .write.mode("append")
         .partitionBy("cell")

@@ -485,97 +485,60 @@ def ivf_assign(
     centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "arrow",
 ) -> DataFrame:
     """IVF cell assignment: nearest centroid by cosine.  Returns
     (id, vec, cell).
 
     Zero-shuffle: the K centroid vectors are collected once (K rows —
-    a dimension, not data) and inlined as ONE array-of-structs literal;
-    the per-row argmax is then ``array_max`` over
-    ``transform(centroids, c -> struct(cosine(vec, c.vec), c.cell))``
-    — a pure column expression, same plan family as
-    ``hyperplane_signature``.  The earlier crossJoin + groupBy-argmax
-    formulation shuffled the full corpus K× wide (every row carried K
-    copies of its embedding through an exchange) for a computation that
-    needs none; at 100 TB of embeddings that exchange was the
-    bottleneck.  The literal costs K·dim doubles in the plan (16×128
-    here; fine up to K·dim ~ 1e6, i.e. IVF with thousands of cells at
-    768-d — beyond that, chunk the centroid array or pre-partition).
+    a dimension, not data) and closed over by a numpy batch kernel
+    (mapInPandas); the K cosine folds per row become K vectorized
+    per-dim adds in the SAME sequential accumulation order as the
+    SQL ``array_max(transform(centroids, c -> struct(cosine(vec,
+    c.vec), c.cell)))`` form (``kmeans._argmax_cell``), so cells are
+    IDENTICAL to it (tests/test_similarity_ops.py pins it).
 
-    Struct comparison is lexicographic, so ties on cosine break to the
-    HIGHER cell id — identical to the previous max(struct(sim, cell))
-    semantics and to the oracle's ``ORDER BY c_sim DESC, cell DESC``.
+    Ties on cosine break to the HIGHER cell id — max(struct(sim,
+    cell)) semantics, the oracle's ``ORDER BY c_sim DESC, cell DESC``;
+    a zero-norm centroid's undefined cosine loses to every real one.
 
     Centroid choice here is deterministic sampling (lowest ids) rather
     than trained k-means — the IVF *structure* (cell assignment +
     probe-limited search) is what matters for the scale path; swap in
-    k-means centroids without touching the plan.
+    k-means centroids without touching the plan."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
 
-    ``kernel='arrow'`` (default) assigns with the numpy batch kernel
-    (mapInPandas, still a zero-shuffle map): the K interpreted cosine
-    folds per row become K vectorized per-dim adds in the SAME
-    sequential accumulation order, so cells are IDENTICAL to the expr
-    form (tests/test_similarity_ops.py pins it).  ``kernel='expr'``
-    keeps the pure-SQL array_max form an oracle restates."""
-    if kernel not in ("expr", "arrow"):
-        raise ValueError("ivf_assign: kernel must be 'expr' or 'arrow'")
     rows = centroids.select(
         F.col(id_col).alias("cell"), F.col(vec_col).alias("c_vec")
     ).collect()
     if not rows:
         raise ValueError("ivf_assign: centroids is empty")
-    if kernel == "arrow":
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
+    cell_ids, C, cn = _np_cent_geometry(
+        [(int(r["cell"]), list(r["c_vec"])) for r in rows]
+    )
+    out_schema = T.StructType(
+        [df.schema[id_col], df.schema[vec_col],
+         T.StructField("cell", T.LongType())]
+    )
 
-        cell_ids, C, cn = _np_cent_geometry(
-            [(int(r["cell"]), list(r["c_vec"])) for r in rows]
-        )
-        out_schema = T.StructType(
-            [df.schema[id_col], df.schema[vec_col],
-             T.StructField("cell", T.LongType())]
-        )
-
-        def fn(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                Xf = np.array(
-                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                )
-                pos = _cosine_argmax_np(Xf, C, cn)
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].values,
-                        vec_col: pdf[vec_col].values,
-                        "cell": cell_ids[pos],
-                    }
-                )
-
-        return df.select(id_col, vec_col).mapInPandas(fn, schema=out_schema)
-    cent_lit = F.array(
-        *[
-            F.struct(
-                F.lit(int(r["cell"])).cast("long").alias("cell"),
-                F.array(*[F.lit(float(x)) for x in r["c_vec"]]).alias("c_vec"),
+    def fn(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            Xf = np.array(
+                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
             )
-            for r in rows
-        ]
-    )
-    scored = F.transform(
-        cent_lit,
-        lambda c: F.struct(
-            cosine(F.col(vec_col), c["c_vec"]).alias("sim"),
-            c["cell"].alias("cell"),
-        ),
-    )
-    return df.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.array_max(scored)["cell"].alias("cell"),
-    )
+            pos = _cosine_argmax_np(Xf, C, cn)
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col].values,
+                    vec_col: pdf[vec_col].values,
+                    "cell": cell_ids[pos],
+                }
+            )
+
+    return df.select(id_col, vec_col).mapInPandas(fn, schema=out_schema)
 
 
 def ivf_topk(

@@ -12,9 +12,13 @@ import os
 
 from pyspark.sql import SparkSession
 
+# local[N] core count when SPARK_GRAFT_CPUS is unset; bench.py reports
+# the same default in its parallelism block
+DEFAULT_CPUS = "32"
+
 
 def get_spark(app_name: str = "zeek-spark", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", DEFAULT_CPUS)
     if shuffle_partitions is None:
         # A/B-measured on the headline set: AQE-on + few initial shuffle
         # partitions is fastest at local scale (AQE coalesces anyway, and

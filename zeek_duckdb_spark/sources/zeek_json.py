@@ -97,6 +97,39 @@ def _cast_json_field(col: Column, zeek_type: str, timestamps: str) -> Column:
     return _cast_json_scalar(col, zt, timestamps)
 
 
+def _json_projection(
+    types: dict[str, str] | None, timestamps: str, replace_periods: bool
+) -> tuple[T.StructType | None, list[Column] | None]:
+    """The read schema and the typed cast select for ``types`` — one
+    definition the batch and stream readers share.  ISO ``time``
+    fields are read as strings; output names get ``.`` -> ``_`` when
+    ``replace_periods``.  ``(None, None)`` when ``types`` is None
+    (schema inference); ``timestamps`` is validated either way."""
+    if timestamps not in ("epoch", "iso"):
+        raise ValueError("timestamps must be 'epoch' or 'iso'")
+    if types is None:
+        return None, None
+    schema = T.StructType(
+        [
+            T.StructField(
+                name,
+                T.StringType()
+                if (zt.strip() == "time" and timestamps == "iso")
+                else _json_read_type(zt),
+                True,
+            )
+            for name, zt in types.items()
+        ]
+    )
+    cols = [
+        _cast_json_field(F.col(f"`{name}`"), zt, timestamps).alias(
+            name.replace(".", "_") if replace_periods else name
+        )
+        for name, zt in types.items()
+    ]
+    return schema, cols
+
+
 def read_zeek_json(
     spark: SparkSession,
     pattern: str,
@@ -112,35 +145,14 @@ def read_zeek_json(
     ``timestamps``: ``"epoch"`` (Zeek default; ``time`` fields are
     epoch-seconds doubles) or ``"iso"`` (``JSON::TS_ISO8601`` strings).
     """
-    if timestamps not in ("epoch", "iso"):
-        raise ValueError("timestamps must be 'epoch' or 'iso'")
+    schema, cols = _json_projection(types, timestamps, replace_periods)
     files = glob_zeek_files(pattern)  # deterministic order + zero-match error
-    if types is None:
+    if schema is None:
         df = spark.read.json(files)
+        if replace_periods:
+            df = df.toDF(*[c.replace(".", "_") for c in df.columns])
     else:
-        read_schema = T.StructType(
-            [
-                T.StructField(
-                    name,
-                    T.StringType()
-                    if (zt.strip() == "time" and timestamps == "iso")
-                    else _json_read_type(zt),
-                    True,
-                )
-                for name, zt in types.items()
-            ]
-        )
-        df = spark.read.schema(read_schema).json(files)
-        df = df.select(
-            *[
-                _cast_json_field(F.col(f"`{name}`"), zt, timestamps).alias(name)
-                for name, zt in types.items()
-            ]
-        )
+        df = spark.read.schema(schema).json(files).select(*cols)
     if filename:
         df = df.withColumn("filename", F.input_file_name())
-    if replace_periods:
-        renames = {c: c.replace(".", "_") for c in df.columns if "." in c}
-        for old, new in renames.items():
-            df = df.withColumnRenamed(old, new)
     return df

@@ -171,37 +171,10 @@ def read_zeek_json_stream(
     there is no header to diverge — but a producer adding NEW fields
     is silently ignored until ``types`` is updated (absent-field NULLs
     cover the removal direction)."""
-    from pyspark.sql import types as T
+    from zeek_duckdb_spark.sources.zeek_json import _json_projection
 
-    from zeek_duckdb_spark.sources.zeek_json import (
-        _cast_json_field,
-        _json_read_type,
-    )
-
-    if timestamps not in ("epoch", "iso"):
-        raise ValueError("timestamps must be 'epoch' or 'iso'")
-    read_schema = T.StructType(
-        [
-            T.StructField(
-                name,
-                T.StringType()
-                if (zt.strip() == "time" and timestamps == "iso")
-                else _json_read_type(zt),
-                True,
-            )
-            for name, zt in types.items()
-        ]
-    )
+    read_schema, cols = _json_projection(types, timestamps, replace_periods)
     reader = spark.readStream.schema(read_schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.option("pathGlobFilter", pattern).json(directory)
-    df = df.select(
-        *[
-            _cast_json_field(F.col(f"`{name}`"), zt, timestamps).alias(
-                name.replace(".", "_") if replace_periods else name
-            )
-            for name, zt in types.items()
-        ]
-    )
-    return df
+    return reader.option("pathGlobFilter", pattern).json(directory).select(*cols)
