@@ -620,11 +620,11 @@ def bench_crawl(iters: int) -> None:
     t_spark = statistics.median(ts)
 
     # realistic-file tier (round 13): ONE plain .warc >= 256 MB — the
-    # crawl-production shape where binaryFile cannot split and the
-    # whole file is a single task, exercising the one-task-per-file
-    # path and the bounded-flush expansion (_make_expand yields every
-    # _FLUSH_RECORDS/_FLUSH_BYTES, so the task never holds the file's
-    # full 2-3x expansion; the bound itself is pinned by
+    # crawl-production shape where the whole file is a single task,
+    # exercising the one-task-per-file path and the bounded flushes
+    # (_path_record_batches yields every _FLUSH_RECORDS/_FLUSH_BYTES,
+    # so the task never holds the file's full 2-3x expansion; the
+    # bound itself is pinned by
     # tests/test_warc.py::test_expand_flush_bounds).  Record expansion
     # only (parse + HTTP head + flush) — the HTML stage's per-core
     # rate is the tier above's number and would just multiply here.
@@ -652,29 +652,24 @@ def bench_crawl(iters: int) -> None:
     n_big = len(big_recs)
     del big_recs
 
-    def big_run(engine):
+    def big_run():
         # build the DataFrame fresh per run: re-collecting one
         # AdaptiveSparkPlan instance reuses its materialized shuffle
         # stages, which would time the 274 MB parse once and the
         # final-agg replay thereafter (measured 4.7 s -> 0.1 s)
-        row = read_warc(spark, big_path, engine=engine).agg(
+        row = read_warc(spark, big_path).agg(
             F.count("*").alias("n"), F.sum(F.length("body")).alias("b")
         ).collect()[0]
         assert row.n == n_big, row
         return row
 
-    # engine A/B (round 14): the path-based streaming DataSource
-    # (default) vs the whole-blob binaryFile expand on the same file
-    t_by_engine = {}
-    for eng in ("stream", "binaryfile"):
-        big_run(eng)  # warm
-        ts = []
-        for _ in range(iters):
-            t0 = time.perf_counter()
-            big_run(eng)
-            ts.append(time.perf_counter() - t0)
-        t_by_engine[eng] = statistics.median(ts)
-    t_big = t_by_engine["stream"]
+    big_run()  # warm
+    ts = []
+    for _ in range(iters):
+        t0 = time.perf_counter()
+        big_run()
+        ts.append(time.perf_counter() - t0)
+    t_big = statistics.median(ts)
 
     print("| path | input | wall | rate |")
     print("|---|---|---|---|")
@@ -685,13 +680,9 @@ def bench_crawl(iters: int) -> None:
           f"{N_FILES * RECS} pages) | {raw_mb:.1f} MB gz | {t_spark:.2f} s | "
           f"{raw_mb / t_spark:.1f} MB/s ({raw_mb / t_spark / core_rate:.1f}x "
           "the single core) |")
-    print(f"| single {big_mb:.0f} MB plain .warc, 1 task (read_warc "
-          f"engine='stream', {n_big} pages, bounded memory) | "
+    print(f"| single {big_mb:.0f} MB plain .warc, 1 task (read_warc, "
+          f"{n_big} pages, bounded memory) | "
           f"{big_mb:.0f} MB | {t_big:.2f} s | {big_mb / t_big:.1f} "
-          "MB/s/task |")
-    t_bf = t_by_engine["binaryfile"]
-    print(f"| same file, engine='binaryfile' (whole-blob expand) | "
-          f"{big_mb:.0f} MB | {t_bf:.2f} s | {big_mb / t_bf:.1f} "
           "MB/s/task |")
 
     # CDX index + selected-read tiers (round 13): index the big file

@@ -507,42 +507,39 @@ def test_non_http_response_quarantine(spark, tmp_path):
     assert about.body_text.startswith("HTTP/1.1 is the most")
 
 
-def test_expand_flush_bounds(monkeypatch):
-    """_make_expand must yield bounded frames — never a whole crawl
-    file's expansion in one DataFrame (round-13: x32 tasks at
+def test_expand_flush_bounds(monkeypatch, tmp_path):
+    """The record reader must yield bounded batches — never a whole
+    crawl file's expansion in one flush (round-13: x32 tasks at
     local[32], a 1 GiB file's 2-3 GiB expansion per task would stack
-    to the memory budget).  Unit-level: drive the generator directly
-    and assert per-yield row counts and content equality."""
-    import pandas as pd
+    to the memory budget).  Unit-level: drive the per-file generator
+    directly and assert per-yield row counts and content equality."""
+    import pyarrow as pa
 
     from zeek_duckdb_spark.sources import warc as W
 
-    blob = encode_warc([
+    f = tmp_path / "f.warc.gz"
+    f.write_bytes(encode_warc([
         _response_rec(f"http://m.org/{i}", f"<p>page {i}</p>".encode())
         for i in range(25)
-    ])
-    batch = pd.DataFrame({"path": ["f.warc.gz"], "content": [blob]})
+    ]))
 
     def run():
-        return list(W._make_expand({"response"})(iter([batch])))
+        return list(W._path_record_batches(str(f), {"response"}, False))
 
-    whole = pd.concat(run(), ignore_index=True)
-    assert len(whole) == 25
+    whole = pa.Table.from_batches(run())
+    assert whole.num_rows == 25
 
     monkeypatch.setattr(W, "_FLUSH_RECORDS", 8)
     frames = run()
-    assert [len(f) for f in frames] == [8, 8, 8, 1]
-    bounded = pd.concat(frames, ignore_index=True)
-    pd.testing.assert_frame_equal(whole, bounded)
+    assert [b.num_rows for b in frames] == [8, 8, 8, 1]
+    assert pa.Table.from_batches(frames).equals(whole)
 
     # byte-threshold path: one big body forces a flush
     monkeypatch.setattr(W, "_FLUSH_RECORDS", 10_000)
     monkeypatch.setattr(W, "_FLUSH_BYTES", 64)
     frames = run()
-    assert len(frames) > 1 and all(len(f) <= 5 for f in frames)
-    pd.testing.assert_frame_equal(
-        whole, pd.concat(frames, ignore_index=True)
-    )
+    assert len(frames) > 1 and all(b.num_rows <= 5 for b in frames)
+    assert pa.Table.from_batches(frames).equals(whole)
 
 
 def test_crawl_image_near_dup_chain(spark, tmp_path):

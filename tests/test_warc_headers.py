@@ -1,12 +1,13 @@
-"""headers=True — the raw-header-map surface (round 15): both reader
-engines, the streaming reader, and selected reads append identical
-``warc_headers``/``http_headers`` maps; the HTTP map follows the
+"""headers=True — the raw-header-map surface (round 15): the reader,
+its whole-blob test reference, the streaming reader, and selected
+reads append identical ``warc_headers``/``http_headers`` maps; the HTTP map follows the
 RFC 9110 §5.2 duplicate-combination rule and stays NULL where no head
 parsed."""
 
 import os
 
 import pytest
+from warc_reference import reference_read_warc
 
 from zeek_duckdb_spark.sources.warc import (
     _http_header_map,
@@ -50,12 +51,11 @@ def _archive(tmp_path):
     return str(arc)
 
 
-@pytest.mark.parametrize("engine", ["stream", "binaryfile"])
-def test_header_maps_both_engines(spark, tmp_path, engine):
+@pytest.mark.parametrize("reader", ["stream", "reference"])
+def test_header_maps_both_engines(spark, tmp_path, reader):
     arc = _archive(tmp_path)
-    df = read_warc(
-        spark, arc, record_types="*", headers=True, engine=engine
-    )
+    read = read_warc if reader == "stream" else reference_read_warc
+    df = read(spark, arc, record_types="*", headers=True)
     assert [f.name for f in df.schema.fields[-2:]] == [
         "warc_headers", "http_headers"]
     rows = {r.record_id: r for r in df.collect()}
@@ -79,10 +79,9 @@ def test_header_maps_both_engines(spark, tmp_path, engine):
 
 def test_engines_agree_exactly(spark, tmp_path):
     arc = _archive(tmp_path)
-    a = read_warc(spark, arc, record_types="*", headers=True,
-                  engine="stream").collect()
-    b = read_warc(spark, arc, record_types="*", headers=True,
-                  engine="binaryfile").collect()
+    a = read_warc(spark, arc, record_types="*", headers=True).collect()
+    b = reference_read_warc(spark, arc, record_types="*",
+                            headers=True).collect()
     key = lambda r: r.record_id  # noqa: E731
     for x, y in zip(sorted(a, key=key), sorted(b, key=key)):
         assert x.warc_headers == y.warc_headers

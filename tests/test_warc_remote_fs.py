@@ -1,13 +1,17 @@
-"""Object-store streaming front door (round-15): the ``warc``/``cdx``
-stream engines work on remote schemes through injected ``opener=``/
-``lister=`` callables — rows identical to the POSIX engine on the same
-bytes, the bounded-memory watermark holds through the opener seam, and
-the streaming source lists/opens remotely.  The fake filesystem here is
-the injection contract: any ranged-GET client (fsspec_opener/
-fsspec_lister in production) slots into the same two callables."""
+"""Filesystem front door: the ``warc``/``cdx`` readers list and open
+through ``pyarrow.fs`` (``filesystem.list_paths``/``open_path``) and,
+for stores pyarrow cannot resolve, through injected ``opener=``/
+``lister=`` callables (round-15) — rows identical to the local read of
+the same bytes, the bounded-memory watermark holds through the opener
+seam, and the streaming source lists/opens remotely.  The fake
+filesystem here is the injection contract: any ranged-GET client slots
+into the same two callables."""
 
 import fnmatch
+import glob
 import io
+import os
+import posixpath
 
 import pytest
 
@@ -43,11 +47,11 @@ def _mem_fs(files: dict):
     (opener, lister) CLOSURES.  Defined inside a function so
     cloudpickle ships them BY VALUE (the tests/ module is not
     importable on executors or the planning worker); user seams live
-    in importable modules — fsspec_opener/fsspec_lister's
-    functools.partial shape.  Executors see the dict as pickled at
-    plan time — mutations made afterwards in the test process are
-    invisible, which is exactly the pickling contract the docstrings
-    state (real fsspec seams re-list the live store)."""
+    in importable modules (a functools.partial over a module
+    function).  Executors see the dict as pickled at plan time —
+    mutations made afterwards in the test process are invisible, which
+    is exactly the pickling contract the docstrings state (a real
+    store client re-lists the live store)."""
     snap = dict(files)
 
     def opener(path: str):
@@ -82,9 +86,8 @@ def _row_key(r):
 
 
 def test_remote_batch_rows_match_posix(spark, tmp_path):
-    """read_warc over mem:// (stream engine by default — the seams
-    make it the default on remote schemes) returns exactly the POSIX
-    stream engine's rows on the same bytes."""
+    """read_warc over mem:// through the seams returns exactly the
+    local read's rows on the same bytes."""
     files = _two_files()
     opener, lister = _mem_fs(files)
     for name, blob in files.items():
@@ -170,10 +173,9 @@ def test_remote_watermark_bounded():
 
 
 def test_engine_resolution_with_seams(spark):
-    """The resolution table (round-15): seams make 'stream' the remote
-    default; binaryfile+seams errors; remote stream without seams
-    errors naming them; lister-less opener needs a literal path;
-    opener-less lister errors."""
+    """The seam table (round-15): a scheme pyarrow.fs cannot serve
+    errors without seams, naming them; lister-less opener needs a
+    literal path; opener-less lister errors."""
     opener, lister = _mem_fs({"mem://bucket/one.warc": encode_warc(
         [_resp("http://o.org/a", b"x")], compress=False)})
     # literal remote file + opener alone: the listing is implied
@@ -183,11 +185,8 @@ def test_engine_resolution_with_seams(spark):
         read_warc(spark, "mem://bucket/*.warc", opener=opener)
     with pytest.raises(ValueError, match="opener"):
         read_warc(spark, "mem://bucket/*.warc", lister=lister)
-    with pytest.raises(ValueError, match="stream-engine seams"):
-        read_warc(spark, "mem://bucket/one.warc", opener=opener,
-                  engine="binaryfile")
-    with pytest.raises(ValueError, match="opener= and\n?\\s*lister="):
-        read_warc(spark, "s3a://bucket/x.warc.gz", engine="stream")
+    with pytest.raises(ValueError, match="opener=/lister="):
+        read_warc(spark, "s3a://bucket/x.warc.gz")
 
 
 def test_offset_format_back_compat():
@@ -220,3 +219,141 @@ def test_offset_format_back_compat():
 
     assert json.loads(json.dumps(off)) == off
     assert off == _FileSetStreamReader._serialize_files(set(paths))
+
+
+def _old_posix_listing(p: str) -> list:
+    """The POSIX listing rules list_paths replaces, kept as the
+    differential oracle for local paths."""
+    if os.path.isdir(p):
+        return sorted(
+            os.path.join(p, f) for f in os.listdir(p)
+            if not f.startswith((".", "_"))
+            and os.path.isfile(os.path.join(p, f))
+        )
+    if not any(c in p for c in "*?["):
+        return [p] if os.path.isfile(p) else []
+    return sorted(
+        f for f in glob.glob(p)
+        if os.path.isfile(f)
+        and not os.path.basename(f).startswith((".", "_"))
+    )
+
+
+_TREE = [
+    "crawl/a.warc.gz", "crawl/b.warc.gz", "crawl/.part-0.warc.gz.tmp-1",
+    "crawl/_committed_1", "crawl/_rescued.warc", "crawl/sub/c.warc.gz",
+    "crawl/sub/deep/d.warc.gz", "crawl/_u/g.warc.gz", "crawl/.hid/f.warc",
+]
+
+
+def test_list_paths_rules_on_mock_fs():
+    """list_paths on an in-process pyarrow mock filesystem: a directory
+    lists its non-hidden files, a hidden literal is honoured, a glob
+    drops ``_committed_*`` and dot tmps, and ``*`` does not cross
+    ``/``."""
+    from pyarrow import fs as pafs
+
+    from zeek_duckdb_spark.sources.filesystem import list_paths
+
+    fs = pafs._MockFileSystem()
+    for p in _TREE:
+        fs.create_dir(posixpath.dirname(p))
+        with fs.open_output_stream(p) as out:
+            out.write(b"x")
+    assert list_paths(fs, "crawl") == ["crawl/a.warc.gz", "crawl/b.warc.gz"]
+    assert list_paths(fs, "crawl/_rescued.warc") == ["crawl/_rescued.warc"]
+    assert list_paths(fs, "crawl/missing.warc") == []
+    assert list_paths(fs, "crawl/*") == ["crawl/a.warc.gz", "crawl/b.warc.gz"]
+    assert list_paths(fs, "crawl/_committed_*") == []
+    assert list_paths(fs, "crawl/*.warc.gz") == [
+        "crawl/a.warc.gz", "crawl/b.warc.gz"]
+    assert list_paths(fs, "crawl/*/*.warc.gz") == [
+        "crawl/_u/g.warc.gz", "crawl/sub/c.warc.gz"]
+    assert list_paths(fs, "crawl/s*/*/*.warc.gz") == ["crawl/sub/deep/d.warc.gz"]
+    assert list_paths(fs, "crawl/.*/*") == ["crawl/.hid/f.warc"]
+    assert list_paths(fs, "nowhere/*") == []
+
+
+def test_list_paths_matches_posix_listing(tmp_path):
+    """On local paths the pyarrow.fs listing returns exactly what the
+    POSIX glob listing returned — the warc_file values (and so CDX join
+    keys and stream offsets) do not change."""
+    from zeek_duckdb_spark.sources.warc import _glob_warc_paths
+
+    for p in _TREE:
+        f = tmp_path / p
+        f.parent.mkdir(parents=True, exist_ok=True)
+        f.write_bytes(b"x")
+    root = str(tmp_path)
+    cases = [
+        "crawl", "crawl/", "crawl/_rescued.warc", "crawl/missing.warc",
+        "crawl/*", "crawl/_committed_*", "crawl/*.warc.gz",
+        "crawl/*/*.warc.gz", "crawl/s*/*/*.warc.gz", "crawl/.*/*",
+        "crawl/[ab].warc.gz", "crawl/?.warc.gz", "crawl/sub/*/d.warc.gz",
+    ]
+    for c in cases:
+        want = _old_posix_listing(f"{root}/{c}")
+        assert _glob_warc_paths(f"{root}/{c}") == want, c
+        assert _glob_warc_paths(f"file://{root}/{c}") == want, c
+    # relative paths stay relative
+    cwd = os.getcwd()
+    os.chdir(root)
+    try:
+        for c in ("crawl", "crawl/*/*.warc.gz", "crawl/a.warc.gz"):
+            assert _glob_warc_paths(c) == _old_posix_listing(c), c
+    finally:
+        os.chdir(cwd)
+
+
+def test_file_uri_end_to_end(spark, tmp_path):
+    """read_warc, cdx_records, read_warc_selected and read_warc_stream
+    on ``file://`` URIs: the same rows as the bare-path read, with
+    warc_file spelled as the bare local path."""
+    from zeek_duckdb_spark.sources.warc import cdx_records
+
+    for name, blob in _two_files().items():
+        (tmp_path / name.rsplit("/", 1)[1]).write_bytes(blob)
+    bare = str(tmp_path / "*.warc.gz")
+    uri = f"file://{bare}"
+
+    def rows(df):
+        return sorted((r.warc_file,) + _row_key(r) for r in df.collect())
+
+    got = rows(read_warc(spark, uri))
+    assert got == rows(read_warc(spark, bare)) and len(got) == 3
+    assert {g[0] for g in got} == {
+        str(tmp_path / "day0.warc.gz"), str(tmp_path / "day1.warc.gz")}
+
+    def cdx(path):
+        return sorted(
+            (r.warc_file, r.url, r.offset, r.length, r.digest, r.urlkey)
+            for r in cdx_records(spark, path).collect()
+        )
+
+    assert cdx(uri) == cdx(bare) and len(cdx(uri)) == 3
+    pick = cdx_records(spark, uri).filter("url = 'http://d0.org/b'")
+    sel = read_warc_selected(spark, pick).collect()
+    assert [bytes(r.body) for r in sel] == [b"<p>b</p>"]
+
+    out, ck = str(tmp_path / "landed"), str(tmp_path / "ck")
+    q = (
+        read_warc_stream(spark, f"file://{tmp_path}")
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ck)
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    assert rows(spark.read.parquet(out)) == got
+
+
+def test_hdfs_without_libhdfs_fails_on_driver(spark):
+    """hdfs:// resolves through pyarrow.fs.HadoopFileSystem, which
+    needs libhdfs: without it read_warc raises a ValueError on the
+    driver naming the scheme and libhdfs, before any Spark job."""
+    import ctypes.util
+
+    if ctypes.util.find_library("hdfs") or any(
+            os.environ.get(k) for k in ("ARROW_LIBHDFS_DIR", "HADOOP_HOME")):
+        pytest.skip("libhdfs is loadable here")
+    with pytest.raises(ValueError, match="hdfs://.*libhdfs"):
+        read_warc(spark, "hdfs://nn/x.warc.gz")

@@ -1,13 +1,14 @@
 """Path-based streaming WARC DataSource (round-14): the incremental
 parser is differential-tested against parse_warc (same records, same
 error wording), its buffer is proven bounded at the high-water mark,
-a >2 GiB plain WARC — binaryFile's hard fail — ingests end-to-end,
-and the stream reader keeps exactly-once across restarts."""
+a >2 GiB plain WARC ingests end-to-end, and the stream reader keeps
+exactly-once across restarts."""
 
 import gzip
 import os
 
 import pytest
+from warc_reference import reference_cdx_records, reference_read_warc
 
 from zeek_duckdb_spark.sources.warc import (
     _records_from_chunks,
@@ -200,24 +201,25 @@ def test_padding_run_stays_bounded():
     assert mem["peak_buffered"] < (4 << 20), mem
 
 
-def test_engine_scheme_routing():
-    """r14 review find: remote schemes route to the binaryfile engine
-    by default, and an EXPLICIT engine='stream' on one errors naming
-    the mismatch instead of scanning nothing."""
-    from zeek_duckdb_spark.sources.warc import (
-        _is_local_path, _resolve_warc_engine)
+def test_engine_scheme_routing(spark):
+    """Every path routes through pyarrow.fs: bare and ``file:`` paths
+    land on LocalFileSystem and are spelled back bare; a URI keeps its
+    scheme; a scheme pyarrow cannot serve errors on the driver naming
+    it and the opener=/lister= way out, instead of scanning nothing."""
+    from pyarrow import fs as pafs
 
-    assert _is_local_path("/a/b.warc.gz")
-    assert _is_local_path("file:/a/b.warc.gz")
-    assert _is_local_path("file:///a/b.warc.gz")
-    assert not _is_local_path("s3a://bucket/crawl/*.warc.gz")
-    assert not _is_local_path("hdfs://nn/crawl")
-    assert _resolve_warc_engine(None, "/a/*.gz", "t") == "stream"
-    assert _resolve_warc_engine(None, "s3a://b/x", "t") == "binaryfile"
-    with pytest.raises(ValueError, match="binaryfile"):
-        _resolve_warc_engine("stream", "s3a://b/x", "t")
-    # explicit stream on a local path stays stream
-    assert _resolve_warc_engine("stream", "/a/x", "t") == "stream"
+    from zeek_duckdb_spark.sources.filesystem import _filesystem
+
+    for p in ("/a/b.warc.gz", "file:/a/b.warc.gz", "file:///a/b.warc.gz"):
+        fs, fp, prefix = _filesystem(p)
+        assert isinstance(fs, pafs.LocalFileSystem), p
+        assert (fp, prefix) == ("/a/b.warc.gz", ""), p
+    # glob metacharacters stay out of the URI parse ('?' is no query)
+    fs, fp, prefix = _filesystem("mock:///bucket/crawl/day?.warc.gz")
+    assert isinstance(fs, pafs._MockFileSystem)
+    assert prefix + fp == "mock:///bucket/crawl/day?.warc.gz"
+    with pytest.raises(ValueError, match="s3a://.*opener=/lister="):
+        read_warc(spark, "s3a://bucket/crawl/*.warc.gz")
 
 
 def test_streaming_gunzip_members_and_errors():
@@ -239,9 +241,10 @@ def test_streaming_gunzip_members_and_errors():
 
 @pytest.mark.slow
 def test_read_warc_engines_row_identical(spark, tmp_path):
-    """The two engines share row assembly; prove the full row set is
-    identical on a mixed fixture (quarantined chunked record, non-HTTP
-    capture, gz + plain containers)."""
+    """The streaming reader matches the whole-blob parse_warc reference
+    row for row: the full row set is identical on a mixed fixture
+    (quarantined chunked record, non-HTTP capture, gz + plain
+    containers)."""
     capped = (b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
               b"Transfer-Encoding: chunked\r\n\r\nff\r\nshort")
     recs = [
@@ -259,24 +262,25 @@ def test_read_warc_engines_row_identical(spark, tmp_path):
     (tmp_path / "p.warc").write_bytes(encode_warc(recs[2:], compress=False))
     glob = str(tmp_path / "*.warc*")
 
-    def rowset(engine, **kw):
+    def rowset(reader, **kw):
+        read = read_warc if reader == "stream" else reference_read_warc
         return {
             (r.record_id, r.warc_type, r.target_uri, r.http_status,
              r.content_type, r.content_encoding,
              None if r.body is None else bytes(r.body),
              getattr(r, "body_text", None))
-            for r in read_warc(spark, glob, engine=engine, **kw).collect()
+            for r in read(spark, glob, **kw).collect()
         }
 
     for kw in ({}, {"decode_text": True}, {"record_types": None},
                {"record_types": ("metadata",)},
-               # string forms must mean the same thing on BOTH engines
-               # (r14 review: '*' and comma strings used to diverge
-               # through the option round-trip)
+               # string forms must survive the DataSource option
+               # round-trip (r14 review: '*' and comma strings used to
+               # diverge there)
                {"record_types": "*"},
                {"record_types": "response,metadata"},
                {"record_types": "metadata"}):
-        assert rowset("stream", **kw) == rowset("binaryfile", **kw), kw
+        assert rowset("stream", **kw) == rowset("reference", **kw), kw
     assert len(rowset("stream", record_types="*")) == 4
     assert len(rowset("stream", record_types="response,metadata")) == 4
     assert len(rowset("stream", record_types="metadata")) == 1
@@ -292,12 +296,9 @@ def test_read_warc_engines_row_identical(spark, tmp_path):
     assert _norm_record_types(()) == ()
 
     # schema identical too
-    a = read_warc(spark, glob, decode_text=True, engine="stream")
-    b = read_warc(spark, glob, decode_text=True, engine="binaryfile")
+    a = read_warc(spark, glob, decode_text=True)
+    b = reference_read_warc(spark, glob, decode_text=True)
     assert a.schema == b.schema
-
-    with pytest.raises(ValueError, match="engine must be"):
-        read_warc(spark, glob, engine="bogus")
 
 
 def test_read_warc_stream_engine_error_surfaces(spark, tmp_path):
@@ -361,8 +362,7 @@ def test_warc_datasource_stream_exactly_once(spark, tmp_path):
             for r in rows} == batch
 
     with pytest.raises(ValueError, match="must be >= 1"):
-        read_warc_stream(spark, str(crawl), engine="stream",
-                         max_files_per_trigger=0)
+        read_warc_stream(spark, str(crawl), max_files_per_trigger=0)
 
 
 @pytest.mark.slow
@@ -440,9 +440,10 @@ def test_warc_zst_container_stream_engine(spark, tmp_path):
 
 
 def test_cdx_engines_and_digest_modes(spark, tmp_path):
-    """cdx_records: the path engine emits the same index rows as the
-    blob engine, and digest='stored' hashes the payload AS STORED
-    (WARC-Payload-Digest / external-CDX interop, r13 advice) while
+    """cdx_records: the path-based reader emits the same index rows as
+    the whole-blob span reference, and digest='stored' hashes the
+    payload AS STORED (WARC-Payload-Digest / external-CDX interop, r13
+    advice) while
     'decoded' (default) hashes the decoded entity."""
     import base64
     import hashlib
@@ -481,10 +482,11 @@ def test_cdx_engines_and_digest_modes(spark, tmp_path):
     def b32(b):
         return base64.b32encode(hashlib.sha1(b).digest()).decode()
 
-    def idx(engine, digest):
+    def idx(reader, digest):
+        build = cdx_records if reader == "stream" else reference_cdx_records
         return {
             r.url: r for r in
-            cdx_records(spark, glob, digest=digest, engine=engine).collect()
+            build(spark, glob, digest=digest).collect()
         }
 
     dec = idx("stream", "decoded")
@@ -498,7 +500,7 @@ def test_cdx_engines_and_digest_modes(spark, tmp_path):
     assert sto["http://c.org/gz"].http_status == 200
     assert sto["http://c.org/gz"].mime == "text/html"
 
-    # engine parity on everything but the path spelling
+    # reference parity on everything but the path spelling
     def key(rows):
         return {
             (r.url, r.record_id, r.offset, r.length, r.digest, r.mime,
@@ -507,12 +509,10 @@ def test_cdx_engines_and_digest_modes(spark, tmp_path):
         }
 
     for digest in ("decoded", "stored"):
-        assert key(idx("stream", digest)) == key(idx("binaryfile", digest))
+        assert key(idx("stream", digest)) == key(idx("reference", digest))
 
     with pytest.raises(ValueError, match="digest must be"):
         cdx_records(spark, glob, digest="sha256")
-    with pytest.raises(ValueError, match="engine must be"):
-        cdx_records(spark, glob, engine="bogus")
 
 
 def test_selected_reads_span_split_and_opener(spark, tmp_path):
@@ -525,7 +525,7 @@ def test_selected_reads_span_split_and_opener(spark, tmp_path):
 
     # defined in-test so cloudpickle ships them BY VALUE (the tests/
     # module is not importable on executors); user openers live in
-    # importable modules — fsspec_opener's functools.partial shape
+    # importable modules (a functools.partial over a module function)
     class _RangedFile:
         """Fake object-store file: real seek/read against the local
         file, every read LOGGED (offset, length) to a per-process
@@ -773,7 +773,7 @@ def test_cdx_records_stream_daily_index_loop(spark, tmp_path):
                              keys.column(1).to_pylist()))
             assert pairs == sorted(pairs), pf
 
-    with pytest.raises(ValueError, match="cannot glob"):
+    with pytest.raises(ValueError, match="s3a://"):
         cdx_records_stream(spark, "s3a://b/crawl")
     with pytest.raises(ValueError, match="digest"):
         cdx_records_stream(spark, str(crawl), digest="x")

@@ -16,23 +16,39 @@ Re-expresses the capabilities of the ynadji/zeek-duckdb DuckDB extension
   (dedup, similarity search, text analysis, multimodal plumbing).
 """
 
-from zeek_duckdb_spark.header import ZeekHeader, parse_header, zeek_type_to_spark
-from zeek_duckdb_spark.sources.zeek import read_zeek
-from zeek_duckdb_spark.sources.zeek_json import read_zeek_json
-from zeek_duckdb_spark.sources.zeek_writer import write_zeek, write_zeek_stream
-from zeek_duckdb_spark.sources.warc import (
-    extract_warc,
-    read_warc,
-    dedup_to_revisits,
-    resolve_revisits,
-    write_warc,
-)
-from zeek_duckdb_spark.sources.cdxj import read_cdxj, write_cdxj
-from zeek_duckdb_spark.functions.inet import register_inet_functions
-from zeek_duckdb_spark.functions.intervals import (
-    interval_text,
-    register_interval_functions,
-)
+# Public names resolve on first use (PEP 562): importing one submodule,
+# e.g. the ``zeek`` DataSource, must not pay for the WARC reader and
+# pandas behind the rest of the surface.
+_EXPORTS = {
+    "ZeekHeader": "header",
+    "parse_header": "header",
+    "zeek_type_to_spark": "header",
+    "read_zeek": "sources.zeek",
+    "read_zeek_json": "sources.zeek_json",
+    "write_zeek": "sources.zeek_writer",
+    "write_zeek_stream": "sources.zeek_writer",
+    "read_warc": "sources.warc",
+    "extract_warc": "sources.warc",
+    "dedup_to_revisits": "sources.warc",
+    "resolve_revisits": "sources.warc",
+    "write_warc": "sources.warc",
+    "read_cdxj": "sources.cdxj",
+    "write_cdxj": "sources.cdxj",
+    "register_inet_functions": "functions.inet",
+    "interval_text": "functions.intervals",
+    "register_interval_functions": "functions.intervals",
+}
+
+
+def __getattr__(name):
+    mod = _EXPORTS.get(name)
+    if mod is None:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    import importlib
+
+    value = getattr(importlib.import_module(f"{__name__}.{mod}"), name)
+    globals()[name] = value
+    return value
 
 
 def register(spark):
@@ -40,6 +56,10 @@ def register(spark):
     reference's extension load, src/zeek_extension.cpp:31-36): the INET
     function family, DuckDB-style interval rendering, and the ``zeek``
     data source format."""
+    from zeek_duckdb_spark.functions.inet import register_inet_functions
+    from zeek_duckdb_spark.functions.intervals import (
+        register_interval_functions,
+    )
     from zeek_duckdb_spark.sources.datasource import register_zeek_datasource
 
     register_inet_functions(spark)

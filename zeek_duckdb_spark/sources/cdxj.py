@@ -356,18 +356,19 @@ def read_cdxj(
     members whose key range can hold the prefix are ranged-read, then
     the exact ``startswith`` filter applies JVM-side.  cluster.idx is
     read driver-side — it is small by construction (one line per
-    ``lines_per_block`` index rows).  ``opener`` is the object-store
-    seam (``opener(path) -> file-like``; default POSIX open), applied
-    to cluster.idx and shards alike."""
+    ``lines_per_block`` index rows).  ``opener`` is the filesystem
+    seam (``opener(path) -> file-like``; default
+    :func:`.filesystem.open_path`), applied to cluster.idx and shards
+    alike."""
     from pyspark.sql import functions as F
 
+    from zeek_duckdb_spark.sources.filesystem import open_path
     from zeek_duckdb_spark.sources.warc import (
         _CDX_SCHEMA,
         _gunzip_members_from_chunks,
-        _posix_opener,
     )
 
-    open_fn = opener or _posix_opener
+    open_fn = opener or open_path
     idx_path = posixpath.join(path, "cluster.idx")
     try:
         with open_fn(idx_path) as fh:
@@ -404,12 +405,15 @@ def read_cdxj(
     )
 
     def fetch(it):
-        from zeek_duckdb_spark.sources.warc import _typed_frame
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         cols = _CDX_SCHEMA.fieldNames()
-        for pdf in it:
+        pa_schema = to_arrow_schema(_CDX_SCHEMA)
+        for batch in it:
             for shard, off, length in zip(
-                pdf["shard"], pdf["offset"], pdf["length"]
+                *(batch.column(c).to_pylist()
+                  for c in ("shard", "offset", "length"))
             ):
                 who = f"read_cdxj({shard})"
                 with open_fn(str(shard)) as fh:
@@ -427,9 +431,9 @@ def read_cdxj(
                         continue
                     for c, v in zip(cols, _parse_cdxj_line(line, who)):
                         rows[c].append(v)
-                yield _typed_frame(cols, rows)
+                yield pa.RecordBatch.from_pydict(rows, schema=pa_schema)
 
-    out = spans.mapInPandas(fetch, _CDX_SCHEMA)
+    out = spans.mapInArrow(fetch, _CDX_SCHEMA)
     if prefix is not None:
         out = out.filter(F.col("urlkey").startswith(prefix))
     return out

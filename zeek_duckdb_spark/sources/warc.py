@@ -14,13 +14,13 @@ HTTP/1.x response; the HTTP head is parsed off (status, headers,
 chunked transfer-encoding decoded) so ``body`` is the actual entity
 bytes.  No third-party code.
 
-Scale shape: ONE task per WARC file, and (round-14) the default
-``engine='stream'`` is a path-based Python DataSource whose partition
-reader OPENS the file and streams — disk chunks -> incremental
-gunzip/zstd -> incremental record parse -> bounded Arrow flushes — so
-task-resident memory is ~(largest record + read chunk + flush batch)
-regardless of file size and a legal >2 GiB uncompressed WARC ingests
-(binaryFile's whole-blob rows hard-fail at 2 GiB).  Everything
+Scale shape: ONE task per WARC file.  The reader is a path-based
+Python DataSource whose partition reader OPENS the file through
+``pyarrow.fs`` (:mod:`.filesystem`: local, ``file:``, ``s3://``,
+``gs://``) and streams — file chunks -> incremental gunzip/zstd ->
+incremental record parse -> bounded Arrow flushes — so task-resident
+memory is ~(largest record + read chunk + flush batch) regardless of
+file size and a legal >2 GiB uncompressed WARC ingests.  Everything
 downstream (charset decode, HTML extraction, dedup) stays declarative;
 zero shuffle.  Parsing is per-record Python (the inherent boundary —
 WARC framing has no JVM/SQL form); at higher throughput inject a
@@ -44,6 +44,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from zeek_duckdb_spark.header import ZSTD_MAGIC as _ZSTD_MAGIC, is_zstd as _is_zstd
+from zeek_duckdb_spark.sources.filesystem import (
+    _filesystem,
+    list_paths,
+    open_path,
+)
 
 __all__ = [
     "parse_warc",
@@ -57,8 +62,6 @@ __all__ = [
     "extract_warc",
     "resolve_revisits",
     "dedup_to_revisits",
-    "fsspec_opener",
-    "fsspec_lister",
     "write_cdx",
     "read_cdx",
     "compact_cdx",
@@ -247,33 +250,6 @@ def parse_warc(payload: bytes, who: str = "parse_warc"):
         yield rec
 
 
-def _iter_gzip_members(buf: bytes, who: str):
-    """Member iteration for the crawl-standard one-record-per-member
-    ``.warc.gz`` layout: yields ``(offset, compressed_length,
-    decompressed bytes)`` per gzip member — the (offset, length)
-    pair IS the CDX random-access contract (seek to offset, read
-    length bytes, gunzip, get the record).  memoryview slicing keeps
-    this O(total bytes), not O(members * bytes)."""
-    import zlib
-
-    mv = memoryview(buf)
-    pos = 0
-    n = len(buf)
-    while pos < n:
-        d = zlib.decompressobj(wbits=31)
-        try:
-            out = d.decompress(mv[pos:])
-        except zlib.error as exc:
-            raise ValueError(
-                f"{who}: corrupt gzip member at offset {pos} ({exc})"
-            ) from None
-        if not d.eof:
-            raise ValueError(f"{who}: truncated gzip member at offset {pos}")
-        consumed = (n - pos) - len(d.unused_data)
-        yield pos, consumed, out
-        pos += consumed
-
-
 def _record_spans(buf: bytes, who: str):
     """Record loop over a DECOMPRESSED buffer: yields
     ``(start, end, record_dict)`` where [start, end) covers the
@@ -389,8 +365,8 @@ _HEADER_FIELDS = [
 
 def _reader_schema(decode_text: bool, headers: bool) -> T.StructType:
     """The reader schema for an option combination — ONE builder so
-    every engine (binaryFile expand, path DataSource batch + stream,
-    selected reads) agrees on column order."""
+    the DataSource batch + stream readers and selected reads agree on
+    column order."""
     base = _WARC_TEXT_SCHEMA if decode_text else _WARC_SCHEMA
     if not headers:
         return base
@@ -467,9 +443,8 @@ def _norm_record_types(record_types):
     """ONE canonical record-type filter for every entry point (r14
     review, twice): accepts None or ``'*'`` (everything), a bare
     WARC-Type string, a comma list in a string, or an iterable —
-    normalized BEFORE any engine branch, so the typed APIs, the
-    DataSource option round-trip (which serializes as a comma list),
-    and the binaryFile expand all agree.  Returns None for
+    normalized once, so the typed APIs and the DataSource option
+    round-trip (which serializes as a comma list) agree.  Returns None for
     everything, else a tuple of type tokens (empty tuple = match
     nothing)."""
     if record_types is None:
@@ -489,9 +464,8 @@ def _norm_record_types(record_types):
 
 def _parse_record_types_option(rt):
     """Record-type filter -> lowercased wanted set (None = everything)
-    — THE one conversion (r14 review, twice): the DataSources' option
-    strings and the typed APIs' binaryfile branches all come through
-    here, so matching semantics cannot drift between engines."""
+    — THE one conversion (r14 review, twice): every DataSource option
+    string comes through here, so matching semantics cannot drift."""
     norm = _norm_record_types(rt)
     return None if norm is None else {t.lower() for t in norm}
 
@@ -506,68 +480,33 @@ def _record_types_option(record_types) -> str:
     return "*" if norm is None else ",".join(norm)
 
 
-def _is_local_path(path: str) -> bool:
-    """True when a path is POSIX-openable on executors (no scheme, or
-    ``file:``) — what the path-based ``warc``/``cdx`` DataSource
-    engines can read.  Object-store/HDFS schemes route to the
-    binaryFile engine, whose Hadoop filesystem layer handles them."""
-    import re
-
-    m = re.match(r"^([A-Za-z][A-Za-z0-9+.\-]*)://", path)
-    return m is None or m.group(1).lower() == "file"
-
-
-def _resolve_warc_engine(engine, path: str, who: str, has_fs: bool = False) -> str:
-    """Shared engine resolution (r14 review): default (None) picks the
-    streaming engine for local/file paths and binaryFile for remote
-    schemes (s3a://, hdfs://, ...) the glob-based reader cannot list;
-    an EXPLICIT engine='stream' on a remote scheme errors naming the
-    mismatch instead of returning a silent empty scan.
-
-    ``has_fs`` (round-15): the caller supplied ``opener=``/``lister=``
-    filesystem callables, so the stream engine CAN open/list the
-    remote scheme — it becomes the default there too, closing the r14
-    gap where the 100 TB object-store deployment silently fell back to
-    the whole-blob binaryFile path and its 2 GiB row limit."""
-    if engine is None:
-        return "stream" if (_is_local_path(path) or has_fs) else "binaryfile"
-    if engine == "binaryfile" and has_fs:
-        raise ValueError(
-            f"{who}: opener=/lister= are stream-engine seams — the "
-            "binaryfile engine reads through Spark's Hadoop filesystem "
-            "layer (configure fs.s3a.* / fs.gs.* instead)"
-        )
-    if engine == "stream" and not (_is_local_path(path) or has_fs):
-        raise ValueError(
-            f"{who}: engine='stream' reads through POSIX "
-            f"open/glob and cannot list '{path}' — pass opener= and "
-            "lister= (e.g. fsspec_opener()/fsspec_lister()) to stream "
-            "it, or engine='binaryfile' for Hadoop-configured schemes"
-        )
-    return engine
-
-
 def _fs_seams(opener, lister, path: str, who: str):
-    """Normalize the object-store seams (round-15): an opener with no
-    lister on a literal (metacharacter-free) path implies the
-    single-file listing; a glob/directory needs a real lister.
-    Returns (opener, lister, has_fs)."""
+    """Normalize the filesystem seams (round-15).  Without them the
+    path must resolve through ``pyarrow.fs`` — checked HERE, on the
+    driver, so an unservable scheme (``hdfs://`` without libhdfs,
+    ``s3a://``) fails naming itself before any job runs.  An opener
+    with no lister on a literal (metacharacter-free) path implies the
+    single-file listing; a glob needs a real lister.  Returns
+    (opener, lister)."""
     if opener is None and lister is None:
-        return None, None, False
+        try:
+            _filesystem(path)
+        except ValueError as exc:
+            raise ValueError(f"{who}: {exc}") from None
+        return None, None
     if opener is None:
         raise ValueError(
             f"{who}: lister= without opener= — executors need "
             "opener(path) to read the listed files"
         )
     if lister is None:
-        if any(c in path for c in "*?[") or _is_local_path(path):
+        if any(c in path for c in "*?["):
             raise ValueError(
-                f"{who}: opener= on a glob/directory path needs "
-                "lister= too (e.g. fsspec_lister()) — only a literal "
-                "remote file path implies its own listing"
+                f"{who}: opener= on a glob path needs lister= too — "
+                "only a literal file path implies its own listing"
             )
         lister = _literal_lister
-    return opener, lister, True
+    return opener, lister
 
 
 def _literal_lister(path: str) -> list:
@@ -581,7 +520,6 @@ def read_warc(
     path: str,
     record_types: "tuple | str | None" = ("response",),
     decode_text: bool = False,
-    engine: str | None = None,
     opener=None,
     lister=None,
     headers: bool = False,
@@ -594,8 +532,7 @@ def read_warc(
     ``record_types`` filters on WARC-Type (default: the ``response``
     records that carry page content; pass ``("response", "request",
     "metadata", ...)``, a bare string — one type or a comma list —
-    or ``None``/``"*"`` for everything; identical semantics on both
-    engines by construction).  For response
+    or ``None``/``"*"`` for everything).  For response
     records the HTTP head is parsed off — ``http_status`` /
     ``content_type`` come from it and ``body`` is the entity bytes
     (chunked transfer-encoding decoded; gzip/deflate Content-Encoding
@@ -619,32 +556,22 @@ def read_warc(
     crosses Arrow once; quarantined records get NULL.  Feed it to
     ``htmlops.extract_text_html`` for pages.
 
-    ``engine`` (round-14):
-    - ``'stream'`` (default for local/``file:`` paths) — the
-      path-based ``warc`` DataSource: one
-      task per file that OPENS the path and streams chunks ->
-      incremental decompress -> incremental record parse -> bounded
-      Arrow flushes.  Task memory is ~(largest record + read chunk +
-      flush batch) regardless of file size, and there is no file-size
-      limit — a >2 GiB uncompressed daily WARC (legal; the spec caps
-      nothing) ingests where binaryFile's 2 GiB row limit hard-fails.
-    - ``'binaryfile'`` — the previous engine (whole compressed file as
-      one binaryFile row -> row-expanding mapInPandas), kept for plans
-      that compose with other binaryFile-driven columns, and the
-      automatic default for object-store/HDFS schemes the glob-based
-      reader cannot list (explicit 'stream' + remote scheme errors).
-    Zero shuffle either way; both engines share the record-row
-    assembly, so rows are identical (pinned by tests).
+    The reader is the path-based ``warc`` DataSource: one task per
+    file that OPENS the path (:func:`.filesystem.open_path` — local,
+    ``file:``, ``s3://``, ``gs://``; ``hdfs://`` where libhdfs loads)
+    and streams chunks -> incremental decompress -> incremental record
+    parse -> bounded Arrow flushes.  Task memory is ~(largest record +
+    read chunk + flush batch) regardless of file size, and there is no
+    file-size limit — a >2 GiB uncompressed daily WARC (legal; the
+    spec caps nothing) ingests.  Zero shuffle.  ``path`` is a file, a
+    directory (its non-hidden files) or a glob
+    (:func:`.filesystem.list_paths`).
 
-    ``opener``/``lister`` (round-15): the object-store seams —
-    ``opener(path) -> file-like`` (ranged reads) and ``lister(path) ->
-    file paths`` (listing/glob expansion), both pickled to where they
-    run (:func:`fsspec_opener`/:func:`fsspec_lister` are the
-    import-guarded fsspec pair).  With them, ``engine='stream'``
-    becomes the default for ``s3://``/``gs://``/... too: the same
-    bounded-memory watermark and no 2 GiB limit on the deployment
-    where a 100 TB archive actually lives, instead of the r14
-    fallback to whole-blob binaryFile rows.
+    ``opener``/``lister`` (round-15): filesystem seams for stores
+    ``pyarrow.fs`` cannot resolve — ``opener(path) -> file-like``
+    (ranged reads) and ``lister(path) -> file paths`` (listing/glob
+    expansion), both pickled to where they run.  The same
+    bounded-memory watermark holds through them.
 
     ``headers=True`` (round-15) appends two ``map<string,string>``
     columns — ``warc_headers`` (every WARC header, lowercase keys, as
@@ -653,50 +580,16 @@ def read_warc(
     field names combine with ", " per RFC 9110 §5.2) — the WAT-style
     metadata surface for arbitrary-header filtering and analytics
     (Server/Set-Cookie/Link studies) without re-parsing bodies.
-    Identical on both engines and on :func:`read_warc_selected`."""
-    opener, lister, has_fs = _fs_seams(opener, lister, path, "read_warc")
-    engine = _resolve_warc_engine(engine, path, "read_warc", has_fs)
-    if engine == "stream":
-        fmt = _warc_format(spark, opener, lister)
-        rt = _record_types_option(record_types)
-        return (
-            spark.read.format(fmt)
-            .option("record_types", rt)
-            .option("decode_text", str(decode_text).lower())
-            .option("headers", str(headers).lower())
-            .load(path)
-        )
-    if engine != "binaryfile":
-        raise ValueError(
-            "read_warc: engine must be 'stream' or 'binaryfile'"
-        )
-    # parallelism note: binaryFile's split sizing (bytesPerCore +
-    # openCostInBytes padding) already lands ~min(n_files,
-    # defaultParallelism) tasks for small-file layouts and one task
-    # per file for crawl-sized ones (a file can't split), so the
-    # Python parse below parallelizes without an explicit repartition;
-    # measured at bench_scaling.py --crawl, where the residual gap to
-    # linear is VM SMT contention, not task layout.
-    files = spark.read.format("binaryFile").load(path)
-    return files.select("path", "content").mapInPandas(
-        _make_expand(
-            _parse_record_types_option(record_types), decode_text, headers
-        ),
-        _reader_schema(decode_text, headers),
-    )
-
-
-def _typed_frame(cols, rows):
-    """Schema-typed pandas frame for the expansion maps — ONE dtype
-    rule (nullable Int32 for http_status, object elsewhere) shared by
-    the reader and the CDX builder so they cannot drift."""
-    return pd.DataFrame(
-        {
-            c: pd.Series(
-                rows[c], dtype="Int32" if c == "http_status" else "object"
-            )
-            for c in cols
-        }
+    Identical on :func:`read_warc_selected`."""
+    opener, lister = _fs_seams(opener, lister, path, "read_warc")
+    fmt = _warc_format(spark, opener, lister)
+    rt = _record_types_option(record_types)
+    return (
+        spark.read.format(fmt)
+        .option("record_types", rt)
+        .option("decode_text", str(decode_text).lower())
+        .option("headers", str(headers).lower())
+        .load(path)
     )
 
 
@@ -723,8 +616,8 @@ def _append_record_row(
     headers: bool = False,
 ) -> int:
     """Assemble ONE reader-schema row from a parsed record (the shared
-    body of read_warc's expand and read_warc_selected — one copy of
-    the gate/quarantine/decode policy).  Returns the body length for
+    body of the ``warc`` DataSource and read_warc_selected — one copy
+    of the gate/quarantine/decode policy).  Returns the body length for
     the caller's flush accounting."""
     h = rec["headers"]
     wtype = h.get("warc-type", "")
@@ -754,83 +647,24 @@ def _append_record_row(
     return len(body) if body is not None else 0
 
 
-# per-yield bounds for the record-expansion map: a real crawl WARC is
-# ~1 GiB whose decoded bodies are another 1-3 GiB of Python objects —
+# per-flush bounds of the record readers: a real crawl WARC is ~1 GiB
+# whose decoded bodies are another 1-3 GiB of Python objects —
 # accumulating a whole file's rows before yielding would hold all of
-# it per task simultaneously (x32 tasks at local[32]).  Flushing every
-# N records / M expanded bytes keeps rows-in-flight bounded at ~the
-# flush size regardless of file size (the raw file blob + decompressed
-# buffer remain resident — that is binaryFile's inherent unit — but
-# the 2-3x expansion no longer stacks on top of it).
+# it per task simultaneously.  Flushing every N records / M expanded
+# bytes keeps rows-in-flight bounded at ~the flush size regardless of
+# file size.
 _FLUSH_RECORDS = 2048
 _FLUSH_BYTES = 64 << 20
 
 
-def _make_expand(wanted, decode_text: bool = False, headers: bool = False):
-    """The record-expansion mapInPandas body shared by the batch and
-    streaming readers (``wanted`` = lowercased WARC-Type filter set or
-    None).  ``decode_text`` adds a ``body_text`` column decoded HERE —
-    body and content_type are already plain Python objects inside this
-    map, so decoding in-place avoids a second Arrow crossing of the
-    hottest column (quarantined still-encoded records get NULL
-    body_text).
-
-    HTTP parsing is gated on the WARC record's own Content-Type OR a
-    payload sniff: ``application/http`` records and payloads starting
-    ``HTTP/`` (sloppy writers stamp the entity type on the record)
-    get the head parsed off; non-HTTP ``response`` captures (DNS/FTP
-    — legal per ISO 28500) pass through raw with the WARC header's
-    content_type, and a
-    record CLAIMING application/http whose payload won't parse is
-    quarantined with residual ``'http'`` — never a raise, because one
-    such record would kill the file and wedge the checkpointed stream
-    on every replay.
-
-    Yields a DataFrame every ``_FLUSH_RECORDS`` records or
-    ``_FLUSH_BYTES`` expanded body bytes (see constants above) so a
-    1 GiB crawl file never holds its full expansion in flight."""
-    schema = _reader_schema(decode_text, headers)
-    cols = schema.fieldNames()
-
-    def _frame(rows):
-        return _typed_frame(cols, rows)
-
-    def expand(it):
-        for pdf in it:
-            rows = {c: [] for c in cols}
-            pending = 0
-            for fpath, blob in zip(pdf["path"], pdf["content"]):
-                for rec in parse_warc(bytes(blob), who=f"read_warc({fpath})"):
-                    wtype = rec["headers"].get("warc-type", "")
-                    if wanted is not None and wtype.lower() not in wanted:
-                        continue
-                    pending += _append_record_row(
-                        rows, fpath, rec, decode_text,
-                        who=f"read_warc({fpath})", headers=headers,
-                    )
-                    if (
-                        len(rows["body"]) >= _FLUSH_RECORDS
-                        or pending >= _FLUSH_BYTES
-                    ):
-                        yield _frame(rows)
-                        rows = {c: [] for c in cols}
-                        pending = 0
-            yield _frame(rows)
-
-    return expand
-
-
 # ---------------------------------------------------------------------
-# Path-based STREAMING reader (round-14): the default engine of
-# read_warc/read_warc_stream.  The binaryFile engine holds each WHOLE
-# compressed file as one task-resident blob (plus, for plain/zst
-# containers, the full decompressed stream) and hard-fails legal
-# >2 GiB uncompressed WARCs at binaryFile's 2 GiB row limit.  This
-# reader instead opens the PATH on the executor and streams: disk ->
-# _READ_CHUNK-sized reads -> incremental gunzip/zstd -> an incremental
-# record parser whose buffer is bounded by (largest record + chunk),
-# -> bounded Arrow batch flushes.  Task-resident memory is
-# ~max(record) + _READ_CHUNK + flush batch, independent of file size.
+# Path-based STREAMING reader (round-14): the partition body of
+# read_warc/read_warc_stream/cdx_records.  It opens the PATH on the
+# executor and streams: file -> _READ_CHUNK-sized reads -> incremental
+# gunzip/zstd -> an incremental record parser whose buffer is bounded
+# by (largest record + chunk), -> bounded Arrow batch flushes.
+# Task-resident memory is ~max(record) + _READ_CHUNK + flush batch,
+# independent of file size.
 
 _READ_CHUNK = 4 << 20  # bytes per disk read / decompressed chunk
 # a single record IS a row: it must fit in memory (and in an Arrow
@@ -848,8 +682,8 @@ def _gunzip_chunks(chunks, who: str):
     """Incrementally decompress a stream of CONCATENATED gzip members
     (the crawl-standard member-per-record ``.warc.gz`` layout) from an
     iterator of compressed chunks — never holding more than one chunk's
-    worth of compressed input.  Error wording mirrors
-    :func:`_iter_gzip_members` (corrupt / truncated member + offset)."""
+    worth of compressed input.  Errors name the corrupt / truncated
+    member and its offset."""
     import zlib
 
     d = zlib.decompressobj(wbits=31)
@@ -891,10 +725,12 @@ def _gunzip_chunks(chunks, who: str):
 
 
 def _gunzip_members_from_chunks(chunks, who: str):
-    """Streaming twin of :func:`_iter_gzip_members`: yields
-    ``(offset, compressed_length, decompressed member bytes)`` per
-    gzip member from an iterator of COMPRESSED chunks — the CDX
-    random-access contract, without the whole-file blob.  One member
+    """Member iteration for the crawl-standard one-record-per-member
+    ``.warc.gz`` layout: yields ``(offset, compressed_length,
+    decompressed member bytes)`` per gzip member from an iterator of
+    COMPRESSED chunks — the (offset, length) pair IS the CDX
+    random-access contract (seek to offset, read length bytes, gunzip,
+    get the record), without the whole-file blob.  One member
     is held at a time (record-sized in the crawl-standard layout);
     each inflate step is capped at ``_READ_CHUNK`` and the
     accumulated member at ``_MAX_RECORD_BYTES`` — a gzip bomb aborts
@@ -1132,11 +968,11 @@ def _decompressed_chunks(path: str, who: str, opener=None):
     streaming codec, plain files in ``_READ_CHUNK`` reads.
 
     ``opener`` (round-15): ``opener(path) -> file-like`` with
-    ``seek``/``read``/``close`` — the object-store seam (default
-    :func:`_posix_opener`).  The whole engine downstream of here is
-    chunk-iterator-shaped, so a ranged-GET reader gets the same
-    bounded-memory watermark as a local file."""
-    fh = (opener or _posix_opener)(path)
+    ``seek``/``read``/``close`` — the filesystem seam (default
+    :func:`.filesystem.open_path`).  The whole reader downstream of
+    here is chunk-iterator-shaped, so a ranged-GET reader gets the
+    same bounded-memory watermark as a local file."""
+    fh = (opener or open_path)(path)
     try:
         head = fh.read(4)
         fh.seek(0)
@@ -1288,10 +1124,9 @@ def _path_record_batches(
 ):
     """One WARC file path -> Arrow RecordBatches in the reader schema:
     the per-partition body of the ``warc`` DataSource (batch AND
-    stream).  Record-type filter, HTTP gate, quarantine, and flush
-    bounds are shared with the binaryFile expand (``_append_record_row``
-    / ``_FLUSH_RECORDS`` / ``_FLUSH_BYTES``), so the two engines cannot
-    drift."""
+    stream).  Row assembly (``_append_record_row``) and the flush
+    bounds (``_FLUSH_RECORDS`` / ``_FLUSH_BYTES``) are shared with
+    :func:`read_warc_selected`."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -1303,9 +1138,7 @@ def _path_record_batches(
     pending = 0
 
     def flush():
-        return pa.RecordBatch.from_pandas(
-            _typed_frame(cols, rows), schema=pa_schema, preserve_index=False
-        )
+        return pa.RecordBatch.from_pydict(rows, schema=pa_schema)
 
     for rec in _records_from_chunks(
         _decompressed_chunks(path, who, opener), who
@@ -1325,50 +1158,19 @@ def _path_record_batches(
 
 
 def _glob_warc_paths(path: str, lister=None) -> list:
-    """Deterministic file listing for the ``warc`` DataSource: a
-    directory lists its non-hidden regular files (the same dot/_
-    hiding Spark's file sources apply — staged ``.part-*`` tmps must
-    never be read), anything else is a glob; sorted for stable
-    partition order.
+    """Deterministic file listing for the ``warc``/``cdx`` DataSources:
+    :func:`.filesystem.list_paths` on the path's ``pyarrow.fs``
+    filesystem (directory, literal file, or glob; ``.``/``_`` names
+    hidden from expansion), spelled back the way the path was given —
+    bare for local and ``file:`` paths, scheme-qualified for URIs.
 
     ``lister`` (round-15): ``lister(path) -> iterable of file paths``
-    — the object-store seam (see :func:`fsspec_lister`, which applies
-    these same directory/glob/hidden-file rules remotely).  An
-    injected lister owns its expansion semantics; only the
-    deterministic sort is applied here."""
-    import glob as _g
-    import os
-
+    — the filesystem seam.  An injected lister owns its expansion
+    semantics; only the deterministic sort is applied here."""
     if lister is not None:
         return sorted(lister(path))
-
-    p = path
-    if p.startswith("file://"):
-        p = p[len("file://"):]
-    elif p.startswith("file:"):
-        p = p[len("file:"):]
-    if os.path.isdir(p):
-        return sorted(
-            os.path.join(p, f)
-            for f in os.listdir(p)
-            if not f.startswith((".", "_"))
-            and os.path.isfile(os.path.join(p, f))
-        )
-    # an EXPLICIT metacharacter-free path is honored verbatim — the
-    # hidden-file rule is for pattern EXPANSION, not for a file the
-    # user pointed at directly (r14 review, second pass: filtering
-    # here broke read_warc('/data/_rescued.warc'))
-    if not any(c in p for c in "*?["):
-        return [p] if os.path.isfile(p) else []
-    # pattern expansion applies the same hidden-file rule as the
-    # directory branch: '/out/*' must not pick up Spark job markers
-    # (_committed_*, _metadata) the binaryfile engine's Hadoop filter
-    # skips (r14)
-    return sorted(
-        f for f in _g.glob(p)
-        if os.path.isfile(f)
-        and not os.path.basename(f).startswith((".", "_"))
-    )
+    fs, p, prefix = _filesystem(path)
+    return [prefix + f for f in list_paths(fs, p)]
 
 
 from pyspark.sql.datasource import (  # noqa: E402 (after helpers they use)
@@ -1437,10 +1239,11 @@ class WarcDataSource(DataSource):
     ``decode_text`` — add the charset-decoded ``body_text`` column;
     ``headers`` — add the ``warc_headers``/``http_headers`` map
     columns (round-15); ``max_files_per_trigger`` (stream only,
-    round-15) — admit at most N new files per micro-batch.  ``read_warc`` / ``read_warc_stream``
-    are the typed API.  ``_opener``/``_lister`` are the object-store
-    seams, populated only on :func:`_fs_datasource`-derived classes —
-    this base class stays POSIX."""
+    round-15) — admit at most N new files per micro-batch.
+    ``read_warc`` / ``read_warc_stream`` are the typed API.
+    ``_opener``/``_lister`` are the filesystem seams, populated only on
+    :func:`_fs_datasource`-derived classes — this base class lists and
+    opens through ``pyarrow.fs``."""
 
     _opener = None
     _lister = None
@@ -1537,7 +1340,7 @@ class _FileSetStreamReader(DataSourceStreamReader):
     duplicate rows) and seeds the seen-set from the start offset, so
     the ramp lasts exactly one trigger (pinned by the restart test).
 
-    ``lister`` is the object-store listing seam (None = POSIX glob)."""
+    ``lister`` is the listing seam (None = ``pyarrow.fs`` listing)."""
 
     def __init__(self, path: str, lister=None, max_files=None):
         self._path = path
@@ -1606,7 +1409,7 @@ class WarcStreamReader(_FileSetStreamReader):
     """Streaming twin of WarcBatchReader: rotated-in WARC files become
     exactly-once record micro-batches with the batch reader's memory
     bounds, per-trigger admission control (round-15), and the
-    object-store opener/lister seams."""
+    opener/lister seams."""
 
     def __init__(
         self, path, wanted, decode_text,
@@ -1631,7 +1434,7 @@ def register_warc_datasource(spark: SparkSession) -> None:
 
 def _warc_format(spark: SparkSession, opener, lister) -> str:
     """Register and name the ``warc`` format variant for this load:
-    the plain POSIX class, or a :func:`_fs_datasource`-derived
+    the plain ``pyarrow.fs`` class, or a :func:`_fs_datasource`-derived
     ``warc_fs`` carrying the session's opener/lister by value."""
     if opener is None and lister is None:
         register_warc_datasource(spark)
@@ -1642,25 +1445,12 @@ def _warc_format(spark: SparkSession, opener, lister) -> str:
     return "warc_fs"
 
 
-# the binaryFile source's fixed schema — a STREAMING file source needs
-# it stated explicitly (batch infers it)
-_BINARY_FILE_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType()),
-        T.StructField("modificationTime", T.TimestampType()),
-        T.StructField("length", T.LongType()),
-        T.StructField("content", T.BinaryType()),
-    ]
-)
-
-
 def read_warc_stream(
     spark: SparkSession,
     path: str,
     record_types: "tuple | str | None" = ("response",),
     max_files_per_trigger: int | None = None,
     decode_text: bool = False,
-    engine: str | None = None,
     opener=None,
     lister=None,
     headers: bool = False,
@@ -1674,60 +1464,37 @@ def read_warc_stream(
     maps; feed ``pipeline.incremental_clean_ingest_stream`` for the
     dedup-against-standing-indexes loop).
 
-    ``engine`` (round-14): ``'stream'`` — the path-based ``warc``
-    DataSource stream reader (bounded task memory, no 2 GiB file
-    limit; see :func:`read_warc`); ``'binaryfile'`` — the binaryFile
-    file stream (whole-file rows).  Default: ``'stream'`` for
-    local/``file:`` paths and whenever ``opener``/``lister`` are
-    supplied (the round-15 object-store seams — see
-    :func:`read_warc`); ``'binaryfile'`` for seam-less object-store/
-    HDFS schemes (explicit 'stream' on one errors naming the seams).
-    Checkpoints are PER-ENGINE: the two sources serialize different
-    offsets, so don't switch engines under an existing checkpoint.
+    The source is the ``warc`` DataSource stream reader (bounded task
+    memory, no file-size limit; listing and opening as in
+    :func:`read_warc`, ``opener``/``lister`` included).  Its
+    checkpoint holds file-set offsets; a checkpoint written by the
+    former binaryFile file stream does not resume here.
 
     ``max_files_per_trigger`` bounds a micro-batch (a crawl file is
     ~1 GiB; the default processes everything available).  Round-15:
-    supported natively on BOTH engines — the DataSource's
-    ``latestOffset`` admits at most N new sorted files per trigger, so
-    a first trigger against a deep archive plans N files, not the
-    whole directory (a NOTE for restarts: the first trigger after one
-    may admit-and-skip already-done files — see
+    the DataSource's ``latestOffset`` admits at most N new sorted files
+    per trigger, so a first trigger against a deep archive plans N
+    files, not the whole directory (a NOTE for restarts: the first
+    trigger after one may admit-and-skip already-done files — see
     ``_FileSetStreamReader``)."""
     if max_files_per_trigger is not None and max_files_per_trigger < 1:
         raise ValueError(
             "read_warc_stream: max_files_per_trigger must be >= 1"
         )
-    opener, lister, has_fs = _fs_seams(
-        opener, lister, path, "read_warc_stream"
+    opener, lister = _fs_seams(opener, lister, path, "read_warc_stream")
+    fmt = _warc_format(spark, opener, lister)
+    rt = _record_types_option(record_types)
+    reader = (
+        spark.readStream.format(fmt)
+        .option("record_types", rt)
+        .option("decode_text", str(decode_text).lower())
+        .option("headers", str(headers).lower())
     )
-    engine = _resolve_warc_engine(engine, path, "read_warc_stream", has_fs)
-    if engine == "stream":
-        fmt = _warc_format(spark, opener, lister)
-        rt = _record_types_option(record_types)
-        reader = (
-            spark.readStream.format(fmt)
-            .option("record_types", rt)
-            .option("decode_text", str(decode_text).lower())
-            .option("headers", str(headers).lower())
-        )
-        if max_files_per_trigger is not None:
-            reader = reader.option(
-                "max_files_per_trigger", str(max_files_per_trigger)
-            )
-        return reader.load(path)
-    if engine != "binaryfile":
-        raise ValueError(
-            "read_warc_stream: engine must be 'stream' or 'binaryfile'"
-        )
-    wanted = _parse_record_types_option(record_types)
-    reader = spark.readStream.format("binaryFile").schema(_BINARY_FILE_SCHEMA)
     if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(path)
-    return files.select("path", "content").mapInPandas(
-        _make_expand(wanted, decode_text, headers),
-        _reader_schema(decode_text, headers),
-    )
+        reader = reader.option(
+            "max_files_per_trigger", str(max_files_per_trigger)
+        )
+    return reader.load(path)
 
 
 _CDX_SCHEMA = T.StructType(
@@ -1766,10 +1533,9 @@ def _append_cdx_row(
     rows: dict, fpath, off: int, length: int, rec: dict,
     digest_mode: str, who: str,
 ) -> None:
-    """Assemble ONE CDX row from a parsed record + its span (shared by
-    the binaryFile expand and the path-based DataSource, so the two
-    engines cannot drift).  ``digest_mode``: 'decoded' hashes the
-    fully-decoded entity (transfer/content codings undone — two
+    """Assemble ONE CDX row from a parsed record + its span (the row body
+    of the ``cdx`` DataSource). ``digest_mode``: 'decoded' hashes
+    the fully-decoded entity (transfer/content codings undone — two
     captures of identical content match across framings); 'stored'
     hashes the stored payload bytes (interoperates with external CDX
     tooling and WARC-Payload-Digest headers)."""
@@ -1823,10 +1589,10 @@ def _append_cdx_row(
 def _path_cdx_spans(path: str, who: str, opener=None):
     """(offset, length, record) spans streamed from a WARC file PATH:
     per-member spans for .warc.gz (via the streaming member iterator),
-    per-record decompressed-stream spans otherwise — the same span
-    contract as the blob-based builder, bounded memory.  ``opener`` is
-    the object-store seam (default :func:`_posix_opener`)."""
-    with (opener or _posix_opener)(path) as fh:
+    per-record decompressed-stream spans otherwise, bounded memory.
+    ``opener`` is the filesystem seam (default
+    :func:`.filesystem.open_path`)."""
+    with (opener or open_path)(path) as fh:
         head = fh.read(4)
         fh.seek(0)
         if head[:2] == _GZIP_MAGIC:
@@ -1899,9 +1665,7 @@ def _path_cdx_batches(path: str, wanted, digest_mode: str, opener=None):
     rows = {c: [] for c in cols}
 
     def flush():
-        return pa.RecordBatch.from_pandas(
-            _typed_frame(cols, rows), schema=pa_schema, preserve_index=False
-        )
+        return pa.RecordBatch.from_pydict(rows, schema=pa_schema)
 
     for off, length, rec in _path_cdx_spans(path, who, opener):
         wtype = rec["headers"].get("warc-type", "").lower()
@@ -1922,7 +1686,7 @@ class CdxDataSource(DataSource):
     ``path``, ``record_types`` (comma list / ``*``), ``digest``
     ('decoded'|'stored'), ``max_files_per_trigger`` (stream only,
     round-15 admission control).  ``_opener``/``_lister`` are the
-    object-store seams (populated on :func:`_fs_datasource`-derived
+    filesystem seams (populated on :func:`_fs_datasource`-derived
     classes only)."""
 
     _opener = None
@@ -2014,7 +1778,6 @@ def cdx_records(
     path: str,
     record_types: "tuple | str | None" = ("response",),
     digest: str = "decoded",
-    engine: str | None = None,
     opener=None,
     lister=None,
 ) -> DataFrame:
@@ -2053,37 +1816,21 @@ def cdx_records(
     hash their raw bytes either way; the quarantine policy is the
     reader's: no record raises.
 
-    ``engine='stream'`` (default, round-14): the path-based ``cdx``
-    DataSource — one task per file streaming spans from the path with
-    bounded memory and no 2 GiB file limit (the member iterator holds
-    one gzip member at a time).  ``engine='binaryfile'`` keeps the
-    previous whole-blob expand.  Zero shuffle either way; emit order
-    is file order.  A CDX FILE is sorted by (urlkey, cdx_ts): add
-    ``.orderBy("urlkey", "cdx_ts")`` before writing — the sort is a
-    real shuffle, priced only when the artifact needs it (or land it
-    pruned with :func:`write_cdx`)."""
-    from zeek_duckdb_spark.operators.textops import surt_key
-    from pyspark.sql import functions as F
-
+    The index comes from the path-based ``cdx`` DataSource — one task
+    per file streaming spans from the path with bounded memory and no
+    file size limit (the member iterator holds one gzip member at a time);
+    listing, opening and ``opener``/``lister`` as in :func:`read_warc`.
+    Zero shuffle; emit order is file order. A CDX FILE is sorted by
+    (urlkey, cdx_ts): add ``.orderBy("urlkey", "cdx_ts")`` before
+    writing — the sort is a real shuffle, priced only when the artifact
+    needs it (or land it pruned with :func:`write_cdx`)."""
     if digest not in ("decoded", "stored"):
         raise ValueError("cdx_records: digest must be 'decoded' or 'stored'")
-    opener, lister, has_fs = _fs_seams(opener, lister, path, "cdx_records")
-    engine = _resolve_warc_engine(engine, path, "cdx_records", has_fs)
-    if engine == "stream":
-        return _cdx_frame(
-            spark, path, record_types, digest, streaming=False,
-            opener=opener, lister=lister,
-        )
-    if engine != "binaryfile":
-        raise ValueError(
-            "cdx_records: engine must be 'stream' or 'binaryfile'"
-        )
-    wanted = _parse_record_types_option(record_types)
-    files = spark.read.format("binaryFile").load(path)
-    out = files.select("path", "content").mapInPandas(
-        _make_cdx_expand(wanted, digest), _CDX_SCHEMA
+    opener, lister = _fs_seams(opener, lister, path, "cdx_records")
+    return _cdx_frame(
+        spark, path, record_types, digest, streaming=False,
+        opener=opener, lister=lister,
     )
-    return out.withColumn("urlkey", surt_key(F.col("url")))
 
 
 def cdx_records_stream(
@@ -2114,9 +1861,8 @@ def cdx_records_stream(
 
     ``max_files_per_trigger`` (round-15): admit at most N new WARC
     files per micro-batch — bounds first-trigger planning on a deep
-    archive.  ``opener``/``lister`` (round-15): the object-store seams
-    (see :func:`read_warc`); without them the file-set offsets glob
-    through POSIX, so seam-less remote schemes error here."""
+    archive.  Listing, opening and ``opener``/``lister`` as in
+    :func:`read_warc`."""
     if digest not in ("decoded", "stored"):
         raise ValueError(
             "cdx_records_stream: digest must be 'decoded' or 'stored'"
@@ -2125,15 +1871,7 @@ def cdx_records_stream(
         raise ValueError(
             "cdx_records_stream: max_files_per_trigger must be >= 1"
         )
-    opener, lister, has_fs = _fs_seams(
-        opener, lister, path, "cdx_records_stream"
-    )
-    if not has_fs and not _is_local_path(path):
-        raise ValueError(
-            f"cdx_records_stream: cannot glob '{path}' — pass opener= "
-            "and lister= (e.g. the fsspec pair), mount the store, or "
-            "index in batch"
-        )
+    opener, lister = _fs_seams(opener, lister, path, "cdx_records_stream")
     return _cdx_frame(
         spark, path, record_types, digest, streaming=True,
         opener=opener, lister=lister,
@@ -2174,123 +1912,6 @@ def _cdx_frame(
         )
     out = src.load(path)
     return out.withColumn("urlkey", surt_key(F.col("url")))
-
-
-def _make_cdx_expand(wanted, digest_mode: str = "decoded"):
-    """CDX row builder (binaryFile engine): per-member spans for
-    .warc.gz, per-record spans otherwise; HTTP gating + quarantine
-    identical to :func:`_make_expand`; bounded flushes.  Row assembly
-    is :func:`_append_cdx_row`, shared with the path engine."""
-
-    def expand(it):
-        cols = _CDX_SCHEMA.fieldNames()
-
-        def _frame(rows):
-            return _typed_frame(cols, rows)
-
-        for pdf in it:
-            rows = {c: [] for c in cols}
-            for fpath, blob in zip(pdf["path"], pdf["content"]):
-                who = f"cdx_records({fpath})"
-                raw = bytes(blob)
-                if raw[:2] == _GZIP_MAGIC:
-                    spans = (
-                        (off, clen, rec)
-                        for off, clen, data in _iter_gzip_members(raw, who)
-                        for _s, _e, rec in _record_spans(data, who)
-                    )
-                else:
-                    data = _decompress_container(raw, who)
-                    spans = (
-                        (s, e - s, rec)
-                        for s, e, rec in _record_spans(data, who)
-                    )
-                for off, length, rec in spans:
-                    wtype = rec["headers"].get("warc-type", "").lower()
-                    if wanted is not None and wtype not in wanted:
-                        continue
-                    _append_cdx_row(
-                        rows, fpath, off, length, rec, digest_mode, who
-                    )
-                    if len(rows["url"]) >= _FLUSH_RECORDS:
-                        yield _frame(rows)
-                        rows = {c: [] for c in cols}
-            yield _frame(rows)
-
-    return expand
-
-
-def _posix_opener(path: str):
-    """Default span opener: POSIX open of a local/mounted path
-    (``file:`` prefix tolerated).  The injection seam of
-    :func:`read_warc_selected` — swap for a ranged-GET reader on
-    object stores."""
-    local = path
-    if local.startswith("file://"):
-        local = local[len("file://"):]
-    elif local.startswith("file:"):
-        local = local[len("file:"):]
-    return open(local, "rb")
-
-
-def fsspec_opener(**kwargs):
-    """Object-store opener factory for :func:`read_warc_selected`,
-    behind an import guard: returns ``opener(path) -> file-like``
-    whose ``seek``/``read`` issue ranged GETs through fsspec
-    (``s3://``, ``gs://``, ``https://`` ... per installed backends).
-    fsspec is not bundled here — raises ImportError naming it.  The
-    returned callable must be picklable, so pass credentials through
-    ``kwargs`` (storage options), not closures over live clients."""
-    import fsspec  # noqa: F401 — the guard
-
-    import functools
-
-    return functools.partial(_fsspec_open, kwargs)
-
-
-def _fsspec_open(kwargs: dict, path: str):
-    import fsspec
-
-    return fsspec.open(path, "rb", **kwargs).open()
-
-
-def fsspec_lister(**kwargs):
-    """Object-store listing factory (round-15) — the ``lister=`` twin
-    of :func:`fsspec_opener`: returns ``lister(path) -> [paths]``
-    applying :func:`_glob_warc_paths`'s directory/glob/hidden-file
-    rules through fsspec (``s3://``, ``gs://``, ... per installed
-    backends), with scheme-qualified results so the paired opener can
-    re-open them.  Import-guarded; pass storage options through
-    ``kwargs`` so the callable stays picklable."""
-    import fsspec  # noqa: F401 — the guard
-
-    import functools
-
-    return functools.partial(_fsspec_list, kwargs)
-
-
-def _fsspec_list(kwargs: dict, path: str) -> list:
-    import posixpath
-
-    import fsspec
-
-    fs, rest = fsspec.core.url_to_fs(path, **kwargs)
-
-    def _hidden(p: str) -> bool:
-        return posixpath.basename(p).startswith((".", "_"))
-
-    if fs.isdir(rest):
-        out = [
-            p for p in fs.ls(rest, detail=False)
-            if fs.isfile(p) and not _hidden(p)
-        ]
-    elif any(c in rest for c in "*?["):
-        out = [p for p in fs.glob(rest) if fs.isfile(p) and not _hidden(p)]
-    else:
-        # a literal path the user pointed at directly is honored even
-        # if hidden — same rule as the POSIX listing
-        out = [rest] if fs.isfile(rest) else []
-    return sorted(fs.unstrip_protocol(p) for p in out)
 
 
 def read_warc_selected(
@@ -2335,10 +1956,10 @@ def read_warc_selected(
 
     ``opener`` (round-14): ``opener(path) -> file-like`` with
     ``seek``/``read``, pickled to executors; default
-    :func:`_posix_opener` (local/mounted paths).  On object stores —
-    where ranged GETs are the whole point of a CDX — inject
-    :func:`fsspec_opener` (import-guarded) or any client wrapper; the
-    span arithmetic and row assembly are reader-independent."""
+    :func:`.filesystem.open_path` (local, ``file:``, ``s3://``,
+    ``gs://`` — seekable, so each span is one ranged read).  Inject
+    any client wrapper for other stores; the span arithmetic and row
+    assembly are reader-independent."""
     from pyspark.sql import functions as F
 
     if task_bytes < 1:
@@ -2383,21 +2004,27 @@ def read_warc_selected(
         .repartition(F.col("warc_file"), F.col("_bucket"))
         .sortWithinPartitions("warc_file", "_bucket", "offset")
     )
-    open_fn = opener or _posix_opener
+    open_fn = opener or open_path
     schema = _reader_schema(decode_text, headers)
     cols = schema.fieldNames()
 
     def fetch(it):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        pa_schema = to_arrow_schema(schema)
         cur_path = None
         fh = None
         rows = {c: [] for c in cols}
         pending = 0
 
         try:
-            for pdf in it:
+            for batch in it:
                 for fpath, off, length, want_ids, want_urls, want_all in zip(
-                    pdf["warc_file"], pdf["offset"], pdf["length"],
-                    pdf["_want_ids"], pdf["_want_urls"], pdf["_want_all"],
+                    *(batch.column(c).to_pylist() for c in (
+                        "warc_file", "offset", "length",
+                        "_want_ids", "_want_urls", "_want_all",
+                    ))
                 ):
                     local = str(fpath)
                     if local != cur_path:
@@ -2509,15 +2136,17 @@ def read_warc_selected(
                             len(rows["body"]) >= _FLUSH_RECORDS
                             or pending >= _FLUSH_BYTES
                         ):
-                            yield _typed_frame(cols, rows)
+                            yield pa.RecordBatch.from_pydict(
+                                rows, schema=pa_schema
+                            )
                             rows = {c: [] for c in cols}
                             pending = 0
-            yield _typed_frame(cols, rows)
+            yield pa.RecordBatch.from_pydict(rows, schema=pa_schema)
         finally:
             if fh is not None:
                 fh.close()
 
-    return sel.mapInPandas(fetch, schema)
+    return sel.mapInArrow(fetch, schema)
 
 
 def extract_warc(
@@ -2557,8 +2186,8 @@ def extract_warc(
     renames staged dot-tmps after the job (all-or-nothing: a died job
     leaves no visible shard) and returns a manifest dict
     ``{"files": n, "records_spans": n, "bytes": n}``.  ``opener`` is
-    the object-store READ seam; the sink is POSIX/NFS-scope like the
-    zeek/WET writers.
+    the READ seam (default :func:`.filesystem.open_path`); the sink is
+    POSIX/NFS-scope like the zeek/WET writers.
 
     ``warcinfo=True`` prepends each shard with a deterministic
     ``warcinfo`` record member naming this engine (the Common Crawl /
@@ -2582,7 +2211,7 @@ def extract_warc(
         .repartition(F.col("warc_file"), F.col("_bucket"))
         .sortWithinPartitions("warc_file", "_bucket", "offset")
     )
-    open_fn = opener or _posix_opener
+    open_fn = opener or open_path
     run_tag = _uuid.uuid4().hex[:8]
 
     def fill(it, open_tmp, final):
