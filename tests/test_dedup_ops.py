@@ -51,13 +51,17 @@ def test_minhash_lsh_finds_near_dups_and_orders_ids(spark):
     assert 0.0 < pairs[0].jaccard <= 1.0
 
 
-def test_minhash_verify_shapes_identical_and_guarded(spark):
+def test_minhash_verify_shapes_identical_and_guarded(spark, tmp_path):
     """r17: the two verification join shapes — 'broadcast' (small
     corpora; planner broadcasts the (id, text) side) and 'semi'
     (semi-join the corpus to candidate ids, shingles once per distinct
-    doc) — return IDENTICAL pairs, the coverage guard fires loudly on
-    both, and 'auto' picks 'broadcast' for a tiny in-memory corpus."""
+    doc) — return IDENTICAL pairs and the coverage guard fires loudly
+    on both.  The shape is size-driven only, so the broadcast budget
+    steers a parquet-backed corpus from one shape to the other; a tiny
+    in-memory corpus keeps the broadcast shape."""
     from pyspark.errors import PySparkException
+
+    from zeek_duckdb_spark.plans import audit
 
     base = " ".join(f"tok{i}" for i in range(30))
     rows = [
@@ -66,31 +70,40 @@ def test_minhash_verify_shapes_identical_and_guarded(spark):
         (12, base + " other tail words"),
         (13, "completely different words entirely here now again"),
     ]
-    docs = _docs(spark, rows)
+    path = str(tmp_path / "docs.parquet")
+    _docs(spark, rows).coalesce(1).write.parquet(path)
+    docs = spark.read.parquet(path)
     sigs = dd.minhash_signatures(docs, num_hashes=32, shingle_k=3)
+    bcast = "spark.sql.autoBroadcastJoinThreshold"
+    saved = spark.conf.get(bcast)
     got = {}
-    for shape in ("broadcast", "semi"):
-        got[shape] = sorted(
-            (r.id_a, r.id_b, r.jaccard)
-            for r in dd.minhash_lsh_pairs(
-                sigs, bands=8, threshold=0.3, verify_with=docs,
-                verify_shape=shape,
+    try:
+        # ~600 B of text: below 1g // 4, above 1k // 4
+        for shape, thr in (("broadcast", "1g"), ("semi", "1k")):
+            spark.conf.set(bcast, thr)
+            assert dd._verify_shape_auto(docs, "doc_id", "text") == shape
+            pairs = dd.minhash_lsh_pairs(
+                sigs, bands=8, threshold=0.3, verify_with=docs
+            )
+            assert ("LeftSemi" in audit.physical_plan(pairs)) == (
+                shape == "semi"
+            )
+            got[shape] = sorted(
+                (r.id_a, r.id_b, r.jaccard) for r in pairs.collect()
+            )
+        assert got["broadcast"] == got["semi"] and got["semi"]
+        # under-covering verify_with raises per-row on the semi shape too
+        with pytest.raises(PySparkException, match="does not cover"):
+            dd.minhash_lsh_pairs(
+                sigs, bands=8, threshold=0.3,
+                verify_with=docs.filter(F.col("doc_id") != 11),
             ).collect()
-        )
-    assert got["broadcast"] == got["semi"] and got["semi"]
-    # under-covering verify_with raises per-row on the semi shape too
-    with pytest.raises(PySparkException, match="does not cover"):
-        dd.minhash_lsh_pairs(
-            sigs, bands=8, threshold=0.3,
-            verify_with=docs.filter(F.col("doc_id") != 11),
-            verify_shape="semi",
-        ).collect()
-    # auto on a tiny (non-file) corpus keeps the broadcast shape
-    assert dd._verify_shape_auto(docs, "doc_id", "text") == "broadcast"
-    with pytest.raises(ValueError, match="verify_shape"):
-        dd.minhash_lsh_pairs(
-            sigs, verify_with=docs, verify_shape="bogus"
-        ).collect()
+    finally:
+        spark.conf.set(bcast, saved)
+    # a tiny (non-file) corpus keeps the broadcast shape
+    assert dd._verify_shape_auto(
+        _docs(spark, rows), "doc_id", "text"
+    ) == "broadcast"
 
 
 def test_simhash_hamming_tracks_similarity(spark):
@@ -1321,62 +1334,85 @@ def test_compact_chunk_index_roundtrip(spark, tmp_path):
     assert all(d.startswith("blk=") and "pfx=" in d for d in dirs)
 
 
-def test_minhash_arrow_kernel_bit_identical(spark):
-    """kernel='arrow' (numpy permutations over JVM md5 bases) must be
-    BIT-IDENTICAL to the expr path — exact int64 arithmetic both ways
-    — including the empty-shingle sentinel and NULL text; and the full
-    LSH pipeline over arrow signatures (verify_with) returns the same
-    pairs.  A shingle-less arrow frame without verify_with refuses
-    loudly."""
-    import pytest
+def _minhash_reference(text, num_hashes, shingle_k, seed):
+    """Sequential restatement of minhash_signatures for one doc:
+    lower + whitespace tokens, distinct k-shingles, one 28-bit md5 base
+    per shingle, then min over (a*h + b) mod 2^31-1 per hash (the
+    all-P31 sentinel when there is no shingle)."""
+    import hashlib
+    import re
+
+    from zeek_duckdb_spark.operators.hashutil import P31, affine_coeffs
+
+    if text is None:
+        toks = []
+    else:
+        toks = re.split(r"\s+", text.lower().strip())
+    shingles = list(dict.fromkeys(
+        " ".join(toks[i:i + shingle_k])
+        for i in range(len(toks) - shingle_k + 1)
+    ))
+    bases = [int(hashlib.md5(sh.encode()).hexdigest()[:7], 16)
+             for sh in shingles]
+    sig = [min(((a * h + b) % P31 for h in bases), default=P31)
+           for a, b in affine_coeffs(num_hashes, seed)]
+    return sig, shingles
+
+
+def test_minhash_signatures_match_sequential_reference(spark):
+    """Signatures and shingles equal the sequential reference, including
+    the empty-shingle sentinel and NULL text; a frame without its
+    shingles column verifies through verify_with with the same pairs
+    and refuses loudly without it."""
+    from zeek_duckdb_spark.operators.hashutil import P31
 
     rows = [
         (1, "alpha beta gamma delta epsilon zeta eta theta"),
-        (2, "alpha beta gamma delta epsilon zeta eta iota"),
+        (2, "Alpha beta  gamma delta epsilon zeta eta iota"),
         (3, "completely different words here in this doc"),
         (4, "ab"),            # shorter than the shingle width
         (5, ""),              # empty
         (6, None),            # NULL text
-    ] + [(100 + i, " ".join(f"w{i}x{j}" for j in range(10))) for i in range(30)]
+    ] + [(100 + i, " ".join(f"w{i}x{j % 7}" for j in range(10)))
+         for i in range(30)]
     docs = _docs(spark, rows).repartition(5)
 
-    e = dd.minhash_signatures(docs, num_hashes=32, shingle_k=3)
-    a = dd.minhash_signatures(docs, num_hashes=32, shingle_k=3,
-                              kernel="arrow")
-    assert "shingles" not in a.columns  # strings never cross Arrow
-    esig = {r.doc_id: (list(r.minhash), r["__nonempty"])
-            for r in e.collect()}
-    asig = {r.doc_id: (list(r.minhash), r["__nonempty"])
-            for r in a.collect()}
-    assert asig == esig
+    sigs = dd.minhash_signatures(docs, num_hashes=32, shingle_k=3)
+    got = {r.doc_id: r for r in sigs.collect()}
+    assert set(got) == {d for d, _t in rows}
+    for doc_id, text in rows:
+        sig, shingles = _minhash_reference(text, 32, 3, 1)
+        assert list(got[doc_id].minhash) == sig, doc_id
+        assert list(got[doc_id].shingles) == shingles, doc_id
+    for doc_id in (4, 5, 6):
+        assert list(got[doc_id].minhash) == [P31] * 32
+        assert not got[doc_id]["__nonempty"]
 
     want = {
         (r.id_a, r.id_b): r.jaccard
         for r in dd.minhash_lsh_pairs(
-            e, bands=8, threshold=0.5, verify_with=docs
+            sigs, bands=8, threshold=0.5, verify_with=docs
         ).collect()
     }
-    got = {
+    bare = sigs.drop("shingles")
+    got_pairs = {
         (r.id_a, r.id_b): r.jaccard
         for r in dd.minhash_lsh_pairs(
-            a, bands=8, threshold=0.5, verify_with=docs
+            bare, bands=8, threshold=0.5, verify_with=docs
         ).collect()
     }
-    assert got == want and (1, 2) in got
-
+    assert got_pairs == want and (1, 2) in got_pairs
     with pytest.raises(ValueError, match="verify_with"):
-        dd.minhash_lsh_pairs(a, bands=8, threshold=0.5).collect()
-    with pytest.raises(ValueError, match="kernel"):
-        dd.minhash_signatures(docs, kernel="gpu")
+        dd.minhash_lsh_pairs(bare, bands=8, threshold=0.5).collect()
 
 
 @pytest.mark.slow
-def test_minhash_incremental_supports_arrow_frames_via_verify_with(spark):
-    """The incremental daily-crawl pass over kernel='arrow' signature
-    frames: verify_with computes candidate shingles (the frames carry
-    none), results equal the expr-frame incremental pass; without
-    verify_with the arrow frame refuses with the actionable error,
-    not an unresolved-column crash."""
+def test_minhash_incremental_shingleless_frames_via_verify_with(spark):
+    """The incremental daily-crawl pass over signature frames stored
+    without their shingles column: verify_with computes candidate
+    shingles, results equal the full-frame incremental pass; without
+    verify_with the bare frame refuses with the actionable error, not
+    an unresolved-column crash."""
     import pytest
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -1400,8 +1436,8 @@ def test_minhash_incremental_supports_arrow_frames_via_verify_with(spark):
             bands=8, threshold=0.5,
         ).collect()
     }
-    a_new = dd.minhash_signatures(new_docs, kernel="arrow", **k)
-    a_idx = dd.minhash_signatures(idx_docs, kernel="arrow", **k)
+    a_new = dd.minhash_signatures(new_docs, **k).drop("shingles")
+    a_idx = dd.minhash_signatures(idx_docs, **k).drop("shingles")
     got = {
         (r.id_a, r.id_b): r.jaccard
         for r in dd.minhash_lsh_pairs_incremental(

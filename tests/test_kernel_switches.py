@@ -1,16 +1,16 @@
 """One kernel per operator: a ``kernel=`` switch survives only where a
-measured crossover or a pending A/B keeps two implementations (see
-SCALING.md "One kernel per operator")."""
+measured crossover keeps two implementations, and no operator takes a
+user-set ``verify_shape`` (see SCALING.md "One kernel per operator")."""
 
 import ast
 import pathlib
 
 import zeek_duckdb_spark
 
-KEPT = {"logreg_score", "filter_by_classifier", "minhash_signatures", "topk_neighbors"}
+KEPT = {"logreg_score", "filter_by_classifier"}
 
 
-def test_only_the_kept_operators_take_a_kernel_parameter():
+def _params_named(name):
     root = pathlib.Path(zeek_duckdb_spark.__file__).parent
     hits = set()
     for path in sorted(root.rglob("*.py")):
@@ -19,6 +19,16 @@ def test_only_the_kept_operators_take_a_kernel_parameter():
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 a = node.args
                 names = [x.arg for x in a.posonlyargs + a.args + a.kwonlyargs]
-                if "kernel" in names:
+                if name in names:
                     hits.add((rel, node.name))
+    return hits
+
+
+def test_only_the_kept_operators_take_a_kernel_parameter():
+    hits = _params_named("kernel")
     assert {name for _, name in hits} == KEPT, sorted(hits)
+
+
+def test_no_operator_takes_a_verify_shape_parameter():
+    hits = _params_named("verify_shape")
+    assert not hits, sorted(hits)

@@ -23,19 +23,15 @@ def test_exact_topk_self_similarity(spark, emb):
     assert r.vec_id == 0 and abs(r.cosine_sim - 1.0) < 1e-6
 
 
-def test_arrow_kernel_matches_expr_kernel(spark, emb):
-    # the Arrow fast path must return the same rows in the same order
-    # as the bit-reproducible fold after the 6-dp round
+def test_batch_topk_single_query_matches_expr_topk(spark, emb):
+    # one query row through the numpy batch scorer must return the same
+    # rows in the same order as the bit-reproducible fold after the
+    # 6-dp round
     q = emb.filter(F.col("vec_id") == 0)
-    a = sim.topk_neighbors(emb, q, k=20, query_id_col="vec_id", kernel="expr").collect()
-    b = sim.topk_neighbors(emb, q, k=20, query_id_col="vec_id", kernel="arrow").collect()
+    a = sim.topk_neighbors(emb, q, k=20, query_id_col="vec_id").collect()
+    b = sim.topk_neighbors_batch(emb, q, k=20).collect()
+    assert len(a) == 20
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
-def test_arrow_kernel_rejects_multirow_query(spark, emb):
-    q = emb.filter(F.col("vec_id") < 2)
-    with pytest.raises(ValueError, match="one query row"):
-        sim.topk_neighbors(emb, q, k=5, query_id_col="vec_id", kernel="arrow")
 
 
 def test_ivf_recall_vs_exact(spark, emb):
@@ -143,7 +139,7 @@ def test_batch_topk_matches_per_query_topk(spark, emb):
     for qid in got:
         one = sim.topk_neighbors(
             emb, emb.filter(F.col("vec_id") == qid), k=5,
-            query_id_col="vec_id", kernel="arrow",
+            query_id_col="vec_id",
         ).collect()
         assert [(r.vec_id, r.cosine_sim) for r in one] == got[qid]
 
@@ -173,7 +169,7 @@ def test_batch_topk_boundary_cut_uses_rounded_tiebreak(spark):
     assert len(out) == 1
     assert out[0].vec_id == 1 and out[0].cosine_sim == 1.0
     # and it agrees with the single-query global path
-    one = sim.topk_neighbors(df, q, k=1, query_id_col="vec_id", kernel="arrow").collect()
+    one = sim.topk_neighbors(df, q, k=1, query_id_col="vec_id").collect()
     assert (out[0].vec_id, out[0].cosine_sim) == (one[0].vec_id, one[0].cosine_sim)
 
 
@@ -192,9 +188,9 @@ def test_batch_topk_string_ids(spark):
 
 
 def test_topk_kernels_exclude_nan_scores(spark):
-    # zero-norm vectors have undefined cosine -> excluded in EVERY
-    # kernel (Spark sorts NaN first under DESC, numpy lexsort last;
-    # without the filter the kernels would disagree)
+    # zero-norm vectors have undefined cosine -> excluded by EVERY
+    # top-k path (Spark sorts NaN first under DESC, numpy lexsort last;
+    # without the filter the paths would disagree)
     rows = [
         (1, [1.0, 0.0]),
         (2, [0.0, 0.0]),   # degenerate: zero norm
@@ -202,10 +198,9 @@ def test_topk_kernels_exclude_nan_scores(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<double>")
-    for kernel in ("expr", "arrow"):
-        got = [r.vec_id for r in
-               sim.topk_neighbors(df, q, k=3, query_id_col="vec_id", kernel=kernel).collect()]
-        assert got == [1, 3], kernel
+    got = [r.vec_id for r in
+           sim.topk_neighbors(df, q, k=3, query_id_col="vec_id").collect()]
+    assert got == [1, 3]
     got = [r.vec_id for r in sim.topk_neighbors_batch(df, q, k=3).collect()]
     assert got == [1, 3]
     got = [r.vec_id for r in sim.quantized_topk(df, q, k=3).collect()]
@@ -379,7 +374,7 @@ def test_batch_topk_rescore_matches_expr_fold(spark, emb):
     for qid in (0, 1):
         one = sim.topk_neighbors(
             emb, emb.filter(F.col("vec_id") == qid), k=10,
-            query_id_col="vec_id", kernel="expr",
+            query_id_col="vec_id",
         ).collect()
         got = [(r.vec_id, r.cosine_sim) for r in rescored if r.q_id == qid]
         assert got == [(r.vec_id, r.cosine_sim) for r in one]

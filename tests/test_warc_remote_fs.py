@@ -346,6 +346,48 @@ def test_file_uri_end_to_end(spark, tmp_path):
     assert rows(spark.read.parquet(out)) == got
 
 
+def test_plain_datasources_register_once_per_session(
+    spark, tmp_path, monkeypatch
+):
+    """The plain ``warc``/``cdx`` DataSources register once per
+    session: a second read_warc or cdx_records makes no further
+    ``spark.dataSource.register`` call.  The seam variants carry their
+    callables by value, so they still register on every load."""
+    import weakref
+
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from zeek_duckdb_spark.sources import warc
+
+    names = []
+    real = DataSourceRegistration.register
+
+    def counting(self, ds):
+        names.append(ds.name())
+        return real(self, ds)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counting)
+    # forget earlier tests' registrations so the first load registers
+    monkeypatch.setattr(warc, "_REGISTERED", weakref.WeakKeyDictionary())
+    files = _two_files()
+    for name, blob in files.items():
+        (tmp_path / name.rsplit("/", 1)[1]).write_bytes(blob)
+    path = str(tmp_path / "*.warc.gz")
+
+    assert read_warc(spark, path).count() == 3
+    assert cdx_records(spark, path).count() == 3
+    assert names == ["warc", "cdx"]
+    assert read_warc(spark, path).count() == 3
+    assert cdx_records(spark, path).count() == 3
+    assert names == ["warc", "cdx"]
+
+    opener, lister = _mem_fs(files)
+    for _ in range(2):
+        read_warc(spark, "mem://bucket/*.warc.gz",
+                  opener=opener, lister=lister)
+    assert names == ["warc", "cdx", "warc_fs", "warc_fs"]
+
+
 def test_hdfs_without_libhdfs_fails_on_driver(spark):
     """hdfs:// resolves through pyarrow.fs.HadoopFileSystem, which
     needs libhdfs: without it read_warc raises a ValueError on the

@@ -135,7 +135,6 @@ def minhash_signatures(
     shingle_k: int = 3,
     seed: int = 1,
     min_parallelism: int | None = None,
-    kernel: str = "expr",
 ) -> DataFrame:
     """MinHash signature per document: signature[i] =
     min over shingles of (a_i * h(shingle) + b_i) mod 2^31-1, where
@@ -163,34 +162,11 @@ def minhash_signatures(
     projection chain by predicate pushdown and re-evaluates the md5
     fold per row (measured 10x: 0.32 s vs 3.6 s at sf0.1).
 
-    ``kernel``: ``"expr"`` (default) keeps everything in JVM
-    expressions — the oracle-restatable path.  ``"arrow"`` computes
-    the md5 BASE hashes in the JVM (hashing stays engine-portable)
-    but runs the N affine permutations + mins as one numpy
-    ``minimum.reduceat`` pass per Arrow batch — the permutation HOFs
-    (``transform``+``array_min``) are CodegenFallback (interpreted,
-    one array allocation per hash per row), so their cost grows with
-    ``num_hashes`` while the numpy pass barely does.  Exact int64
-    arithmetic both ways (a*h < 2^59), so the two kernels are
-    BIT-IDENTICAL (pinned by tests) and either satisfies the same
-    oracle.  MEASURED (sf~5, 100k docs, interleaved medians of 3):
-    at the default num_hashes=32 the kernels tie — tokenize + one
-    md5 per shingle is the shared base cost and the Arrow boundary
-    eats the permutation win (sig-only 5.35 s expr vs 5.12 s arrow;
-    full LSH pipeline parity) — but at num_hashes=128 the arrow
-    kernel is 1.37x on the signature stage (7.89 s vs 5.77 s).  Keep
-    the default at 32 hashes; switch when you raise the hash count.
-    The arrow output omits the ``shingles`` column (the strings
-    would ride the Arrow boundary for nothing — at 100 TB that is
-    most of the transfer); pair verification must therefore use
-    ``minhash_lsh_pairs(verify_with=docs)``, which is the right
-    call on every tier anyway (see its docstring).
+    This is the only kernel: a numpy permutation pass over Arrow
+    batches tied it at num_hashes=32 and could not carry the
+    ``shingles`` column that stored-shingle verification reads
+    (SCALING.md "One kernel per operator").
     """
-    if kernel not in ("expr", "arrow"):
-        raise ValueError(
-            f"minhash_signatures: kernel must be 'expr' or 'arrow', "
-            f"got {kernel!r}"
-        )
     toked = _ensure_parallelism(df, min_parallelism).select(
         F.col(id_col), tokens(F.lower(F.col(text_col))).alias("__toks")
     )
@@ -209,71 +185,6 @@ def minhash_signatures(
         ).alias("__bases"),
     )
     coeffs = affine_coeffs(num_hashes, seed)
-    if kernel == "arrow":
-        import pandas as pd
-
-        id_type = df.schema[id_col].dataType.simpleString()
-        src = based.select(
-            F.col(id_col), F.col("__bases"), F.col("__nonempty")
-        )
-
-        def batches(it):
-            import numpy as np
-
-            sentinel = [P31] * num_hashes
-            for pdf in it:
-                n = len(pdf)
-                if n == 0:
-                    continue
-                bases = pdf["__bases"]
-                lens = np.fromiter(
-                    (0 if v is None else len(v) for v in bases),
-                    dtype=np.int64,
-                    count=n,
-                )
-                sigs: list = [None] * n
-                nz = np.nonzero(lens > 0)[0]
-                if len(nz):
-                    flat = np.concatenate(
-                        [np.asarray(bases.iloc[i], dtype=np.int64)
-                         for i in nz]
-                    )
-                    starts = np.concatenate(
-                        ([0], np.cumsum(lens[nz])[:-1])
-                    ).astype(np.int64)
-                    # one vectorized pass per hash keeps peak memory at
-                    # O(total shingles), not O(H * total shingles);
-                    # exact int64: base < 2^28, a < 2^31 -> a*h < 2^59
-                    mins = np.empty((len(coeffs), len(nz)), dtype=np.int64)
-                    for hi, (a, b) in enumerate(coeffs):
-                        mins[hi] = np.minimum.reduceat(
-                            (a * flat + b) % P31, starts
-                        )
-                    # transpose once, then C-side tolist(): 3.2M
-                    # Python int() calls at 100k docs x 32 hashes is
-                    # exactly the interpreter overhead this kernel
-                    # exists to avoid
-                    cols = mins.T.tolist()
-                    for j, i in enumerate(nz):
-                        sigs[i] = cols[j]
-                for i in range(n):
-                    if sigs[i] is None:
-                        sigs[i] = sentinel
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        "minhash": sigs,
-                        "__nonempty": pdf["__nonempty"],
-                    }
-                )
-
-        return src.mapInPandas(
-            batches,
-            schema=(
-                f"{id_col} {id_type}, minhash array<bigint>, "
-                "__nonempty boolean"
-            ),
-        )
     # one F.expr over a generated SQL string: building N HOF trees
     # through the Column API costs ~0.9 s of py4j round-trips per plan
     # construction; one server-side parse costs milliseconds
@@ -425,7 +336,6 @@ def _attach_verify_shingles(
     id_col: str,
     text_col: str,
     shingle_k: int,
-    verify_shape: str,
     who: str,
 ):
     """Attach verification shingles to a candidate-pair frame —
@@ -456,18 +366,9 @@ def _attach_verify_shingles(
 
     Measured (interleaved A/B, identical output rows): semi is 1.58x
     WORSE at sf0.1 (stage floor dominates a 1.5 MB corpus), 0.86x at
-    sf1, 0.75x at sf5 — hence the size-adaptive 'auto' default via
-    :func:`_verify_shape_auto`."""
-    if verify_shape not in ("auto", "broadcast", "semi"):
-        raise ValueError(
-            f"{who}: verify_shape must be 'auto', 'broadcast' or "
-            f"'semi', got {verify_shape!r}"
-        )
-    shape = (
-        _verify_shape_auto(verify_with, id_col, text_col)
-        if verify_shape == "auto"
-        else verify_shape
-    )
+    sf1, 0.75x at sf5 — hence the size-driven pick by
+    :func:`_verify_shape_auto`, the only way the shape is chosen."""
+    shape = _verify_shape_auto(verify_with, id_col, text_col)
     cov_err = (
         f"{who}: verify_with does not cover candidate id (absent or "
         "NULL text): "
@@ -528,7 +429,6 @@ def minhash_lsh_pairs(
     verify_with: DataFrame | None = None,
     text_col: str = "text",
     shingle_k: int = 3,
-    verify_shape: str = "auto",
 ) -> DataFrame:
     """Banded LSH candidate generation + exact-Jaccard verification.
 
@@ -566,14 +466,14 @@ def minhash_lsh_pairs(
       non-NULL text — an under-covering frame raises per-row instead
       of silently shrinking the pair set (the same loud-failure
       contract as ``minhash_lsh_pairs_incremental``).
-      ``verify_shape`` picks how the text attaches (r17): 'broadcast'
-      (small corpora — the planner broadcasts the (id, text) side),
-      'semi' (big corpora — semi-join the corpus down to candidate
-      ids and compute shingles once per distinct candidate doc; the
-      corpus text never rides a broadcast build), or 'auto' (default
-      — by the corpus' UNCOMPRESSED text size vs the broadcast
-      budget; see :func:`_verify_shape_auto` for the measured
-      crossover).  Output rows are identical across shapes (pinned).
+      The corpus' UNCOMPRESSED text size against the broadcast
+      budget picks how the text attaches: 'broadcast' (small corpora
+      — the planner broadcasts the (id, text) side) or 'semi' (big
+      corpora — semi-join the corpus down to candidate ids and
+      compute shingles once per distinct candidate doc; the corpus
+      text never rides a broadcast build).  See
+      :func:`_verify_shape_auto` for the measured crossover.  Output
+      rows are identical across shapes (pinned).
     - empty-shingle docs are excluded via the signature sentinel
       (``minhash[0] == 2^31-1``, unreachable for any real shingle since
       the fold is mod 2^31-1), not by re-deriving shingles.
@@ -612,15 +512,14 @@ def minhash_lsh_pairs(
     )
     if verify_with is not None:
         joined, a_sh, b_sh = _attach_verify_shingles(
-            cand, verify_with, id_col, text_col, shingle_k, verify_shape,
+            cand, verify_with, id_col, text_col, shingle_k,
             "minhash_lsh_pairs",
         )
     else:
         if "shingles" not in sig_df.columns:
             raise ValueError(
                 "minhash_lsh_pairs: this signature frame carries no "
-                "shingles column (minhash_signatures kernel='arrow' "
-                "output) — pass verify_with=<docs DataFrame> so "
+                "shingles column — pass verify_with=<docs DataFrame> so "
                 "verification shingles compute per candidate"
             )
         sh = sig_df.select(F.col(id_col), F.col("shingles"))
@@ -788,7 +687,6 @@ def minhash_lsh_pairs_incremental(
     verify_with: DataFrame | None = None,
     text_col: str = "text",
     shingle_k: int = 3,
-    verify_shape: str = "auto",
 ) -> DataFrame:
     """Near-dup pairs for an INCREMENTAL ingest: a new batch of
     signatures against a persisted corpus index, without re-pairing
@@ -797,11 +695,12 @@ def minhash_lsh_pairs_incremental(
     ``verify_with`` (a docs DataFrame covering BOTH sides' ids with a
     stored ``text_col``) computes verification shingles per candidate
     exactly like :func:`minhash_lsh_pairs` — and it is the ONLY
-    verification path for ``kernel='arrow'`` signature frames, which
-    deliberately carry no shingles column.  Coverage is ENFORCED: a
-    candidate id that ``verify_with`` is missing (or carries with a
-    NULL text) raises at execution time instead of silently shrinking
-    the pair set — under-coverage is a recall bug, not a filter.
+    verification path for signature frames that carry no shingles
+    column (e.g. an index landed without them).  Coverage is
+    ENFORCED: a candidate id that ``verify_with`` is missing (or
+    carries with a NULL text) raises at execution time instead of
+    silently shrinking the pair set — under-coverage is a recall bug,
+    not a filter.
 
     The daily-crawl shape: the corpus index (minhash_signatures output
     landed as parquet) holds N docs already deduped among themselves;
@@ -886,7 +785,7 @@ def minhash_lsh_pairs_incremental(
         # per-row coverage guard on both shapes; zero extra jobs, the
         # check is a row-level raise inside the projection itself.
         joined, a_sh, b_sh = _attach_verify_shingles(
-            cand, verify_with, id_col, text_col, shingle_k, verify_shape,
+            cand, verify_with, id_col, text_col, shingle_k,
             "minhash_lsh_pairs_incremental",
         )
     else:
@@ -894,10 +793,9 @@ def minhash_lsh_pairs_incremental(
             if "shingles" not in frame.columns:
                 raise ValueError(
                     f"minhash_lsh_pairs_incremental: {side} carries no "
-                    "shingles column (minhash_signatures kernel='arrow' "
-                    "output) — pass verify_with=<docs DataFrame covering "
-                    "both sides> so verification shingles compute per "
-                    "candidate"
+                    "shingles column — pass verify_with=<docs DataFrame "
+                    "covering both sides> so verification shingles "
+                    "compute per candidate"
                 )
         sh = new_sigs.select(F.col(id_col), F.col("shingles")).unionByName(
             index_sigs.select(F.col(id_col), F.col("shingles"))

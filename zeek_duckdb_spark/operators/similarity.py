@@ -14,26 +14,20 @@
 - ``cosine_pairs`` (near-dup): all pairs above a threshold, LSH-bucketed
   unless exact=True.
 
-Degenerate-vector policy (uniform across every kernel here): a
+Degenerate-vector policy (uniform across every operator here): a
 zero-norm vector has an undefined cosine and is EXCLUDED from results.
 Mechanically: ``cosine()`` null-guards the denominator (Spark 4 ANSI
-mode would otherwise raise DIVIDE_BY_ZERO), so expr kernels yield NULL
-— which sorts NULLS LAST under DESC and is trimmed by a cheap
+mode would otherwise raise DIVIDE_BY_ZERO), so the expr folds yield
+NULL — which sorts NULLS LAST under DESC and is trimmed by a cheap
 POST-limit filter (a pre-sort filter on the aliased score would be
 pushed below the projection and re-evaluate the whole interpreted fold
-per row).  The numpy kernels produce NaN (IEEE 0/0): the arrow kernel
-filters its materialized udf output before ranking (no re-evaluation —
-Python udf results are extracted into their own plan node), and the
-batch kernel masks NaN before its per-batch cut.  ``cosine_pairs``
+per row).  The numpy scorer of ``topk_neighbors_batch`` produces NaN
+(IEEE 0/0) and masks it before its per-batch cut.  ``cosine_pairs``
 drops both for free because ``NULL/NaN >= threshold`` is never true.
-Without all this the kernels disagree (Spark/DuckDB sort NaN first
-under DESC; numpy lexsort sorts it last), so results would depend on
-which kernel ran.
+Without all this the paths disagree (Spark/DuckDB sort NaN first under
+DESC; numpy lexsort sorts it last), so results would depend on which
+path ran.
 """
-
-# NOTE: no `from __future__ import annotations` here — pandas_udf
-# infers its eval type from REAL annotation objects (pd.Series), and
-# stringified annotations don't resolve inside the defining closure.
 
 import random
 
@@ -99,29 +93,18 @@ def topk_neighbors(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str | None = None,
-    kernel: str = "expr",
 ) -> DataFrame:
     """Brute-force cosine top-k: broadcast ``query`` (one or few rows
     with a ``q_vec`` column and optional id), score every corpus row,
     take k.  Deterministic tie-break on id.
 
-    ``kernel`` picks the scoring implementation:
-
-    - ``"expr"`` (default): the sequential zip_with/aggregate fold.
-      Bit-reproducible across engines (the oracle restates the same
-      left-to-right accumulation) — the correctness-checked path.
-    - ``"arrow"``: an Arrow-batched pandas_udf doing one numpy
-      matrix@vector product per batch.  Measured ~8× less scoring
-      time per row at dim=128 (see SCALING.md "cosine kernel A/B");
-      the gap widens with dim since the HOF fold is interpreted
-      per-element while BLAS is SIMD.  NOT bit-identical to the fold
-      (pairwise/SIMD summation) — keep "expr" where an oracle
-      compares hashes, use "arrow" for serving/pipelines.
+    Scores are the sequential zip_with/aggregate fold, bit-reproducible
+    across engines (the oracle restates the same left-to-right
+    accumulation).  Serving scores through numpy instead:
+    :func:`topk_neighbors_batch` takes any number of query rows,
+    one included, and is the faster path on large corpora (see
+    SCALING.md "Cosine kernel A/B").
     """
-    if kernel == "arrow":
-        return _topk_neighbors_arrow(df, query, k, id_col, vec_col, query_id_col)
-    if kernel != "expr":
-        raise ValueError(f"unknown kernel {kernel!r} (want 'expr' or 'arrow')")
     q = query
     if query_id_col is None:
         q = q.select(F.col(vec_col).alias("q_vec"))
@@ -146,61 +129,6 @@ def topk_neighbors(
         scored.orderBy(F.desc_nulls_last("cosine_sim"), F.asc(id_col))
         .limit(k)
         .filter(F.col("cosine_sim").isNotNull())
-    )
-
-
-def _topk_neighbors_arrow(
-    df: DataFrame,
-    query: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str | None,
-) -> DataFrame:
-    """Arrow fast path for topk_neighbors: the single query vector is
-    collected driver-side (it is one row) and closed over by a
-    pandas_udf; each Arrow batch of corpus vectors is scored with one
-    numpy matrix@vector product.  The plan stays a single narrow scan +
-    TakeOrderedAndProject — identical shape to the expr kernel, only
-    the scoring expression changes."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    rows = query.select(
-        *( [F.col(query_id_col).alias("q_id")] if query_id_col else [] ),
-        F.col(vec_col).alias("q_vec"),
-    ).collect()
-    if len(rows) != 1:
-        raise ValueError(
-            f"arrow kernel supports exactly one query row, got {len(rows)}"
-        )
-    q = np.asarray(list(rows[0]["q_vec"]), dtype=np.float64)
-    qn = float(np.sqrt((q * q).sum()))
-
-    @pandas_udf("double")
-    def _cos(col: pd.Series) -> pd.Series:
-        if len(col) == 0:
-            return pd.Series([], dtype="float64")
-        m = np.vstack(col.to_numpy()).astype(np.float64, copy=False)
-        sims = (m @ q) / (np.sqrt((m * m).sum(axis=1)) * qn)
-        return pd.Series(sims)
-
-    base = df
-    keys = []
-    if query_id_col is not None:
-        q_id = rows[0]["q_id"]
-        base = base.filter(F.col(id_col) != F.lit(q_id))
-        keys = [F.lit(q_id).alias("q_id")]
-    scored = base.select(
-        *keys,
-        F.col(id_col),
-        F.round(_cos(F.col(vec_col)), 6).alias("cosine_sim"),
-    )
-    return (
-        scored.filter(F.col("cosine_sim").isNotNull() & ~F.isnan(F.col("cosine_sim")))
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
-        .limit(k)
     )
 
 
@@ -241,13 +169,14 @@ def topk_neighbors_batch(
     candidate cut sorts on the 6-dp ROUNDED scores (the same key the
     global window merge uses), so the emitted rows are independent of
     Arrow batching / partitioning and agree with topk_neighbors even
-    when raw scores straddling the k boundary round equal.  Scores use
-    the numpy kernel (see the ``kernel="arrow"`` note on
-    topk_neighbors: not bit-identical to the expr fold pre-round,
-    identical rows after the 6-dp round in practice).  Rows whose id
-    equals the query id are excluded, matching
+    when raw scores straddling the k boundary round equal.  Scores are
+    one numpy matmul (pairwise/SIMD summation: not bit-identical to the
+    expr fold before the round, identical rows after the 6-dp round in
+    practice; ``rescore=True`` makes the values fold-exact).  Rows
+    whose id equals the query id are excluded, matching
     topk_neighbors(query_id_col=...); rows whose score is NaN
-    (zero-norm corpus vectors) are excluded in every kernel.  Id
+    (zero-norm corpus vectors) are excluded, as topk_neighbors drops
+    its NULL scores.  Id
     columns keep the input types (long, string, ... — derived from the
     input schemas, not hardcoded).
     """

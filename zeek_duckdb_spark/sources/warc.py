@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import gzip
 import io
+import weakref
 
 # module-global so pandas_udf/mapInPandas stringized type hints resolve
 import pandas as pd  # noqa: F401
@@ -44,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from zeek_duckdb_spark.header import ZSTD_MAGIC as _ZSTD_MAGIC, is_zstd as _is_zstd
+from zeek_duckdb_spark.sources.datasource import _opt_bool
 from zeek_duckdb_spark.sources.filesystem import (
     _filesystem,
     list_paths,
@@ -1256,12 +1258,8 @@ class WarcDataSource(DataSource):
         wanted = _parse_record_types_option(
             str(self.options.get("record_types", "response"))
         )
-        decode_text = str(
-            self.options.get("decode_text", "false")
-        ).strip().lower() in ("true", "1", "yes")
-        headers = str(
-            self.options.get("headers", "false")
-        ).strip().lower() in ("true", "1", "yes")
+        decode_text = _opt_bool(self.options, "decode_text", False)
+        headers = _opt_bool(self.options, "headers", False)
         return wanted, decode_text, headers
 
     def schema(self) -> T.StructType:
@@ -1428,17 +1426,37 @@ class WarcStreamReader(_FileSetStreamReader):
         )
 
 
+# session -> names of the plain DataSources already registered there
+_REGISTERED: "weakref.WeakKeyDictionary[SparkSession, set[str]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _register_once(spark: SparkSession, ds) -> str:
+    """Register the plain (seam-free) DataSource class ``ds`` once per
+    session and return its format name.  Re-registering the same class
+    changes nothing and logs a "replaced a previously registered data
+    source" warning on every load."""
+    name = ds.name()
+    done = _REGISTERED.setdefault(spark, set())
+    if name not in done:
+        spark.dataSource.register(ds)
+        done.add(name)
+    return name
+
+
 def register_warc_datasource(spark: SparkSession) -> None:
-    spark.dataSource.register(WarcDataSource)
+    _register_once(spark, WarcDataSource)
 
 
 def _warc_format(spark: SparkSession, opener, lister) -> str:
     """Register and name the ``warc`` format variant for this load:
-    the plain ``pyarrow.fs`` class, or a :func:`_fs_datasource`-derived
-    ``warc_fs`` carrying the session's opener/lister by value."""
+    the plain ``pyarrow.fs`` class (once per session), or a
+    :func:`_fs_datasource`-derived ``warc_fs`` carrying the session's
+    opener/lister by value (registered per load, since the callables
+    may differ between loads)."""
     if opener is None and lister is None:
-        register_warc_datasource(spark)
-        return "warc"
+        return _register_once(spark, WarcDataSource)
     spark.dataSource.register(
         _fs_datasource(WarcDataSource, "warc_fs", opener, lister)
     )
@@ -1892,8 +1910,7 @@ def _cdx_frame(
     from pyspark.sql import functions as F
 
     if opener is None and lister is None:
-        fmt = "cdx"
-        spark.dataSource.register(CdxDataSource)
+        fmt = _register_once(spark, CdxDataSource)
     else:
         fmt = "cdx_fs"
         spark.dataSource.register(
