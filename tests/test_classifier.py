@@ -226,6 +226,21 @@ def test_logreg_score_existing_out_col_kernel_parity(spark):
     assert outs["expr"][1] != 99.0  # replaced, not kept
 
 
+def test_logreg_score_kernels_round_a_half_boundary_up(spark):
+    """sigmoid(z) is exactly 0.5078125 = 65/128 here, a dyadic value
+    on the 6-dp half boundary: ``F.round`` (HALF_UP) gives 0.507813,
+    and the Arrow kernel must too (Python's half-even ``round`` gave
+    0.507812)."""
+    z = 0.03125254350410437
+    assert 1.0 / (1.0 + math.exp(-z)) == 0.5078125
+    df = spark.createDataFrame(
+        [(1, [z])], "vec_id long, embedding array<double>"
+    )
+    for kernel in ("expr", "arrow"):
+        got = logreg_score(df, [1.0], 0.0, kernel=kernel).first()
+        assert got.quality_score == 0.507813, kernel
+
+
 # --- token-feature fit (token_logreg_fit) ----------------------------
 
 

@@ -1,6 +1,7 @@
 """One kernel per operator: a ``kernel=`` switch survives only where a
 measured crossover keeps two implementations, and no operator takes a
-user-set ``verify_shape`` (see SCALING.md "One kernel per operator")."""
+user-set ``verify_shape`` or ``strategy``: those picks are made from
+the data's size (see SCALING.md "One kernel per operator")."""
 
 import ast
 import pathlib
@@ -31,4 +32,9 @@ def test_only_the_kept_operators_take_a_kernel_parameter():
 
 def test_no_operator_takes_a_verify_shape_parameter():
     hits = _params_named("verify_shape")
+    assert not hits, sorted(hits)
+
+
+def test_no_function_takes_a_strategy_parameter():
+    hits = _params_named("strategy")
     assert not hits, sorted(hits)

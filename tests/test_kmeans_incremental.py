@@ -55,13 +55,13 @@ def test_append_equals_full_rebuild_at_fixed_centroids(spark, emb, tmp_path):
     # well-defined
     assert kmeans_fit_quantized(emb, k=4, iters=0, init_centroids=cents) == cents
 
-    from zeek_duckdb_spark.operators.kmeans import _argmax_cell, _nonzero
+    from zeek_duckdb_spark.operators.kmeans import _argmax_cell
     from zeek_duckdb_spark.operators.similarity import quantize_embeddings
 
     want = {
         (r.vec_id, r.cell)
         for r in quantize_embeddings(emb)
-        .filter(_nonzero("qvec"))
+        .filter("nonzero")
         .withColumn("cell", _argmax_cell("qvec", cents))
         .select("vec_id", "cell")
         .collect()
@@ -104,11 +104,11 @@ def test_probe_pruning_still_holds_after_append(spark, emb, tmp_path):
     # appended-index probe == rebuilt-index probe at the same centroids
     rebuilt = str(tmp_path / "ivf_rebuilt")
     union = old.unionByName(new)
-    from zeek_duckdb_spark.operators.kmeans import _argmax_cell, _nonzero
+    from zeek_duckdb_spark.operators.kmeans import _argmax_cell
     from zeek_duckdb_spark.operators.similarity import quantize_embeddings
 
     dq = quantize_embeddings(union, keep=("embedding",))
-    assigned = dq.filter(_nonzero("qvec")).withColumn(
+    assigned = dq.filter("nonzero").withColumn(
         "cell", _argmax_cell("qvec", cents)
     )
     assigned.repartition("cell").write.mode("overwrite").partitionBy(

@@ -294,31 +294,25 @@ def test_grouped_validation_and_guards(spark, li):
             li.withColumn("fw", F.lit(0.5)), "l_quantity", [0.5],
             "l_returnflag", weight_col="fw",
         )
-    # forcing strategy='shuffle' must still verify the one-executor
-    # invariant: a monster group raises loudly (naming the cap knob)
-    # instead of OOMing an executor mid-shuffle
-    with pytest.raises(ValueError, match="shuffle_group_cap"):
-        exact_quantiles_grouped(
-            li, "l_extendedprice", [0.5], "l_returnflag",
-            strategy="shuffle", shuffle_group_cap=100,
-        )
 
 
 def test_grouped_shuffle_strategy_parity_and_auto(spark, li):
     # many-modest-groups regime: the shuffle (groupBy-applyInPandas)
-    # plan must agree exactly with the refine plan AND DuckDB
+    # plan must agree exactly with the refine plan AND DuckDB.  20
+    # groups pick the shuffle plan; a shuffle_group_cap below the
+    # largest group's mass picks refine over the same groups.
     li20 = li.withColumn("gk", F.pmod(F.col("l_orderkey"), F.lit(20)))
     qs = [0.1, 0.5, 0.9]
     ref = sorted(
         (r.gk, r.q, r.value)
         for r in exact_quantiles_grouped(
-            li20, "l_extendedprice", qs, "gk", strategy="refine"
+            li20, "l_extendedprice", qs, "gk", shuffle_group_cap=1
         ).collect()
     )
     shf = sorted(
         (r.gk, r.q, r.value)
         for r in exact_quantiles_grouped(
-            li20, "l_extendedprice", qs, "gk", strategy="shuffle"
+            li20, "l_extendedprice", qs, "gk"
         ).collect()
     )
     assert shf == ref
@@ -348,10 +342,12 @@ def test_grouped_shuffle_strategy_parity_and_auto(spark, li):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "FlatMapGroupsInPandas" not in few_plan
-    with pytest.raises(ValueError, match="strategy"):
+    capped_plan = (
         exact_quantiles_grouped(
-            li, "l_extendedprice", qs, "l_returnflag", strategy="sorted"
-        )
+            li20, "l_extendedprice", qs, "gk", shuffle_group_cap=1
+        )._jdf.queryExecution().executedPlan().toString()
+    )
+    assert "FlatMapGroupsInPandas" not in capped_plan
 
 
 def test_grouped_shuffle_weighted_parity(spark):
@@ -368,13 +364,13 @@ def test_grouped_shuffle_weighted_parity(spark):
     a = sorted(
         (r.g, r.q, r.value)
         for r in exact_quantiles_grouped(
-            df, "x", qs, "g", weight_col="w", strategy="shuffle"
+            df, "x", qs, "g", weight_col="w"
         ).collect()
     )
     b = sorted(
         (r.g, r.q, r.value)
         for r in exact_quantiles_grouped(
-            df, "x", qs, "g", weight_col="w", strategy="refine",
+            df, "x", qs, "g", weight_col="w", shuffle_group_cap=1,
             leaf_limit=4,
         ).collect()
     )
@@ -477,7 +473,7 @@ def test_duplicate_mass_at_zero_exceeding_leaf_limit(spark):
     got = sorted(
         (r.g, r.q, r.value)
         for r in exact_quantiles_grouped(
-            gdf, "x", [0.5], "g", leaf_limit=1, strategy="refine"
+            gdf, "x", [0.5], "g", leaf_limit=1
         ).collect()
     )
     assert got == [("a", 0.5, 0.0), ("b", 0.5, 3.0)]
@@ -581,7 +577,7 @@ def test_reanchor_keeps_upper_bound_through_degenerate_path(spark):
     got = sorted(
         (r.g, r.value)
         for r in exact_quantiles_grouped(
-            gdf, "x", [0.5], "g", leaf_limit=1, strategy="refine"
+            gdf, "x", [0.5], "g", leaf_limit=1
         ).collect()
     )
     assert got == [("a", ulp), ("b", 7.0)]

@@ -106,6 +106,53 @@ def test_quantize_embeddings_bounds(spark):
             assert abs(o - q * r.scale) <= r.scale / 2 + 1e-12
 
 
+def _quantize_ref(vec):
+    """Sequential reference of the int8 rule: (qvec, scale, nonzero)."""
+    import math
+
+    m = 0.0
+    for x in vec or []:
+        if x is not None:
+            m = max(m, abs(x))
+    scale = max(m, 1e-12) / 127.0
+    if vec is None:
+        return None, scale, None
+    q = [None if x is None else int(math.floor(x / scale + 0.5)) for x in vec]
+    if any(v for v in q if v is not None):
+        return q, scale, True
+    return q, scale, None if None in q else False
+
+
+def test_quantize_embeddings_edge_cases_match_sequential_reference(spark):
+    """NULL vector (NULL qvec and nonzero, clamped scale), NULL element
+    (NULL code, skipped by the max), empty and all-zero arrays, a
+    non-zero vector under the 1e-12 clamp (the clamp decides
+    ``nonzero``), and D=768."""
+    import random
+
+    from zeek_duckdb_spark.operators.similarity import quantize_embeddings
+
+    rng = random.Random(11)
+    vecs = {
+        1: None,
+        2: [0.5, None, -0.25],
+        3: [],
+        4: [0.0, 0.0, 0.0],
+        5: [1e-13, -5e-13, 0.0],   # below the clamp, codes survive
+        6: [1e-15, -1e-15],        # below the clamp, codes all zero
+        7: [None, None],
+        8: [rng.uniform(-1.0, 1.0) for _ in range(768)],
+    }
+    df = spark.createDataFrame(
+        sorted(vecs.items()), "vec_id long, embedding array<double>"
+    )
+    out = quantize_embeddings(df)
+    assert out.columns == ["vec_id", "qvec", "scale", "nonzero"]
+    got = {r.vec_id: (r.qvec, r.scale, r.nonzero) for r in out.collect()}
+    assert got == {i: _quantize_ref(v) for i, v in vecs.items()}
+    assert got[5][2] is True and got[6][2] is False
+
+
 def test_quantized_topk_approximates_exact(spark):
     from zeek_duckdb_spark.operators.similarity import quantized_topk, topk_neighbors
 

@@ -357,7 +357,7 @@ def test_plain_datasources_register_once_per_session(
 
     from pyspark.sql.datasource import DataSourceRegistration
 
-    from zeek_duckdb_spark.sources import warc
+    from zeek_duckdb_spark.sources import datasource
 
     names = []
     real = DataSourceRegistration.register
@@ -368,7 +368,7 @@ def test_plain_datasources_register_once_per_session(
 
     monkeypatch.setattr(DataSourceRegistration, "register", counting)
     # forget earlier tests' registrations so the first load registers
-    monkeypatch.setattr(warc, "_REGISTERED", weakref.WeakKeyDictionary())
+    monkeypatch.setattr(datasource, "_REGISTERED", weakref.WeakKeyDictionary())
     files = _two_files()
     for name, blob in files.items():
         (tmp_path / name.rsplit("/", 1)[1]).write_bytes(blob)
@@ -386,6 +386,75 @@ def test_plain_datasources_register_once_per_session(
         read_warc(spark, "mem://bucket/*.warc.gz",
                   opener=opener, lister=lister)
     assert names == ["warc", "cdx", "warc_fs", "warc_fs"]
+
+
+def test_derived_session_registers_each_plain_datasource_once(
+    spark, tmp_path, monkeypatch
+):
+    """A ``spark.newSession()`` does not inherit its parent's Python
+    DataSources, and Spark checks a new name against the active
+    (parent) session: every plain source still registers once in the
+    derived session, its readers and sinks run there, a second write
+    makes no further ``register`` call, and the ``opener=`` variant
+    registers there too."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    import zeek_duckdb_spark
+    from zeek_duckdb_spark.sources.cdxj import read_cdxj, write_cdxj
+    from zeek_duckdb_spark.sources.warc import (
+        register_warc_datasource,
+        write_warc,
+        write_wat,
+        write_wet,
+    )
+
+    files = _two_files()
+    for name, blob in files.items():
+        (tmp_path / name.rsplit("/", 1)[1]).write_bytes(blob)
+    path = str(tmp_path / "*.warc.gz")
+    zeek_duckdb_spark.register(spark)
+    register_warc_datasource(spark)
+    read_warc(spark, path).count()
+    cdx_records(spark, path).count()
+    opener, lister = _mem_fs(files)
+    mem = "mem://bucket/*.warc.gz"
+    read_warc(spark, mem, opener=opener, lister=lister).count()
+
+    child = spark.newSession()
+    names = []
+    real = DataSourceRegistration.register
+
+    def counting(self, ds):
+        names.append(ds.name())
+        return real(self, ds)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counting)
+    zeek_duckdb_spark.register(child)
+    register_warc_datasource(child)
+    assert names == ["zeek", "warc"]
+
+    recs = read_warc(child, path)
+    assert recs.count() == 3
+    assert read_warc(child, mem, opener=opener, lister=lister).count() == 3
+    cdx = cdx_records(child, path)
+    text = child.createDataFrame(
+        [("http://a.example/", "2026-08-16T00:00:00Z", "hello")],
+        "url string, warc_date string, text string",
+    )
+    wat = child.createDataFrame(
+        [("http://a.example/", "2026-08-16T00:00:00Z", "<urn:a>", "{}")],
+        "url string, warc_date string, refers_to string, wat string",
+    )
+    for i in range(2):
+        write_wet(text, str(tmp_path / f"wet{i}"))
+        write_wat(wat, str(tmp_path / f"wat{i}"))
+        write_warc(recs, str(tmp_path / f"warc{i}"))
+        write_cdxj(cdx, str(tmp_path / f"cdxj{i}"), shards=1)
+    assert sorted(names) == sorted(
+        ["zeek", "warc", "warc_fs", "cdx", "wet", "wat", "warcout", "cdxj"]
+    )
+    assert read_warc(child, str(tmp_path / "warc1" / "*.warc.gz")).count() == 3
+    assert read_cdxj(child, str(tmp_path / "cdxj1")).count() == 3
 
 
 def test_hdfs_without_libhdfs_fails_on_driver(spark):

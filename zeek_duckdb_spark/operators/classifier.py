@@ -273,6 +273,8 @@ def logreg_score(
     import numpy as np
     import pandas as pd
 
+    from zeek_duckdb_spark.operators.similarity import _np_round6_half_up
+
     wv = np.asarray(weights, dtype=np.float64)
 
     # r17 (guide §4.1/§4.3): a scalar Arrow-serialized pandas UDF over
@@ -294,7 +296,7 @@ def logreg_score(
                 scores.append(None)
                 continue
             z = float(xa @ wv) + float(bias)
-            scores.append(round(_sigmoid(z), 6))
+            scores.append(float(_np_round6_half_up(_sigmoid(z))))
         return pd.Series(scores, dtype="float64")
 
     return df.withColumn(out_col, _score(F.col(vec_col)))

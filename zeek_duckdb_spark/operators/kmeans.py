@@ -74,26 +74,38 @@ def _argmax_cell(vec_name: str, cents: list[tuple[int, list[float]]]) -> Column:
     restates ``similarity.cosine`` exactly — same sequential zip_with/
     aggregate folds, same nullif zero-norm guard — so values are
     bit-identical to the Column form (the sim_kmeans_ivf oracle pins
-    this).  Used for one-shot assignment where the plan must stay
-    Python-free (ivf_write, ivf_append, pipeline.balance_clusters), and
-    as the reference the numpy assignment kernels are tested against."""
+    this).  The row and its norm are lambda variables (the norm is its
+    fold's ``finish`` variable), so no row-level fold re-runs in each
+    centroid's lambda (tests/test_vector_plans.py).
+    Used for one-shot assignment where the plan must stay Python-free
+    (ivf_write, ivf_append, pipeline.balance_clusters: with the
+    quantize expression their plans hold no Python node), and as the
+    reference the numpy assignment kernels are tested against."""
     cents_sql = "array(" + ", ".join(
         "named_struct('cell', CAST(%d AS BIGINT), 'c_vec', array(%s))"
         % (int(c), ", ".join(f"{float(x)!r}D" for x in v))
         for c, v in cents
     ) + ")"
+
+    def dot(a, b, finish=""):
+        return (
+            f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
+            f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v{finish})"
+        )
+
     cos = (
-        f"(aggregate(zip_with({vec_name}, c.c_vec, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v) / "
-        f"nullif(sqrt(aggregate(zip_with({vec_name}, {vec_name}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)) * "
-        f"sqrt(aggregate(zip_with(c.c_vec, c.c_vec, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)), CAST(0.0 AS DOUBLE)))"
+        f"{dot('r', 'c.c_vec')} / "
+        f"nullif(sqrt(xx) * sqrt({dot('c.c_vec', 'c.c_vec')}), CAST(0.0 AS DOUBLE))"
     )
-    return F.expr(
+    best = (
         f"array_max(transform({cents_sql}, "
         f"c -> named_struct('sim', {cos}, 'cell', c.cell)))['cell']"
     )
+    # the row binds as lambda variable r: an expression a pushed-down
+    # filter substitutes for the column then runs once, not per centroid
+    row = "coalesce(r, array())"  # NULL row: all sims NULL
+    norm = dot(row, row, finish=f", xx -> {best}")
+    return F.expr(f"transform(array({vec_name}), r -> {norm})[0]")
 
 
 def _assign_cells(base: DataFrame, cents: list[tuple[int, list[float]]],
@@ -127,10 +139,6 @@ def _assign_cells(base: DataFrame, cents: list[tuple[int, list[float]]],
     return base.mapInPandas(fn, schema=out_schema)
 
 
-def _nonzero(qvec_col: str) -> Column:
-    return F.exists(F.col(qvec_col), lambda v: v != F.lit(0))
-
-
 def _quantized_base(
     df: DataFrame,
     id_col: str,
@@ -146,7 +154,7 @@ def _quantized_base(
 
     src = ensure_min_parallelism(df, min_parallelism)
     dq = quantize_embeddings(src, id_col, vec_col)
-    return dq.filter(_nonzero("qvec")).select(F.col(id_col), F.col("qvec"))
+    return dq.filter("nonzero").select(F.col(id_col), F.col("qvec"))
 
 
 def _kmeans_lloyd_partials_arrow(
@@ -397,6 +405,15 @@ def kmeans_ivf_topk(
     )
 
 
+def _index_rows(df: DataFrame, cents, id_col: str, vec_col: str) -> DataFrame:
+    """The (id, vec, qvec, cell) rows ivf_write and ivf_append land,
+    degenerate vectors dropped."""
+    dq = quantize_embeddings(df, id_col, vec_col, keep=(vec_col,))
+    return dq.filter("nonzero").select(
+        id_col, vec_col, "qvec", _argmax_cell("qvec", cents).alias("cell")
+    )
+
+
 def ivf_write(
     df: DataFrame,
     path: str,
@@ -418,13 +435,9 @@ def ivf_write(
     cell (small-files explosion at scale).
     """
     cents = kmeans_fit_quantized(df, n_centroids, iters, id_col, vec_col)
-    dq = quantize_embeddings(df, id_col, vec_col, keep=(vec_col,))
-    base = dq.filter(_nonzero("qvec")).select(
-        F.col(id_col), F.col(vec_col), F.col("qvec")
-    )
-    assigned = base.withColumn("cell", _argmax_cell("qvec", cents))
     (
-        assigned.repartition("cell")
+        _index_rows(df, cents, id_col, vec_col)
+        .repartition("cell")
         .write.mode("overwrite")
         .partitionBy("cell")
         .parquet(path)
@@ -466,13 +479,9 @@ def ivf_append(
     ``kmeans_fit_quantized(corpus, init_centroids=cents, iters=1)``
     and re-land when probe recall degrades.
     """
-    dq = quantize_embeddings(df_new, id_col, vec_col, keep=(vec_col,))
-    base = dq.filter(_nonzero("qvec")).select(
-        F.col(id_col), F.col(vec_col), F.col("qvec")
-    )
-    assigned = base.withColumn("cell", _argmax_cell("qvec", cents))
     (
-        assigned.repartition("cell")
+        _index_rows(df_new, cents, id_col, vec_col)
+        .repartition("cell")
         .write.mode("append")
         .partitionBy("cell")
         .parquet(path)

@@ -50,13 +50,16 @@ __all__ = [
 
 
 def _np_quantize(X):
-    """numpy form of ``similarity.quantize_embeddings``'s fold,
+    """numpy form of ``similarity.quantize_embeddings``'s rule,
     bit-identical on the same doubles: scale = max(|x|, 1e-12)/127
     (max is order-insensitive), q = floor(x/scale + 0.5) — both
-    elementwise IEEE ops with no accumulation order.  Keeping the
-    quantize INSIDE the Arrow kernel matters: the interpreted JVM
-    HOF fold costs ~10 us/row and dominated the co-moment/projection
-    passes (measured 5.2 s -> ~1 s at 512k rows)."""
+    elementwise IEEE ops with no accumulation order (the
+    ``emb_comoments`` oracle and tests/test_pca.py pin it to the
+    expression).  It stays a second statement of the rule because
+    the kernels would otherwise need the expression's ``qvec`` as one
+    more stage: at 512k x 64, ``pca_project`` reading the shared
+    column took 2.70 s against 1.68 s here, the co-moment pass tied
+    (SCALING.md "One int8 quantize rule")."""
     import numpy as np
 
     scale = np.maximum(np.abs(X).max(axis=1), 1e-12) / 127.0

@@ -281,7 +281,7 @@ def _near_dedup_pass(
     deduped: DataFrame,
     id_col: str,
     text_col: str,
-    strategy: str,
+    near_dedup: str,
     params: dict | None,
     keep_score: str | None = None,
 ) -> DataFrame:
@@ -295,7 +295,7 @@ def _near_dedup_pass(
     from zeek_duckdb_spark.operators.graph import connected_components
 
     p = dict(params or {})
-    if strategy == "minhash":
+    if near_dedup == "minhash":
         num_hashes = p.get("num_hashes", 32)
         shingle_k = p.get("shingle_k", 3)
         sigs = dd.minhash_signatures(
@@ -322,7 +322,7 @@ def _near_dedup_pass(
             text_col=text_col,
             shingle_k=shingle_k,
         ).select("id_a", "id_b")
-    elif strategy == "simhash":
+    elif near_dedup == "simhash":
         bits = p.get("bits", 60)
         sims = dd.simhash(deduped, id_col, text_col, bits=bits)
         pairs = dd.simhash_pairs(
@@ -336,7 +336,7 @@ def _near_dedup_pass(
         ).select("id_a", "id_b")
     else:
         raise ValueError(
-            f"near_dedup must be 'minhash' or 'simhash', got '{strategy}'"
+            f"near_dedup must be 'minhash' or 'simhash', got '{near_dedup}'"
         )
     if keep_score is not None:
         from zeek_duckdb_spark.operators.graph import resolve_clusters
@@ -962,17 +962,17 @@ def balance_clusters(
         raise ValueError("balance_clusters: max_cell_share must be in (0, 1]")
     if target_rows_per_cell is not None and target_rows_per_cell < 1:
         raise ValueError("balance_clusters: target_rows_per_cell must be >= 1")
-    from zeek_duckdb_spark.operators.kmeans import _argmax_cell, _nonzero
+    from zeek_duckdb_spark.operators.kmeans import _argmax_cell
     from zeek_duckdb_spark.operators.similarity import quantize_embeddings
 
     extra = tuple(c for c in df.columns if c not in (id_col, vec_col))
     dq = quantize_embeddings(df, id_col, vec_col, keep=(vec_col,) + extra)
     assigned = dq.withColumn(
         "cell",
-        F.when(_nonzero("qvec"), _argmax_cell("qvec", cents)).otherwise(
+        F.when(F.col("nonzero"), _argmax_cell("qvec", cents)).otherwise(
             F.lit(-1)
         ),
-    ).drop("qvec", "scale")
+    ).drop("qvec", "scale", "nonzero")
     counts = {
         int(r["cell"]): int(r["n"])
         for r in assigned.groupBy("cell").agg(F.count("*").alias("n")).collect()

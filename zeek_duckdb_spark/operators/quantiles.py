@@ -526,7 +526,6 @@ def exact_quantiles_grouped(
     weight_col: str | None = None,
     max_groups: int = 100_000,
     leaf_rows_per_collect: int = 1 << 22,
-    strategy: str = "auto",
     shuffle_group_cap: int = 50_000_000,
 ) -> DataFrame:
     """Per-group exact discrete quantiles — DuckDB's
@@ -543,10 +542,12 @@ def exact_quantiles_grouped(
     domains after bucketing — guarded by ``max_groups``), because the
     per-group interval state lives on the driver like any model.
 
-    TWO physical strategies, because "grouped quantiles" is two
-    different problems at scale:
+    TWO physical plans, because "grouped quantiles" is two different
+    problems at scale; the per-group stats pass picks one (the 'shuffle'
+    plan when there are > 16 groups and the largest group's weight mass
+    is <= ``shuffle_group_cap``, else 'refine'):
 
-    - ``strategy='refine'`` — FEW groups, each arbitrarily huge (the
+    - 'refine' — FEW groups, each arbitrarily huge (the
       per-language cut at 100 TB, where one group cannot fit
       anywhere): joint histogram refinement.  Each pass is one
       broadcast join of the (live-interval)-sized edges table onto
@@ -559,7 +560,7 @@ def exact_quantiles_grouped(
       rank bookkeeping stays float-exact.  Leaf collects are
       deduplicated per distinct interval and chunked so no single
       driver fetch exceeds ~``leaf_rows_per_collect`` weight mass.
-    - ``strategy='shuffle'`` — MANY groups, each modest (per-domain
+    - 'shuffle' — MANY groups, each modest (per-domain
       cuts over 10^4-10^5 domains): ONE hash shuffle on the group
       key, then per-group exact ranks in an Arrow ``applyInPandas``
       kernel — nothing ever reaches the driver.  This is the plan
@@ -567,14 +568,7 @@ def exact_quantiles_grouped(
       small groups its leaf step degenerates into collecting the
       whole corpus driver-side.  Requires each single group's rows
       to fit in an executor (the shuffle-partition invariant every
-      groupBy-apply operator has) — verified even when forced: an
-      explicit ``strategy='shuffle'`` call still runs the max-mass
-      guard and raises (naming ``shuffle_group_cap``) instead of
-      OOMing an executor on a monster group.
-    - ``strategy='auto'`` (default) picks from the per-group stats
-      it computes anyway: 'shuffle' when there are > 16 groups and
-      the largest group's weight mass is <= ``shuffle_group_cap``,
-      else 'refine'.
+      groupBy-apply operator has), which ``shuffle_group_cap`` bounds.
 
     ``weight_col`` gives per-group WEIGHTED quantiles with the
     multiset semantics of :func:`exact_quantiles` on both paths.
@@ -590,11 +584,6 @@ def exact_quantiles_grouped(
         raise ValueError("exact_quantiles_grouped: buckets must be >= 2")
     if leaf_limit < 1:
         raise ValueError("exact_quantiles_grouped: leaf_limit must be >= 1")
-    if strategy not in ("auto", "refine", "shuffle"):
-        raise ValueError(
-            "exact_quantiles_grouped: strategy must be 'auto', 'refine' "
-            "or 'shuffle'"
-        )
 
     spark = df.sparkSession
     gfield = df.schema[group_col]
@@ -645,15 +634,11 @@ def exact_quantiles_grouped(
             ).alias("nans"),
             F.sum(F.when(F.col("__w") < 0, 1).otherwise(0)).alias("negw"),
         )
+        .orderBy("__g")
     )
-    # the __g sort only matters where grp_rows feeds the refine path's
-    # deterministic group order (gvals); the explicit-shuffle branch
-    # uses the rows solely for the cap/NaN/negw guards, so it skips the
-    # global orderBy of per-group stats (r17, advice).  The cap check
-    # is order-independent either way: take(max_groups + 1) returns
-    # > max_groups rows iff more groups exist.
-    if strategy != "shuffle":
-        grp_stats = grp_stats.orderBy("__g")
+    # the __g order is the refine path's deterministic group order
+    # (gvals); take(max_groups + 1) returns > max_groups rows iff more
+    # groups exist
     grp_rows = grp_stats.take(max_groups + 1)
     if len(grp_rows) > max_groups:
         raise ValueError(
@@ -682,35 +667,11 @@ def exact_quantiles_grouped(
             T.StructField("value", T.DoubleType()),
         ]
     )
-    if strategy == "shuffle":
-        # explicit shuffle: the shuffle-partition invariant — each
-        # group's rows must fit one executor — checks against the
-        # per-group masses the stats pass already computed; a forced
-        # call on one monster group raises loudly instead of OOMing
-        # an executor mid-shuffle.
-        biggest_mass = max((int(r["n"]) for r in grp_rows), default=0)
-        if biggest_mass > shuffle_group_cap:
-            raise ValueError(
-                "exact_quantiles_grouped: largest group's weight mass "
-                f"({biggest_mass}) exceeds shuffle_group_cap="
-                f"{shuffle_group_cap}; strategy='shuffle' requires every "
-                "group to fit one executor — use strategy='refine' (or "
-                "'auto') for monster groups, or raise shuffle_group_cap "
-                "if the executors really have the memory"
-            )
-        return _grouped_shuffle(src, qs, group_col, oschema)
-
     heads = grp_rows  # (n, mn, mx) per group, already __g-ordered
     gvals = [r["__g"] for r in heads]  # deterministic group order
 
-    if strategy == "auto":
-        max_mass = max((int(r["n"]) for r in heads), default=0)
-        strategy = (
-            "shuffle"
-            if len(heads) > 16 and max_mass <= shuffle_group_cap
-            else "refine"
-        )
-    if strategy == "shuffle":
+    max_mass = max((int(r["n"]) for r in heads), default=0)
+    if len(heads) > 16 and max_mass <= shuffle_group_cap:
         return _grouped_shuffle(src, qs, group_col, oschema)
 
     # per-(group-index, target-index) state:

@@ -561,43 +561,43 @@ def quantize_embeddings(
     vec_col: str = "embedding",
     keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Symmetric per-vector int8 quantization: scale = max|x| / 127,
-    q[i] = floor(x[i] / scale + 0.5) — 4x smaller than float32 on disk
-    and integer dot products downstream.  ``floor(v/s + 0.5)`` instead
-    of round(): half-rounds toward +inf for BOTH signs in every engine,
-    so the oracle restates the arithmetic exactly (round() half-up vs
-    half-even varies by engine).
+    """Symmetric per-vector int8 quantization: scale = max(max|x|,
+    1e-12) / 127, q[i] = floor(x[i] / scale + 0.5) — 4x smaller than
+    float32 on disk and integer dot products downstream.
+    ``floor(v/s + 0.5)`` instead of round(): half-rounds toward +inf
+    for BOTH signs in every engine, so the oracle restates the
+    arithmetic exactly (round() half-up vs half-even varies by engine).
 
-    The scale is materialized in its own projection before the
-    quantize transform references it — an expression-level scale would
-    re-run the max-abs fold once per element inside the interpreted
-    lambda (no CSE; same lesson as minhash_signatures).
+    The rule is ONE ``aggregate`` expression: its fold computes the
+    row's max|x|, and the ``finish`` lambda binds that as a variable
+    which the per-element codes, the scale and ``nonzero`` all read.
+    No optimizer rule can inline the fold into the per-element lambda
+    (``CollapseProject`` did that to the old separately projected scale
+    whenever a caller dropped it: an O(D^2) row), and no caller has to
+    keep a column referenced to stay fast.  ``nonzero`` (some q[i] !=
+    0) is the ANN family's degenerate-vector test — not a test on
+    ``scale``: the 1e-12 clamp also maps tiny vectors to all-zero
+    codes.  A NULL vector gives NULL qvec and nonzero and scale
+    1e-12/127 (the fold runs over an empty array); a NULL element gives
+    a NULL code and is skipped by the max.
 
-    Output: (id, qvec array<int>, scale double [, *keep]).  Pure map,
-    no shuffle.  ``keep`` carries extra input columns through (e.g. the
-    original vector for a later exact re-rank).
+    Output: (id, qvec array<int>, scale double, nonzero boolean
+    [, *keep]).  Pure map, no shuffle, no Python.  ``keep`` carries
+    extra input columns through (e.g. the original vector for a later
+    exact re-rank).
     """
-    x = F.transform(F.col(vec_col), lambda v: v.cast("double"))
-    scaled = df.select(
-        F.col(id_col),
-        *[F.col(c) for c in keep],
-        x.alias("__x"),
-        (
-            F.greatest(
-                F.aggregate(
-                    x, F.lit(0.0), lambda acc, v: F.greatest(acc, F.abs(v))
-                ),
-                F.lit(1e-12),
-            )
-            / F.lit(127.0)
-        ).alias("scale"),
+    vec = "`" + vec_col.replace("`", "``") + "`"
+    code = "CAST(floor(CAST(v AS DOUBLE) / (greatest(m, 1e-12D) / 127D) + 0.5D) AS INT)"
+    rule = F.expr(
+        f"aggregate(coalesce({vec}, array()), 0D, "
+        "(m, v) -> greatest(m, abs(CAST(v AS DOUBLE))), "
+        f"m -> named_struct('qvec', transform({vec}, v -> {code}), "
+        "'scale', greatest(m, 1e-12D) / 127D, "
+        f"'nonzero', exists({vec}, v -> {code} != 0)))"
     )
-    return scaled.select(
-        F.col(id_col),
-        F.expr("transform(__x, v -> CAST(floor(v / scale + 0.5) AS INT))").alias("qvec"),
-        F.col("scale"),
-        *[F.col(c) for c in keep],
-    )
+    return df.select(
+        F.col(id_col), rule.alias("__q"), *[F.col(c) for c in keep]
+    ).select(id_col, "__q.*", *keep)
 
 
 def quantized_topk(

@@ -53,6 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.datasource import DataSource, DataSourceWriter
 
+from zeek_duckdb_spark.sources.datasource import register_once
 from zeek_duckdb_spark.sources.staged import StagedDir
 
 __all__ = ["write_cdxj", "read_cdxj"]
@@ -299,7 +300,7 @@ def write_cdxj(
         ).alias(c)
         for c in _WRITE_COLS
     ]
-    cdx_df.sparkSession.dataSource.register(CdxjDataSource)
+    register_once(cdx_df.sparkSession, CdxjDataSource)
     (
         cdx_df.select(*sel)
         .repartitionByRange(shards, "urlkey", "cdx_ts")

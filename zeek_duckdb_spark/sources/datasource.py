@@ -31,6 +31,8 @@ construction.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -584,6 +586,39 @@ class ZeekPushdownReader(ZeekReader):
                 yield f
 
 
+# session -> names of the plain DataSources already registered there
+_REGISTERED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def register_datasource(spark, ds) -> None:
+    """``spark.dataSource.register(ds)`` with ``spark`` as the JVM's
+    active session meanwhile: Spark checks the name against the ACTIVE
+    session, so a ``newSession()`` — which inherits no Python source —
+    was refused its parent's names with [DATA_SOURCE_ALREADY_EXISTS]."""
+    jss = spark._jvm.org.apache.spark.sql.SparkSession
+    prev = jss.getActiveSession()
+    jss.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(ds)
+    finally:
+        if prev.isDefined():
+            jss.setActiveSession(prev.get())
+        else:
+            jss.clearActiveSession()
+
+
+def register_once(spark, ds) -> str:
+    """Register the plain (seam-free) DataSource class ``ds`` once per
+    session and return its format name (re-registering logs a
+    "replaced" warning on every load)."""
+    name = ds.name()
+    done = _REGISTERED.setdefault(spark, set())
+    if name not in done:
+        register_datasource(spark, ds)
+        done.add(name)
+    return name
+
+
 def register_zeek_datasource(spark) -> None:
     # enable Python-DS filter pushdown for this session (runtime conf);
     # reader() still falls back to the no-pushdown class if a foreign
@@ -592,7 +627,7 @@ def register_zeek_datasource(spark) -> None:
         spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     except Exception:
         pass
-    spark.dataSource.register(ZeekDataSource)
+    register_once(spark, ZeekDataSource)
 
 
 class WetDataSource(DataSource):
@@ -767,15 +802,3 @@ class WarcOutShardWriter(_RecordShardWriter):
         from zeek_duckdb_spark.sources.warc import warc_record_bytes_out
 
         return warc_record_bytes_out(*row, compress=self._compress())
-
-
-def register_wet_datasource(spark) -> None:
-    spark.dataSource.register(WetDataSource)
-
-
-def register_wat_datasource(spark) -> None:
-    spark.dataSource.register(WatDataSource)
-
-
-def register_warcout_datasource(spark) -> None:
-    spark.dataSource.register(WarcOutDataSource)

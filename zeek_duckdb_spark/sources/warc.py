@@ -36,7 +36,6 @@ from __future__ import annotations
 
 import gzip
 import io
-import weakref
 
 # module-global so pandas_udf/mapInPandas stringized type hints resolve
 import pandas as pd  # noqa: F401
@@ -45,7 +44,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from zeek_duckdb_spark.header import ZSTD_MAGIC as _ZSTD_MAGIC, is_zstd as _is_zstd
-from zeek_duckdb_spark.sources.datasource import _opt_bool
+from zeek_duckdb_spark.sources.datasource import (
+    _opt_bool,
+    register_datasource,
+    register_once,
+)
 from zeek_duckdb_spark.sources.filesystem import (
     _filesystem,
     list_paths,
@@ -1426,27 +1429,8 @@ class WarcStreamReader(_FileSetStreamReader):
         )
 
 
-# session -> names of the plain DataSources already registered there
-_REGISTERED: "weakref.WeakKeyDictionary[SparkSession, set[str]]" = (
-    weakref.WeakKeyDictionary()
-)
-
-
-def _register_once(spark: SparkSession, ds) -> str:
-    """Register the plain (seam-free) DataSource class ``ds`` once per
-    session and return its format name.  Re-registering the same class
-    changes nothing and logs a "replaced a previously registered data
-    source" warning on every load."""
-    name = ds.name()
-    done = _REGISTERED.setdefault(spark, set())
-    if name not in done:
-        spark.dataSource.register(ds)
-        done.add(name)
-    return name
-
-
 def register_warc_datasource(spark: SparkSession) -> None:
-    _register_once(spark, WarcDataSource)
+    register_once(spark, WarcDataSource)
 
 
 def _warc_format(spark: SparkSession, opener, lister) -> str:
@@ -1456,9 +1440,9 @@ def _warc_format(spark: SparkSession, opener, lister) -> str:
     opener/lister by value (registered per load, since the callables
     may differ between loads)."""
     if opener is None and lister is None:
-        return _register_once(spark, WarcDataSource)
-    spark.dataSource.register(
-        _fs_datasource(WarcDataSource, "warc_fs", opener, lister)
+        return register_once(spark, WarcDataSource)
+    register_datasource(
+        spark, _fs_datasource(WarcDataSource, "warc_fs", opener, lister)
     )
     return "warc_fs"
 
@@ -1910,11 +1894,11 @@ def _cdx_frame(
     from pyspark.sql import functions as F
 
     if opener is None and lister is None:
-        fmt = _register_once(spark, CdxDataSource)
+        fmt = register_once(spark, CdxDataSource)
     else:
         fmt = "cdx_fs"
-        spark.dataSource.register(
-            _fs_datasource(CdxDataSource, "cdx_fs", opener, lister)
+        register_datasource(
+            spark, _fs_datasource(CdxDataSource, "cdx_fs", opener, lister)
         )
     rt = _record_types_option(record_types)
     reader = spark.readStream if streaming else spark.read
@@ -2907,9 +2891,9 @@ def write_wet(
         raise ValueError("write_wet: mode must be 'overwrite' or 'error'")
     from pyspark.sql import functions as F
 
-    from zeek_duckdb_spark.sources.datasource import register_wet_datasource
+    from zeek_duckdb_spark.sources.datasource import WetDataSource
 
-    register_wet_datasource(df.sparkSession)
+    register_once(df.sparkSession, WetDataSource)
     out = df.select(
         F.col(url_col).cast("string").alias("url"),
         F.col(date_col).cast("string").alias("warc_date"),
@@ -3116,9 +3100,9 @@ def write_wat(
         raise ValueError("write_wat: mode must be 'overwrite' or 'error'")
     from pyspark.sql import functions as F
 
-    from zeek_duckdb_spark.sources.datasource import register_wat_datasource
+    from zeek_duckdb_spark.sources.datasource import WatDataSource
 
-    register_wat_datasource(df.sparkSession)
+    register_once(df.sparkSession, WatDataSource)
     out = df.select(
         F.col("url").cast("string").alias("url"),
         F.col("warc_date").cast("string").alias("warc_date"),
@@ -3277,7 +3261,7 @@ def write_warc(
 
     from zeek_duckdb_spark.sources.datasource import (
         _WARCOUT_COLS,
-        register_warcout_datasource,
+        WarcOutDataSource,
     )
 
     if "body" not in df.columns:
@@ -3297,7 +3281,7 @@ def write_warc(
         sel.append(
             (F.col(src) if src else F.lit(None)).cast(typ).alias(c)
         )
-    register_warcout_datasource(df.sparkSession)
+    register_once(df.sparkSession, WarcOutDataSource)
     (
         df.select(*sel)
         .write.format("warcout")
