@@ -934,6 +934,139 @@ def bench_bucketed(sf_label: str, sf_dir: str, iters: int) -> dict:
 MANUAL_MARKER = "<!-- MANUAL-SECTIONS:"
 
 
+FLOOR_OPS = ("jvm_only", "rdd_map", "ip_in_subnet", "zeek_read")
+
+
+def _python_floor_run(reps: int) -> dict:
+    """One side of the Python-task-floor A/B, in its own process whose
+    working directory is the checkout under test: a local[4] session,
+    one warm-up of each operation, then ``reps`` timed rounds.  Also
+    times ``importlib.invalidate_caches()`` inside a reused worker (the
+    call ``pyspark.worker_util.setup_spark_files`` makes before each
+    task) and counts the zipimporters it walks."""
+    import tempfile
+
+    os.environ["SPARK_GRAFT_CPUS"] = "4"
+    from zeek_duckdb_spark import register
+    from zeek_duckdb_spark.session import get_spark
+
+    spark = get_spark("bench-python-floor")
+    register(spark)
+    sc = spark.sparkContext
+    tmp = tempfile.mkdtemp(prefix="python-floor-")
+    header = (
+        "#separator \\x09\n#set_separator\t,\n#empty_field\t(empty)\n"
+        "#unset_field\t-\n#path\tconn\n#open\tx\n"
+        "#fields\tuid\torig_h\tduration\n#types\tstring\taddr\tinterval\n"
+    )
+    for f in range(4):
+        with open(os.path.join(tmp, f"conn.{f}.log"), "w") as fh:
+            fh.write(header)
+            fh.writelines(
+                f"C{f}x{i}\t10.{f}.{i % 256}.{i % 7}\t{i * 0.001:.3f}\n"
+                for i in range(2_000)
+            )
+    logs = os.path.join(tmp, "conn.*.log")
+
+    def touch_package(x):
+        import zeek_duckdb_spark  # noqa: F401  (as any of our kernels)
+
+        return x
+
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    ops = {
+        "jvm_only": lambda: noop(spark.range(0, 16_000, 1, 16)),
+        "rdd_map": lambda: sc.parallelize(range(16), 16).map(touch_package).count(),
+        "ip_in_subnet": lambda: noop(spark.range(0, 16_000, 1, 16).selectExpr(
+            "ip_in_subnet(concat('10.0.', CAST(id % 256 AS STRING), '.1'), "
+            "'10.0.0.0/17') AS hit")),
+        "zeek_read": lambda: noop(spark.read.format("zeek").load(logs)),
+    }
+
+    def invalidate_probe(rows):
+        import importlib
+        import sys
+        import zipimport
+
+        import zeek_duckdb_spark  # noqa: F401
+
+        for _ in rows:
+            pass
+        importers = sum(isinstance(f, zipimport.zipimporter)
+                        for f in sys.path_importer_cache.values())
+        t0 = time.perf_counter()
+        importlib.invalidate_caches()
+        yield importers, time.perf_counter() - t0
+
+    times: dict[str, list[float]] = {name: [] for name in FLOOR_OPS}
+    for name in FLOOR_OPS:
+        ops[name]()  # warm: spawn and reuse the workers
+    for _ in range(reps):
+        for name in FLOOR_OPS:
+            t0 = time.perf_counter()
+            ops[name]()
+            times[name].append(time.perf_counter() - t0)
+    probes = [sc.parallelize([0], 1).mapPartitions(invalidate_probe).collect()[0]
+              for _ in range(reps)]
+    spark.stop()
+    shutil.rmtree(tmp, ignore_errors=True)
+    return {
+        "ops": {name: statistics.median(ts) for name, ts in times.items()},
+        "importers": probes[-1][0],
+        "invalidate_s": statistics.median(p[1] for p in probes),
+    }
+
+
+def bench_python_floor(parent: str, pairs: int, reps: int = 3) -> None:
+    """A/B of the fixed cost of a Python task: this checkout against
+    ``parent`` (another checkout of the repo), ``pairs`` alternating
+    pairs of fresh processes, each running ``_python_floor_run``.
+    Prints stamped markdown rows for the MANUAL section."""
+    import subprocess
+    import sys
+
+    code = (
+        "import importlib.util, json\n"
+        f"spec = importlib.util.spec_from_file_location('floor', {__file__!r})\n"
+        "m = importlib.util.module_from_spec(spec)\n"
+        "spec.loader.exec_module(m)\n"
+        f"print(json.dumps(m._python_floor_run({reps})))\n"
+    )
+    sides = {"parent": os.path.abspath(parent), "change": REPO}
+    runs: dict[str, list[dict]] = {"parent": [], "change": []}
+    for p in range(pairs):
+        for side in (("parent", "change") if p % 2 == 0 else ("change", "parent")):
+            out = subprocess.run(
+                [sys.executable, "-c", code], cwd=sides[side], check=True,
+                capture_output=True, text=True,
+                env={**os.environ, "PYTHONPATH": sides[side]},
+            )
+            runs[side].append(json.loads(out.stdout.strip().splitlines()[-1]))
+
+    def cell(side, get):
+        vals = sorted(get(r) for r in runs[side])
+        return (f"{statistics.median(vals):.3f} "
+                f"[{vals[0]:.3f}, {vals[-1]:.3f}]")
+
+    print("| operation (16 tasks; zeek_read 4) | parent s | change s |")
+    print("|---|---|---|")
+    for name in FLOOR_OPS:
+        print(f"| {name} | {cell('parent', lambda r: r['ops'][name])} | "
+              f"{cell('change', lambda r: r['ops'][name])} |")
+    print("| `invalidate_caches()` in a reused worker | "
+          f"{cell('parent', lambda r: r['invalidate_s'])} | "
+          f"{cell('change', lambda r: r['invalidate_s'])} |")
+    print(f"\nzipimporters on a worker's path: "
+          f"{sorted({r['importers'] for s in runs.values() for r in s})}")
+    print(
+        f"\nstamp: regenerated with `python bench_scaling.py --python-floor "
+        f"PARENT --iters {pairs}` (medians of {reps} rounds per process, "
+        f"then median [min, max] over {pairs} alternating pairs; local[4])"
+    )
+
+
 def write_scaling_md(lines: list[str], path: str) -> None:
     """Write the regenerated tables, PRESERVING everything at/after the
     MANUAL-SECTIONS marker (hand-recorded one-off A/Bs and drift notes
@@ -977,7 +1110,15 @@ def main() -> None:
                     help="run ONLY the WARC->HTML->text ingest "
                          "throughput rows (prints stamped markdown rows "
                          "for the MANUAL section, leaves SCALING.md alone)")
+    ap.add_argument("--python-floor", metavar="PARENT",
+                    help="run ONLY the Python-task-floor A/B of this "
+                         "checkout against the checkout at PARENT, "
+                         "max(--iters, 5) alternating pairs (prints "
+                         "stamped markdown rows, leaves SCALING.md alone)")
     args = ap.parse_args()
+    if args.python_floor:
+        bench_python_floor(args.python_floor, max(args.iters, 5))
+        return
     if args.serving:
         bench_serving(max(args.iters, 3))
         return

@@ -61,6 +61,35 @@ def test_comoments_deterministic_across_partitionings(spark, emb):
     assert a == b  # exact integer equality, not approx
 
 
+def test_comoments_bit_equal_to_int64_reference(spark):
+    """The per-batch float64 ``X.T @ X`` equals an int64 matmul bit
+    for bit: rows whose every code is +-127 (the largest products)
+    next to rows of mixed scale, cut into ragged 37-row batches."""
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    n, dim = 600, 24
+    X = np.vstack([
+        rng.choice([-1.0, 1.0], size=(n, dim)),
+        rng.normal(size=(n, dim)) * rng.uniform(0.01, 100.0, size=(n, 1)),
+    ])
+    df = spark.createDataFrame(
+        [(i, row.tolist()) for i, row in enumerate(X)],
+        "vec_id long, embedding array<double>",
+    ).repartition(7)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "37")
+    try:
+        got = comoment_sums(df)
+    finally:
+        spark.conf.set(key, old)
+    scale = np.maximum(np.abs(X).max(axis=1), 1e-12) / 127.0
+    Q = np.floor(X / scale[:, None] + 0.5).astype(np.int64)
+    assert (np.abs(Q[:n]) == 127).all()
+    assert got == (len(X), Q.sum(axis=0).tolist(), (Q.T @ Q).tolist())
+
+
 def _planted(spark, n=400, dim=16, seed=5):
     # two dominant orthogonal factors + tiny noise
     import random

@@ -51,6 +51,68 @@ def __getattr__(name):
     return value
 
 
+def _gate_zip_invalidation():
+    """In a PySpark worker on CPython < 3.13, re-read a zip on
+    ``sys.path`` only when it changed.
+
+    ``pyspark.worker_util.setup_spark_files`` calls
+    ``importlib.invalidate_caches()`` before every Python task and
+    every DataSource planner call.  Before 3.13 each
+    ``zipimporter.invalidate_caches`` re-reads its archive's central
+    directory, so a worker re-reads pyspark.zip (12 importers), the
+    py4j zip (2) and the spark-core jar (2) per call: 0.24 s of a
+    ~0.31 s task on a 4-core VM (SCALING.md "Python task floor").  The gated method keeps the
+    directory while the archive's ``(st_ino, st_size, st_mtime_ns)``
+    is the one stat'ed before its last read, and leaves a missing or
+    unreadable archive to the stdlib method.  The archives already
+    cached are read once here, after their stat, so the worker's next
+    task reads nothing.  CPython 3.13 made the method lazy itself; the
+    Spark driver, which never runs ``setup_spark_files``, keeps the
+    stdlib method."""
+    import sys
+
+    files = sys.modules.get("pyspark.core.files")
+    if sys.version_info >= (3, 13) or not (
+        files and files.SparkFiles._is_running_on_worker
+    ):
+        return
+    import os
+    import zipimport
+
+    stdlib = zipimport.zipimporter.invalidate_caches
+    cache = zipimport._zip_directory_cache
+    read = {}  # archive -> (stat key before the read, directory)
+
+    def stat_key(archive):
+        st = os.stat(archive)
+        return st.st_ino, st.st_size, st.st_mtime_ns
+
+    def invalidate_caches(self):
+        try:
+            key = stat_key(self.archive)
+        except OSError:
+            key = None
+        seen = read.get(self.archive)
+        if seen and seen[0] == key:
+            self._files = cache[self.archive] = seen[1]
+            return
+        stdlib(self)
+        if key and self.archive in cache:
+            read[self.archive] = (key, cache[self.archive])
+
+    for archive in list(cache):
+        try:
+            key = stat_key(archive)
+            cache[archive] = zipimport._read_directory(archive)
+        except (OSError, zipimport.ZipImportError):
+            continue
+        read[archive] = (key, cache[archive])
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_gate_zip_invalidation()
+
+
 def register(spark):
     """Install all session-level extensions (the Spark analogue of the
     reference's extension load, src/zeek_extension.cpp:31-36): the INET

@@ -59,11 +59,12 @@ def _np_quantize(X):
     the kernels would otherwise need the expression's ``qvec`` as one
     more stage: at 512k x 64, ``pca_project`` reading the shared
     column took 2.70 s against 1.68 s here, the co-moment pass tied
-    (SCALING.md "One int8 quantize rule")."""
+    (SCALING.md "One int8 quantize rule").  The codes stay float64:
+    integers of magnitude <= 127, held exactly."""
     import numpy as np
 
     scale = np.maximum(np.abs(X).max(axis=1), 1e-12) / 127.0
-    return np.floor(X / scale[:, None] + 0.5).astype(np.int64)
+    return np.floor(X / scale[:, None] + 0.5)
 
 
 def comoment_sums(
@@ -90,13 +91,17 @@ def comoment_sums(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
             )
             X = _np_quantize(Xf)
+            # float64 BLAS, exact: every partial sum is an integer below
+            # rows * 127^2 < 2^53 (numpy's int64 matmul has no BLAS
+            # path: 11.5 s against 2.2 s at 512k x 64, SCALING.md)
+            assert len(X) * 127**2 < 2**53, len(X)
             if s is None:
                 d = X.shape[1]
                 s = np.zeros(d, dtype=np.int64)
                 m = np.zeros((d, d), dtype=np.int64)
             n += len(X)
-            s += X.sum(axis=0)
-            m += X.T @ X
+            s += X.sum(axis=0).astype(np.int64)
+            m += (X.T @ X).astype(np.int64)
         if n == 0:
             return
         yield pd.DataFrame(
@@ -302,7 +307,7 @@ def pca_project(
             Xf = np.array(
                 [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
             )
-            X = _np_quantize(Xf).astype(np.float64)
+            X = _np_quantize(Xf)
             S = (X - mean[None, :]) @ C.T / scale[None, :]
             yield pd.DataFrame(
                 {
