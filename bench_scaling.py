@@ -1067,6 +1067,150 @@ def bench_python_floor(parent: str, pairs: int, reps: int = 3) -> None:
     )
 
 
+VECTOR_ROWS = 65_536
+VECTOR_OPS = ("kmeans_fit_quantized", "pq_train", "ivf_topk",
+              "comoment_sums_df", "pca_project")
+VECTOR_DIMS = (64, 768)
+LOGREG_DIMS = (16, 64, 256, 768)
+
+
+def _vectors_run(paths: dict, reps: int) -> dict:
+    """One side of the vector-operator A/B, in its own process whose
+    working directory is the checkout under test: a local[4] session,
+    each corpus of ``paths`` (dim -> parquet) read and cached in 16
+    partitions, one warm-up of every operation on a 4,096-row slice,
+    then ``reps`` timed rounds on the full corpus.  Times the five
+    ``VECTOR_OPS`` at ``VECTOR_DIMS`` and both ``logreg_score`` kernels
+    at ``LOGREG_DIMS``; returns {"op@dim": median s}."""
+    os.environ["SPARK_GRAFT_CPUS"] = "4"
+    from pyspark.sql import functions as F
+
+    from zeek_duckdb_spark.operators.classifier import logreg_score
+    from zeek_duckdb_spark.operators.kmeans import kmeans_fit_quantized
+    from zeek_duckdb_spark.operators.pca import (
+        comoment_sums_df,
+        pca_fit,
+        pca_project,
+    )
+    from zeek_duckdb_spark.operators.pq import pq_train
+    from zeek_duckdb_spark.operators.similarity import ivf_topk
+    from zeek_duckdb_spark.session import get_spark
+
+    spark = get_spark("bench-vectors")
+
+    def noop(df):
+        df.write.format("noop").mode("overwrite").save()
+
+    def ops_for(df, dim):
+        query = df.filter(F.col("vec_id") == 7)
+        model = pca_fit(df, 8)
+        w = [((d % 7) - 3) / 16 for d in range(dim)]
+        ops = {
+            "kmeans_fit_quantized": lambda: kmeans_fit_quantized(df, k=8, iters=2),
+            "pq_train": lambda: pq_train(df, dim, m=8, k=16, iters=2),
+            "ivf_topk": lambda: ivf_topk(df, query, k=10).collect(),
+            "comoment_sums_df": lambda: comoment_sums_df(df).collect(),
+            "pca_project": lambda: noop(pca_project(df, model)),
+            "logreg_score expr": lambda: noop(logreg_score(df, w, 0.1)),
+            "logreg_score arrow": lambda: noop(
+                logreg_score(df, w, 0.1, kernel="arrow")),
+        }
+        names = [op for op in VECTOR_OPS if dim in VECTOR_DIMS]
+        if dim in LOGREG_DIMS:
+            names += ["logreg_score expr", "logreg_score arrow"]
+        return {f"{name}@{dim}": ops[name] for name in names}
+
+    times: dict[str, list[float]] = {}
+    cached = []
+    for dim, path in sorted(paths.items()):
+        df = spark.read.parquet(path).repartition(16).persist()
+        df.count()
+        small = df.limit(4_096).persist()
+        small.count()
+        cached += [df, small]
+        for op in ops_for(small, dim).values():
+            op()  # warm: spawn the workers, compile the kernels
+        for name, op in ops_for(df, dim).items():
+            times[name] = []
+            for _ in range(reps):
+                t0 = time.perf_counter()
+                op()
+                times[name].append(time.perf_counter() - t0)
+        for c in cached:
+            c.unpersist()
+        cached.clear()
+    spark.stop()
+    return {name: statistics.median(ts) for name, ts in times.items()}
+
+
+def bench_vectors(parent: str, pairs: int, reps: int = 1) -> None:
+    """A/B of the vector operators: this checkout against ``parent``
+    (another checkout of the repo), ``pairs`` alternating pairs of
+    fresh processes, each running ``_vectors_run`` on the same
+    ``VECTOR_ROWS``-row corpora (seeded normal float32 vectors, every
+    97th row all-zero).  Prints stamped markdown rows for the MANUAL
+    section."""
+    import subprocess
+    import sys
+    import tempfile
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tmp = tempfile.mkdtemp(prefix="vectors-")
+    paths = {}
+    for dim in sorted(set(VECTOR_DIMS) | set(LOGREG_DIMS)):
+        X = np.random.default_rng(dim).standard_normal(
+            (VECTOR_ROWS, dim), dtype=np.float32)
+        X[::97] = 0.0
+        emb = pa.ListArray.from_arrays(
+            pa.array(np.arange(VECTOR_ROWS + 1, dtype=np.int32) * dim),
+            pa.array(X.reshape(-1)))
+        paths[dim] = os.path.join(tmp, f"emb_{dim}.parquet")
+        pq.write_table(pa.table({
+            "vec_id": pa.array(np.arange(VECTOR_ROWS, dtype=np.int64)),
+            "embedding": emb,
+        }), paths[dim], row_group_size=4_096)
+    code = (
+        "import importlib.util, json\n"
+        f"spec = importlib.util.spec_from_file_location('vec', {__file__!r})\n"
+        "m = importlib.util.module_from_spec(spec)\n"
+        "spec.loader.exec_module(m)\n"
+        f"print(json.dumps(m._vectors_run({paths!r}, {reps})))\n"
+    )
+    sides = {"parent": os.path.abspath(parent), "change": REPO}
+    runs: dict[str, list[dict]] = {"parent": [], "change": []}
+    for p in range(pairs):
+        for side in (("parent", "change") if p % 2 == 0 else ("change", "parent")):
+            out = subprocess.run(
+                [sys.executable, "-c", code], cwd=sides[side], check=True,
+                capture_output=True, text=True,
+                env={**os.environ, "PYTHONPATH": sides[side]},
+            )
+            runs[side].append(json.loads(out.stdout.strip().splitlines()[-1]))
+    shutil.rmtree(tmp, ignore_errors=True)
+
+    def cell(side, name):
+        vals = [r[name] for r in runs[side]]
+        q1, q2, q3 = statistics.quantiles(vals, n=4, method="inclusive")
+        return f"{q2:.2f} [{q1:.2f}, {q3:.2f}]"
+
+    print(f"| operation @ dim ({VECTOR_ROWS:,} rows) | parent s | change s "
+          "| change faster |")
+    print("|---|---|---|---|")
+    for name in runs["change"][0]:
+        wins = sum(c[name] < p[name]
+                   for p, c in zip(runs["parent"], runs["change"]))
+        print(f"| {name} | {cell('parent', name)} | {cell('change', name)} "
+              f"| {wins}/{pairs} |")
+    print(
+        f"\nstamp: regenerated with `python bench_scaling.py --vectors "
+        f"PARENT --iters {pairs}` (median of {reps} round(s) per process, "
+        f"then median [q1, q3] over {pairs} alternating pairs; local[4])"
+    )
+
+
 def write_scaling_md(lines: list[str], path: str) -> None:
     """Write the regenerated tables, PRESERVING everything at/after the
     MANUAL-SECTIONS marker (hand-recorded one-off A/Bs and drift notes
@@ -1115,7 +1259,15 @@ def main() -> None:
                          "checkout against the checkout at PARENT, "
                          "max(--iters, 5) alternating pairs (prints "
                          "stamped markdown rows, leaves SCALING.md alone)")
+    ap.add_argument("--vectors", metavar="PARENT",
+                    help="run ONLY the vector-operator A/B of this "
+                         "checkout against the checkout at PARENT, "
+                         "max(--iters, 5) alternating pairs (prints "
+                         "stamped markdown rows, leaves SCALING.md alone)")
     args = ap.parse_args()
+    if args.vectors:
+        bench_vectors(args.vectors, max(args.iters, 5))
+        return
     if args.python_floor:
         bench_python_floor(args.python_floor, max(args.iters, 5))
         return

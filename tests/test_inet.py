@@ -81,6 +81,68 @@ def test_ip_in_subnet_v6(spark):
     assert r.c is None   # invalid input -> null
 
 
+CIDRS = ["10.0.0.0/8", "10.20.0.0/16", "192.168.1.0/24", "2620:0:2d0::/48",
+         "fe80::/10", "10.0.0.0/33", "not-a-net", None]
+
+
+def _generated_addrs():
+    import random
+
+    rng = random.Random(17)
+    v4 = [f"10.{rng.randrange(0, 30)}.{rng.randrange(256)}.{rng.randrange(256)}"
+          for _ in range(150)]
+    v4 += [f"192.168.{rng.randrange(0, 3)}.{rng.randrange(256)}" for _ in range(50)]
+    v6 = [f"2620:0:2d{rng.randrange(0, 2)}:{rng.randrange(0, 65536):x}::{rng.randrange(1, 99)}"
+          for _ in range(60)]
+    v6 += [f"fe80::{rng.randrange(0, 65536):x}" for _ in range(20)]
+    return v4 + v6 + ["not-an-ip", "10.0.0.256", "", None]
+
+
+def _subnet_reference(a, c):
+    """Sequential ipaddress statement of ip_in_subnet's contract."""
+    import ipaddress
+
+    if a is None or c is None:
+        return None
+    try:
+        net = ipaddress.ip_network(c, strict=False)
+        ip = ipaddress.ip_address(a)
+    except ValueError:
+        return None
+    return ip.version == net.version and ip in net
+
+
+def test_ip_in_subnet_matches_ipaddress_on_generated_rows(spark):
+    """Several CIDRs (v4, v6, invalid, NULL) in ONE batch against v4,
+    v6, invalid and NULL addresses: identical to a row-at-a-time
+    ipaddress reference."""
+    addrs = _generated_addrs()
+    rows = [(i, a, CIDRS[i % len(CIDRS)]) for i, a in enumerate(addrs)]
+    df = spark.createDataFrame(rows, "i int, a string, c string").coalesce(1)
+    got = {r.i: r.hit for r in df.select(
+        "i", ip_in_subnet(F.col("a"), F.col("c")).alias("hit")).collect()}
+    want = {i: _subnet_reference(a, c) for i, a, c in rows}
+    assert got == want
+    assert {True, False, None} <= set(want.values())
+
+
+def test_ip_in_subnet_parses_each_cidr_once_per_batch(monkeypatch):
+    import ipaddress
+
+    import pandas as pd
+
+    addrs = _generated_addrs()
+    cidrs = [CIDRS[i % len(CIDRS)] for i in range(len(addrs))]
+    want = [_subnet_reference(a, c) for a, c in zip(addrs, cidrs)]
+    calls = []
+    real = ipaddress.ip_network
+    monkeypatch.setattr(ipaddress, "ip_network",
+                        lambda *a, **k: calls.append(a[0]) or real(*a, **k))
+    got = ip_in_subnet.func(pd.Series(addrs), pd.Series(cidrs))
+    assert list(got) == want
+    assert sorted(calls) == sorted(c for c in CIDRS if c is not None)
+
+
 def test_ip_to_bytes_sortable(spark):
     register(spark)
     rows = spark.sql(

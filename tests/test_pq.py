@@ -619,3 +619,28 @@ def test_ivfpq_batch_matches_per_query_loop(spark, emb, ivfpq):
     assert {r.q_id for r in ok.collect()} == set(range(12))
     with pytest.raises(ValueError, match="max_batch"):
         ivfpq_topk_batch(codes, queries, cells, cbs, max_batch=0)
+
+
+def test_passed_through_vectors_keep_null_elements(spark):
+    """A vector column that a kernel passes through crosses the Arrow
+    boundary unchanged: a NULL element stays NULL.  (The pandas
+    boundary made it NaN; one such row then turned ``ivfpq_build``'s
+    residual scale, and so every cell and code, into NaN.)"""
+    from zeek_duckdb_spark.operators.pq import ivfpq_build
+    from zeek_duckdb_spark.operators.similarity import ivf_assign
+
+    rows = [(i, [float((i * 5 + d) % 9 - 4) for d in range(8)]) for i in range(1, 41)]
+    rows[6] = (7, [1.0, None, 2.0, 3.0, -1.0, 0.5, 2.0, 1.0])
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    want = [1.0, None, 2.0, 3.0, -1.0, 0.5, 2.0, 1.0]
+
+    cents = df.filter("vec_id <= 4")
+    got = ivf_assign(df, cents).filter("vec_id = 7").first()
+    assert got["embedding"] == want
+    codebooks = pq_train(df, dim=8, m=2, k=4)
+    got = pq_encode(df, codebooks, keep=("embedding",)).filter("vec_id = 7").first()
+    assert got["embedding"] == want
+
+    cells, codebooks, _ = ivfpq_build(df, 8, n_cells=4, m=2, k=4)
+    assert np.isfinite(np.asarray(cells)).all()
+    assert np.isfinite(np.asarray(codebooks)).all()

@@ -9,6 +9,11 @@ references once inside a lambda.  Nested folds over the lambda's own
 variable, such as the per-centroid ``aggregate(zip_with(qvec, c.c_vec,
 ...))`` of ``kmeans._argmax_cell``, are legitimate and pass.
 
+The same walk also guards the quantize rule: its one ``aggregate``
+(the fold whose ``finish`` builds the ``qvec`` struct) must sit in one
+operator of a plan.  A filter pushed below the projection that holds
+it copies the fold into the Filter, and every row is quantized twice.
+
 Each operator's optimized plan is read with one py4j call
 (``LogicalPlan.toJSON``) and walked here.
 """
@@ -83,6 +88,27 @@ def loop_invariant_folds(df):
                     )
                     hits.append(f"{node['class'].rsplit('.', 1)[-1]}: fold over {cols}")
     return hits
+
+
+def _is_quantize(tree):
+    return tree[0]["class"] == _NS + "ArrayAggregate" and any(
+        n["class"] == _NS + "Literal" and n.get("value") == "qvec"
+        for n, _ in _walk(tree)
+    )
+
+
+def repeated_quantize(df):
+    """For each quantize fold that more than one operator of ``df``'s
+    optimized plan evaluates: those operators."""
+    plan = json.loads(df._jdf.queryExecution().optimizedPlan().toJSON())
+    where = {}
+    for i, node in enumerate(plan):
+        for value in node.values():
+            for tree in _expressions(value):
+                for sub in filter(_is_quantize, _walk(tree)):
+                    where.setdefault(json.dumps(sub), set()).add(
+                        f"{i}:{node['class'].rsplit('.', 1)[-1]}")
+    return [sorted(ops) for ops in where.values() if len(ops) > 1]
 
 
 DIM = 8
@@ -183,6 +209,25 @@ def _classifier(spark, corpus, query, tmp):
 def test_no_loop_invariant_fold_in_vector_plans(spark, corpus, query, tmp_path, family):
     for i, df in enumerate(family(spark, corpus, query, tmp_path)):
         assert loop_invariant_folds(df) == [], (family.__name__, i)
+        assert repeated_quantize(df) == [], (family.__name__, i)
+
+
+def test_guard_flags_a_quantize_copied_into_a_pushed_filter(spark, corpus):
+    """The quantize guard's anchor: a struct-valued fold projected and
+    then filtered on one of its fields is copied into the Filter."""
+    from pyspark.sql import functions as F
+
+    fold = F.aggregate(
+        "embedding", F.lit(0.0), lambda a, v: F.greatest(a, F.abs(v)),
+        lambda m: F.struct(
+            F.transform("embedding", lambda v: v / m).alias("qvec"),
+            (m > 0).alias("nonzero"),
+        ),
+    )
+    pushed = (corpus.select("vec_id", fold.alias("__q"))
+              .select("vec_id", "__q.*").filter("nonzero"))
+    assert [[op.split(":")[1] for op in ops]
+            for ops in repeated_quantize(pushed)] == [["Project", "Filter"]]
 
 
 def test_guard_flags_an_inlined_row_fold_and_passes_the_centroid_fold(spark, corpus):

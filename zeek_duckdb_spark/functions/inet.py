@@ -69,11 +69,9 @@ def inet_canon(s: pd.Series) -> pd.Series:
     return s.map(_canon_one)
 
 
-def _in_subnet_one(addr, cidr):
-    if addr is None or cidr is None:
-        return None
+def _network(cidr):
     try:
-        return ipaddress.ip_address(addr) in ipaddress.ip_network(cidr, strict=False)
+        return ipaddress.ip_network(cidr, strict=False)
     except ValueError:
         return None
 
@@ -82,19 +80,19 @@ def _in_subnet_one(addr, cidr):
 def ip_in_subnet(addr: pd.Series, cidr: pd.Series) -> pd.Series:
     """Spark analogue of DuckDB INET ``addr <<= 'net/prefix'``
     (README.md:91-93).  v4 and v6; version mismatch -> False; invalid
-    input -> NULL."""
+    input -> NULL.  Each distinct CIDR of a batch is parsed once."""
+    nets = {c: _network(c) for c in cidr.unique() if c is not None}
 
     def one(a, c):
-        if a is None or c is None:
+        if a is None or c is None or nets[c] is None:
             return None
         try:
-            net = ipaddress.ip_network(c, strict=False)
             ip = ipaddress.ip_address(a)
         except ValueError:
             return None
-        if ip.version != net.version:
+        if ip.version != nets[c].version:
             return False
-        return ip in net
+        return ip in nets[c]
 
     return pd.Series([one(a, c) for a, c in zip(addr, cidr)], dtype="object")
 

@@ -8,7 +8,7 @@ Scale shape, in the repo's house style:
 
 - **fit** (:func:`logreg_fit`) is driver-held model state (dim+1
   doubles) refined by full-batch gradient descent where every pass is
-  ONE zero-shuffle ``mapInPandas`` partial-sum job.  Determinism is
+  ONE zero-shuffle ``mapInArrow`` partial-sum job.  Determinism is
   engineered the same way as ``pca.comoment_sums`` / ``pq_train``:
   features snap to a corpus-global int8 grid (one aggregate pass for
   the scale) and the per-row residual ``p_i - y_i`` snaps to 2^-20
@@ -69,6 +69,15 @@ def _sigmoid(z):
     return e / (1.0 + e)
 
 
+def _np_sigmoid(z):
+    """Vectorized :func:`_sigmoid`: the same overflow-safe branch per
+    element."""
+    import numpy as np
+
+    e = np.exp(-np.abs(z))
+    return np.where(z >= 0, 1.0 / (1.0 + e), e / (1.0 + e))
+
+
 def logreg_fit(
     df: DataFrame,
     label_col: str,
@@ -83,7 +92,7 @@ def logreg_fit(
     "scale", "n", "loss"}`` with weights in RAW-vector units (apply
     via :func:`logreg_score`).
 
-    Each iteration is one zero-shuffle ``mapInPandas`` pass emitting
+    Each iteration is one zero-shuffle ``mapInArrow`` pass emitting
     per-partition ``(n, int64 grad, int64 grad_b, fp loss)`` partials;
     the driver merges them with exact integer adds and takes the
     gradient step.  Rows whose vector length differs from ``dim`` or
@@ -148,7 +157,9 @@ def logreg_fit(
     base = src.select(q.alias("__q"), "__y").persist()
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from zeek_duckdb_spark.operators.arrowvec import from_matrix, to_matrix
 
     out_schema = T.StructType(
         [
@@ -167,19 +178,12 @@ def logreg_fit(
             g = np.zeros(dim, dtype=np.int64)
             gb = np.int64(0)
             ls = np.int64(0)
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                Q = np.array(
-                    [np.asarray(v, dtype=np.int64) for v in pdf["__q"]]
-                )
-                y = pdf["__y"].to_numpy(dtype=np.float64)
+            for batch in batches:
+                Q, _ = to_matrix(batch.column("__q"), np.int64, dim)
+                y = batch.column("__y").to_numpy()
                 # per-row dot: deterministic per row, order-independent
                 z = Q.astype(np.float64) @ wv + b
-                p = np.where(
-                    z >= 0, 1.0 / (1.0 + np.exp(-np.abs(z))),
-                    np.exp(-np.abs(z)) / (1.0 + np.exp(-np.abs(z))),
-                )
+                p = _np_sigmoid(z)
                 # residual to 2^-20 fixed point -> exact int64 grad
                 r = np.floor((p - y) * _RES_FP + 0.5).astype(np.int64)
                 n += len(Q)
@@ -191,9 +195,9 @@ def logreg_fit(
                 ll = -(y * np.log(pc) + (1.0 - y) * np.log(1.0 - pc))
                 ls += np.floor(ll * _RES_FP + 0.5).astype(np.int64).sum()
             if n:
-                yield pd.DataFrame(
-                    {"n": [n], "g": [g.tolist()], "gb": [int(gb)],
-                     "ls": [int(ls)]}
+                yield pa.RecordBatch.from_pydict(
+                    {"n": [n], "g": from_matrix(g[None, :]),
+                     "gb": [int(gb)], "ls": [int(ls)]}
                 )
 
         return fn
@@ -208,7 +212,7 @@ def logreg_fit(
             if n_rows == 0:
                 raise ValueError("logreg_fit: no usable rows")
         for _ in range(iters):
-            rows = base.mapInPandas(
+            rows = base.mapInArrow(
                 pass_factory(w_grid, b), schema=out_schema
             ).collect()
             n_rows = sum(int(r["n"]) for r in rows)
@@ -271,33 +275,21 @@ def logreg_score(
         return df.withColumn(out_col, score)
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
 
+    from zeek_duckdb_spark.operators.arrowvec import from_vector, to_matrix
     from zeek_duckdb_spark.operators.similarity import _np_round6_half_up
 
     wv = np.asarray(weights, dtype=np.float64)
 
-    # r17 (guide §4.1/§4.3): a scalar Arrow-serialized pandas UDF over
-    # ONLY the vector column.  The previous shape was a full-frame
-    # mapInPandas that appended one double — every OTHER column rode
-    # the Arrow boundary both ways for nothing, and the opaque batch
-    # function blocked column pruning at the scan.  withColumn keeps
-    # the replace-at-position semantics (the existing-out_col advice
-    # fix) with no hand-built schema.
-    @F.pandas_udf("double")
-    def _score(vs: pd.Series) -> pd.Series:
-        scores = []
-        for v in vs:
-            if v is None:  # expr kernel scores NULL; parity
-                scores.append(None)
-                continue
-            xa = np.asarray(v, dtype=np.float64)
-            if xa.ndim != 1 or xa.shape[0] != dim:
-                scores.append(None)
-                continue
-            z = float(xa @ wv) + float(bias)
-            scores.append(float(_np_round6_half_up(_sigmoid(z))))
-        return pd.Series(scores, dtype="float64")
+    # a scalar Arrow UDF over ONLY the vector column: the other columns
+    # never cross the boundary, the scan still prunes, and withColumn
+    # keeps the replace-at-position semantics of an existing out_col
+    @F.arrow_udf("double")
+    def _score(vs: pa.Array) -> pa.Array:
+        X, ok = to_matrix(vs, dim=dim)  # NULL or wrong length: NULL
+        p = _np_sigmoid(X @ wv + float(bias))
+        return from_vector(_np_round6_half_up(p), ok)
 
     return df.withColumn(out_col, _score(F.col(vec_col)))
 
@@ -389,7 +381,7 @@ def token_logreg_fit(
     guaranteed bit-reproducible by this code (re-fit to re-derive
     checkpoints bit-for-bit).  Each GD
     pass is ONE
-    zero-shuffle ``mapInPandas`` job emitting (n, sparse int64 grad,
+    zero-shuffle ``mapInArrow`` job emitting (n, sparse int64 grad,
     grad_b, loss) partials; per-row work is O(distinct tokens), never
     O(dim).
 
@@ -425,7 +417,9 @@ def token_logreg_fit(
     base = src.persist()
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from zeek_duckdb_spark.operators.arrowvec import from_matrix
 
     out_schema = T.StructType(
         [
@@ -445,29 +439,17 @@ def token_logreg_fit(
             g = np.zeros(dim, dtype=np.int64)
             gb = 0
             ls = 0
-            for pdf in batches:
-                nb = len(pdf)
-                if nb == 0:
-                    continue
+            for batch in batches:
+                nb = batch.num_rows
                 n += nb
-                bks = pdf["__b"]
-                ys = pdf["__y"].to_numpy(dtype=np.float64)
-                lens = np.fromiter(
-                    (0 if bk is None else len(bk) for bk in bks),
-                    dtype=np.int64,
-                    count=nb,
-                )
+                bks = batch.column("__b")
+                ys = batch.column("__y").to_numpy()
+                lens = bks.value_lengths().fill_null(0).to_numpy()
+                lens = lens.astype(np.int64)
                 total = int(lens.sum())
                 z = np.full(nb, b, dtype=np.float64)
                 if total:
-                    flat = np.empty(total, dtype=np.int64)
-                    pos = 0
-                    for bk in bks:
-                        if bk is None or len(bk) == 0:
-                            continue
-                        a = np.asarray(bk, dtype=np.int64)
-                        flat[pos : pos + len(a)] = a
-                        pos += len(a)
+                    flat = bks.flatten().to_numpy().astype(np.int64)
                     rowid = np.repeat(np.arange(nb, dtype=np.int64), lens)
                     # one batch-wide unique over (row, bucket): sorts
                     # by row then bucket, so each row's distinct
@@ -521,11 +503,11 @@ def token_logreg_fit(
                     np.add.at(g, ubkt, rs[urow] * qx)
             if n:
                 keys = np.nonzero(g)[0]
-                yield pd.DataFrame(
+                yield pa.RecordBatch.from_pydict(
                     {
                         "n": [n],
-                        "gi": [[int(k) for k in keys]],
-                        "gv": [[int(g[k]) for k in keys]],
+                        "gi": from_matrix(keys[None, :].astype(np.int32)),
+                        "gv": from_matrix(g[None, keys]),
                         "gb": [gb],
                         "ls": [ls],
                     }
@@ -543,7 +525,7 @@ def token_logreg_fit(
             if n_rows == 0:
                 raise ValueError("token_logreg_fit: no usable rows")
         for _ in range(iters):
-            rows = base.mapInPandas(
+            rows = base.mapInArrow(
                 pass_factory(w, b), schema=out_schema
             ).collect()
             n_rows = sum(int(r["n"]) for r in rows)

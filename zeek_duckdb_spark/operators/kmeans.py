@@ -44,9 +44,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from zeek_duckdb_spark.operators.similarity import (
+    _assign_cells,
     _cosine_argmax_np,
     _np_cent_geometry,
     _np_round6_half_up,
+    _query_topk_batch,
     quantize_embeddings,
 )
 
@@ -108,37 +110,6 @@ def _argmax_cell(vec_name: str, cents: list[tuple[int, list[float]]]) -> Column:
     return F.expr(f"transform(array({vec_name}), r -> {norm})[0]")
 
 
-def _assign_cells(base: DataFrame, cents: list[tuple[int, list[float]]],
-                  vec_name: str = "qvec") -> DataFrame:
-    """``base`` + a ``cell`` column (argmax cosine vs ``cents``), by
-    numpy batch assignment via mapInPandas: the cosine folds run as
-    vectorized per-dim adds in :func:`_argmax_cell`'s sequential order,
-    so cells are IDENTICAL to it (tests/test_kmeans.py pins it); a
-    zero-shuffle map.  Every base column passes through, plus the
-    assigned ``cell`` (bigint, like the literal's CAST(cell AS
-    BIGINT))."""
-    import numpy as np
-
-    cell_ids, C, cn = _np_cent_geometry(cents)
-    out_schema = T.StructType(
-        list(base.schema.fields) + [T.StructField("cell", T.LongType())]
-    )
-
-    def fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Xf = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_name]]
-            )
-            pos = _cosine_argmax_np(Xf, C, cn)
-            out = pdf.copy()
-            out["cell"] = cell_ids[pos]
-            yield out
-
-    return base.mapInPandas(fn, schema=out_schema)
-
-
 def _quantized_base(
     df: DataFrame,
     id_col: str,
@@ -165,7 +136,9 @@ def _kmeans_lloyd_partials_arrow(
     groupBy shuffle, no interpreted HOF fold (the pq._lloyd_partials_
     arrow shape applied to the cosine-assignment trainer)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from zeek_duckdb_spark.operators.arrowvec import from_matrix, to_matrix
 
     cell_ids, C, cn = _np_cent_geometry(cents)
     k, dim = C.shape
@@ -173,26 +146,20 @@ def _kmeans_lloyd_partials_arrow(
     def fn(batches):
         n_acc = np.zeros(k, dtype=np.int64)
         s_acc = np.zeros((k, dim), dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array([np.asarray(v, dtype=np.int64) for v in pdf["qvec"]])
+        for b in batches:
+            X, ok = to_matrix(b.column("qvec"), np.int64, dim)
+            if not ok.all():  # a vector of the wrong length joins no cell
+                X = X[ok]
             pos = _cosine_argmax_np(X.astype(np.float64), C, cn)
             for j in np.unique(pos):
                 sel = X[pos == j]
                 n_acc[j] += len(sel)
                 s_acc[j] += sel.sum(axis=0)
         live = np.nonzero(n_acc)[0]
-        if len(live) == 0:
-            # empty partition: yield NOTHING (an empty pandas column
-            # is a float64 ndarray Arrow can't cast to list<int64>)
-            return
-        yield pd.DataFrame(
-            {
-                "cell": cell_ids[live],
-                "n": n_acc[live],
-                "s": [s_acc[j].tolist() for j in live],
-            }
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(cell_ids[live]), pa.array(n_acc[live]),
+             from_matrix(s_acc[live])],
+            names=["cell", "n", "s"],
         )
 
     schema = T.StructType(
@@ -203,7 +170,7 @@ def _kmeans_lloyd_partials_arrow(
         ]
     )
     merged: dict[int, tuple[int, list[int]]] = {}
-    for r in base.select("qvec").mapInPandas(fn, schema=schema).collect():
+    for r in base.select("qvec").mapInArrow(fn, schema=schema).collect():
         c = int(r["cell"])
         n0, s0 = merged.get(c, (0, [0] * dim))
         merged[c] = (n0 + int(r["n"]), [a + int(b) for a, b in zip(s0, r["s"])])
@@ -226,7 +193,7 @@ def kmeans_fit_quantized(
     doubles), the legitimate "model" side of the computation; the
     corpus itself never leaves the executors.
 
-    Each Lloyd pass is ONE mapInPandas job of per-partition (cell, n,
+    Each Lloyd pass is ONE mapInArrow job of per-partition (cell, n,
     int64-sum) partials merged driver-side — no crossJoin, no groupBy
     shuffle, and no interpreted cosine-fold HOFs on the corpus.
     Assignment arithmetic follows :func:`_argmax_cell`'s sequential
@@ -615,40 +582,41 @@ def ivf_probe_topk_batch(
     cosine_sim), exactly k per query (fewer if the probed cells hold
     fewer valid rows)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow.compute as pc
 
     from pyspark.sql import Window
 
+    from zeek_duckdb_spark.operators.arrowvec import to_matrix
+
     if max_batch < 1:
         raise ValueError("ivf_probe_topk_batch: max_batch must be >= 1")
-    # take(max_batch + 1), never collect(): a corpus passed by mistake
-    # costs one bounded fetch and a clear error, not a driver OOM
-    q_rows = (
+    # limit(max_batch + 1), never a plain collect: a corpus passed by
+    # mistake costs one bounded fetch and a clear error, not a driver OOM
+    qt = (
         quantize_embeddings(queries, query_id_col, vec_col)
         .select(F.col(query_id_col).alias("q_id"), F.col("qvec"))
-        .take(max_batch + 1)
+        .limit(max_batch + 1)
+        .toArrow()
     )
-    if len(q_rows) > max_batch:
+    if qt.num_rows > max_batch:
         raise ValueError(
             f"ivf_probe_topk_batch: queries holds more than max_batch="
             f"{max_batch} rows — this serves a REQUEST BATCH collected "
             "to the driver, not a corpus; split the requests into "
             "batches or raise max_batch if the driver is sized for it"
         )
-    if not q_rows:
+    if qt.num_rows == 0:
         raise ValueError("ivf_probe_topk_batch: queries is empty")
-    q_ids = [r["q_id"] for r in q_rows]
-    if len(set(q_ids)) != len(q_ids):
+    q_ids = qt.column("q_id").combine_chunks()
+    if len(set(q_ids.to_pylist())) != len(q_ids):
         raise ValueError("ivf_probe_topk_batch: duplicate query ids")
-    Qq = np.asarray(
-        [[int(v) for v in r["qvec"]] for r in q_rows], dtype=np.int64
-    )
+    Qq, _ = to_matrix(qt.column("qvec").combine_chunks(), np.int64)
 
     live_cents = [(c, v) for c, v in cents if any(x != 0.0 for x in v)]
     allowed: list[np.ndarray] = []
     union_cells: set[int] = set()
-    for qi in range(len(q_ids)):
-        qd = [float(v) for v in Qq[qi]]
+    for row in Qq:
+        qd = [float(v) for v in row]
         scored = sorted(
             ((c, _seq_cosine(qd, v)) for c, v in live_cents),
             key=lambda t: (-t[1], t[0]),
@@ -660,51 +628,37 @@ def ivf_probe_topk_batch(
     full = spark.read.parquet(path)
     idx = full.filter(F.col("cell").isin(sorted(union_cells)))
     qn = np.sqrt((Qq.astype(np.float64) ** 2).sum(axis=1))
-    q_id_arr = np.asarray(q_ids)
     q_id_type = queries.schema[query_id_col].dataType.simpleString()
     id_type = full.schema[id_col].dataType.simpleString()
 
     def score_batches(batches):
-        for pdf in batches:
-            # drop NULL-id rows up front: the per-query path's JVM
-            # `col != lit` is NULL -> filtered, and numpy `ids !=
-            # q_id` would instead KEEP None (and lexsort over an
-            # object array holding None can TypeError)
-            pdf = pdf[pdf[id_col].notna()]
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            cells = pdf["cell"].to_numpy().astype(np.int64)
-            X = np.vstack(
-                [np.asarray(v, dtype=np.int64) for v in pdf["qvec"]]
-            )
+        for b in batches:
+            ids = b.column(id_col)
+            cells = b.column("cell").to_numpy()
+            X, _ = to_matrix(b.column("qvec"), np.int64, Qq.shape[1])
             dots = X @ Qq.T  # exact int64 — the quantized-dot contract
             xn = np.sqrt((X.astype(np.float64) ** 2).sum(axis=1))
-            sims = dots.astype(np.float64) / (xn[:, None] * qn[None, :])
-            out_q, out_id, out_sim = [], [], []
-            for j in range(len(q_id_arr)):
-                mask = np.isin(cells, allowed[j]) & (ids != q_id_arr[j])
-                cand_ids = ids[mask]
-                # round BEFORE the cut — the per-batch ordering must be
-                # the global (rounded DESC, id ASC) key or boundary
-                # picks would depend on Arrow batch boundaries; half-up
-                # to match the per-query path's F.round exactly
-                cand_sims = _np_round6_half_up(sims[:, j][mask])
-                valid = ~np.isnan(cand_sims) & ~np.isinf(cand_sims)
-                cand_ids, cand_sims = cand_ids[valid], cand_sims[valid]
-                order = np.lexsort((cand_ids, -cand_sims))[:k]
-                out_q.append(np.full(len(order), q_id_arr[j]))
-                out_id.append(cand_ids[order])
-                out_sim.append(cand_sims[order])
-            yield pd.DataFrame(
-                {
-                    "q_id": np.concatenate(out_q),
-                    id_col: np.concatenate(out_id),
-                    "cosine_sim": np.concatenate(out_sim),
-                }
+            # round BEFORE the cut — the per-batch ordering must be the
+            # global (rounded DESC, id ASC) key or boundary picks would
+            # depend on Arrow batch boundaries; half-up to match the
+            # per-query path's F.round exactly
+            sims = _np_round6_half_up(
+                dots.astype(np.float64) / (xn[:, None] * qn[None, :])
             )
+            # a NULL id is never picked: the per-query path's JVM
+            # `col != lit` is NULL there, which filters the row
+            yield _query_topk_batch(
+                ids, q_ids, k, id_col, "cosine_sim", descending=True,
+                scored=(
+                    (sims[:, j], np.isin(cells, allowed[j])
+                     & np.isfinite(sims[:, j])
+                     & pc.fill_null(pc.not_equal(ids, q_ids[j]), False)
+                     .to_numpy(zero_copy_only=False))
+                    for j in range(len(q_ids))
+                ),
+            )[1]
 
-    cands = idx.select(id_col, "cell", "qvec").mapInPandas(
+    cands = idx.select(id_col, "cell", "qvec").mapInArrow(
         score_batches,
         schema=f"q_id {q_id_type}, {id_col} {id_type}, cosine_sim double",
     )
@@ -794,7 +748,9 @@ def kmeans_parallel_init(
     seeding needs).
     """
     import numpy as np
+    import pyarrow as pa
 
+    from zeek_duckdb_spark.operators.arrowvec import to_matrix
     from zeek_duckdb_spark.operators.hashutil import md5_long
 
     if k < 1 or rounds < 1:
@@ -827,19 +783,13 @@ def kmeans_parallel_init(
             cell_ids, C, cn = _np_cent_geometry(sorted(cands.items()))
 
             def cost_fn(batches, C=C, cn=cn):
-                import pandas as pd
-
                 phi = 0.0
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    Xf = np.array(
-                        [np.asarray(v, dtype=np.float64) for v in pdf["qvec"]]
-                    )
+                for b in batches:
+                    Xf, _ = to_matrix(b.column("qvec"), dim=C.shape[1])
                     phi += float(_cosine_cost_np(Xf, C, cn).sum())
-                yield pd.DataFrame({"phi": [phi]})
+                yield pa.RecordBatch.from_pydict({"phi": [phi]})
 
-            parts = base.select("qvec").mapInPandas(
+            parts = base.select("qvec").mapInArrow(
                 cost_fn, schema="phi double"
             ).collect()
             import math as _math
@@ -852,20 +802,13 @@ def kmeans_parallel_init(
                 break  # every row sits on a candidate already
 
             def sample_fn(batches, C=C, cn=cn, thr=l / phi):
-                import pandas as pd
-
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    Xf = np.array(
-                        [np.asarray(v, dtype=np.float64) for v in pdf["qvec"]]
-                    )
+                for b in batches:
+                    Xf, _ = to_matrix(b.column("qvec"), dim=C.shape[1])
                     cost = _cosine_cost_np(Xf, C, cn)
-                    hit = pdf["__u"].to_numpy() < cost * thr
-                    if hit.any():
-                        yield pdf[hit][[c for c in pdf.columns]]
+                    u = b.column("__u").to_numpy(zero_copy_only=False)
+                    yield b.filter(pa.array(u < cost * thr))
 
-            picked = coin.mapInPandas(sample_fn, schema=coin.schema).collect()
+            picked = coin.mapInArrow(sample_fn, schema=coin.schema).collect()
             for r in picked:
                 cands.setdefault(int(r[id_col]), [float(v) for v in r["qvec"]])
         if len(cands) < k:

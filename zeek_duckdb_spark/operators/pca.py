@@ -78,18 +78,20 @@ def comoment_sums(
     zero-shuffle pass; partials merge driver-side with integer adds,
     so the result is identical under any partitioning."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from zeek_duckdb_spark.operators.arrowvec import from_matrix, to_matrix
 
     def fn(batches):
         n = 0
         s = None
         m = None
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            Xf, ok = to_matrix(b.column(vec_col))
+            if not ok.any():
                 continue
-            Xf = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
+            # an invalid row reads as zeros, whose codes add nothing to
+            # the sums; it is left out of the count
             X = _np_quantize(Xf)
             # float64 BLAS, exact: every partial sum is an integer below
             # rows * 127^2 < 2^53 (numpy's int64 matmul has no BLAS
@@ -99,14 +101,15 @@ def comoment_sums(
                 d = X.shape[1]
                 s = np.zeros(d, dtype=np.int64)
                 m = np.zeros((d, d), dtype=np.int64)
-            n += len(X)
+            n += int(ok.sum())
             s += X.sum(axis=0).astype(np.int64)
             m += (X.T @ X).astype(np.int64)
-        if n == 0:
-            return
-        yield pd.DataFrame(
-            {"n": [n], "s": [s.tolist()], "m": [m.reshape(-1).tolist()]}
-        )
+        if n:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([n]), from_matrix(s[None, :]),
+                 from_matrix(m.reshape(1, -1))],
+                names=["n", "s", "m"],
+            )
 
     schema = T.StructType(
         [
@@ -115,22 +118,15 @@ def comoment_sums(
             T.StructField("m", T.ArrayType(T.LongType())),
         ]
     )
-    n_tot = 0
-    s_tot: list[int] | None = None
-    m_tot: list[int] | None = None
-    for r in df.select(vec_col).mapInPandas(fn, schema=schema).collect():
-        n_tot += int(r["n"])
-        if s_tot is None:
-            s_tot = [int(v) for v in r["s"]]
-            m_tot = [int(v) for v in r["m"]]
-        else:
-            s_tot = [a + int(b) for a, b in zip(s_tot, r["s"])]
-            m_tot = [a + int(b) for a, b in zip(m_tot, r["m"])]
-    if n_tot == 0:
+    parts = df.select(vec_col).mapInArrow(fn, schema=schema).toArrow()
+    if parts.num_rows == 0:
         raise ValueError("comoment_sums: corpus is empty")
+    # exact int64 merges: any partitioning gives the same sums
+    s_tot = to_matrix(parts.column("s").combine_chunks(), np.int64)[0].sum(axis=0)
+    m_tot = to_matrix(parts.column("m").combine_chunks(), np.int64)[0].sum(axis=0)
     dim = len(s_tot)
-    M = [m_tot[i * dim : (i + 1) * dim] for i in range(dim)]
-    return n_tot, s_tot, M
+    n_tot = int(np.sum(parts.column("n").to_numpy()))
+    return n_tot, s_tot.tolist(), m_tot.reshape(dim, dim).tolist()
 
 
 def comoment_sums_df(
@@ -142,13 +138,16 @@ def comoment_sums_df(
     — the oracle shape (DuckDB restates the quantize fold and sums
     ``qvec[i+1] * qvec[j+1]`` exactly; integers, no float order
     sensitivity)."""
+    import numpy as np
+    import pyarrow as pa
+
     n, s, M = comoment_sums(df, id_col, vec_col)
-    spark = df.sparkSession
-    dim = len(s)
-    rows = [
-        (i, j, int(M[i][j])) for i in range(dim) for j in range(i, dim)
-    ]
-    return spark.createDataFrame(rows, "i int, j int, s_ij bigint")
+    i, j = np.triu_indices(len(s))
+    return df.sparkSession.createDataFrame(pa.table({
+        "i": i.astype(np.int32),
+        "j": j.astype(np.int32),
+        "s_ij": np.asarray(M, dtype=np.int64)[i, j],
+    }))
 
 
 def pca_fit(
@@ -286,7 +285,9 @@ def pca_project(
     ``whiten=True`` divides each score by sqrt(eigval) (unit variance
     per component; zero-variance components stay zero)."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from zeek_duckdb_spark.operators.arrowvec import from_matrix, to_matrix
 
     C = np.asarray(model["components"], dtype=np.float64)  # k x dim
     mean = np.asarray(model["mean"], dtype=np.float64)
@@ -301,19 +302,12 @@ def pca_project(
     )
 
     def fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Xf = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
+        for b in batches:
+            Xf, ok = to_matrix(b.column(vec_col), dim=C.shape[1])
             X = _np_quantize(Xf)
             S = (X - mean[None, :]) @ C.T / scale[None, :]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    out_col: [row.tolist() for row in S],
-                }
+            yield pa.RecordBatch.from_arrays(
+                [b.column(id_col), from_matrix(S, ok)], names=[id_col, out_col]
             )
 
-    return q.mapInPandas(fn, schema=out_schema)
+    return q.mapInArrow(fn, schema=out_schema)

@@ -14,7 +14,7 @@ touching the original vectors.
 Spark shapes (the part that must survive 100 TB):
 
 - **Training** (:func:`pq_train`) is Lloyd per subspace, all ``m``
-  subspaces folded into ONE mapInPandas pass per iteration: each
+  subspaces folded into ONE mapInArrow pass per iteration: each
   partition emits at most ``m * k`` (subspace, cell, count, sum)
   partials and the driver merges them — no explode, no shuffle.  Vectors are
   quantized to a CORPUS-GLOBAL int8 grid first (one max-abs pass), so
@@ -93,7 +93,7 @@ def pq_train(
     (md5(id:seed) bucket) before training — at 100 TB you fit the
     codebook on ~1e6 rows, not the corpus.
 
-    Each Lloyd pass is ONE mapInPandas job emitting per-partition
+    Each Lloyd pass is ONE mapInArrow job emitting per-partition
     (sub, cell, n, int64-sum) partials — no explode, no crossJoin, no
     groupBy shuffle; the driver merges <= partitions * m * k partial
     rows (exact integer adds) and takes the sum/count means.  Cell
@@ -180,19 +180,17 @@ def _lloyd_partials_arrow(
     is bit-identical to a sequential ``acc + (x - c)^2`` fold; argmin's
     first-minimum is the fold's lowest-cell tie-break."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from zeek_duckdb_spark.operators.arrowvec import from_matrix, to_matrix
 
     cents = [np.asarray(cb, dtype=np.float64) for cb in cbs]  # m x (k, dsub)
 
     def fn(batches):
         n_acc = np.zeros((m, k), dtype=np.int64)
         s_acc = np.zeros((m, k, dsub), dtype=np.int64)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array(
-                [np.asarray(v, dtype=np.int64) for v in pdf["__q"]]
-            )
+        for b in batches:
+            X, _ = to_matrix(b.column("__q"), np.int64, m * dsub)
             for j in range(m):
                 Xj = X[:, j * dsub : (j + 1) * dsub]
                 Xf = Xj.astype(np.float64)
@@ -206,18 +204,10 @@ def _lloyd_partials_arrow(
                     n_acc[j, c] += len(sel)
                     s_acc[j, c] += sel.sum(axis=0)
         subs, cls = np.nonzero(n_acc)
-        if len(subs) == 0:
-            # an all-empty partition must yield NOTHING: an empty
-            # pandas column defaults to a float64 ndarray, which Arrow
-            # cannot convert to list<int64>
-            return
-        yield pd.DataFrame(
-            {
-                "sub": subs.astype(np.int32),
-                "cell": cls.astype(np.int32),
-                "n": n_acc[subs, cls],
-                "s": [s_acc[j, c].tolist() for j, c in zip(subs, cls)],
-            }
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(subs.astype(np.int32)), pa.array(cls.astype(np.int32)),
+             pa.array(n_acc[subs, cls]), from_matrix(s_acc[subs, cls])],
+            names=["sub", "cell", "n", "s"],
         )
 
     schema = T.StructType(
@@ -229,7 +219,7 @@ def _lloyd_partials_arrow(
         ]
     )
     merged: dict[tuple[int, int], tuple[int, list[int]]] = {}
-    for r in base.select("__q").mapInPandas(fn, schema=schema).collect():
+    for r in base.select("__q").mapInArrow(fn, schema=schema).collect():
         key = (int(r["sub"]), int(r["cell"]))
         n0, s0 = merged.get(key, (0, [0] * dsub))
         merged[key] = (
@@ -252,7 +242,7 @@ def pq_encode(
     codes only.  Ties break to the lowest code (deterministic).
 
     Each argmin is one numpy ``(batch, dsub) @ (dsub, k)`` matmul per
-    subspace per Arrow batch (mapInPandas) — measured **92x** over the
+    subspace per Arrow batch (mapInArrow) — measured **92x** over the
     interpreted SQL fold at 128k rows (42.4 s -> 0.46 s, SCALING.md).
     Codes equal a sequential ``acc + (x - c)^2`` fold's on every tested
     corpus (np.argmin breaks ties low like the fold; a code could
@@ -264,7 +254,9 @@ def pq_encode(
     similarity.quantize_embeddings' zero-vector filter) — pre-validate
     upstream if a length mismatch should be an error in your corpus."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from zeek_duckdb_spark.operators.arrowvec import from_matrix, to_matrix
 
     m = len(codebooks)
     dsub = len(codebooks[0][0])
@@ -275,31 +267,28 @@ def pq_encode(
     keep_fields = [df.schema[c] for c in keep]
 
     def fn(batches):
-        for pdf in batches:
-            vecs = pdf[vec_col]
-            ok = vecs.map(lambda v: v is not None and len(v) == dim)
-            sub = pdf[ok.values]
-            if len(sub) == 0:
-                continue
-            X = np.array([np.asarray(v, dtype=np.float64) for v in sub[vec_col]])
-            codes = np.empty((len(sub), m), dtype=np.int64)
+        for b in batches:
+            X, ok = to_matrix(b.column(vec_col), dim=dim)
+            codes = np.empty((len(X), m), dtype=np.int32)
             for j in range(m):
                 Xj = X[:, j * dsub : (j + 1) * dsub]
                 # ||x-c||^2 = ||x||^2 - 2 x.c + ||c||^2; ||x||^2 is
                 # constant per row so the argmin needs only the rest
                 d = cb_sq[j][None, :] - 2.0 * (Xj @ cb[j].T)
                 codes[:, j] = np.argmin(d, axis=1)  # ties -> lowest code
-            out = {id_col: sub[id_col].values, "pq_codes": list(codes)}
-            for c in keep:
-                out[c] = sub[c].values
-            yield pd.DataFrame(out)
+            sub = b.filter(pa.array(ok))
+            yield pa.RecordBatch.from_arrays(
+                [sub.column(id_col), from_matrix(codes[ok])]
+                + [sub.column(c) for c in keep],
+                names=[id_col, "pq_codes", *keep],
+            )
 
     out_schema = T.StructType(
         [id_field, T.StructField("pq_codes", T.ArrayType(T.IntegerType()))]
         + keep_fields
     )
     sel = [id_col, vec_col] + [c for c in keep if c not in (id_col, vec_col)]
-    return df.select(*[F.col(c) for c in sel]).mapInPandas(fn, schema=out_schema)
+    return df.select(*[F.col(c) for c in sel]).mapInArrow(fn, schema=out_schema)
 
 
 def pq_topk(
@@ -721,14 +710,17 @@ def ivfpq_topk_batch(
     are driver state), so the loud ``max_batch`` guard (default 65536)
     refuses anything larger BEFORE collecting — split the request
     stream upstream or raise it deliberately for a bigger driver."""
-    import math
-
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     from pyspark.sql import Window
 
-    from zeek_duckdb_spark.operators.similarity import _np_round6_half_up
+    from zeek_duckdb_spark.operators.arrowvec import from_vector, to_matrix
+    from zeek_duckdb_spark.operators.similarity import (
+        _np_round6_half_up,
+        _query_topk_batch,
+    )
 
     if not 1 <= nprobe <= len(cells):
         raise ValueError(
@@ -745,37 +737,36 @@ def ivfpq_topk_batch(
         raise ValueError("ivfpq_topk_batch: refine_factor must be >= 1")
     if max_batch < 1:
         raise ValueError("ivfpq_topk_batch: max_batch must be >= 1")
-    # take(max_batch + 1), never collect(): a corpus passed by mistake
-    # costs one bounded fetch and a clear error, not a driver OOM
-    q_rows = queries.select(
+    # limit(max_batch + 1), never a plain collect: a corpus passed by
+    # mistake costs one bounded fetch and a clear error, not a driver OOM
+    qt = queries.select(
         F.col(query_id_col).alias("q_id"), F.col(vec_col).alias("__v")
-    ).take(max_batch + 1)
-    if len(q_rows) > max_batch:
+    ).limit(max_batch + 1).toArrow()
+    if qt.num_rows > max_batch:
         raise ValueError(
             f"ivfpq_topk_batch: queries holds more than max_batch="
             f"{max_batch} rows — this serves a REQUEST BATCH collected "
             "to the driver, not a corpus; split the requests into "
             "batches or raise max_batch if the driver is sized for it"
         )
-    if not q_rows:
+    if qt.num_rows == 0:
         raise ValueError("ivfpq_topk_batch: queries is empty")
-    q_ids = [r["q_id"] for r in q_rows]
-    if len(set(q_ids)) != len(q_ids):
+    q_ids = qt.column("q_id").combine_chunks()
+    if len(set(q_ids.to_pylist())) != len(q_ids):
         raise ValueError("ivfpq_topk_batch: duplicate query ids")
-    qvecs = []
-    for r in q_rows:
-        v = [float(x) for x in r["__v"]]
-        if len(v) != dim:
-            raise ValueError(
-                f"ivfpq_topk_batch: query dim {len(v)} != codebook dim {dim}"
-            )
-        qvecs.append(v)
+    qv = qt.column("__v").combine_chunks()
+    Qm, ok = to_matrix(qv, dim=dim)
+    if not ok.all():
+        bad = pc.list_value_length(qv)[int(np.argmin(ok))].as_py()
+        raise ValueError(
+            f"ivfpq_topk_batch: query dim {bad} != codebook dim {dim}"
+        )
 
     # driver-side probe selection + per-(query, cell) residual LUTs —
     # the same arithmetic as ivfpq_topk, query by query
     luts: list[dict[int, "np.ndarray"]] = []
     union_cells: set[int] = set()
-    for qd in qvecs:
+    for qd in Qm.tolist():
         d2 = [
             (sum((a - b) * (a - b) for a, b in zip(qd, c)), ci)
             for ci, c in enumerate(cells)
@@ -798,58 +789,41 @@ def ivfpq_topk_batch(
         union_cells.update(probed)
 
     idx = codes_df.filter(F.col("cell").isin(sorted(union_cells)))
-    q_id_arr = np.asarray(q_ids)
     q_id_type = queries.schema[query_id_col].dataType.simpleString()
     id_type = codes_df.schema[id_col].dataType.simpleString()
     keep_n = (
         k_top if refine_with is None else max(k_top, refine_factor * k_top)
     )
 
-    def score_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            cellarr = pdf["cell"].to_numpy().astype(np.int64)
-            C = np.vstack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["pq_codes"]]
-            )
-            out_q, out_id, out_d = [], [], []
-            for qi in range(len(q_id_arr)):
-                cand_ids, cand_d = [], []
-                for ci, L in luts[qi].items():
-                    rows = np.nonzero(cellarr == ci)[0]
-                    if len(rows) == 0:
-                        continue
-                    codes = C[rows]
-                    # sequential left-to-right accumulation over the m
-                    # subspaces — the JVM aggregate fold's op order, so
-                    # pre-round values match ivfpq_topk bit-for-bit
-                    acc = L[0][codes[:, 0]]
-                    for j in range(1, m):
-                        acc = acc + L[j][codes[:, j]]
-                    cand_ids.append(ids[rows])
-                    # half-up, matching ivfpq_topk's F.round (np.round
-                    # is HALF_EVEN and flips dyadic .5 boundaries)
-                    cand_d.append(_np_round6_half_up(acc))
-                if not cand_ids:
-                    continue
-                aid = np.concatenate(cand_ids)
-                ad = np.concatenate(cand_d)
-                order = np.lexsort((aid, ad))[:keep_n]
-                out_q.append(np.full(len(order), q_id_arr[qi]))
-                out_id.append(aid[order])
-                out_d.append(ad[order])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "q_id": np.concatenate(out_q),
-                        id_col: np.concatenate(out_id),
-                        "adc_dist": np.concatenate(out_d),
-                    }
-                )
+    def adc(per_cell, cellarr, C):
+        """One query's rounded ADC distance per row (inf outside its
+        probed cells), and the mask of the rows in those cells."""
+        d = np.full(len(C), np.inf)
+        for ci, L in per_cell.items():
+            rows = np.flatnonzero(cellarr == ci)
+            codes = C[rows]
+            # sequential left-to-right accumulation over the m
+            # subspaces — the JVM aggregate fold's op order, so
+            # pre-round values match ivfpq_topk bit-for-bit
+            acc = L[0][codes[:, 0]]
+            for j in range(1, m):
+                acc = acc + L[j][codes[:, j]]
+            # half-up, matching ivfpq_topk's F.round (np.round is
+            # HALF_EVEN and flips dyadic .5 boundaries)
+            d[rows] = _np_round6_half_up(acc)
+        return d, np.isin(cellarr, list(per_cell))
 
-    cands = idx.select(id_col, "cell", "pq_codes").mapInPandas(
+    def score_batches(batches):
+        for b in batches:
+            cellarr = b.column("cell").to_numpy()
+            C, _ = to_matrix(b.column("pq_codes"), np.int64, m)
+            yield _query_topk_batch(
+                b.column(id_col), q_ids, keep_n, id_col, "adc_dist",
+                descending=False,
+                scored=(adc(per_cell, cellarr, C) for per_cell in luts),
+            )[1]
+
+    cands = idx.select(id_col, "cell", "pq_codes").mapInArrow(
         score_batches,
         schema=f"q_id {q_id_type}, {id_col} {id_type}, adc_dist double",
     )
@@ -868,59 +842,42 @@ def ivfpq_topk_batch(
     joined = refine_with.select(F.col(id_col), F.col(vec_col)).join(
         F.broadcast(merged), id_col
     )
-    qmat = {qid: np.asarray(v, dtype=np.float64)
-            for qid, v in zip(q_ids, qvecs)}
 
     # strict left-to-right float64 fold: np.add.accumulate is defined
     # as a sequential scan (r[i] = r[i-1] + a[i]), unlike np.sum /
     # "@" which use pairwise/BLAS reductions — this mirrors the JVM
     # aggregate fold of ivfpq_topk so pre-round values match
     # bit-for-bit, not just to the 6-dp grid
-    def _seq_sum(a):
-        return float(np.add.accumulate(a, dtype=np.float64)[-1])
+    def seq_sum(A):
+        return np.add.accumulate(A, axis=1)[:, -1]
 
-    qnorm = {
-        qid: math.sqrt(_seq_sum(qv * qv)) for qid, qv in qmat.items()
-    }
+    qnorm = np.sqrt(seq_sum(Qm * Qm))
     ecol = "exact_dist" if refine_metric == "l2" else "exact_score"
 
     def exact_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            vals = []
-            for qid, v in zip(pdf["q_id"], pdf[vec_col]):
-                qv = qmat[qid]
-                if v is None:
-                    vals.append(None)
-                    continue
-                xa = np.asarray(v, dtype=np.float64)
-                if xa.ndim != 1 or xa.shape[0] != dim:
-                    vals.append(None)
-                    continue
-                # half-up like the per-query path's F.round — python
-                # round() is HALF_EVEN like np.round
-                if refine_metric == "l2":
-                    d = xa - qv
-                    vals.append(
-                        math.floor(_seq_sum(d * d) * 1e6 + 0.5) / 1e6
-                    )
-                else:
-                    den = math.sqrt(_seq_sum(xa * xa)) * qnorm[qid]
-                    if den:
-                        s = _seq_sum(xa * qv) / den
-                        vals.append(
-                            math.copysign(
-                                math.floor(abs(s) * 1e6 + 0.5), s
-                            ) / 1e6
-                        )
-                    else:
-                        vals.append(None)
-            out = pdf[["q_id", id_col, "adc_dist"]].copy()
-            out[ecol] = pd.Series(vals, index=pdf.index, dtype="float64")
-            yield out
+        for b in batches:
+            X, ok = to_matrix(b.column(vec_col), dim=dim)
+            qpos = pc.index_in(b.column("q_id"), value_set=q_ids).to_numpy(
+                zero_copy_only=False
+            )
+            Q = Qm[qpos]
+            if refine_metric == "l2":
+                d = X - Q
+                v = seq_sum(d * d)
+            else:
+                den = np.sqrt(seq_sum(X * X)) * qnorm[qpos]
+                ok &= den != 0.0
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    v = seq_sum(X * Q) / den
+            # half-up like the per-query path's F.round
+            v = np.copysign(np.floor(np.abs(v) * 1e6 + 0.5), v) / 1e6
+            yield pa.RecordBatch.from_arrays(
+                [b.column("q_id"), b.column(id_col), b.column("adc_dist"),
+                 from_vector(v, ok)],
+                names=["q_id", id_col, "adc_dist", ecol],
+            )
 
-    exact = joined.mapInPandas(
+    exact = joined.mapInArrow(
         exact_batches,
         schema=(
             f"q_id {q_id_type}, {id_col} {id_type}, adc_dist double, "

@@ -65,6 +65,39 @@ def _np_round6_half_up(a):
     return np.sign(a) * np.floor(np.abs(a) * 1e6 + 0.5) / 1e6
 
 
+def _query_topk_batch(ids, q_ids, k, id_col, score_col, descending, scored):
+    """One output batch of a many-query top-k kernel.  ``scored``
+    yields, for query ``j`` of the Arrow array ``q_ids``, a score per
+    batch row and a mask of the rows it may pick; the ``k`` best picks
+    by (score, id ASC) become ``(q_id, id, score)`` rows.  Also returns
+    the picked batch positions, for kernels that carry more columns."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from zeek_duckdb_spark.operators.arrowvec import from_vector
+
+    keys = [("s", "descending" if descending else "ascending"),
+            ("id", "ascending")]
+    qpos, rows, vals = [], [], []
+    for j, (score, keep) in enumerate(scored):
+        cand = np.flatnonzero(keep)
+        s = score[cand]
+        pick = pc.sort_indices(
+            pa.table({"s": s, "id": ids.take(cand)}), sort_keys=keys
+        ).to_numpy()[:k]
+        qpos.append(np.full(len(pick), j))
+        rows.append(cand[pick])
+        vals.append(s[pick])
+    rows = np.concatenate(rows)
+    out = pa.RecordBatch.from_arrays(
+        [q_ids.take(np.concatenate(qpos)), ids.take(rows),
+         from_vector(np.concatenate(vals))],
+        names=["q_id", id_col, score_col],
+    )
+    return rows, out
+
+
 def dot(a: Column, b: Column) -> Column:
     """Sequential double-precision dot product (deterministic order)."""
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
@@ -156,7 +189,7 @@ def topk_neighbors_batch(
     practice); only the emitted values become fold-exact.
 
     Plan: the Q query vectors are collected once (a request batch, not
-    data) and closed over by a mapInPandas kernel; every Arrow batch of
+    data) and closed over by a mapInArrow kernel; every Arrow batch of
     corpus vectors is scored with ONE numpy ``M @ Q.T`` matmul, and
     only each batch's top-k rows PER QUERY are emitted
     (``≤ k·Q`` rows per batch — the corpus itself never leaves the
@@ -181,63 +214,48 @@ def topk_neighbors_batch(
     input schemas, not hardcoded).
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow.compute as pc
 
-    from pyspark.sql import Window
+    from zeek_duckdb_spark.operators.arrowvec import to_matrix
 
     id_type = df.schema[id_col].dataType.simpleString()
     q_id_type = queries.schema[query_id_col].dataType.simpleString()
-    q_rows = queries.select(
+    qt = queries.select(
         F.col(query_id_col).alias("q_id"), F.col(vec_col).alias("q_vec")
-    ).collect()
-    if not q_rows:
+    ).toArrow()
+    if qt.num_rows == 0:
         raise ValueError("topk_neighbors_batch: queries is empty")
-    q_ids = np.asarray([r["q_id"] for r in q_rows])
-    qm = np.asarray([list(r["q_vec"]) for r in q_rows], dtype=np.float64)
+    q_ids = qt.column("q_id").combine_chunks()
+    qm, _ = to_matrix(qt.column("q_vec").combine_chunks())
     qn = np.sqrt((qm * qm).sum(axis=1))
 
     def score_batches(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            m = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
+        for b in batches:
+            ids = b.column(id_col)
+            m, _ = to_matrix(b.column(vec_col), dim=qm.shape[1])
             sims = (m @ qm.T) / (np.sqrt((m * m).sum(axis=1))[:, None] * qn[None, :])
-            out_q, out_id, out_sim = [], [], []
-            out_vec: list = []
-            for j in range(len(q_ids)):
-                mask = ids != q_ids[j]
-                cand_ids = ids[mask]
-                # round BEFORE the cut so the per-batch ordering is the
-                # global (rounded sim DESC, id ASC) tie-break — raw-sim
-                # ordering here would make boundary picks depend on
-                # Arrow batch boundaries
-                cand_sims = np.round(sims[:, j][mask], 6)
-                valid = ~np.isnan(cand_sims)
-                cand_ids, cand_sims = cand_ids[valid], cand_sims[valid]
-                order = np.lexsort((cand_ids, -cand_sims))[:k]
-                out_q.append(np.full(len(order), q_ids[j]))
-                out_id.append(cand_ids[order])
-                out_sim.append(cand_sims[order])
-                if rescore:
-                    vecs = pdf[vec_col].to_numpy()[mask][valid]
-                    out_vec.extend(list(vecs[order]))
-            yield pd.DataFrame(
-                {
-                    "q_id": np.concatenate(out_q),
-                    id_col: np.concatenate(out_id),
-                    "cosine_sim": np.concatenate(out_sim),
-                    **(
-                        {"__vec": pd.Series(out_vec, dtype="object")}
-                        if rescore
-                        else {}
-                    ),
-                }
+            # round BEFORE the cut so the per-batch ordering is the
+            # global (rounded sim DESC, id ASC) tie-break — raw-sim
+            # ordering here would make boundary picks depend on Arrow
+            # batch boundaries
+            sims = np.round(sims, 6)
+            rows, out = _query_topk_batch(
+                ids, q_ids, k, id_col, "cosine_sim", descending=True,
+                scored=(
+                    # a NULL id is nobody's self-match: it stays
+                    (sims[:, j], ~np.isnan(sims[:, j])
+                     & pc.fill_null(pc.not_equal(ids, q_ids[j]), True)
+                     .to_numpy(zero_copy_only=False))
+                    for j in range(len(q_ids))
+                ),
             )
+            if rescore:
+                out = out.append_column("__vec", b.column(vec_col).take(rows))
+            yield out
 
     vec_type = df.schema[vec_col].dataType.simpleString()
     extra = f", __vec {vec_type}" if rescore else ""
-    cands = df.select(id_col, vec_col).mapInPandas(
+    cands = df.select(id_col, vec_col).mapInArrow(
         score_batches,
         schema=f"q_id {q_id_type}, {id_col} {id_type}, cosine_sim double{extra}",
     )
@@ -420,7 +438,7 @@ def ivf_assign(
 
     Zero-shuffle: the K centroid vectors are collected once (K rows —
     a dimension, not data) and closed over by a numpy batch kernel
-    (mapInPandas); the K cosine folds per row become K vectorized
+    (mapInArrow); the K cosine folds per row become K vectorized
     per-dim adds in the SAME sequential accumulation order as the
     SQL ``array_max(transform(centroids, c -> struct(cosine(vec,
     c.vec), c.cell)))`` form (``kmeans._argmax_cell``), so cells are
@@ -434,40 +452,42 @@ def ivf_assign(
     than trained k-means — the IVF *structure* (cell assignment +
     probe-limited search) is what matters for the scale path; swap in
     k-means centroids without touching the plan."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     rows = centroids.select(
         F.col(id_col).alias("cell"), F.col(vec_col).alias("c_vec")
     ).collect()
     if not rows:
         raise ValueError("ivf_assign: centroids is empty")
-    cell_ids, C, cn = _np_cent_geometry(
-        [(int(r["cell"]), list(r["c_vec"])) for r in rows]
-    )
+    cents = [(int(r["cell"]), list(r["c_vec"])) for r in rows]
+    return _assign_cells(df.select(id_col, vec_col), cents, vec_col)
+
+
+def _assign_cells(base: DataFrame, cents: list[tuple[int, list[float]]],
+                  vec_name: str = "qvec") -> DataFrame:
+    """``base`` + a bigint ``cell`` column, the argmax cosine against
+    ``cents``, by a numpy batch map (mapInArrow) whose folds run in
+    ``kmeans._argmax_cell``'s sequential order, so cells are IDENTICAL
+    to it (tests/test_kmeans.py, tests/test_similarity_ops.py); every
+    base column passes through.  A NULL or wrong-length vector reads
+    as zeros: all its cosines are undefined, like the fold's NULL
+    sims, so it lands in the highest cell."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from zeek_duckdb_spark.operators.arrowvec import to_matrix
+
+    cell_ids, C, cn = _np_cent_geometry(cents)
     out_schema = T.StructType(
-        [df.schema[id_col], df.schema[vec_col],
-         T.StructField("cell", T.LongType())]
+        list(base.schema.fields) + [T.StructField("cell", T.LongType())]
     )
 
     def fn(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Xf = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )
-            pos = _cosine_argmax_np(Xf, C, cn)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].values,
-                    vec_col: pdf[vec_col].values,
-                    "cell": cell_ids[pos],
-                }
-            )
+        for b in batches:
+            X, _ = to_matrix(b.column(vec_name), dim=C.shape[1])
+            cells = cell_ids[_cosine_argmax_np(X, C, cn)]
+            yield b.append_column("cell", pa.array(cells))
 
-    return df.select(id_col, vec_col).mapInPandas(fn, schema=out_schema)
+    return base.mapInArrow(fn, schema=out_schema)
 
 
 def ivf_topk(
@@ -581,6 +601,12 @@ def quantize_embeddings(
     1e-12/127 (the fold runs over an empty array); a NULL element gives
     a NULL code and is skipped by the max.
 
+    The struct leaves through ``inline`` of a one-element array, a
+    Generate: a later filter on ``nonzero`` (or on anything computed
+    from ``qvec``) cannot be pushed below it, where the optimizer would
+    copy the fold into the Filter and run the quantize twice per row
+    (tests/test_vector_plans.py).
+
     Output: (id, qvec array<int>, scale double, nonzero boolean
     [, *keep]).  Pure map, no shuffle, no Python.  ``keep`` carries
     extra input columns through (e.g. the original vector for a later
@@ -596,8 +622,8 @@ def quantize_embeddings(
         f"'nonzero', exists({vec}, v -> {code} != 0)))"
     )
     return df.select(
-        F.col(id_col), rule.alias("__q"), *[F.col(c) for c in keep]
-    ).select(id_col, "__q.*", *keep)
+        F.col(id_col), F.inline(F.array(rule)), *[F.col(c) for c in keep]
+    )
 
 
 def quantized_topk(
@@ -1007,7 +1033,9 @@ def kcenter_covering_radius(
     import math
 
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+
+    from zeek_duckdb_spark.operators.arrowvec import to_matrix
 
     ids = list(ids)
     if not ids:
@@ -1054,22 +1082,11 @@ def kcenter_covering_radius(
         # zero-distance batch maximum land a hair NEGATIVE, so the
         # sentinel must be a flag, not a sign check (an exactly-covered
         # corpus would otherwise report 'no valid rows')
-        for pdf in batches:
-            if len(pdf) == 0:
+        for b in batches:
+            X, ok = to_matrix(b.column("__x"), dim=dim)
+            X = X[ok & np.isfinite(X).all(axis=1)]
+            if len(X) == 0:
                 continue
-            vecs = []
-            for v in pdf["__x"]:
-                if v is None:
-                    continue
-                a = np.asarray(v, dtype=np.float64)
-                if a.ndim != 1 or a.shape[0] != dim:
-                    continue
-                if not np.isfinite(a).all():
-                    continue
-                vecs.append(a)
-            if not vecs:
-                continue
-            X = np.vstack(vecs)
             d2 = (
                 (X * X).sum(axis=1)[:, None]
                 + c2[None, :]
@@ -1078,9 +1095,9 @@ def kcenter_covering_radius(
             m = float(np.min(d2, axis=1).max())
             best = m if best is None else max(best, m)
         if best is not None:
-            yield pd.DataFrame({"m": [best]})
+            yield pa.RecordBatch.from_pydict({"m": [best]})
 
-    rows = src.select("__x").mapInPandas(fn, schema="m double").collect()
+    rows = src.select("__x").mapInArrow(fn, schema="m double").collect()
     if not rows:
         raise ValueError("kcenter_covering_radius: no valid rows")
     # matmul round-off can push a true-zero distance a hair negative

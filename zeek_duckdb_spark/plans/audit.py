@@ -96,6 +96,6 @@ def plan_report(df: DataFrame) -> dict:
         # always read 0 — report the AQE wrapper instead
         "aqe": "AdaptiveSparkPlan" in p,
         "python_exec": bool(re.search(r"(BatchEvalPython|ArrowEvalPython|"
-                                      r"MapInPandas|FlatMapGroupsInPandas)", p)),
+                                      r"MapIn(Pandas|Arrow)|FlatMapGroupsInPandas)", p)),
         "take_ordered": "TakeOrderedAndProject" in p,
     }
