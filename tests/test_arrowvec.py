@@ -40,6 +40,16 @@ def test_a_null_element_reads_as_nan():
     assert ok.all() and np.isnan(X[0, 1]) and X[1, 1] == 3.0
 
 
+def test_a_null_element_makes_an_integer_row_invalid():
+    """An int matrix has no NaN: the row is invalid and reads as zeros,
+    not as NaN cast to INT64_MIN."""
+    for typ in (pa.int64(), pa.float64()):
+        arr = pa.array([[1, 2], [3, None], None, [5, 6]], pa.list_(typ))
+        X, ok = to_matrix(arr, np.int64)
+        np.testing.assert_array_equal(ok, [True, False, False, True])
+        np.testing.assert_array_equal(X, [[1, 2], [0, 0], [0, 0], [5, 6]])
+
+
 def test_an_empty_or_all_null_batch():
     X, ok = to_matrix(pa.array([], pa.list_(pa.float64())))
     assert X.shape == (0, 0) and len(ok) == 0

@@ -93,6 +93,19 @@ def test_arrow_fit_kernel_survives_empty_partitions(spark):
     assert kmeans_fit_quantized(df, k=2, iters=2) == _seq_lloyd(df, k=2, iters=2)
 
 
+def test_fit_leaves_out_rows_with_a_null_code(spark):
+    """A NULL element quantizes to a NULL code; the Lloyd pass leaves
+    that row out instead of summing it as INT64_MIN."""
+    rows = [(i, [float((i * 5 + d) % 7 - 3) for d in range(8)]) for i in range(1, 41)]
+    bad = (99, [1.0, None, 2.0, 3.0, -1.0, 0.5, 2.0, 1.0])
+    schema = "vec_id long, embedding array<double>"
+    want = kmeans_fit_quantized(spark.createDataFrame(rows, schema), k=3, iters=2)
+    got = kmeans_fit_quantized(
+        spark.createDataFrame(rows + [bad], schema).repartition(3), k=3, iters=2
+    )
+    assert got == want
+
+
 def test_arrow_assign_kernel_identical_cells(spark, emb):
     from zeek_duckdb_spark.operators.kmeans import _argmax_cell, _assign_cells
     from zeek_duckdb_spark.operators.similarity import quantize_embeddings

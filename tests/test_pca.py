@@ -90,6 +90,44 @@ def test_comoments_bit_equal_to_int64_reference(spark):
     assert got == (len(X), Q.sum(axis=0).tolist(), (Q.T @ Q).tolist())
 
 
+def _rows_df(spark, rows, parts):
+    return spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    ).repartitionByRange(parts, "vec_id")
+
+
+def test_comoments_reject_mixed_lengths_under_any_partitioning(spark):
+    """One short vector raises whether it shares a batch with the
+    others, sits in another batch of the same partition, or is alone
+    in its own partition; the result never depends on row order."""
+    rows = [(i, [float((i * 3 + d) % 7 - 3) for d in range(6)]) for i in range(40)]
+    rows[30] = (30, [1.0, 2.0, 3.0])
+    for parts in (1, 2, 5, 40):
+        with pytest.raises(Exception, match="more than one length"):
+            comoment_sums(_rows_df(spark, rows, parts))
+    # short rows first: the first batch's width is the short one
+    with pytest.raises(Exception, match="more than one length"):
+        comoment_sums(_rows_df(spark, [(-i, [1.0, 2.0]) for i in (1, 2, 3)] + rows[:20], 2))
+
+
+def test_comoments_leave_out_null_vectors_and_null_elements(spark):
+    """A NULL vector, a NULL element and a NaN element each leave their
+    row out of n, s and M (an int64 co-moment has no NaN), under any
+    partitioning, and a partition holding only such rows adds nothing."""
+    clean = [(i, [float((i * 5 + d) % 9 - 4) for d in range(8)]) for i in range(40)]
+    bad = [
+        (100, None),
+        (101, [1.0, None, 2.0, 3.0, -1.0, 0.5, 2.0, 1.0]),
+        (102, [1.0, float("nan"), 2.0, 3.0, -1.0, 0.5, 2.0, 1.0]),
+    ]
+    want = comoment_sums(_rows_df(spark, clean, 1))
+    assert want[0] == 40
+    for parts in (1, 3, 43):
+        assert comoment_sums(_rows_df(spark, clean + bad, parts)) == want
+    with pytest.raises(Exception, match="corpus is empty"):
+        comoment_sums(_rows_df(spark, bad, 2))
+
+
 def _planted(spark, n=400, dim=16, seed=5):
     # two dominant orthogonal factors + tiny noise
     import random

@@ -463,6 +463,42 @@ def test_train_and_encode_drop_wrong_length_vectors(spark):
     assert {r.vec_id for r in codes} == set(range(20))  # 99 dropped
 
 
+def test_train_leaves_out_rows_with_a_null_code(spark):
+    """A NULL element quantizes to a NULL code; the Lloyd pass leaves
+    that row out instead of summing it as INT64_MIN."""
+    rows = [(i, [float((i * 5 + d) % 9 - 4) for d in range(8)]) for i in range(1, 41)]
+    bad = (99, [1.0, None, 2.0, 3.0, -1.0, 0.5, 2.0, 1.0])
+    schema = "vec_id long, embedding array<double>"
+    want = pq_train(spark.createDataFrame(rows, schema), dim=8, m=2, k=4)
+    got = pq_train(spark.createDataFrame(rows + [bad], schema).repartition(3), dim=8, m=2, k=4)
+    assert got == want
+
+
+def test_ivfpq_batch_never_picks_a_null_code_row(spark, emb, ivfpq):
+    from zeek_duckdb_spark.operators.pq import ivfpq_topk_batch
+
+    cells, cbs, codes = ivfpq
+    queries = emb.filter(F.col("vec_id") < 3)
+
+    def picked(codes_df):
+        return {
+            r.vec_id
+            for r in ivfpq_topk_batch(
+                codes_df, queries, cells, cbs, k_top=20, nprobe=len(cells)
+            ).collect()
+        }
+
+    hit = min(picked(codes))
+    broken = codes.withColumn(
+        "pq_codes",
+        F.when(
+            F.col("vec_id") == hit,
+            F.transform("pq_codes", lambda c, i: F.when(i > 0, c)),
+        ).otherwise(F.col("pq_codes")),
+    )
+    assert hit not in picked(broken)
+
+
 # --- incremental IVF-PQ --------------------------------------------------
 
 def test_ivfpq_encode_matches_build_assignment(spark, emb):

@@ -23,7 +23,9 @@ def to_matrix(arr: pa.Array, dtype=np.float64, dim: int | None = None):
     When every row is valid, ``X`` reshapes the values buffer in
     place; it is copied only to cast to ``dtype``.  NULL or ragged
     rows make a gathered copy.  A NULL element reads as NaN (the value
-    pandas' conversion gave it), cast like any other to ``dtype``."""
+    pandas' conversion gave it) into a float ``dtype``; an integer
+    ``dtype`` has no NaN, so a row holding a NULL element is invalid
+    there."""
     offsets = arr.offsets.to_numpy()
     lengths = np.diff(offsets)
     n = len(arr)
@@ -40,10 +42,14 @@ def to_matrix(arr: pa.Array, dtype=np.float64, dim: int | None = None):
         flat = values.slice(offsets[0] if n else 0, n * dim).to_numpy()
         return flat.astype(dtype, copy=False).reshape(n, dim), valid
     flat = values.to_numpy(zero_copy_only=False)
-    X = np.zeros((n, dim), dtype=dtype)
     rows = np.flatnonzero(valid)
-    with np.errstate(invalid="ignore"):  # NaN cast to an int dtype
-        X[rows] = flat[offsets[rows, None] + np.arange(dim)]
+    gathered = flat[offsets[rows, None] + np.arange(dim)]
+    if values.null_count and np.dtype(dtype).kind in "iu":
+        whole = ~np.isnan(gathered).any(axis=1)
+        valid[rows[~whole]] = False
+        rows, gathered = rows[whole], gathered[whole]
+    X = np.zeros((n, dim), dtype=dtype)
+    X[rows] = gathered
     return X, valid
 
 

@@ -21,12 +21,13 @@ Scale shape, in the repo's house style:
 - **score** (:func:`logreg_score`) is a pure per-row fold —
   ``sigmoid(w . x + b)`` — zero shuffle, pushdown-friendly, and with
   ``kernel='expr'`` the dot accumulates SEQUENTIALLY left-to-right so
-  a DuckDB oracle restates it exactly (the cosine-fold recipe).
-  MEASURED (SCALING.md r9): unlike the cosine top-k family, expr WINS
-  here — one dot per row stays inside whole-stage codegen (0.33 s vs
-  arrow's 0.67 s at 512k x dim 64), so ``kernel='expr'`` is the right
-  default for serving too; ``kernel='arrow'`` exists for very high
-  dims where a BLAS matvec eventually overtakes the interpreted fold.
+  a DuckDB oracle restates it exactly (the cosine-fold recipe), which
+  is why it stays the default.  ``kernel='arrow'`` is a numpy matvec
+  per Arrow batch.  MEASURED at 65,536 rows (SCALING.md "Vector
+  operators: pandas boundary vs Arrow boundary"): the two tie at dim
+  16 (0.57 vs 0.56 s) and arrow is ahead from dim 64 up (0.37 vs
+  0.47 s at 64, 0.53 vs 0.99 s at 256, 0.70 vs 1.67 s at 768), so
+  ``kernel='arrow'`` is the faster serving choice above dim 16.
 - **gate** (:func:`filter_by_classifier`) composes the score with a
   threshold filter — the "keep documents the classifier rates
   educational" pass.

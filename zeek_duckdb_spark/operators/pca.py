@@ -76,35 +76,42 @@ def comoment_sums(
     ``(n, s, M)`` with ``s[i] = sum q_i`` and ``M[i][j] = sum
     q_i * q_j`` (full symmetric dim x dim, int64-exact).  ONE
     zero-shuffle pass; partials merge driver-side with integer adds,
-    so the result is identical under any partitioning."""
+    so the result is identical under any partitioning.  NULL vectors
+    and vectors holding a NULL or NaN element are left out; vectors of
+    more than one length raise ``ValueError``."""
     import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     from zeek_duckdb_spark.operators.arrowvec import from_matrix, to_matrix
+
+    ragged = f"comoment_sums: {vec_col} holds vectors of more than one length"
 
     def fn(batches):
         n = 0
         s = None
         m = None
         for b in batches:
-            Xf, ok = to_matrix(b.column(vec_col))
+            col = b.column(vec_col)
+            Xf, ok = to_matrix(col, dim=None if s is None else len(s))
+            if (ok != col.is_valid().to_numpy(zero_copy_only=False)).any():
+                raise ValueError(ragged)
             if not ok.any():
                 continue
-            # an invalid row reads as zeros, whose codes add nothing to
-            # the sums; it is left out of the count
-            X = _np_quantize(Xf)
+            if s is None:
+                d = Xf.shape[1]
+                s = np.zeros(d, dtype=np.int64)
+                m = np.zeros((d, d), dtype=np.int64)
+            ok &= ~np.isnan(Xf).any(axis=1)
+            X = _np_quantize(Xf if ok.all() else Xf[ok])
             # float64 BLAS, exact: every partial sum is an integer below
             # rows * 127^2 < 2^53 (numpy's int64 matmul has no BLAS
             # path: 11.5 s against 2.2 s at 512k x 64, SCALING.md)
             assert len(X) * 127**2 < 2**53, len(X)
-            if s is None:
-                d = X.shape[1]
-                s = np.zeros(d, dtype=np.int64)
-                m = np.zeros((d, d), dtype=np.int64)
-            n += int(ok.sum())
+            n += len(X)
             s += X.sum(axis=0).astype(np.int64)
             m += (X.T @ X).astype(np.int64)
-        if n:
+        if s is not None:  # the width reaches the merge even when n is 0
             yield pa.RecordBatch.from_arrays(
                 [pa.array([n]), from_matrix(s[None, :]),
                  from_matrix(m.reshape(1, -1))],
@@ -119,13 +126,15 @@ def comoment_sums(
         ]
     )
     parts = df.select(vec_col).mapInArrow(fn, schema=schema).toArrow()
-    if parts.num_rows == 0:
+    if pc.count_distinct(pc.list_value_length(parts.column("s"))).as_py() > 1:
+        raise ValueError(ragged)
+    n_tot = int(np.sum(parts.column("n").to_numpy()))
+    if n_tot == 0:
         raise ValueError("comoment_sums: corpus is empty")
     # exact int64 merges: any partitioning gives the same sums
     s_tot = to_matrix(parts.column("s").combine_chunks(), np.int64)[0].sum(axis=0)
     m_tot = to_matrix(parts.column("m").combine_chunks(), np.int64)[0].sum(axis=0)
     dim = len(s_tot)
-    n_tot = int(np.sum(parts.column("n").to_numpy()))
     return n_tot, s_tot.tolist(), m_tot.reshape(dim, dim).tolist()
 
 

@@ -190,7 +190,9 @@ def _lloyd_partials_arrow(
         n_acc = np.zeros((m, k), dtype=np.int64)
         s_acc = np.zeros((m, k, dsub), dtype=np.int64)
         for b in batches:
-            X, _ = to_matrix(b.column("__q"), np.int64, m * dsub)
+            X, ok = to_matrix(b.column("__q"), np.int64, m * dsub)
+            if not ok.all():  # a NULL code joins no cell
+                X = X[ok]
             for j in range(m):
                 Xj = X[:, j * dsub : (j + 1) * dsub]
                 Xf = Xj.astype(np.float64)
@@ -816,7 +818,9 @@ def ivfpq_topk_batch(
     def score_batches(batches):
         for b in batches:
             cellarr = b.column("cell").to_numpy()
-            C, _ = to_matrix(b.column("pq_codes"), np.int64, m)
+            C, ok = to_matrix(b.column("pq_codes"), np.int64, m)
+            # a NULL or short code row reads as zeros: it is never picked
+            cellarr = np.where(ok, cellarr, -1)
             yield _query_topk_batch(
                 b.column(id_col), q_ids, keep_n, id_col, "adc_dist",
                 descending=False,
