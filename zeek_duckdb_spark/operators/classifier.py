@@ -25,8 +25,8 @@ Scale shape, in the repo's house style:
   is why it stays the default.  ``kernel='arrow'`` is a numpy matvec
   per Arrow batch.  MEASURED at 65,536 rows (SCALING.md "Vector
   operators: pandas boundary vs Arrow boundary"): the two tie at dim
-  16 (0.57 vs 0.56 s) and arrow is ahead from dim 64 up (0.37 vs
-  0.47 s at 64, 0.53 vs 0.99 s at 256, 0.70 vs 1.67 s at 768), so
+  16 (0.56 s each) and arrow is ahead from dim 64 up (0.35 vs 0.42 s
+  at 64, 0.43 vs 0.79 s at 256, 0.68 vs 1.87 s at 768), so
   ``kernel='arrow'`` is the faster serving choice above dim 16.
 - **gate** (:func:`filter_by_classifier`) composes the score with a
   threshold filter — the "keep documents the classifier rates
